@@ -1,21 +1,12 @@
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: test verify verify-plain bench plans smoke scaling stress kafka-smoke certify certify-apply attribution closeout
+.PHONY: test verify verify-plain bench plans smoke scaling stress kafka-smoke selftest
 
 test:
 	python -m pytest tests/ -x -q
 
-certify:  # exits 1 on STALE uncertified rows; pending (post-commit) rows advise
-	python tools/certify.py
-
-certify-apply:  # append pending driver rows to CERTIFIED, bump CERTIFIED_THROUGH
-	python tools/certify.py --apply
-
-attribution:  # attribute round-over-round bench movers (fast: >0.5s only)
-	python tools/attribute_honest.py --fast
-
-closeout: certify test attribution  # end-of-round ritual: snapshot commit must be green
-	@echo "closeout OK — safe to snapshot"
+selftest:  # the benchmark's own output-check self-tests
+	python -m pytest perfbench/test_checks.py -q
 
 verify:
 	python tools/verify_oracle.py --sf $(SF_DIR) --rows-only-too

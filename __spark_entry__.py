@@ -29,12 +29,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Ordered so queries without an accepted driver correctness row yet
-    come first: the driver's per-round gate records only the first 50
-    entries, and rotation guarantees every declared query earns a row."""
-    return registry.ordered_queries()
+    """One entry per implemented operator from SURVEY.md §2, every
+    registered query once, in registration order."""
+    registry.load_all()
+    return dict(registry.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

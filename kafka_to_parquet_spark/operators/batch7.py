@@ -1,11 +1,5 @@
-"""Round-7 session additions, one module across domains ON PURPOSE:
-the driver's bounded correctness gate takes never-certified queries in
-REGISTRATION order, and round 7 opens with 37 round-6 declarations
-still waiting for their first driver row — these five register LAST
-(this module is the final import in ``registry.load_all``) so they
-queue BEHIND that backlog instead of displacing it.
-
-The five extend existing families with genuinely new topology:
+"""Round-7 session additions, one module across domains. The first
+five extend existing families with genuinely new topology:
 
 - q_graph_kcore     — iterative k-core peel (3 fixed rounds), the
                       degree-constrained subgraph primitive pagerank/
@@ -25,8 +19,7 @@ The five extend existing families with genuinely new topology:
                       of the sketch-audit suite (est_err grades the
                       full minima; this grades keeping ONE bit each).
 
-A second session batch appends four more, same last-in-line
-registration discipline:
+A second session batch appends four more:
 
 - q_graph_label_prop   — synchronous label-propagation communities
                          (deterministic mode-label tiebreak), the

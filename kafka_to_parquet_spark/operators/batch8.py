@@ -1,8 +1,4 @@
-"""Round-8 session additions, one module across domains ON PURPOSE
-(the batch7 discipline, see its docstring): this module is the final
-import in ``registry.load_all`` so its declarations queue behind any
-earlier never-certified names. Round 8 opens with ALL 284 prior
-declarations certified, so the full driver window is free — the batch
+"""Round-8 session additions, one module across domains. The batch
 extends existing families with genuinely new topology rather than
 more of the same:
 
@@ -48,7 +44,7 @@ more of the same:
                     hash-derived Poisson weights.
 
 A second session batch appends five more, closing loops the first
-batch opened (same last-in-line registration discipline):
+batch opened:
 
 - q_text_rake     — RAKE keyphrase extraction: stopword-boundary
                     phrase segmentation via a running-count window (a
@@ -1737,7 +1733,6 @@ q_bpe_learn_k.__doc__ = q_bpe_learn_k.__doc__.replace("{K}", str(BPE_LEARN_K))
 # Second session batch — five more, closing loops the first batch opened
 # (learn→apply for BPE, decompose→flag for STL, triangles→per-node for
 # graphs, srm/ttest→power for experiments) plus RAKE keyphrases.
-# Same last-in-line registration discipline.
 # ===========================================================================
 
 
@@ -2376,7 +2371,7 @@ def q_abtest_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Third session batch — four more (same last-in-line registration):
+# Third session batch — four more:
 # TextRank (PageRank lowered onto a text-derived graph), KMV sketch
 # ALGEBRA (union/intersection estimates from mergeable sketches),
 # a literal-twiddle weekly DFT, and Kneser-Ney continuation counts.

@@ -19,6 +19,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _half_host_memory() -> str:
+    """Default driver heap: half of physical RAM, in ``m`` units, so
+    the JVM never reserves more than the host has."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{ram // 2 // 2**20}m"
+
+
 def get_spark(app_name: str = "kafka_to_parquet_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
@@ -51,7 +58,10 @@ def get_spark(app_name: str = "kafka_to_parquet_spark", cpus: int | None = None)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_host_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/ktps_warehouse")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")

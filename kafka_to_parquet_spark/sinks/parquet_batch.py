@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.sources.kafka_analog import (
     BATCH_SIZE,
+    decode_payload,
     kafka_records,
     with_batch_id,
 )
@@ -64,7 +65,7 @@ def write_partition_batches(
     decoded = records.select(
         "partition",
         "offset",
-        F.coalesce(F.col("value").cast("string"), F.lit("")).alias("b"),
+        decode_payload(F.col("value")).alias("b"),
     )
     batched = with_batch_id(decoded, batch_size)
 

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_to_parquet_spark.sources import kafka_analog
+
 # The Kafka source's fixed schema (public Spark docs: Structured
 # Streaming + Kafka integration), mirrored by kafka_analog.py.
 KAFKA_COLUMNS = [
@@ -88,13 +90,10 @@ def decode_payload(df: DataFrame) -> DataFrame:
     """S3 + P1: project to the decoded payload only, with the
     reference's null semantics — missing or invalid-UTF-8 payload
     becomes the empty string, and the column is non-nullable
-    (main.rs:240-247; output schema REQUIRED, main.rs:113-117).
-
-    Spark's binary→string cast never fails (invalid bytes are
-    replaced), so ``coalesce(cast, '')`` covers both the ``None`` and
-    ``Err`` arms of the reference's match.
+    (main.rs:240-247; output schema REQUIRED, main.rs:113-117); the
+    rule itself is :func:`kafka_analog.decode_payload`.
     """
-    return df.select(F.coalesce(F.col("value").cast("string"), F.lit("")).alias("b"))
+    return df.select(kafka_analog.decode_payload(F.col("value")).alias("b"))
 
 
 def write_kafka(df: DataFrame, brokers: str, topic: str) -> None:

@@ -15,7 +15,7 @@ q_str_concat.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.registry import query
@@ -49,6 +49,16 @@ def with_batch_id(df: DataFrame, batch_size: int = BATCH_SIZE) -> DataFrame:
     )
 
 
+def decode_payload(col: Column) -> Column:
+    """S3's decode rule (single source of truth — the (R) queries, the
+    parquet sink and the broker source all use it): a null or
+    invalid-UTF-8 payload becomes "" (main.rs:240-247). The cast alone
+    keeps invalid bytes; the outer coalesce keeps the result
+    non-nullable, so the sink's ``b`` stays REQUIRED."""
+    s = col.cast("string")
+    return F.coalesce(F.when(F.is_valid_utf8(s), s), F.lit(""))
+
+
 def kafka_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Kafka-shaped record stream (batch form)."""
     ev = load(spark, sf_dir, "events")
@@ -79,14 +89,10 @@ FROM ({_ANALOG_SQL})
 """,
 )
 def q_decode_utf8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S3: payload decode; None/invalid-UTF-8 → "" (main.rs:240-247).
-    ``coalesce(cast(value as string), '')`` — row count preserved."""
+    """S3: payload decode; None/invalid-UTF-8 → "" (main.rs:240-247),
+    via :func:`decode_payload` — row count preserved."""
     rec = kafka_records(spark, sf_dir)
-    return rec.select(
-        "offset",
-        "partition",
-        F.coalesce(F.col("value").cast("string"), F.lit("")).alias("b"),
-    )
+    return rec.select("offset", "partition", decode_payload(F.col("value")).alias("b"))
 
 
 @query(
@@ -100,7 +106,7 @@ def q_project_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     main.rs:249-255). Catalyst prunes the parquet scan to the columns
     feeding ``value``."""
     rec = kafka_records(spark, sf_dir)
-    return rec.select(F.coalesce(F.col("value").cast("string"), F.lit("")).alias("b"))
+    return rec.select(decode_payload(F.col("value")).alias("b"))
 
 
 @query(

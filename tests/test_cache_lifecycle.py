@@ -81,17 +81,24 @@ def test_all_dataframe_caches_are_registered():
     assert missing == []
 
 
-def test_result_level_clear_targets_only_result_caches():
+def test_result_level_clear_targets_only_result_caches(spark, sf_dir):
     """clear_result_caches (the bench/scaling honesty mechanism) must
     evict exactly the result_level-registered caches and leave feature
     caches warm — and _LABELS_CACHE must actually be enrolled as
-    result-level (the whole point of the round-5 refactor)."""
+    result-level (the whole point of the round-5 refactor). Connected
+    components parks every loop round, the converged one included, so
+    the clear leaves none of their blocks behind."""
     from kafka_to_parquet_spark.cache import (
+        _DEFERRED_ROUNDS,
         _RESULT_LEVEL,
         clear_result_caches,
         register_cache,
     )
-    from kafka_to_parquet_spark.llm.components import _LABELS_CACHE
+    from kafka_to_parquet_spark.llm.components import (
+        _LABELS_CACHE,
+        component_labels,
+        near_dup_edges,
+    )
 
     assert any(c is _LABELS_CACHE for c in _RESULT_LEVEL)
 
@@ -116,6 +123,18 @@ def test_result_level_clear_targets_only_result_caches():
         feat.clear()
         _REGISTERED[:] = [c for c in _REGISTERED if c is not feat and c is not res]
         _RESULT_LEVEL[:] = [c for c in _RESULT_LEVEL if c is not res]
+
+    def persisted_rdd_ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+    near_dup_edges(spark, sf_dir).count()  # feature cache: stays warm
+    before = persisted_rdd_ids()
+    component_labels(spark, sf_dir).count()
+    assert persisted_rdd_ids() - before  # the loop rounds are checkpointed
+    clear_result_caches(spark, sf_dir)
+    assert (spark, sf_dir) not in _DEFERRED_ROUNDS
+    assert (spark, sf_dir) not in _LABELS_CACHE
+    assert persisted_rdd_ids() - before == set()
 
 
 def test_eager_sentinel_frames_match_sf_dir_scoped_eviction(spark):

@@ -92,6 +92,35 @@ def test_sink_batch_size_edges(spark, sf_dir):
     assert all(m["batch_id"] == 0 for m in manifest)
 
 
+def test_sink_decodes_invalid_utf8_to_empty_string(spark):
+    """main.rs:240-247: an invalid UTF-8 payload decodes to "" like a
+    null one — the sink writes it instead of aborting, and ``b`` stays
+    REQUIRED."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tempfile.mkdtemp(prefix="ktps_utf8_src_")
+    pq.write_table(
+        pa.table({
+            "partition": pa.array([0, 0, 1, 1], pa.int32()),
+            "offset": pa.array([0, 1, 0, 1], pa.int64()),
+            "value": pa.array([b"ok 0", b"\xff\xfe bad", None, b"ok 1"], pa.binary()),
+        }),
+        os.path.join(src, "part-0.parquet"),
+    )
+    out = tempfile.mkdtemp(prefix="ktps_utf8_out_")
+    write_partition_batches(spark.read.parquet(src), out).collect()
+    written = {
+        os.path.basename(f): pq.read_table(f)
+        for f in glob.glob(os.path.join(out, "*.parquet"))
+    }
+    assert {name: t.column("b").to_pylist() for name, t in written.items()} == {
+        "partition_0_batch_0.parquet": ["ok 0", ""],
+        "partition_1_batch_0.parquet": ["", "ok 1"],
+    }
+    assert not any(t.schema.field("b").nullable for t in written.values())
+
+
 def test_synth_generator_shape(run):
     """S7 (main.rs:59-96): N messages, payload 'Message {i}', key
     'Key {i}', one header header_key=header_value."""

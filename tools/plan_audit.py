@@ -5,10 +5,8 @@ count) summarized per query — the M5 plan-audit artifact.
 Usage: python tools/plan_audit.py [--sf /root/testdata/sf0.1]
        python tools/plan_audit.py --full   # all registered queries -> PLANS_FULL.md
 
---full (round-9 verdict item 4): PLANS.md covers the headline set and
-the current driver window, so a plan regression in a non-window query
-could hide for ~6 rounds of rotation. The full sweep audits EVERY
-registered query's plan properties and records any Exchange
+--full: PLANS.md covers only the headline set. The full sweep audits
+EVERY registered query's plan properties and records any Exchange
 SinglePartition outside the documented allowlist below;
 tests/test_registry.py::test_plans_full_artifact_current pins the
 artifact to the live registry so a new batch can't land unaudited.
@@ -307,43 +305,9 @@ def main() -> None:
             lines.append("ReadSchema: " + " | ".join(f"`{s}`" for s in scans))
             lines.append("")
 
-    # Compact plan-property table for the current driver WINDOW (the
-    # first GATE_WINDOW entries of ordered_queries — the set earning
-    # rows this round, i.e. exactly what the next verdict scrutinizes).
-    # `1-part exch` counts Exchange SinglePartition nodes: >0 flags a
-    # global sort/window/reduce — legitimate for one-row aggregates
-    # and bounded pre-reduced tables, a scale smell on growing inputs.
-    window_names = list(registry.ordered_queries())[: registry.GATE_WINDOW]
-    lines += [
-        "",
-        "## Window-set plan properties (this round's driver gate)",
-        "",
-        "| query | shuffles | 1-part exch | pushed filters | bcast join |",
-        "|---|---|---|---|---|",
-    ]
-    for name in window_names:
-        try:
-            df = registry.QUERIES[name](spark, args.sf)
-            plan = explain.formatted_plan(df)
-        except Exception as exc:  # noqa: BLE001 — audit must not die on one query
-            # Sanitize: '|' or newlines in the exception text would
-            # corrupt the markdown table row.
-            msg = str(exc)[:60].replace("|", "/").replace("\n", " ").replace("\r", " ")
-            lines.append(f"| {name} | plan failed: {msg} | | | |")
-            continue
-        n_shuffles = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
-        n_single = count_single_partition(plan)
-        pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-        has_pushed = bool(pushed) and all(p.strip() for p in pushed)
-        has_bcast = "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-        lines.append(
-            f"| {name} | {n_shuffles} | {n_single} |"
-            f" {'yes' if has_pushed else 'no'} | {'yes' if has_bcast else 'no'} |"
-        )
-
     with open(args.out, "w") as f:
         f.write("\n".join(lines))
-    print(f"wrote {args.out} ({len(HEADLINE)} + {len(window_names)} queries)")
+    print(f"wrote {args.out} ({len(HEADLINE)} queries)")
 
 
 if __name__ == "__main__":
