@@ -1,4 +1,4 @@
-"""Lifecycle management for the package's module-level DataFrame caches.
+"""One session-scoped store for the package's memoized intermediates.
 
 Several operator families memoize an expensive intermediate per
 (SparkSession, sf_dir) — hashed shingle sets, near-dup edge lists,
@@ -6,34 +6,41 @@ converged component labels, oriented graph edges, SimHash fingerprints
 — as ``persist()``-ed or ``localCheckpoint()``-ed DataFrames. That is
 the right call for one-shot bench / verify processes (the driver
 re-imports fresh each round), but a long-lived session would otherwise
-accumulate executor storage forever: the dicts are module-global and
-nothing ever evicted them.
+accumulate executor storage forever.
 
-Every such cache dict is created through :func:`register_cache`, and
+Every such intermediate goes through :func:`memo`, which keys it by
+``(spark, sf_dir, name)`` in one store, and every persisted frame that
+a returned plan still reads goes through :func:`park`.
 :func:`clear_caches` evicts entries — optionally scoped to one session
-and/or one sf_dir — unpersisting persisted frames and dropping the
-references so the ContextCleaner can reclaim localCheckpoint RDD
-blocks. ``bench.py`` calls it between scale factors and at teardown.
+and/or one sf_dir — unpersisting persisted frames and releasing
+localCheckpoint RDD blocks. ``bench.py`` calls it between scale
+factors and at teardown.
 """
 
 from __future__ import annotations
 
 import atexit
 import shutil
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Every registered cache maps (SparkSession, sf_dir) -> cached value.
-# Values are DataFrames (storage-holding: the ones this module exists
-# for), plain scalars/tuples (memoized stats — dict hygiene only), or
-# :class:`TempDataset` paths (streaming scratch/checkpoint dirs, and
-# formerly the shard-mode PPJoin posting parquet): those paths OWN
-# on-disk datasets, so eviction rmtree's them — dropping only the path
-# string would orphan the dataset and a later call would
-# re-materialize into a fresh tempdir, compounding the leak on
-# disk-bound hosts (round-12 advisor, minhash.py:437).
-_REGISTERED: list[dict[tuple[SparkSession, str], Any]] = []
+# (SparkSession, sf_dir, name) -> (value, result_level). Keyed on the
+# SparkSession object itself (not id(): CPython reuses ids after GC,
+# which could hand a new session a DataFrame bound to a stopped one);
+# the strong session ref is deliberate. Values are DataFrames
+# (storage-holding), plain scalars (memoized stats), :class:`TempDataset`
+# paths (owned on-disk datasets), or tuples of these.
+#
+# ``result_level`` marks a value that IS a query's answer (e.g.
+# converged component labels) rather than a shared input feature (e.g.
+# shingle sets). Timing tools must evict these between samples or they
+# measure a dict lookup; feature entries may legitimately stay warm
+# because a production pipeline would amortize them the same way.
+_STORE: dict[tuple[SparkSession, str, str], tuple[Any, bool]] = {}
+
+# Store name under which :func:`park` collects frames; no memo uses it.
+_PARKED = "<parked>"
 
 
 class TempDataset(str):
@@ -41,11 +48,17 @@ class TempDataset(str):
     eviction (and the atexit sweep) rmtree's it. An explicit ownership
     marker — plain ``str`` path values are never deleted — instead of
     inferring ownership from a basename prefix, which would delete a
-    future non-owned path that happened to match (round-13 advisor
-    item 4). A ``str`` subclass so consumers (``spark.read.parquet``,
-    ``os.path`` calls) treat it as the path it is."""
+    future non-owned path that happened to match. A ``str`` subclass
+    so consumers (``spark.read.parquet``, ``os.path`` calls) treat it
+    as the path it is. Dropping only the path string would orphan the
+    dataset, and a later call would re-materialize into a fresh
+    tempdir, compounding the leak on disk-bound hosts."""
 
     __slots__ = ()
+
+
+def _parts(value: Any) -> tuple:
+    return value if isinstance(value, tuple) else (value,)
 
 
 def _cleanup_temp_datasets() -> None:
@@ -53,115 +66,96 @@ def _cleanup_temp_datasets() -> None:
     the process exits without a teardown ``clear_caches`` — executor
     storage dies with the JVM, but /tmp parquet would outlive it on the
     disk-bound stress box. No Spark calls (the session may be gone)."""
-    for cache in _REGISTERED:
-        for value in list(cache.values()):
-            if isinstance(value, dict):
-                vals = list(value.values())
-            elif isinstance(value, (list, tuple)):
-                vals = list(value)
-            else:
-                vals = [value]
-            for v in vals:
-                if isinstance(v, TempDataset):
-                    shutil.rmtree(v, ignore_errors=True)
+    for value, _ in list(_STORE.values()):
+        for v in _parts(value):
+            if isinstance(v, TempDataset):
+                shutil.rmtree(v, ignore_errors=True)
 
 
 atexit.register(_cleanup_temp_datasets)
 
-# Subset of _REGISTERED whose cached value IS a query's answer (e.g.
-# converged component labels) rather than a shared input feature (e.g.
-# shingle sets). Timing tools must evict these between samples or they
-# measure a dict lookup; feature caches may legitimately stay warm
-# because a production pipeline would amortize them the same way.
-_RESULT_LEVEL: list[dict[tuple[SparkSession, str], Any]] = []
 
-
-def register_cache(
-    cache: dict[tuple[SparkSession, str], Any],
+def memo(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    build: Callable[[], Any],
     *,
-    result_level: bool = False,
-) -> dict[tuple[SparkSession, str], Any]:
-    """Enroll a module-level cache dict; returns it for assignment.
+    result: bool = False,
+) -> Any:
+    """Return the value stored under ``(spark, sf_dir, name)``, running
+    ``build()`` once to make it. ``build`` returns the value to keep —
+    a persisted or checkpointed DataFrame, a :class:`TempDataset`, a
+    scalar, or a tuple of these; ``memo`` persists nothing itself.
 
-    ``result_level=True`` marks a cache whose value is a finished query
-    result: :func:`clear_result_caches` (used by bench/scaling/stress
-    timers for measurement honesty) evicts only these.
+    ``result=True`` marks a finished query answer:
+    :func:`clear_result_caches` (used by bench/scaling/stress timers
+    for measurement honesty) evicts only these and parked frames.
     """
-    _REGISTERED.append(cache)
-    if result_level:
-        _RESULT_LEVEL.append(cache)
-    return cache
+    key = (spark, sf_dir, name)
+    if key not in _STORE:
+        _STORE[key] = (build(), result)
+    return _STORE[key][0]
 
 
-# Sentinel "dataset" for eager (keyless) RoundLoop frames — matched by
-# EVERY sf_dir-scoped eviction (see _evict), not only exact-dir ones.
-_EAGER_SENTINEL = "<eager-roundloop>"
+def park(df: DataFrame, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Register a persisted/checkpointed frame that a RETURNED plan
+    still reads (a superseded or final loop round, a scratch relation),
+    for eviction at the next cache boundary: :func:`clear_result_caches`
+    between timed samples, or :func:`clear_caches` at teardown. Nothing
+    is unpersisted now — the caller's action happens after the operator
+    returns. Without parking, a final round is registered nowhere and
+    Spark's CacheManager would serve its blocks to the identical plan
+    rebuilt on the next timed sample. Returns ``df``."""
+    key = (spark, sf_dir, _PARKED)
+    frames, _ = _STORE.get(key, ((), True))
+    _STORE[key] = (frames + (df,), True)
+    return df
 
 
 def _evict(
-    caches: list[dict[tuple[SparkSession, str], Any]],
-    spark: SparkSession | None,
-    sf_dir: str | None,
+    spark: SparkSession | None, sf_dir: str | None, results_only: bool
 ) -> int:
     n = 0
-    for cache in caches:
-        for key in list(cache):
-            k_spark, k_dir = key
-            if spark is not None and k_spark is not spark:
-                continue
-            # Eager (keyless) RoundLoop frames park under the
-            # session-scoped sentinel dir: they belong to no dataset,
-            # so ANY dataset-scoped eviction may (and must) reach
-            # them — otherwise a bench's clear_caches(spark, sf_dir)
-            # would leave them persisted until session teardown.
-            if (
-                sf_dir is not None
-                and k_dir != sf_dir
-                and k_dir != _EAGER_SENTINEL
-            ):
-                continue
-            value = cache.pop(key)
-            # A cache entry may hold one DataFrame, a LIST/TUPLE of
-            # values (a deferred RoundLoop's superseded rounds; the
-            # streaming upsert's (store, checkpoint) path pair), or a
-            # DICT of them (per-variant feature tables, e.g. the
-            # PPJoin postings keyed by prefix expression).
-            if isinstance(value, (list, tuple)):
-                frames = list(value)
-            elif isinstance(value, dict):
-                frames = list(value.values())
-            else:
-                frames = [value]
-            for v in frames:
-                if isinstance(v, DataFrame):
-                    try:
-                        # blocking: the timing tools call this between
-                        # samples precisely so the NEXT sample doesn't
-                        # run against lingering storage — an async
-                        # unpersist would leave the blocks dropping
-                        # during the sample it was meant to protect.
-                        v.unpersist(blocking=True)
-                    except Exception:
-                        pass
-                    try:
-                        # localCheckpoint frames: unpersist() above is
-                        # a no-op for them (their blocks belong to the
-                        # checkpointed RDD, which never registers with
-                        # the CacheManager), so superseded round frames
-                        # used to wait for JVM GC + ContextCleaner —
-                        # the round-14 q_cluster_dbscan_grid session
-                        # drift (2.8-5.6 s on unchanged code). Release
-                        # the RDD blocks deterministically instead.
-                        plan = v._jdf.queryExecution().analyzed()
-                        if plan.getClass().getSimpleName() == "LogicalRDD":
-                            plan.rdd().unpersist(True)
-                    except Exception:
-                        pass
-                elif isinstance(v, TempDataset):
-                    # Owned temp-dataset path: free the on-disk parquet
-                    # with the cache entry (see TempDataset docstring).
-                    shutil.rmtree(v, ignore_errors=True)
-            n += 1
+    for key, (_, result) in list(_STORE.items()):
+        k_spark, k_dir, _ = key
+        if spark is not None and k_spark is not spark:
+            continue
+        if sf_dir is not None and k_dir != sf_dir:
+            continue
+        if results_only and not result:
+            continue
+        value, _ = _STORE.pop(key)
+        for v in _parts(value):
+            if isinstance(v, DataFrame):
+                try:
+                    # blocking: the timing tools call this between
+                    # samples precisely so the NEXT sample doesn't
+                    # run against lingering storage — an async
+                    # unpersist would leave the blocks dropping
+                    # during the sample it was meant to protect.
+                    v.unpersist(blocking=True)
+                except Exception:
+                    pass
+                try:
+                    # localCheckpoint frames: unpersist() above is
+                    # a no-op for them (their blocks belong to the
+                    # checkpointed RDD, which never registers with
+                    # the CacheManager), so superseded round frames
+                    # used to wait for JVM GC + ContextCleaner —
+                    # the round-14 q_cluster_dbscan_grid session
+                    # drift (2.8-5.6 s on unchanged code). Release
+                    # the RDD blocks deterministically instead.
+                    plan = v._jdf.queryExecution().analyzed()
+                    if plan.getClass().getSimpleName() == "LogicalRDD":
+                        plan.rdd().unpersist(True)
+                except Exception:
+                    pass
+            elif isinstance(v, TempDataset):
+                # Owned temp-dataset path: free the on-disk parquet
+                # with the cache entry (see TempDataset docstring).
+                shutil.rmtree(v, ignore_errors=True)
+        n += 1
     return n
 
 
@@ -177,149 +171,22 @@ def clear_caches(
     with a stopped session (unpersist failures are swallowed — the
     storage dies with the session anyway).
     """
-    return _evict(_REGISTERED, spark, sf_dir)
+    return _evict(spark, sf_dir, results_only=False)
 
 
 def clear_result_caches(
     spark: SparkSession | None = None, sf_dir: str | None = None
 ) -> int:
-    """Evict only result-level caches (see :func:`register_cache`).
+    """Evict only result-level entries and parked frames (see :func:`memo`).
 
     The single mechanism behind the bench/scaling/stress rule "never
     time a memoized answer": tools call this between timed samples
-    instead of reaching into private module dicts.
+    instead of reaching into private module state.
     """
-    return _evict(_RESULT_LEVEL, spark, sf_dir)
+    return _evict(spark, sf_dir, results_only=True)
 
 
 def registered_entry_count() -> int:
-    """Total live entries across all registered caches (test hook)."""
-    return sum(len(c) for c in _REGISTERED)
-
-
-def park_frame(
-    df: DataFrame, spark: SparkSession | None = None, sf_dir: str | None = None
-) -> DataFrame:
-    """Register a persisted/checkpointed frame that a RETURNED plan
-    still reads, for eviction at the next cache boundary
-    (:func:`clear_result_caches` between timed samples, or
-    :func:`clear_caches` at teardown) — the standalone twin of
-    :meth:`RoundLoop.park` for kernels that persist scratch relations
-    without running a round loop (e.g. q_suffix_lrs's token arrays).
-    With no (spark, sf_dir) the frame parks under the session-scoped
-    eager sentinel, which every sf_dir-scoped eviction also matches.
-    Returns ``df``."""
-    key = (
-        (spark, sf_dir)
-        if spark is not None and sf_dir is not None
-        else (df.sparkSession, _EAGER_SENTINEL)
-    )
-    _DEFERRED_ROUNDS.setdefault(key, []).append(df)
-    return df
-
-
-# Superseded rounds of deferred RoundLoops, keyed like every other
-# cache: clear_result_caches (bench/stress between samples) and
-# clear_caches (teardown) unpersist them at the session's natural
-# cleanup points. result_level: the rounds back a finished answer.
-_DEFERRED_ROUNDS: dict[tuple[SparkSession, str], Any] = register_cache(
-    {}, result_level=True
-)
-
-
-class RoundLoop:
-    """Per-round cache discipline for iterative kernels (SSSP, LPA,
-    TextRank, the BPE merge chain). Two release policies:
-
-    **eager** — ``step(df)`` persists round r, materializes it with a
-    ``count()`` job, then unpersists round r−1: the loop holds at most
-    TWO rounds of executor storage at any moment. Materialize-before-
-    release is mandatory: an ``InMemoryRelation`` whose blocks were
-    never computed recomputes its child on demand, so unpersisting a
-    round while a later round's plan (which references it twice —
-    union + join) is still lazy re-triggers exactly the exponential-
-    lineage recompute the per-round persist prevents (SSSP was 83
-    shuffles without it; round-8 plan audit). This is the policy for
-    loops whose round count GROWS (convergence iterations): the 2×
-    bound is worth a scheduler round-trip per round.
-
-    **deferred** (``RoundLoop(spark, sf_dir)``) — for FIXED-small-round
-    kernels (the four call sites run 3–5 rounds by constant): rounds
-    persist lazily, the whole chain executes as ONE job at the
-    caller's action (in-job block reuse already defeats the double-
-    reference recompute), and the superseded rounds are parked in a
-    registered result-level cache released by ``clear_result_caches``
-    / ``clear_caches`` — no leak across samples/queries, O(const)
-    in-flight storage. Chosen after round 10's cross-artifact bench
-    guard flagged the eager policy's cost on these kernels: the
-    per-round materialization jobs put q_bpe_learn_k at 6.2s isolated
-    vs its 1.6s pre-RoundLoop SCALING figure (and q_text_textrank at
-    2.5×) — a storage bound that is already O(1) for constant-round
-    loops is not worth 4× latency. Re-measured round 11 AFTER the
-    finish() fix below (the original comparison's warm samples read a
-    CacheManager-matched cached answer): with honest per-sample
-    eviction the deferred policy runs q_bpe_learn_k at ~2.2-2.7 s and
-    q_graph_modularity at ~2.5 s warm at sf0.01 — still well under
-    the eager policy's materialization cost, so the policy stands on
-    uncontaminated numbers.
-
-    The FINAL round's relation stays persisted when the operator
-    returns (the returned plan reads it; the caller's action happens
-    after the function returns) — but callers must ``finish()`` the
-    loop so that final round is PARKED for release at the next cache
-    boundary. Without that, the final round is registered nowhere:
-    Spark's CacheManager matches the identical rebuilt plan on the
-    next timed sample and serves the cached blocks, so bench/stress
-    sweeps would time a memoized answer (round-11 advisor finding).
-    """
-
-    def __init__(
-        self, spark: SparkSession | None = None, sf_dir: str | None = None
-    ) -> None:
-        """No args → eager policy; (spark, sf_dir) → deferred policy
-        parked under that cache key."""
-        self._prev: DataFrame | None = None
-        self._key = (spark, sf_dir) if spark is not None else None
-
-    def step(self, df: DataFrame) -> DataFrame:
-        """Persist ``df`` (round r); release round r−1 per policy."""
-        df = df.persist()
-        if self._key is None:
-            df.count()
-            if self._prev is not None:
-                try:
-                    self._prev.unpersist()
-                except Exception:
-                    # A stopped/restarted session mid-loop: storage
-                    # dies with the session; never fail the kernel
-                    # over cleanup.
-                    pass
-        elif self._prev is not None:
-            _DEFERRED_ROUNDS.setdefault(self._key, []).append(self._prev)
-        self._prev = df
-        return df
-
-    def finish(self) -> DataFrame | None:
-        """Park the FINAL round for eviction at the next cache boundary.
-
-        Does NOT unpersist anything now — the caller's returned plan
-        still reads the persisted relation, and eviction happens only
-        when a timing tool calls :func:`clear_result_caches` (or
-        :func:`clear_caches` at teardown) between samples. Eager loops
-        (no key) park under ``(session, "<eager-roundloop>")`` so a
-        session-scoped eviction still reaches them. Returns the final
-        round's DataFrame (or None for an empty loop); idempotent.
-        """
-        df, self._prev = self._prev, None
-        if df is not None:
-            key = self._key or (df.sparkSession, _EAGER_SENTINEL)
-            _DEFERRED_ROUNDS.setdefault(key, []).append(df)
-        return df
-
-    def park(self, df: DataFrame) -> DataFrame:
-        """Register an auxiliary persisted frame (not a loop round — e.g.
-        the BPE chain's 1-row ``best`` frames) for the same boundary
-        eviction, without touching the round chain. Returns ``df``."""
-        key = self._key or (df.sparkSession, _EAGER_SENTINEL)
-        _DEFERRED_ROUNDS.setdefault(key, []).append(df)
-        return df
+    """Live entries: one per memo entry, plus one per (session, sf_dir)
+    that has parked frames (test hook)."""
+    return len(_STORE)

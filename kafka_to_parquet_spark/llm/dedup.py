@@ -24,7 +24,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import register_cache
+from kafka_to_parquet_spark.cache import memo
 from kafka_to_parquet_spark.functions.hashes import (
     duck_h31,
     duck_h62,
@@ -53,12 +53,6 @@ MAX_SHINGLE_DF = 32  # shingles in more docs than this are boilerplate: drop the
 MAX_BAND_BUCKET = 256  # LSH band buckets above this sub-split by the next band, then drop
 
 
-# Keyed on the SparkSession object itself (not id(): CPython reuses
-# ids after GC, which could hand a new session a DataFrame bound to a
-# stopped one). The strong session ref is deliberate.
-_SHINGLE_CACHE: dict[tuple[SparkSession, str], DataFrame] = register_cache({})
-
-
 def shingled_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, source, sh): distinct word-3-gram shingles per
     document — the shared candidate representation for the ngram and
@@ -71,16 +65,17 @@ def shingled_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sweeps, bench warm-ups) from stacking duplicate cache entries in
     block-manager memory. This is the local[*] analog of
     checkpointing the shingle table before a 100 TB self-join."""
-    key = (spark, sf_dir)
-    if key in _SHINGLE_CACHE:
-        return _SHINGLE_CACHE[key]
+    return memo(spark, sf_dir, "shingled_documents", lambda: _shingles(spark, sf_dir))
+
+
+def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     # Filter on the token count, NOT on size(sh) > 0 (equivalent for
     # ≥3 tokens): a filter referencing the derived ``sh`` column gets
     # pushed below the projection by Catalyst with the whole
     # tokenize+shingle expression re-inlined into the Filter — the
     # pipeline then runs several times per row (observed 4-8× slower).
-    out = (
+    return (
         d.select("doc_id", "lang", "source", tokens_col(F.col("text")).alias("toks"))
         .filter(F.size("toks") >= 3)
         .withColumn(
@@ -94,8 +89,6 @@ def shingled_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("toks")
         .persist()
     )
-    _SHINGLE_CACHE[key] = out
-    return out
 
 
 @query(
@@ -383,16 +376,14 @@ kept AS MATERIALIZED (SELECT keyed.* FROM keyed JOIN s2 USING (b, k) WHERE c2 <=
 # the fingerprint table from several plan subtrees (bucket stats ×2 +
 # both join sides), and without a materialization boundary each subtree
 # re-runs the full tokenize+hash+vote pipeline (the dominant cost of
-# q_dedup_simhash_pairs in round 2's bench). Same keying discipline as
-# _SHINGLE_CACHE.
-_FP_CACHE: dict[tuple[SparkSession, str], DataFrame] = register_cache({})
-
-
+# q_dedup_simhash_pairs in round 2's bench).
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _FP_CACHE:
-        _FP_CACHE[key] = q_dedup_simhash(spark, sf_dir).persist()
-    return _FP_CACHE[key]
+    return memo(
+        spark,
+        sf_dir,
+        "simhash_fingerprints",
+        lambda: q_dedup_simhash(spark, sf_dir).persist(),
+    )
 
 
 # Shared DuckDB CTE block ending in `pairs` — the single source of
@@ -660,11 +651,9 @@ FROM scored WHERE cos_raw >= {EMBED_NEAR_TAU}
 
 
 # Memoized+persisted angular signatures — same multi-subtree argument
-# as _FP_CACHE (the capped band join reads signatures from 3 subtrees,
-# each of which would otherwise re-run 32 dot-product folds per vector).
-_ANGULAR_SIG_CACHE: dict[tuple[SparkSession, str], DataFrame] = register_cache({})
-
-
+# as simhash_fingerprints (the capped band join reads signatures from 3
+# subtrees, each of which would otherwise re-run 32 dot-product folds
+# per vector).
 def angular_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, sig): 32-bit random-hyperplane signature per embedding.
     Guards the hard-coded EMBED_DIM: a vector of any other length
@@ -672,9 +661,12 @@ def angular_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     zip_with against the 64-element sign literals (which would yield
     NULL signatures and an empty candidate set while the oracle kept
     computing partial dots — a silent cross-engine divergence)."""
-    key = (spark, sf_dir)
-    if key in _ANGULAR_SIG_CACHE:
-        return _ANGULAR_SIG_CACHE[key]
+    return memo(
+        spark, sf_dir, "angular_signatures", lambda: _angular_sigs(spark, sf_dir)
+    )
+
+
+def _angular_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     from kafka_to_parquet_spark.functions.vectors import dot_expr
 
@@ -693,13 +685,11 @@ def angular_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k in range(ANGULAR_BITS):
         term = F.when(F.col(f"p{k}") > 0, F.lit(1 << k)).otherwise(F.lit(0))
         sig_col = term if sig_col is None else sig_col + term
-    sig = (
+    return (
         guarded.select("vec_id", *projs)
         .select("vec_id", sig_col.cast("long").alias("sig"))
         .persist()
     )
-    _ANGULAR_SIG_CACHE[key] = sig
-    return sig
 
 
 @query("q_dedup_embedding_lsh", oracle=_angular_oracle())
@@ -836,22 +826,20 @@ SUBSTR_W = 8  # tokens per window; production uses ~50-token windows
 # (cross-doc dup counts, per-doc totals, per-doc hits); without a
 # materialization boundary each subtree re-runs scan + tokenize +
 # md5-per-window — the dominant cost — so the table is persisted and
-# memoized per (session, sf_dir), same discipline as _SHINGLE_CACHE.
-_WINDOW_CACHE: dict[tuple[SparkSession, str], DataFrame] = register_cache({})
-
-
+# memoized per (session, sf_dir).
 def _window_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, i, wh) — one 62-bit fingerprint per consecutive
     SUBSTR_W-token window (stride 1, 1-based start position i) of
     every document with ≥ SUBSTR_W tokens. Shared by
     q_dedup_substring (ignores i) and q_dedup_span_strip (maps i back
     to covered token positions)."""
-    key = (spark, sf_dir)
-    if key in _WINDOW_CACHE:
-        return _WINDOW_CACHE[key]
+    return memo(spark, sf_dir, "window_hashes", lambda: _windows(spark, sf_dir))
+
+
+def _windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     window_text = f"concat_ws(' ', slice(toks, i, {SUBSTR_W}))"
-    out = (
+    return (
         d.select("doc_id", tokens_col(F.col("text")).alias("toks"))
         .filter(F.size("toks") >= SUBSTR_W)
         .select(
@@ -866,8 +854,6 @@ def _window_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", (F.col("pos0") + 1).alias("i"), "wh")
         .persist()
     )
-    _WINDOW_CACHE[key] = out
-    return out
 
 
 def _dup_window_hashes(win: DataFrame) -> DataFrame:

@@ -33,7 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import register_cache
+from kafka_to_parquet_spark.cache import memo
 from kafka_to_parquet_spark.functions.hashes import H31_P, duck_h31, spark_h31
 from kafka_to_parquet_spark.functions.rounding import floor_round, floor_round_sql
 from kafka_to_parquet_spark.llm.dedup import (
@@ -134,13 +134,11 @@ JOIN sh sb ON cand.doc_b = sb.doc_id
 # expensive half of the banded join, and three declared queries read
 # it; this is the "LSH index" a production corpus persists between
 # ingests.
-_KEPT_BANDS_CACHE: dict[tuple[SparkSession, str], DataFrame] = register_cache({})
-
-
 def kept_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key in _KEPT_BANDS_CACHE:
-        return _KEPT_BANDS_CACHE[key]
+    return memo(spark, sf_dir, "kept_bands", lambda: _kept_bands(spark, sf_dir))
+
+
+def _kept_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = shingled_documents(spark, sf_dir)
     ex = base.select("doc_id", F.explode("sh").alias("s"))
     h = ex.select("doc_id", F.expr(_SPARK_H).alias("hm"))
@@ -157,14 +155,12 @@ def kept_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bands = sig.select("doc_id", F.posexplode(keys).alias("b", "k"))
     cnt = bands.groupBy("b", "k").agg(F.count(F.lit(1)).alias("c"))
-    out = (
+    return (
         bands.join(cnt, ["b", "k"])
         .filter(F.col("c") <= MAX_BAND_BUCKET)
         .drop("c")
         .persist()
     )
-    _KEPT_BANDS_CACHE[key] = out
-    return out
 
 
 def minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,17 +237,12 @@ PREFIX_TAU = 0.5  # Jaccard threshold; ceil(tau*n) == (n+1) DIV 2 — pure integ
 PREFIX_K = 3
 
 # Memoized+persisted hashed shingle sets — the verification stage reads
-# them from two subtrees and bench sweeps re-call the query; the same
-# keying discipline as dedup.py's _SHINGLE_CACHE.
-_HASHED_CACHE: dict[tuple[SparkSession, str], DataFrame] = register_cache({})
-
-
+# them from two subtrees and bench sweeps re-call the query.
 def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _HASHED_CACHE:
-        base = shingled_documents(spark, sf_dir)
-        _HASHED_CACHE[key] = (
-            base.filter(F.size("sh") > 0)
+    def build() -> DataFrame:
+        return (
+            shingled_documents(spark, sf_dir)
+            .filter(F.size("sh") > 0)
             .select(
                 "doc_id",
                 F.expr(
@@ -260,22 +251,8 @@ def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .persist()
         )
-    return _HASHED_CACHE[key]
 
-
-
-# PPJoin posting tables per (session, sf_dir) — a DICT per key: the
-# 'full' postings plus one 'prefix:<expr>' entry per caller threshold.
-# PERSISTING THESE IS LOAD-BEARING, not a convenience: the Jaccard
-# self-join references the prefix relation through TWO aliases, and
-# without the persist each alias re-executes the entire
-# explode → df-join → per-doc window → size-join pipeline — at the
-# sf≈100 stress that doubled ~3 corpus-sized shuffles into ~65 GB of
-# scratch and filled the disk. With the persist the pipeline runs once
-# and both join sides read the cached blocks (in-job block reuse).
-_POSTINGS_CACHE: dict[tuple[SparkSession, str], dict[str, DataFrame]] = (
-    register_cache({})
-)
+    return memo(spark, sf_dir, "hashed_shingles", build)
 
 
 def _posting_plans(spark: SparkSession, sf_dir: str, prefix_len_sql: str):
@@ -305,7 +282,7 @@ def _cached_postings(
     spark: SparkSession, sf_dir: str, prefix_len_sql: str, names: tuple[str, ...]
 ) -> dict[str, DataFrame]:
     """The requested posting tables ({"full", "prefix"} ⊆), persisted
-    lazily PER NAME through the registered feature cache — a caller
+    lazily PER NAME through the feature memo — a caller
     that only joins prefixes (q_dedup_jaccard_prefix) never marks the
     full relation persisted. Canonical shingle order is (document
     frequency, hash) — rarest first — and ``prefix_len_sql`` is an
@@ -315,20 +292,29 @@ def _cached_postings(
     position) so callers can apply the PPJoin positional filter."""
     _, full, prefix = _posting_plans(spark, sf_dir, prefix_len_sql)
     plans = {"full": full, "prefix": prefix}
-    inner = _POSTINGS_CACHE.setdefault((spark, sf_dir), {})
+    # One memo entry per variant: 'postings:full' plus one
+    # 'postings:prefix:<expr>' per caller threshold. PERSISTING THESE
+    # IS LOAD-BEARING, not a convenience: the Jaccard self-join
+    # references the prefix relation through TWO aliases, and without
+    # the persist each alias re-executes the entire
+    # explode → df-join → per-doc window → size-join pipeline — at the
+    # sf≈100 stress that doubled ~3 corpus-sized shuffles into ~65 GB
+    # of scratch and filled the disk. With the persist the pipeline
+    # runs once and both join sides read the cached blocks (in-job
+    # block reuse).
     out: dict[str, DataFrame] = {}
     for nm in names:
         k = f"prefix:{prefix_len_sql}" if nm == "prefix" else nm
-        if k not in inner:
-            inner[k] = plans[nm].persist()
-        out[nm] = inner[k]
+        out[nm] = memo(
+            spark, sf_dir, f"postings:{k}", lambda nm=nm: plans[nm].persist()
+        )
     return out
 
 
 def _prefix_postings(spark: SparkSession, sf_dir: str, prefix_len_sql: str):
     """Back-compat accessor for callers that want the classic triple
     (q_shard_balance): (hashed-shingle table, full postings, prefix
-    postings), persisted through the registered feature cache."""
+    postings), persisted through the feature memo."""
     frames = _cached_postings(
         spark, sf_dir, prefix_len_sql, ("full", "prefix")
     )
@@ -352,17 +338,14 @@ PPJOIN_TARGET_POSTINGS = 80_000_000
 # posting table. One map-side aggregate over the persisted hashed-
 # shingle relation, which PPJoin verification materializes anyway, so
 # the estimate costs nothing the join wasn't already paying.
-_POSTING_COUNT_CACHE: dict[tuple[SparkSession, str], int] = register_cache({})
-
-
 def _posting_count(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark, sf_dir)
-    if key not in _POSTING_COUNT_CACHE:
+    def build() -> int:
         row = _hashed_shingles(spark, sf_dir).agg(
             F.sum(F.size("hs")).alias("n")
         ).first()
-        _POSTING_COUNT_CACHE[key] = int(row[0] or 0)
-    return _POSTING_COUNT_CACHE[key]
+        return int(row[0] or 0)
+
+    return memo(spark, sf_dir, "posting_count", build)
 
 
 def ppjoin_shards(

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import register_cache
+from kafka_to_parquet_spark.cache import memo
 from kafka_to_parquet_spark.functions.vectors import cosine_expr, dot_expr, duck_cosine, norm_expr
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
@@ -408,19 +408,17 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (ivf_assign's keep passthrough) for the filtered-ANN consumer.
 # Feature-level by the bench honesty rule: the index is a shared
 # input, not a query's answer.
-_IVF_HOME_CACHE: dict[tuple[SparkSession, str], DataFrame] = register_cache({})
-
-
 def ivf_home(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _IVF_HOME_CACHE:
-        from kafka_to_parquet_spark.llm.clustering import ivf_assign
+    from kafka_to_parquet_spark.llm.clustering import ivf_assign
 
-        e = load(spark, sf_dir, "embeddings")
-        _IVF_HOME_CACHE[key] = ivf_assign(
-            e, KNN_IVF_MOD, keep=("label",)
-        ).persist()
-    return _IVF_HOME_CACHE[key]
+    return memo(
+        spark,
+        sf_dir,
+        "ivf_home",
+        lambda: ivf_assign(
+            load(spark, sf_dir, "embeddings"), KNN_IVF_MOD, keep=("label",)
+        ).persist(),
+    )
 
 
 def _knn_ivf_oracle() -> str:

@@ -96,7 +96,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import RoundLoop
+from kafka_to_parquet_spark.cache import memo, park
 from kafka_to_parquet_spark.functions.hashes import (
     H31_P,
     duck_h31,
@@ -864,7 +864,6 @@ def q_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation exchanges per round; weighted edges stream through. At
     100 TB this is textbook distributed Bellman-Ford (the Pregel SSSP
     kernel); Dijkstra's priority queue does not distribute."""
-    from kafka_to_parquet_spark.operators.graph import edge_feature
 
     def _build() -> DataFrame:
         o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -890,7 +889,7 @@ def q_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             .sortWithinPartitions("src")
         )
 
-    edges = edge_feature(spark, sf_dir, "trade_sym_weighted", _build)
+    edges = memo(spark, sf_dir, "trade_sym_weighted", lambda: _build().persist())
     nodes = edges.select(F.col("src").alias("node")).distinct()
     # Seed = min node id. min(src) over the RAW symmetric edge relation
     # equals min over distinct nodes (every node appears as a src), so
@@ -900,7 +899,6 @@ def q_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = edges.agg(F.min("src").alias("node")).select(
         "node", F.lit(0).cast("long").alias("dist")
     )
-    loop = RoundLoop(spark, sf_dir)  # deferred: fixed-round kernel
     for _ in range(SSSP_ROUNDS):
         relaxed = edges.join(r, edges.src == r.node).select(
             F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
@@ -908,15 +906,16 @@ def q_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         # each round's distances feed BOTH the next relaxation join
         # and the next union — without the materialization boundary
         # the lineage doubles per round (2^k subtrees, 83 shuffles
-        # in the round-8 plan audit; 20 with it). RoundLoop releases
-        # round r−1's blocks once round r materializes, so the loop
-        # holds 2 node-sized relations, not SSSP_ROUNDS.
-        r = loop.step(
+        # in the round-8 plan audit; 20 with it). Each round is
+        # parked for release at the next cache boundary.
+        r = park(
             r.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").cast("long").alias("dist"))
+            .persist(),
+            spark,
+            sf_dir,
         )
-    loop.finish()  # park the final round for sweep-boundary eviction
     reached = r.groupBy("dist").agg(F.count("*").cast("long").alias("n_nodes"))
     unreached = (
         nodes.join(r, "node", "left_anti")
@@ -1040,11 +1039,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     label relation; the within-community count is two hash joins of
     edges against node-sized labels; degree mass is map-side
     combinable. Nothing is community-quadratic."""
-    from kafka_to_parquet_spark.operators.graph import (
-        MIN_SUP,
-        _part_pairs,
-        edge_feature,
-    )
+    from kafka_to_parquet_spark.operators.graph import MIN_SUP, _part_pairs
 
     def _build() -> DataFrame:
         ce = (
@@ -1060,12 +1055,11 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .sortWithinPartitions("src")
         )
 
-    edges = edge_feature(spark, sf_dir, "copurchase_sym", _build)
+    edges = memo(spark, sf_dir, "copurchase_sym", lambda: _build().persist())
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lab")
     )
     w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("lab").asc())
-    loop = RoundLoop(spark, sf_dir)  # deferred: fixed-round kernel
     for _ in range(MOD_LPA_ROUNDS):
         freq = (
             edges.join(labels, edges.src == labels.node)
@@ -1076,14 +1070,16 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the final labels feed BOTH audit joins (within + degsum)
         # and each round feeds the next — the per-round persist keeps
         # the lineage linear (32 shuffles -> 23 in the round-8 plan
-        # audit); RoundLoop releases round r−1 once round r is
-        # materialized so only the live round holds storage.
-        labels = loop.step(
+        # audit); each round is parked for release at the next cache
+        # boundary.
+        labels = park(
             freq.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("node", "lab")
+            .persist(),
+            spark,
+            sf_dir,
         )
-    loop.finish()  # park the final round for sweep-boundary eviction
     m = edges.agg(F.count("*").cast("long").alias("m_dir"))
     la = labels.select(F.col("node").alias("src"), F.col("lab").alias("community"))
     lb = labels.select(F.col("node").alias("dst"), F.col("lab").alias("lab_b"))
@@ -1678,16 +1674,17 @@ def _bpe_chain(spark: SparkSession, sf_dir: str):
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("wf"))
     )
-    # The per-round segmentation is vocabulary-sized; the deferred
-    # RoundLoop parks superseded rounds for release at the next
-    # clear_result_caches. The 1-row `best` frames below are parked
-    # too (all K are consumed by the final merge table, which the
-    # caller's action materializes before any boundary eviction).
-    loop = RoundLoop(spark, sf_dir)  # deferred: fixed-round kernel
-    v = loop.step(
+    # The per-round segmentation is vocabulary-sized; every round is
+    # parked for release at the next clear_result_caches. The 1-row
+    # `best` frames below are parked too (all K are consumed by the
+    # final merge table, which the caller's action materializes before
+    # any boundary eviction).
+    v = park(
         tf.select(
             "word", F.regexp_replace("word", "(.)", "\x1f$1\x1f").alias("s"), "wf"
-        )
+        ).persist(),
+        spark,
+        sf_dir,
     )
     pair_expr = (
         "transform(sequence(1, size(syms) - 1),"
@@ -1709,9 +1706,8 @@ def _bpe_chain(spark: SparkSession, sf_dir: str):
             .limit(1)
             .persist()
         )
-        loop.park(best)
-        merges.append(best)
-        v = loop.step(
+        merges.append(park(best, spark, sf_dir))
+        v = park(
             v.crossJoin(F.broadcast(best))
             .select(
                 "word",
@@ -1721,8 +1717,10 @@ def _bpe_chain(spark: SparkSession, sf_dir: str):
                 ).alias("s"),
                 "wf",
             )
+            .persist(),
+            spark,
+            sf_dir,
         )
-    loop.finish()  # park the final segmentation for boundary eviction
     return v, merges
 
 
@@ -2182,7 +2180,7 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-keyed. TakeOrdered bounds the report."""
     from kafka_to_parquet_spark.operators.graph import _part_pairs
 
-    # already persisted by the part_pairs_support edge_feature cache
+    # already persisted by the part_pairs_support feature memo
     pp = _part_pairs(spark, sf_dir)
     kq = pp.selectExpr(
         f"CAST(percentile_disc({CC_SUP_Q}) WITHIN GROUP (ORDER BY support)"
@@ -2478,7 +2476,6 @@ def q_text_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     PageRank round exchanges only the vocabulary-sized rank relation
     (edges persist pre-hashed on src). Vocabulary-bound end to end —
     the corpus is touched once, by the postings explode."""
-    from kafka_to_parquet_spark.operators.graph import edge_feature
 
     def _build() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
@@ -2529,7 +2526,7 @@ def q_text_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .sortWithinPartitions("src")
         )
 
-    edges_s = edge_feature(spark, sf_dir, "textrank_cooc", _build)
+    edges_s = memo(spark, sf_dir, "textrank_cooc", lambda: _build().persist())
     tnodes = edges_s.select(F.col("src").alias("node")).distinct()
     tpar = tnodes.agg(
         F.expr(f"{_TR_T} DIV count(*) AS r_init"),
@@ -2538,7 +2535,6 @@ def q_text_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = tnodes.crossJoin(F.broadcast(tpar)).select(
         "node", F.col("r_init").alias("r")
     )
-    loop = RoundLoop(spark, sf_dir)  # deferred: fixed-round kernel
     for _ in range(TR_ROUNDS):
         contrib = (
             edges_s.join(r, edges_s.src == r.node)
@@ -2547,18 +2543,19 @@ def q_text_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("c").alias("c"))
         )
         # vocabulary-sized rank relation, persisted per round so the
-        # chain of join+agg rounds stays linear; RoundLoop bounds the
-        # loop's storage to the live round (+ its predecessor during
-        # the handoff) instead of TR_ROUNDS cached copies.
-        r = loop.step(
+        # chain of join+agg rounds stays linear; each round is parked
+        # for release at the next cache boundary.
+        r = park(
             tnodes.join(contrib, tnodes.node == contrib.node2, "left")
             .crossJoin(F.broadcast(tpar))
             .select(
                 "node",
                 F.expr("base + (85 * COALESCE(c, 0)) DIV 100").alias("r"),
             )
+            .persist(),
+            spark,
+            sf_dir,
         )
-    loop.finish()  # park the final ranks for sweep-boundary eviction
     return (
         r.select(F.col("node").alias("word"), F.col("r").cast("long").alias("rank_units"))
         .orderBy(F.desc("rank_units"), "word")

@@ -52,7 +52,7 @@ import gc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import park_frame
+from kafka_to_parquet_spark.cache import memo, park
 from kafka_to_parquet_spark.functions.text import _TOKENS_SQL, tokens_col
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
@@ -1148,7 +1148,7 @@ def q_suffix_lrs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpersisted here — the boundary eviction in cache.py releases it
     # between timed samples / at teardown instead of leaking a
     # corpus-sized relation per invocation in a long-lived session.
-    toks = park_frame(
+    toks = park(
         d.select("doc_id", tokens_col(F.col("text")).alias("t"))
         .filter(F.size("t") > 0)
         .persist(),
@@ -1505,7 +1505,7 @@ def q_cluster_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: points collapse to the occupied-cell relation in ONE
     map-side-combined aggregate (the only pass over the data); the CC
-    iteration (min-label + pointer-jump, RoundLoop-released persists)
+    iteration (min-label + pointer-jump, parked checkpoints)
     runs over CELLS — bounded by the grid extent, not the corpus.
     Border/noise assignment is a 9-offset broadcast equi-join, never a
     theta join."""
@@ -1515,17 +1515,17 @@ def q_cluster_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # happened implicitly — the raw per-invocation .persist() calls
     # hit the CacheManager's identical-plan match, logging "Asked to
     # cache already cached data" WARNs with NO owner able to evict
-    # them). The registered cache keeps the same warm-sample timing
+    # them). The memo entry keeps the same warm-sample timing
     # semantics (build lands in the bench's fbt, like every feature
     # table) with an explicit lifecycle: clear_caches frees all three
     # at teardown/dataset switches.
-    key = (spark, sf_dir)
     # 9-row local relation, broadcast wherever used — needed by the
-    # border/noise joins below whether or not the grid cache is warm.
+    # border/noise joins below whether or not the grid entry is warm.
     offs = spark.createDataFrame(
         [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)], ["dx", "dy"]
     )
-    if key not in _DBSCAN_GRID_CACHE:
+
+    def build() -> tuple[DataFrame, DataFrame, DataFrame]:
         e = load(spark, sf_dir, "embeddings")
         u = e.select(
             F.expr(_db_micro(1, "element_at")).alias("u1"),
@@ -1552,8 +1552,9 @@ def q_cluster_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cx").alias("nx"), F.col("cy").alias("ny"), F.col("id").alias("e_v")
         )
         adj_b = nbr.join(core_k, ["nx", "ny"]).select("e_u", "e_v").persist()
-        _DBSCAN_GRID_CACHE[key] = (cell_b, core_b, adj_b)
-    cell, core, adj = _DBSCAN_GRID_CACHE[key]
+        return cell_b, core_b, adj_b
+
+    cell, core, adj = memo(spark, sf_dir, "dbscan_grid", build)
     # localCheckpoint, not persist, as the round boundary: each round
     # references `labels` TWICE (hop join + pointer jump), so a
     # persisted-but-still-chained logical plan doubles per round and
@@ -1562,7 +1563,7 @@ def q_cluster_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round a leaf; the convergence collect right below is the
     # materializing action, so each round schedules ONE job — the
     # llm/components.py pointer-jumping pattern exactly. Superseded
-    # rounds PARK in the RoundLoop registry (round 15, per the r14
+    # rounds PARK in the cache store (round 15, per the r14
     # verdict): before, their checkpoint blocks waited for JVM GC +
     # ContextCleaner, which in a storage-busy session let rounds
     # linger and samples drift 2.8-5.6 s on unchanged code; parked
@@ -1590,7 +1591,7 @@ def q_cluster_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=False)
         )
         cur = new_labels.agg(F.sum("lab")).collect()[0][0]
-        park_frame(labels, spark, sf_dir)  # superseded round
+        park(labels, spark, sf_dir)  # superseded round
         labels = new_labels
         if cur == prev_sum:
             converged = True
@@ -1599,8 +1600,8 @@ def q_cluster_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not converged:
         raise RuntimeError("q_cluster_dbscan_grid: CC did not converge")
     # The returned plan reads the final round — park it for the next
-    # cache boundary (the RoundLoop.finish discipline).
-    park_frame(labels, spark, sf_dir)
+    # cache boundary.
+    park(labels, spark, sf_dir)
     lab = labels.select(F.col("node").alias("id"), F.col("lab").alias("cluster"))
     ccore = (
         core.join(lab, "id")
@@ -1663,44 +1664,15 @@ q_cluster_dbscan_grid.__doc__ = (
 # Streaming incremental MinHash — stream-static LSH band join
 # ---------------------------------------------------------------------------
 
-# (SparkSession, sf_dir) -> temp dir holding a documents.parquet
-# symlink for the file-stream source (the streaming/stateful.py
-# _stream_source_dir pattern, documents flavor). Values are paths —
-# enrolled for dict hygiene, no executor storage.
-from kafka_to_parquet_spark.cache import register_cache  # noqa: E402
-
-_DOC_STREAM_DIRS: dict = register_cache({})
-
-# (SparkSession, sf_dir) -> (cell, core, adj) persisted grid features
-# for q_cluster_dbscan_grid (round 15 — see the in-function comment).
-# Feature-level: stays warm across timed samples like every shared
-# feature table; clear_caches frees it.
-_DBSCAN_GRID_CACHE: dict = register_cache({})
-
-
 def _stream_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
-    key = (spark, sf_dir)
-    d = _DOC_STREAM_DIRS.get(key)
-    if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="ktps_docstream_")
-        src = os.path.join(sf_dir, "documents.parquet")
-        os.symlink(
-            src,
-            os.path.join(d, "documents.parquet"),
-            target_is_directory=os.path.isdir(src),
-        )
-        # TempDataset: the symlink dir is cache-owned — eviction
-        # removes it from disk with the entry instead of leaking it.
-        from kafka_to_parquet_spark.cache import TempDataset
+    from kafka_to_parquet_spark.streaming.stateful import stream_source_dir
 
-        _DOC_STREAM_DIRS[key] = TempDataset(d)
-    src = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(src).schema
-    where = os.path.join(d, "documents.parquet") if os.path.isdir(src) else d
-    return spark.readStream.schema(schema).parquet(where)
+    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    return spark.readStream.schema(schema).parquet(
+        stream_source_dir(spark, sf_dir, "documents")
+    )
 
 
 def _stream_minhash_oracle() -> str:
@@ -1878,7 +1850,7 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of ONE center row + a map-side distance update; the
     argmax is a pair of 1-row global reduces (max, then min vec_id at
     that max), never a sort. The per-round ``dmin`` relation is
-    persisted through the deferred RoundLoop — round r's blocks serve
+    persisted and parked each round — round r's blocks serve
     round r's scalar reduces AND round r+1's update, so each round
     scans the vectors once (without the persist the chained lineage
     re-executed every prior round per reduce: ~K²/2 corpus passes, 80
@@ -1890,8 +1862,6 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: extension tier (SURVEY §2 X-rows) — the reference ETL
     (src/main.rs) has no analytics; coreset/diversity selection is the
     data-efficient-training step of a curation pipeline."""
-    from kafka_to_parquet_spark.cache import RoundLoop
-
     uv = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr("transform(embedding, x -> " + _KNN_UNIT.format(x="x") + ")").alias(
@@ -1902,14 +1872,17 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = uv.join(F.broadcast(seed), uv.vec_id == F.col("cid")).select(
         "cid", F.col("uvec").alias("carr")
     )
-    loop = RoundLoop(spark, sf_dir)  # deferred: fixed-round kernel
-    d = loop.step(
-        uv.crossJoin(F.broadcast(cent)).select(
+    d = park(
+        uv.crossJoin(F.broadcast(cent))
+        .select(
             "vec_id",
             "uvec",
             F.col("cid").alias("cur_cid"),
             F.expr(_D_SPARK.format(a="uvec", b="carr")).alias("dmin"),
         )
+        .persist(),
+        spark,
+        sf_dir,
     )
     steps = [
         d.agg(
@@ -1927,8 +1900,9 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent = uv.join(F.broadcast(cand), uv.vec_id == F.col("cid")).select(
             "cid", F.col("uvec").alias("carr")
         )
-        d = loop.step(
-            d.crossJoin(F.broadcast(cent)).select(
+        d = park(
+            d.crossJoin(F.broadcast(cent))
+            .select(
                 "vec_id",
                 "uvec",
                 F.col("cid").alias("cur_cid"),
@@ -1936,6 +1910,9 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("dmin"), F.expr(_D_SPARK.format(a="uvec", b="carr"))
                 ).alias("dmin"),
             )
+            .persist(),
+            spark,
+            sf_dir,
         )
         steps.append(
             d.agg(
@@ -1944,7 +1921,6 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("dmin").alias("radius_sq"),
             )
         )
-    loop.finish()  # park the final dmin round for sweep-boundary eviction
     out = steps[0]
     for s in steps[1:]:
         out = out.unionByName(s)

@@ -24,7 +24,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import register_cache
+from kafka_to_parquet_spark.cache import memo
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -369,8 +369,6 @@ def q_ts_rollup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "freshly arrived" partition is days >= CUTOFF.
 INCR_CUTOFF = "2024-01-25"
 
-_STATE_CACHE: dict[tuple[SparkSession, str], str] = register_cache({})
-
 
 @query(
     "q_incr_agg",
@@ -397,9 +395,9 @@ def q_incr_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the merge is a second-level sum over disjoint day keys; with a
     date-partitioned layout (sources/partitioned.py) the delta scan
     prunes to the new partitions before reading a row."""
-    key = (spark, sf_dir)
     cutoff = F.lit(INCR_CUTOFF).cast("date")
-    if key not in _STATE_CACHE:
+
+    def build() -> str:
         digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         state_dir = os.path.join(tempfile.gettempdir(), f"ktps_aggstate_{digest}")
         (
@@ -413,8 +411,9 @@ def q_incr_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(state_dir)
         )
-        _STATE_CACHE[key] = state_dir
-    state = spark.read.parquet(_STATE_CACHE[key])
+        return state_dir
+
+    state = spark.read.parquet(memo(spark, sf_dir, "incr_agg_state", build))
     delta = (
         load(spark, sf_dir, "events")
         .filter(F.to_date("ts") >= cutoff)

@@ -17,7 +17,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import register_cache
+from kafka_to_parquet_spark.cache import memo
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -463,8 +463,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 N_BUCKETS = 16
 
-_BUCKETED_CACHE: dict = register_cache({})
-
 
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders and customer ONCE per (session, sf) as bucketed
@@ -474,8 +472,8 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     hash-partitioned by the join key, so a key-equal join reads
     bucket i of each side into the same task — no Exchange at query
     time, amortized across every query that joins on that key."""
-    key = (spark, sf_dir)
-    if key not in _BUCKETED_CACHE:
+
+    def build() -> tuple[str, str]:
         digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         t_ord = f"ktps_b_orders_{digest}"
         t_cus = f"ktps_b_customer_{digest}"
@@ -493,8 +491,9 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 .sortBy(sort_col)
                 .saveAsTable(tname)
             )
-        _BUCKETED_CACHE[key] = (t_ord, t_cus)
-    return _BUCKETED_CACHE[key]
+        return t_ord, t_cus
+
+    return memo(spark, sf_dir, "bucketed_tables", build)
 
 
 @query(

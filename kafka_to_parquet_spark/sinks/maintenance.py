@@ -25,7 +25,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import register_cache
+from kafka_to_parquet_spark.cache import memo
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -39,8 +39,6 @@ FRAGMENT_FILES = 200
 # ceil(bytes / target)) is the production one.
 TARGET_BYTES = 256 * 1024
 
-_COMPACT_CACHE: dict[tuple[SparkSession, str], tuple[str, str]] = register_cache({})
-
 
 def _layout_bytes(path: str) -> int:
     return sum(
@@ -51,8 +49,8 @@ def _layout_bytes(path: str) -> int:
 def compact_events(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build (once per session+sf) the fragmented layout and its
     compacted rewrite; returns (fragmented_dir, compacted_dir)."""
-    key = (spark, sf_dir)
-    if key not in _COMPACT_CACHE:
+
+    def build() -> tuple[str, str]:
         digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         frag = os.path.join(tempfile.gettempdir(), f"ktps_frag_{digest}")
         comp = os.path.join(tempfile.gettempdir(), f"ktps_compact_{digest}")
@@ -69,8 +67,9 @@ def compact_events(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         spark.read.parquet(frag).repartition(n_out).write.mode(
             "overwrite"
         ).parquet(comp)
-        _COMPACT_CACHE[key] = (frag, comp)
-    return _COMPACT_CACHE[key]
+        return frag, comp
+
+    return memo(spark, sf_dir, "compact_events", build)
 
 
 @query(

@@ -36,6 +36,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_to_parquet_spark.cache import TempDataset, memo
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.sources.kafka_analog import (
     BATCH_SIZE,
@@ -112,11 +113,6 @@ def streaming_sink(
     )
 
 
-# Directories already scheduled for exit-time cleanup (guard so repeat
-# invocations don't stack one atexit entry per call).
-_ROUNDTRIP_CLEANUPS: set[str] = set()
-
-
 @query(
     "q_parquet_roundtrip",
     oracle="""
@@ -136,26 +132,23 @@ def q_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # processes (bench alongside pytest) get disjoint directories —
     # a shared sf-only path let one process read files mid-rewrite by
     # the other, and stale higher-numbered batch files from a previous
-    # layout could survive into the read-back.
-    digest = hashlib.md5(
-        f"{spark.sparkContext.applicationId}_{sf_dir}".encode()
-    ).hexdigest()[:8]
-    out_dir = os.path.join(tempfile.gettempdir(), f"ktps_roundtrip_{digest}")
-    try:
-        shutil.rmtree(out_dir, ignore_errors=True)  # drop any stale layout
-        rec = kafka_records(spark, sf_dir)
-        manifest = write_partition_batches(rec, out_dir, BATCH_SIZE)
-        manifest.count()  # action: perform the distributed write
-        # Materialize the read-back (files are still genuinely read —
-        # the checkpoint just pins the rows) so the returned frame
-        # survives the next invocation's rmtree of the same directory.
-        return spark.read.parquet(out_dir).select("b").localCheckpoint(eager=True)
-    finally:
-        # Keep the layout on disk for post-hoc inspection during the
-        # process lifetime; clean at exit — once per directory, not
-        # once per invocation.
-        import atexit
+    # layout could survive into the read-back. The directory is a
+    # cache-owned TempDataset: the layout stays on disk for post-hoc
+    # inspection until clear_caches (or process exit) removes it.
+    def build() -> TempDataset:
+        digest = hashlib.md5(
+            f"{spark.sparkContext.applicationId}_{sf_dir}".encode()
+        ).hexdigest()[:8]
+        return TempDataset(
+            os.path.join(tempfile.gettempdir(), f"ktps_roundtrip_{digest}")
+        )
 
-        if out_dir not in _ROUNDTRIP_CLEANUPS:
-            _ROUNDTRIP_CLEANUPS.add(out_dir)
-            atexit.register(shutil.rmtree, out_dir, True)
+    out_dir = memo(spark, sf_dir, "parquet_roundtrip_dir", build)
+    shutil.rmtree(out_dir, ignore_errors=True)  # drop any stale layout
+    rec = kafka_records(spark, sf_dir)
+    manifest = write_partition_batches(rec, out_dir, BATCH_SIZE)
+    manifest.count()  # action: perform the distributed write
+    # Materialize the read-back (files are still genuinely read — the
+    # checkpoint just pins the rows) so the returned frame survives the
+    # next invocation's rmtree of the same directory.
+    return spark.read.parquet(out_dir).select("b").localCheckpoint(eager=True)

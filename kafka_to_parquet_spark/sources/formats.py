@@ -23,13 +23,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import register_cache
+from kafka_to_parquet_spark.cache import memo
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
-
-_JSONL_CACHE: dict[tuple[SparkSession, str], str] = register_cache({})
-_CSV_CACHE: dict[tuple[SparkSession, str], str] = register_cache({})
-
 
 def _digest(sf_dir: str) -> str:
     return hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -48,15 +44,15 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-exact (text integrity via md5). JSON string escaping
     (newlines, quotes, unicode) is exercised by the full text body.
     One file tree per (session, sf); the read is the measured path."""
-    key = (spark, sf_dir)
-    if key not in _JSONL_CACHE:
+    def build() -> str:
         out = os.path.join(tempfile.gettempdir(), f"ktps_jsonl_{_digest(sf_dir)}")
         load(spark, sf_dir, "documents").write.mode("overwrite").option(
             "compression", "gzip"
         ).json(out)
-        _JSONL_CACHE[key] = out
+        return out
+
     d = load(spark, sf_dir, "documents")
-    back = spark.read.schema(d.schema).json(_JSONL_CACHE[key])
+    back = spark.read.schema(d.schema).json(memo(spark, sf_dir, "jsonl", build))
     return back.select(
         "doc_id", "lang", "source", "n_chars", F.md5("text").alias("text_fp")
     )
@@ -80,8 +76,7 @@ def q_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared); ``value`` is compared in integer cents — CSV serializes
     doubles as decimal strings, and exact-integer cents survive the
     round-trip while raw double formatting would not."""
-    key = (spark, sf_dir)
-    if key not in _CSV_CACHE:
+    def build() -> str:
         out = os.path.join(tempfile.gettempdir(), f"ktps_csv_{_digest(sf_dir)}")
         ev = load(spark, sf_dir, "events")
         # Serialize ts as epoch micros (exact integer) — CSV timestamp
@@ -97,9 +92,14 @@ def q_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("overwrite").option("header", True).option(
             "compression", "gzip"
         ).csv(out)
-        _CSV_CACHE[key] = out
+        return out
+
     schema = "event_id long, user_id long, event_type string, ts_us long, value double, props string"
-    back = spark.read.schema(schema).option("header", True).csv(_CSV_CACHE[key])
+    back = (
+        spark.read.schema(schema)
+        .option("header", True)
+        .csv(memo(spark, sf_dir, "csv", build))
+    )
     return back.select(
         "event_id",
         "user_id",
@@ -110,9 +110,6 @@ def q_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
         F.md5("props").alias("props_fp"),
     )
-
-
-_ORC_CACHE: dict[tuple[SparkSession, str], str] = register_cache({})
 
 
 @query(
@@ -134,15 +131,15 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch between write and read would fail loudly rather than
     cancel out. One file tree per (session, sf); the read is the
     measured path."""
-    key = (spark, sf_dir)
-    if key not in _ORC_CACHE:
+    def build() -> str:
         out = os.path.join(tempfile.gettempdir(), f"ktps_orc_{_digest(sf_dir)}")
         load(spark, sf_dir, "orders").write.mode("overwrite").option(
             "compression", "zlib"
         ).orc(out)
-        _ORC_CACHE[key] = out
+        return out
+
     src = load(spark, sf_dir, "orders")
-    back = spark.read.schema(src.schema).orc(_ORC_CACHE[key])
+    back = spark.read.schema(src.schema).orc(memo(spark, sf_dir, "orc", build))
     return back.select(
         "o_orderkey",
         "o_custkey",
@@ -157,8 +154,6 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Parquet schema evolution (mergeSchema)
 # ---------------------------------------------------------------------------
 
-_EVOL_CACHE: dict[tuple[SparkSession, str], str] = register_cache({})
-
 EVOL_SPLIT_US = 7  # batch 1 = user_id % 7 != 0, batch 2 = the rest
 
 
@@ -168,8 +163,7 @@ def _evolved_layout(spark: SparkSession, sf_dir: str) -> str:
     column; batch 2 (event_id, user_id, event_type, value) adds it —
     the additive-column evolution every long-lived ingestion pipeline
     accumulates."""
-    key = (spark, sf_dir)
-    if key not in _EVOL_CACHE:
+    def build() -> str:
         out = os.path.join(
             tempfile.gettempdir(), f"ktps_evolve_{_digest(sf_dir)}"
         )
@@ -182,8 +176,9 @@ def _evolved_layout(spark: SparkSession, sf_dir: str) -> str:
         )
         old.write.mode("overwrite").parquet(f"{out}/batch=1")
         new.write.mode("overwrite").parquet(f"{out}/batch=2")
-        _EVOL_CACHE[key] = out
-    return _EVOL_CACHE[key]
+        return out
+
+    return memo(spark, sf_dir, "evolved_layout", build)
 
 
 @query(

@@ -22,21 +22,17 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import register_cache
+from kafka_to_parquet_spark.cache import memo
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
-# Session-object key (id() can be recycled after GC). Single-driver
-# assumption: concurrent processes sharing the same /tmp layout dir
-# would race overwrite-vs-read; the driver runs one process at a time.
-_CACHE: dict[tuple[SparkSession, str], str] = register_cache({})
-
-
+# Single-process assumption: concurrent processes sharing the same
+# /tmp layout dir would race overwrite-vs-read.
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
     """Write (once) and return the date-partitioned events layout:
     ``.../event_date=YYYY-MM-DD/part-*.parquet``."""
-    key = (spark, sf_dir)
-    if key not in _CACHE:
+
+    def build() -> str:
         # Stable digest (not Python's randomized str hash) so repeated
         # processes reuse/overwrite ONE directory per sf instead of
         # leaving a fresh full copy in /tmp per run.
@@ -44,13 +40,12 @@ def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
         out = os.path.join(tempfile.gettempdir(), f"ktps_part_events_{digest}")
         ev = load(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
         ev.write.mode("overwrite").partitionBy("event_date").parquet(out)
-        _CACHE[key] = out
-    return _CACHE[key]
+        return out
+
+    return memo(spark, sf_dir, "partitioned_events", build)
 
 
 DELETE_USER = 7
-
-_DELETE_CACHE: dict[tuple[SparkSession, str], str] = register_cache({})
 
 
 @query(
@@ -73,8 +68,8 @@ def q_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     one. The oracle is the logical result (source minus user): reading
     the rewritten layout back must equal it exactly, proving both the
     delete and the untouched-partition preservation."""
-    key = (spark, sf_dir)
-    if key not in _DELETE_CACHE:
+
+    def build() -> str:
         src = partitioned_events_path(spark, sf_dir)
         digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         dst = os.path.join(tempfile.gettempdir(), f"ktps_delete_{digest}")
@@ -103,8 +98,9 @@ def q_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .partitionBy("event_date")
                 .parquet(dst)
             )
-        _DELETE_CACHE[key] = dst
-    out = spark.read.parquet(_DELETE_CACHE[key])
+        return dst
+
+    out = spark.read.parquet(memo(spark, sf_dir, "delete_compact", build))
     return out.select(
         "event_id",
         "user_id",
@@ -119,8 +115,6 @@ def q_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 MERGE_USER = 3
 MERGE_FROM, MERGE_TO = "2024-01-05", "2024-01-07"
 MERGE_OFFSET = 10_000_000
-
-_MERGE_CACHE: dict[tuple[SparkSession, str], str] = register_cache({})
 
 
 @query(
@@ -154,8 +148,8 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged table logically from the unpartitioned source, proving the
     update branch, the insert branch, and untouched-partition
     preservation at once."""
-    key = (spark, sf_dir)
-    if key not in _MERGE_CACHE:
+
+    def build() -> str:
         src_layout = partitioned_events_path(spark, sf_dir)
         digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         dst = os.path.join(tempfile.gettempdir(), f"ktps_merge_{digest}")
@@ -187,8 +181,9 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(change_set)
         )
         merged_parts.write.mode("overwrite").partitionBy("event_date").parquet(dst)
-        _MERGE_CACHE[key] = dst
-    out = spark.read.parquet(_MERGE_CACHE[key])
+        return dst
+
+    out = spark.read.parquet(memo(spark, sf_dir, "merge_upsert", build))
     return out.select(
         "event_id",
         "user_id",

@@ -15,43 +15,45 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+from kafka_to_parquet_spark.cache import TempDataset, memo
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load, normalize_event_ts
 
 WATERMARK = "10 minutes"
 
 
-# One symlink dir per (Spark application, sf_dir): repeated calls in a
-# bench/verify sweep reuse it instead of leaking a fresh mkdtemp per
-# run (same memoization pattern as sources/partitioned.py).
-_STREAM_DIRS: dict[tuple[str, str], str] = {}
+def stream_source_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
+    """Directory for a file-stream source over ``table``: the file
+    source needs a directory, so the (read-only) ``{table}.parquet`` is
+    symlinked into a temp dir memoized per (session, sf_dir, table).
+    Repeated calls in a bench/verify sweep reuse it instead of leaking
+    a fresh mkdtemp per run, and the dir is a cache-owned
+    :class:`TempDataset`, so ``clear_caches`` removes it from disk.
+    Returns the symlink when the table is itself a directory."""
+    src = os.path.join(sf_dir, f"{table}.parquet")
 
-
-def _stream_source_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    d = _STREAM_DIRS.get(key)
-    if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="ktps_stream_")
+    def build() -> TempDataset:
+        d = tempfile.mkdtemp(prefix=f"ktps_stream_{table}_")
         os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(d, "events.parquet"),
-            target_is_directory=os.path.isdir(os.path.join(sf_dir, "events.parquet")),
+            src,
+            os.path.join(d, f"{table}.parquet"),
+            target_is_directory=os.path.isdir(src),
         )
-        _STREAM_DIRS[key] = d
-    return d
+        return TempDataset(d)
+
+    d = memo(spark, sf_dir, f"stream_source_dir:{table}", build)
+    return os.path.join(d, f"{table}.parquet") if os.path.isdir(src) else d
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events table. The file source needs a
-    directory; symlink the (read-only) parquet into a memoized temp dir."""
+    """readStream over the events table (see :func:`stream_source_dir`)."""
     ev_path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = spark.read.parquet(ev_path).schema
-    d = _stream_source_dir(spark, sf_dir)
-    link = os.path.join(d, "events.parquet")
-    src = link if os.path.isdir(ev_path) else d
-    sdf = spark.readStream.schema(schema).parquet(src)
+    sdf = spark.readStream.schema(schema).parquet(
+        stream_source_dir(spark, sf_dir, "events")
+    )
     # Same per-generation ts normalization as the batch loader — ONE
     # shared definition (tables.normalize_event_ts), so a third
     # physical ts type gets fixed for batch and streaming together.
@@ -323,15 +325,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(dedup, "append")
 
 
-from kafka_to_parquet_spark.cache import register_cache
-
-# (store dir, checkpoint dir) per (session, sf_dir) — consumed by
-# q_stream_upsert's repeat-invocation fast path (checkpoint reuse =
-# the exactly-once restart path); enrolled in the cache lifecycle so
-# clear_caches forces a from-scratch rebuild.
-_UPSERT_STORES: dict[tuple[SparkSession, str], tuple[str, str]] = register_cache({})
-
-
 @query(
     "q_stream_upsert",
     oracle="""
@@ -386,10 +379,7 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exercised on every bench/verify re-run instead of leaking a
     # fresh mkdtemp + full reprocess per call. Only a fresh key (or a
     # clear_caches eviction) rebuilds from scratch.
-    key = (spark, sf_dir)
-    if key in _UPSERT_STORES:
-        store, ckpt = _UPSERT_STORES[key]
-    else:
+    def build() -> tuple[TempDataset, TempDataset]:
         digest = hashlib.md5(
             f"{spark.sparkContext.applicationId}_{sf_dir}".encode()
         ).hexdigest()[:8]
@@ -400,9 +390,9 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # eviction frees the on-disk state with the entry (the next
         # call rebuilds from scratch, the documented fresh-key path)
         # instead of leaking both dirs.
-        from kafka_to_parquet_spark.cache import TempDataset
+        return TempDataset(store), TempDataset(ckpt)
 
-        _UPSERT_STORES[key] = (TempDataset(store), TempDataset(ckpt))
+    store, ckpt = memo(spark, sf_dir, "upsert_store", build)
 
     def merge(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession

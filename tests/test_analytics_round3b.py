@@ -249,13 +249,11 @@ def test_rollup_hier_subtotals_are_consistent(run, spark, sf_dir):
 
 
 def test_incr_agg_state_covers_only_history(run, spark, sf_dir):
-    from kafka_to_parquet_spark.operators.timeseries import (
-        INCR_CUTOFF,
-        _STATE_CACHE,
-    )
+    from kafka_to_parquet_spark.cache import _STORE
+    from kafka_to_parquet_spark.operators.timeseries import INCR_CUTOFF
 
     run("q_incr_agg").collect()  # materialize state
-    state_dir = _STATE_CACHE[(spark, sf_dir)]
+    state_dir, _ = _STORE[(spark, sf_dir, "incr_agg_state")]
     state_days = {r.d for r in spark.read.parquet(state_dir).select("d").collect()}
     import datetime
 

@@ -1,25 +1,23 @@
-"""Lifecycle tests for the module-level (SparkSession, sf_dir) caches
-(cache.py): eviction is scoped, unpersists storage, and a second
-sf_dir's run doesn't leak the first's persisted intermediates."""
+"""Lifecycle tests for the session-scoped (SparkSession, sf_dir, name)
+memo store (cache.py): eviction is scoped, unpersists storage, and a
+second sf_dir's run doesn't leak the first's persisted intermediates."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
 from kafka_to_parquet_spark.cache import (
-    _REGISTERED,
+    _PARKED,
+    _STORE,
     clear_caches,
     registered_entry_count,
 )
-from kafka_to_parquet_spark.llm.dedup import _SHINGLE_CACHE
-from kafka_to_parquet_spark.llm.minhash import _HASHED_CACHE, _hashed_shingles
+from kafka_to_parquet_spark.llm.minhash import _hashed_shingles
 
 SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"
 
 
 def _entries_for(sf_dir: str) -> int:
-    return sum(1 for c in _REGISTERED for (_, d) in c if d == sf_dir)
+    return sum(1 for (_, d, _) in _STORE if d == sf_dir)
 
 
 def test_clear_is_scoped_by_sf_dir_and_unpersists(spark):
@@ -28,12 +26,13 @@ def test_clear_is_scoped_by_sf_dir_and_unpersists(spark):
     df_b = _hashed_shingles(spark, SF_B)
     df_a.count(), df_b.count()  # materialize both persists
     assert df_a.storageLevel.useMemory
-    assert (spark, SF_A) in _HASHED_CACHE and (spark, SF_B) in _HASHED_CACHE
+    assert (spark, SF_A, "hashed_shingles") in _STORE
+    assert (spark, SF_B, "hashed_shingles") in _STORE
 
     # Scoped clear: sf_dir A evicted + unpersisted, B untouched.
     assert clear_caches(spark, SF_A) >= 1
-    assert (spark, SF_A) not in _HASHED_CACHE
-    assert (spark, SF_B) in _HASHED_CACHE
+    assert (spark, SF_A, "hashed_shingles") not in _STORE
+    assert (spark, SF_B, "hashed_shingles") in _STORE
     assert not df_a.storageLevel.useMemory
     assert df_b.storageLevel.useMemory
 
@@ -47,131 +46,97 @@ def test_clear_is_scoped_by_sf_dir_and_unpersists(spark):
 def test_second_sf_dir_does_not_leak_first(spark, run, sf_dir):
     """The verdict's leak scenario: run a cache-backed query at sf A,
     then move to sf B — clearing A must leave zero A-keyed entries in
-    ANY registered cache while B keeps its own."""
+    memo entry while B keeps its own."""
     clear_caches(spark)
-    run("q_dedup_ngram_jaccard").count()  # populates _SHINGLE_CACHE at sf0.001
+    run("q_dedup_ngram_jaccard").count()  # memoizes the shingles at sf0.001
     from kafka_to_parquet_spark import registry
 
     registry.QUERIES["q_dedup_ngram_jaccard"](spark, SF_B).count()
-    assert (spark, SF_A) in _SHINGLE_CACHE and (spark, SF_B) in _SHINGLE_CACHE
+    assert (spark, SF_A, "shingled_documents") in _STORE
+    assert (spark, SF_B, "shingled_documents") in _STORE
     clear_caches(spark, SF_A)
     assert _entries_for(SF_A) == 0
-    assert (spark, SF_B) in _SHINGLE_CACHE
+    assert (spark, SF_B, "shingled_documents") in _STORE
     clear_caches(spark)
     assert registered_entry_count() == 0
 
 
 def test_all_dataframe_caches_are_registered():
-    """Every module-level DataFrame cache dict must flow through
-    register_cache — grep-equivalent guard so a future cache can't be
-    added outside the lifecycle."""
+    """Every memoized intermediate must live in cache.py's one store
+    (via memo/park): no other module may hold a module-level dict or
+    set named like a cache — a guard so a future cache, or a scratch
+    directory registry like the old unregistered stream-dir dict,
+    can't be added outside the lifecycle."""
     import importlib
     import pkgutil
 
     import kafka_to_parquet_spark as pkg
 
-    registered_ids = {id(c) for c in _REGISTERED}
-    missing = []
+    suffixes = ("_CACHE", "_DIRS", "_STORES", "_CLEANUPS")
+    found = []
     for mod_info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        if mod_info.name == "kafka_to_parquet_spark.cache":
+            continue
         mod = importlib.import_module(mod_info.name)
         for attr, val in vars(mod).items():
-            if attr.endswith("_CACHE") and isinstance(val, dict):
-                if id(val) not in registered_ids:
-                    missing.append(f"{mod_info.name}.{attr}")
-    assert missing == []
+            if attr.endswith(suffixes) and isinstance(val, (dict, set)):
+                found.append(f"{mod_info.name}.{attr}")
+    assert found == []
 
 
 def test_result_level_clear_targets_only_result_caches(spark, sf_dir):
     """clear_result_caches (the bench/scaling honesty mechanism) must
-    evict exactly the result_level-registered caches and leave feature
-    caches warm — and _LABELS_CACHE must actually be enrolled as
+    evict exactly the result-level entries and leave feature entries
+    warm — and component_labels must actually be memoized as
     result-level (the whole point of the round-5 refactor). Connected
     components parks every loop round, the converged one included, so
     the clear leaves none of their blocks behind."""
-    from kafka_to_parquet_spark.cache import (
-        _DEFERRED_ROUNDS,
-        _RESULT_LEVEL,
-        clear_result_caches,
-        register_cache,
-    )
+    from kafka_to_parquet_spark.cache import clear_result_caches, memo
     from kafka_to_parquet_spark.llm.components import (
-        _LABELS_CACHE,
         component_labels,
         near_dup_edges,
     )
 
-    assert any(c is _LABELS_CACHE for c in _RESULT_LEVEL)
-
-    feat = register_cache({})
-    res = register_cache({}, result_level=True)
+    d = "/no/such/sf_dir"
     try:
-        feat[("s", "d")] = "feature-value"
-        res[("s", "d")] = "result-value"
+        memo(spark, d, "feature", lambda: "feature-value")
+        memo(spark, d, "result", lambda: "result-value", result=True)
         n = clear_result_caches()
         assert n >= 1
-        assert res == {}
-        assert feat == {("s", "d"): "feature-value"}
+        assert (spark, d, "result") not in _STORE
+        assert _STORE[(spark, d, "feature")] == ("feature-value", False)
     finally:
-        # Deregister the throwaway dicts so later lifecycle tests'
-        # entry counts aren't affected. By IDENTITY, not list.remove:
-        # dicts compare by CONTENT, so remove(<emptied dict>) deletes
-        # the first EMPTY registered cache — round 10 this silently
-        # deregistered cache._DEFERRED_ROUNDS (empty at that moment)
-        # and broke every later result-level eviction in the session.
-        from kafka_to_parquet_spark.cache import _REGISTERED
-
-        feat.clear()
-        _REGISTERED[:] = [c for c in _REGISTERED if c is not feat and c is not res]
-        _RESULT_LEVEL[:] = [c for c in _RESULT_LEVEL if c is not res]
+        # Drop the throwaway entries so later lifecycle tests' entry
+        # counts aren't affected.
+        clear_caches(spark, d)
 
     def persisted_rdd_ids() -> set[int]:
         return set(spark.sparkContext._jsc.getPersistentRDDs())
 
-    near_dup_edges(spark, sf_dir).count()  # feature cache: stays warm
+    near_dup_edges(spark, sf_dir).count()  # feature entry: stays warm
     before = persisted_rdd_ids()
     component_labels(spark, sf_dir).count()
+    assert _STORE[(spark, sf_dir, "component_labels")][1] is True
     assert persisted_rdd_ids() - before  # the loop rounds are checkpointed
     clear_result_caches(spark, sf_dir)
-    assert (spark, sf_dir) not in _DEFERRED_ROUNDS
-    assert (spark, sf_dir) not in _LABELS_CACHE
+    assert (spark, sf_dir, _PARKED) not in _STORE
+    assert (spark, sf_dir, "component_labels") not in _STORE
+    assert (spark, sf_dir, "near_dup_edges") in _STORE
     assert persisted_rdd_ids() - before == set()
 
 
-def test_eager_sentinel_frames_match_sf_dir_scoped_eviction(spark):
-    """Frames parked under the eager-RoundLoop sentinel belong to no
-    dataset, so an sf_dir-scoped eviction (bench's clear_caches(spark,
-    sf_dir) between scale factors) must reach them too — otherwise
-    they'd survive every dataset-scoped cleanup until teardown."""
-    from kafka_to_parquet_spark.cache import (
-        _DEFERRED_ROUNDS,
-        _EAGER_SENTINEL,
-        clear_caches,
-        park_frame,
-    )
+def test_park_keys_by_sf_dir(spark):
+    from kafka_to_parquet_spark.cache import park
 
     clear_caches(spark)
     df = spark.range(5).persist()
-    park_frame(df)  # no (spark, sf_dir): parks under the sentinel
-    assert (spark, _EAGER_SENTINEL) in _DEFERRED_ROUNDS
-    # A DIFFERENT dataset's scoped eviction still evicts the sentinel.
-    assert clear_caches(spark, "/no/such/sf_dir") >= 1
-    assert (spark, _EAGER_SENTINEL) not in _DEFERRED_ROUNDS
-    assert df.storageLevel.useMemory is False
-
-
-def test_park_frame_keys_by_sf_dir_when_known(spark):
-    from kafka_to_parquet_spark.cache import (
-        _DEFERRED_ROUNDS,
-        clear_caches,
-        park_frame,
-    )
-
-    clear_caches(spark)
-    df = spark.range(5).persist()
-    park_frame(df, spark, SF_A)
-    assert (spark, SF_A) in _DEFERRED_ROUNDS
+    assert park(df, spark, SF_A) is df
+    assert (spark, SF_A, _PARKED) in _STORE
+    assert registered_entry_count() == 1  # one per (session, sf_dir)
+    park(spark.range(3).persist(), spark, SF_A)
+    assert registered_entry_count() == 1
     clear_caches(spark, SF_A)
-    assert (spark, SF_A) not in _DEFERRED_ROUNDS
+    assert (spark, SF_A, _PARKED) not in _STORE
     assert df.storageLevel.useMemory is False
 
 

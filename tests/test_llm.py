@@ -277,15 +277,17 @@ def test_component_labels_delta_frontier_long_chain(spark, sf_dir):
     converge to the same labels as all-edges propagation — a frontier
     bug (a changed node failing to re-message) would stall a chain at
     a non-minimal label."""
+    from kafka_to_parquet_spark.cache import _STORE
     from kafka_to_parquet_spark.llm import components as C
 
-    key = (spark, sf_dir)
-    C._EDGE_CACHE.pop(key, None)
-    C._LABELS_CACHE.pop(key, None)
+    edge_key = (spark, sf_dir, "near_dup_edges")
+    labels_key = (spark, sf_dir, "component_labels")
+    _STORE.pop(edge_key, None)
+    _STORE.pop(labels_key, None)
     chain = spark.createDataFrame(
         [(a, a + 1) for a in range(19)], "doc_a long, doc_b long"
     )
-    C._EDGE_CACHE[key] = (
+    edges = (
         chain.unionByName(
             chain.select(
                 F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
@@ -294,14 +296,15 @@ def test_component_labels_delta_frontier_long_chain(spark, sf_dir):
         .repartition(F.col("doc_a"))
         .localCheckpoint()
     )
+    _STORE[edge_key] = (edges, False)
     try:
         labels = {
             r["doc_id"]: r["component"]
             for r in C.component_labels(spark, sf_dir).collect()
         }
     finally:
-        C._EDGE_CACHE.pop(key, None)
-        C._LABELS_CACHE.pop(key, None)
+        _STORE.pop(edge_key, None)
+        _STORE.pop(labels_key, None)
     assert all(labels[i] == 0 for i in range(20)), "chain must collapse to 0"
     others = {d: c for d, c in labels.items() if d >= 20}
     assert others and all(c == d for d, c in others.items()), (

@@ -7,12 +7,12 @@ import os
 
 from pyspark.sql import functions as F
 
+from kafka_to_parquet_spark.cache import _STORE
 from kafka_to_parquet_spark.sources.partitioned import (
     MERGE_FROM,
     MERGE_OFFSET,
     MERGE_TO,
     MERGE_USER,
-    _MERGE_CACHE,
 )
 from kafka_to_parquet_spark.tables import load
 
@@ -73,7 +73,7 @@ def test_merge_rewrites_only_affected_partitions(spark, sf_dir, run):
         }
 
     run("q_merge_upsert")
-    dst = _MERGE_CACHE[(spark, sf_dir)]
+    dst, _ = _STORE[(spark, sf_dir, "merge_upsert")]
     inside: set[str] = set()
     outside: set[str] = set()
     for d in os.listdir(dst):

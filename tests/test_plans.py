@@ -393,7 +393,7 @@ def test_graph_jaccard_broadcasts_degrees_and_takes_ordered(run):
 
 def test_coreset_kcenter_rounds_are_persisted(run):
     """round-11 verdict item 2: q_coreset_kcenter's per-round dmin
-    relation must go through the deferred RoundLoop. Without the
+    relation must be persisted (and parked) every round. Without the
     persist each of the K rounds' 2-3 scalar reduces re-executes every
     prior round's crossJoin chain (~K²/2 corpus passes — 80 exchanges
     in the round-10 full-plan audit; 11 with it). Pin both properties

@@ -12,7 +12,6 @@ from __future__ import annotations
 import itertools
 import os
 import random
-import tempfile
 
 import pytest
 
@@ -58,8 +57,8 @@ def _mk_corpus() -> list[tuple[int, str]]:
 
 
 @pytest.fixture(scope="module")
-def adversarial_dir(spark):
-    d = tempfile.mkdtemp(prefix="ktps_adv_")
+def adversarial_dir(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("adv"))
     rows = [(i, t, "xx", "synthetic", len(t)) for (i, t) in _mk_corpus()]
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
@@ -190,7 +189,7 @@ def test_ppjoin_shards_selection_arithmetic(spark, adversarial_dir, monkeypatch)
     assert want > 1
 
 
-def test_containment_count_filter_at_exact_threshold(spark):
+def test_containment_count_filter_at_exact_threshold(spark, tmp_path):
     """Round-14 counting form of the containment prefix filter: a
     candidate pair must share >= min(K, ceil(tau*|a|)) of a's
     (K-1)-extended canonical prefix. The bound is TIGHT exactly when
@@ -203,7 +202,6 @@ def test_containment_count_filter_at_exact_threshold(spark):
     the corpus stopped exercising it."""
     import itertools as _it
     import os as _os
-    import tempfile as _tempfile
 
     from kafka_to_parquet_spark.cache import clear_caches
 
@@ -224,7 +222,7 @@ def test_containment_count_filter_at_exact_threshold(spark):
                 a_words[3 + 5 * j] = f"t{t}e{j}"
             docs.append((next(did), " ".join(a_words)))
             docs.append((next(did), " ".join(b_words)))
-    d = _tempfile.mkdtemp(prefix="ktps_cnt_thr_")
+    d = str(tmp_path)
     rows = [(i, txt, "xx", "synthetic", len(txt)) for (i, txt) in docs]
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"

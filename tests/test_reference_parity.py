@@ -8,7 +8,6 @@ from __future__ import annotations
 import glob
 import os
 import re
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -58,11 +57,11 @@ def test_path_format(run):
     assert paths and all(pat.match(p) for p in paths)
 
 
-def test_sink_writes_reference_layout(spark, sf_dir):
+def test_sink_writes_reference_layout(spark, sf_dir, tmp_path):
     """S5 end-to-end: files named partition_{p}_batch_{b}.parquet, one
     REQUIRED string column b, lossless round-trip including the final
     partial batch (deliberate upgrade over main.rs:268's loss window)."""
-    out = tempfile.mkdtemp(prefix="ktps_sink_test_")
+    out = str(tmp_path)
     rec = kafka_records(spark, sf_dir)
     manifest = write_partition_batches(rec, out, BATCH_SIZE).collect()
     n_in = rec.count()
@@ -79,11 +78,11 @@ def test_sink_writes_reference_layout(spark, sf_dir):
     assert not pq.read_schema(files[0]).field("b").nullable
 
 
-def test_sink_batch_size_edges(spark, sf_dir):
+def test_sink_batch_size_edges(spark, sf_dir, tmp_path):
     """batch_size larger than the data → exactly one file per source
     partition holding all its rows (the final-partial-batch case the
     reference never flushes, main.rs:236-272)."""
-    out = tempfile.mkdtemp(prefix="ktps_sink_edge_")
+    out = str(tmp_path)
     rec = kafka_records(spark, sf_dir)
     manifest = write_partition_batches(rec, out, batch_size=10**9).collect()
     n_parts = rec.select("partition").distinct().count()
@@ -92,14 +91,15 @@ def test_sink_batch_size_edges(spark, sf_dir):
     assert all(m["batch_id"] == 0 for m in manifest)
 
 
-def test_sink_decodes_invalid_utf8_to_empty_string(spark):
+def test_sink_decodes_invalid_utf8_to_empty_string(spark, tmp_path):
     """main.rs:240-247: an invalid UTF-8 payload decodes to "" like a
     null one — the sink writes it instead of aborting, and ``b`` stays
     REQUIRED."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    src = tempfile.mkdtemp(prefix="ktps_utf8_src_")
+    src = tmp_path / "src"
+    src.mkdir()
     pq.write_table(
         pa.table({
             "partition": pa.array([0, 0, 1, 1], pa.int32()),
@@ -108,8 +108,9 @@ def test_sink_decodes_invalid_utf8_to_empty_string(spark):
         }),
         os.path.join(src, "part-0.parquet"),
     )
-    out = tempfile.mkdtemp(prefix="ktps_utf8_out_")
-    write_partition_batches(spark.read.parquet(src), out).collect()
+    out = tmp_path / "out"
+    out.mkdir()
+    write_partition_batches(spark.read.parquet(str(src)), str(out)).collect()
     written = {
         os.path.basename(f): pq.read_table(f)
         for f in glob.glob(os.path.join(out, "*.parquet"))

@@ -20,9 +20,11 @@ def test_distinct_is_unique(run):
 
 
 def test_sort_is_sorted(run):
+    """Rows come back in (o_totalprice DESC, o_orderkey) order."""
     rows = run("q_sort").collect()
-    keys = [tuple(r[c] for c in run("q_sort").columns[:1]) for r in rows]
     assert len(rows) > 0
+    keys = [(-r.o_totalprice, r.o_orderkey) for r in rows]
+    assert keys == sorted(keys)
 
 
 def test_topk_matches_full_sort(spark, sf_dir, run):

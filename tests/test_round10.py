@@ -1,14 +1,14 @@
-"""Round-10 tests: the RoundLoop per-round cache-release helper
+"""Round-10 tests: per-round cache release for iterative kernels
 (verdict item 5 — iterative kernels previously leaked O(rounds)
-persisted node relations) plus recomputation checks that the
-helper-rewritten loops still produce the pre-helper answers.
+persisted node relations). Each round is persisted and parked with
+cache.park, and the next cache boundary releases it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import RoundLoop
+from kafka_to_parquet_spark.cache import _PARKED, _STORE, clear_result_caches, park
 
 
 def _cached_rdd_ids(spark) -> set[int]:
@@ -17,65 +17,12 @@ def _cached_rdd_ids(spark) -> set[int]:
     return {infos[i].id() for i in range(len(infos)) if infos[i].isCached()}
 
 
-def test_roundloop_bounds_cached_relations(spark):
-    """After k steps, at most the LAST round's relation is still
-    cached from the loop (plus whatever the suite cached elsewhere) —
-    the O(rounds) accumulation is gone."""
-    before = _cached_rdd_ids(spark)
-    loop = RoundLoop()
-    df = spark.range(1000).select(F.col("id"), F.lit(0).alias("v"))
-    steps = []
-    for i in range(5):
-        df = loop.step(
-            df.groupBy((F.col("id") % 100).alias("id")).agg(
-                (F.sum("v") + F.lit(i)).alias("v")
-            )
-        )
-        steps.append(df)
-    after = _cached_rdd_ids(spark)
-    new = after - before
-    # Exactly one surviving cached relation: the final round.
-    assert len(new) <= 1, f"RoundLoop leaked {len(new)} cached relations"
-    # Earlier rounds are unpersisted.
-    for s in steps[:-1]:
-        assert s.storageLevel.useMemory is False
-    assert steps[-1].storageLevel.useMemory is True
-    # Result is still correct after its predecessors were released.
-    assert steps[-1].count() == 100
-    steps[-1].unpersist()
-
-
-def test_roundloop_final_result_survives_predecessor_release(spark):
-    """The double-reference round body (union + join, the SSSP shape)
-    stays correct when round r−1's blocks are released after round r
-    materializes — i.e. the release never forces a recompute through
-    an evicted cache entry at answer time."""
-    loop = RoundLoop()
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5)], ["src", "dst"]
-    )
-    r = spark.createDataFrame([(1, 0)], ["node", "dist"])
-    for _ in range(4):
-        relaxed = edges.join(r, edges.src == r.node).select(
-            F.col("dst").alias("node"), (F.col("dist") + F.lit(1)).alias("dist")
-        )
-        r = loop.step(
-            r.unionByName(relaxed).groupBy("node").agg(
-                F.min("dist").alias("dist")
-            )
-        )
-    got = {(row.node, row.dist) for row in r.collect()}
-    assert got == {(1, 0), (2, 1), (3, 2), (4, 3), (5, 4)}
-    r.unpersist()
-
-
 def test_iterative_kernels_hold_bounded_storage(run, spark, sf_dir):
-    """q_sssp_weighted's loop (deferred RoundLoop since the round-10
-    bench guard flagged the eager policy's per-round-job cost): while
+    """q_sssp_weighted's loop (rounds persist lazily and park since the
+    round-10 bench guard flagged per-round materialization jobs): while
     the answer is live the cached rounds are bounded by the CONSTANT
     round count, and clear_result_caches releases every superseded
     round — no leak across samples/queries."""
-    from kafka_to_parquet_spark.cache import clear_result_caches
     from kafka_to_parquet_spark.operators.batch8 import SSSP_ROUNDS
 
     assert SSSP_ROUNDS >= 4  # the test is vacuous for tiny round counts
@@ -90,74 +37,66 @@ def test_iterative_kernels_hold_bounded_storage(run, spark, sf_dir):
     )
     clear_result_caches(spark)
     after = _cached_rdd_ids(spark) & new
-    # The deferred rounds are parked in a registered result-level
-    # cache, so the sweep-boundary eviction releases them. (The edge
-    # relation is a FEATURE cache and may legitimately stay warm.)
+    # The rounds are parked as result-level entries, so the
+    # sweep-boundary eviction releases them. (The edge relation is a
+    # FEATURE entry and may legitimately stay warm.)
     assert len(after) <= 2, (
         f"{len(after)} of the loop's relations survived "
-        "clear_result_caches — the deferred rounds were not registered"
+        "clear_result_caches — the rounds were not parked"
     )
 
 
 def test_roundloop_deferred_parks_rounds_for_sweep_release(spark):
-    """Deferred policy: superseded rounds stay cached (one-job
-    execution, in-job block reuse) but are parked under the cache
-    registry and released by clear_result_caches."""
-    from kafka_to_parquet_spark.cache import (
-        _DEFERRED_ROUNDS,
-        clear_result_caches,
-    )
-
-    key = (spark, "/tmp/_roundloop_test")
-    loop = RoundLoop(*key)
+    """Superseded rounds stay cached (one-job execution, in-job block
+    reuse) but are parked in the cache store and released by
+    clear_result_caches."""
+    sf_dir = "/tmp/_roundloop_test"
+    key = (spark, sf_dir, _PARKED)
     df = spark.range(100).select(F.col("id"), F.lit(0).alias("v"))
     steps = []
     for i in range(4):
-        df = loop.step(
-            df.groupBy((F.col("id") % 10).alias("id")).agg(
-                (F.sum("v") + F.lit(i)).alias("v")
-            )
+        df = park(
+            df.groupBy((F.col("id") % 10).alias("id"))
+            .agg((F.sum("v") + F.lit(i)).alias("v"))
+            .persist(),
+            spark,
+            sf_dir,
         )
         steps.append(df)
     # single final action — the whole chain runs as one job
     assert steps[-1].count() == 10
-    assert len(_DEFERRED_ROUNDS.get(key, [])) == 3  # all but the final
-    cleared = clear_result_caches(spark, key[1])
-    assert cleared >= 1 and key not in _DEFERRED_ROUNDS
-    for s in steps[:-1]:
-        assert not s.storageLevel.useMemory, "superseded round still persisted"
+    assert len(_STORE[key][0]) == 4  # every round, the final one too
+    cleared = clear_result_caches(spark, sf_dir)
+    assert cleared >= 1 and key not in _STORE
+    for s in steps:
+        assert not s.storageLevel.useMemory, "parked round still persisted"
 
 
 def test_roundloop_finish_parks_final_round(spark):
-    """round-11 advisor fix: without finish(), the FINAL round stayed
-    persisted and registered nowhere, so Spark's CacheManager matched
-    the identical rebuilt plan on the next timed sample and served the
-    memoized answer. finish() (and park() for auxiliary frames) put it
-    under the registered result-level cache, so the sweep-boundary
-    eviction forces real recomputation."""
-    from kafka_to_parquet_spark.cache import (
-        _DEFERRED_ROUNDS,
-        clear_result_caches,
-    )
-
-    key = (spark, "/tmp/_roundloop_finish_test")
-    loop = RoundLoop(*key)
-    df = spark.range(64).select(F.col("id"), F.lit(0).alias("v"))
+    """round-11 advisor fix: a FINAL round left persisted and
+    registered nowhere let Spark's CacheManager match the identical
+    rebuilt plan on the next timed sample and serve the memoized
+    answer. park() puts the final round (and auxiliary frames) in the
+    store as result-level, so the sweep-boundary eviction forces real
+    recomputation."""
+    sf_dir = "/tmp/_roundloop_finish_test"
+    key = (spark, sf_dir, _PARKED)
+    final = spark.range(64).select(F.col("id"), F.lit(0).alias("v"))
     for i in range(3):
-        df = loop.step(
-            df.groupBy((F.col("id") % 8).alias("id")).agg(
-                (F.sum("v") + F.lit(i)).alias("v")
-            )
+        final = park(
+            final.groupBy((F.col("id") % 8).alias("id"))
+            .agg((F.sum("v") + F.lit(i)).alias("v"))
+            .persist(),
+            spark,
+            sf_dir,
         )
-    aux = spark.range(4).persist()
-    loop.park(aux)
-    final = loop.finish()
-    assert final is df and loop.finish() is None  # idempotent
-    assert len(_DEFERRED_ROUNDS.get(key, [])) == 4  # 2 superseded + aux + final
+    aux = park(spark.range(4).persist(), spark, sf_dir)
+    assert len(_STORE[key][0]) == 4  # 2 superseded + final + aux
+    assert _STORE[key][1] is True  # parked frames are result-level
     assert final.count() == 8
     assert final.storageLevel.useMemory  # still live for the caller's action
-    clear_result_caches(spark, key[1])
-    assert key not in _DEFERRED_ROUNDS
+    clear_result_caches(spark, sf_dir)
+    assert key not in _STORE
     assert not final.storageLevel.useMemory, "final round survived eviction"
     assert not aux.storageLevel.useMemory, "parked aux frame survived eviction"
     # and the answer recomputes correctly without the cache

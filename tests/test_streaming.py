@@ -106,23 +106,28 @@ def test_session_windows_are_gap_separated_per_user(run):
 
 def test_stream_source_dir_memoized(spark, sf_dir):
     """Repeated streaming runs must reuse one symlink temp dir per
-    (application, sf_dir) — a bench/verify sweep used to leak a fresh
-    mkdtemp per call."""
+    (session, sf_dir, table) — a bench/verify sweep used to leak a
+    fresh mkdtemp per call — and clearing the cache removes it."""
     import glob
+    import os
     import tempfile
 
+    from kafka_to_parquet_spark.cache import clear_caches
     from kafka_to_parquet_spark.streaming.stateful import (
         _stream_events,
-        _stream_source_dir,
+        stream_source_dir,
     )
 
-    d1 = _stream_source_dir(spark, sf_dir)
+    d1 = stream_source_dir(spark, sf_dir, "events")
     before = set(glob.glob(tempfile.gettempdir() + "/ktps_stream_*"))
     for _ in range(3):
         _stream_events(spark, sf_dir)
-    assert _stream_source_dir(spark, sf_dir) == d1
+    assert stream_source_dir(spark, sf_dir, "events") == d1
     after = set(glob.glob(tempfile.gettempdir() + "/ktps_stream_*"))
     assert after == before
+    assert os.path.exists(d1)
+    clear_caches(spark, sf_dir)
+    assert not os.path.exists(d1)
 
 
 def test_stream_topk_rank_over_real_streamed_counts(spark, sf_dir, run):

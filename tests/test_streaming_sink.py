@@ -7,7 +7,6 @@ from __future__ import annotations
 import glob
 import os
 import re
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -17,7 +16,7 @@ from kafka_to_parquet_spark.streaming.observability import attach_listener
 from kafka_to_parquet_spark.streaming.stateful import _stream_events
 
 
-def test_streaming_sink_end_to_end(spark, sf_dir):
+def test_streaming_sink_end_to_end(spark, sf_dir, tmp_path):
     stream = _stream_events(spark, sf_dir).select(
         F.col("event_id").cast("long").alias("offset"),
         (F.col("event_id") % 4).cast("int").alias("partition"),
@@ -25,8 +24,8 @@ def test_streaming_sink_end_to_end(spark, sf_dir):
         .otherwise(F.col("props"))
         .alias("value"),
     )
-    out = tempfile.mkdtemp(prefix="ktps_stream_sink_")
-    ckpt = tempfile.mkdtemp(prefix="ktps_ckpt_")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
     q = streaming_sink(stream, out, ckpt, batch_size=100).start()
     qid = str(q.id)
     q.awaitTermination()
