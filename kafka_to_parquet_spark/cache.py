@@ -20,7 +20,10 @@ factors and at teardown.
 from __future__ import annotations
 
 import atexit
+import hashlib
+import os
 import shutil
+import tempfile
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,6 +58,20 @@ class TempDataset(str):
     tempdir, compounding the leak on disk-bound hosts."""
 
     __slots__ = ()
+
+
+def temp_dataset(spark: SparkSession, sf_dir: str, prefix: str) -> TempDataset:
+    """The owned scratch directory ``<tmp>/ktps_<prefix>_<digest>`` for
+    one (application, sf_dir). The digest hashes the application id
+    with ``sf_dir``: a rebuild in the same application overwrites the
+    same path instead of leaking a copy, while concurrent processes get
+    disjoint paths, so one process's :func:`clear_caches` never deletes
+    a directory another process is reading. Nothing is created here;
+    return it from a :func:`memo` build so eviction removes it."""
+    digest = hashlib.md5(
+        f"{spark.sparkContext.applicationId}_{sf_dir}".encode()
+    ).hexdigest()[:8]
+    return TempDataset(os.path.join(tempfile.gettempdir(), f"ktps_{prefix}_{digest}"))
 
 
 def _parts(value: Any) -> tuple:

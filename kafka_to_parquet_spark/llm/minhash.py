@@ -5,20 +5,23 @@ Why a second MinHash: the MLlib path (``MinHashLSH.approxSimilarityJoin``)
 is the library-grade implementation, but its hash family lives inside
 Spark ML, so the driver can only rows-check it. This module builds the
 identical algorithm — k universal hash functions over shingle hashes,
-min-signature per document, banded candidate join, exact-Jaccard verify
+min-signature per document, banded candidates, exact-Jaccard verify
 — out of expressions BOTH engines evaluate bit-identically (md5 nibble
 folds + integer linear hashes mod a Mersenne prime), so the full
 candidate set and verified similarity are value-checked against DuckDB.
 
-100 TB shape: one explode to (doc, shingle) rows; the signature is a
-single map-side-combinable hash aggregate (16 ``min`` columns — each
-doc collapses to one row before the exchange); banding fans each doc
-into 8 narrow (band, key) rows; candidate generation is an equi-join on
-(band, key) whose quadratic term is confined to one band bucket, with
-buckets above ``MAX_BAND_BUCKET`` dropped (mirrored in the oracle — a
-bucket that hot means exact dedup upstream was skipped). Shingle
-arrays are only re-joined onto the (far smaller) verified candidate
-set, so the wide rows never enter the pairwise shuffle.
+100 TB shape: a document's shingles are one row, so its signature is
+per-row array work — each shingle hashed once, 16 ``array_min``s over
+linear hashes of that array — and banding fans each doc into 8 narrow
+(band, key) rows with no shuffle at all. Candidate generation is ONE
+exchange on (band, key): a window counts each bucket, buckets above
+``MAX_BAND_BUCKET`` are dropped before any id list is built (mirrored
+in the oracle — a bucket that hot means exact dedup upstream was
+skipped), and each surviving bucket emits its in-bucket pairs, so the
+quadratic term is confined to one capped bucket and no join on
+(band, key) exists. Shingle arrays are only re-joined onto the (far
+smaller) candidate set, so the wide rows never enter the pairwise
+shuffle.
 
 Reference parity: the reference (src/main.rs:59-294) has no similarity
 surface; this is part of the mandated LLM-pipeline extension
@@ -30,7 +33,7 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.cache import memo
@@ -127,60 +130,102 @@ JOIN sh sb ON cand.doc_b = sb.doc_id
 """
 
 
-# The hot-bucket-capped (doc_id, band, key) table — the Spark twin of
-# _minhash_kept_cte(), shared by q_dedup_minhash and
-# q_dedup_minhash_incr (and transitively q_lsh_recall). Persisted +
-# memoized: the signature aggregate over every shingle is the
-# expensive half of the banded join, and three declared queries read
-# it; this is the "LSH index" a production corpus persists between
-# ingests.
-def kept_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memo(spark, sf_dir, "kept_bands", lambda: _kept_bands(spark, sf_dir))
+def minhash_signatures(df: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, *keep, m0..m15): each row's MinHash signature over its
+    ``sh`` shingle array — the one Spark definition every MinHash query
+    (batch and streaming) reads. A document's shingles never span rows,
+    so each minimum is an ``array_min`` over the row's own array: no
+    explode and no aggregate. Each shingle is md5-hashed once (``hs``),
+    then the 16 linear hashes run over the integer array."""
+    hashed = df.select(
+        "doc_id", *keep, F.expr(f"transform(sh, s -> {_SPARK_H})").alias("hs")
+    )
+    return hashed.select(
+        "doc_id",
+        *keep,
+        *[
+            F.expr(f"array_min(transform(hs, x -> ({a} * x + {b}) % {MH_P}))")
+            .alias(f"m{i}")
+            for i, (a, b) in enumerate(_mh_coeffs())
+        ],
+    )
 
 
-def _kept_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = shingled_documents(spark, sf_dir)
-    ex = base.select("doc_id", F.explode("sh").alias("s"))
-    h = ex.select("doc_id", F.expr(_SPARK_H).alias("hm"))
-    mins = [
-        F.min(F.expr(f"({a} * hm + {b}) % {MH_P}")).alias(f"m{i}")
-        for i, (a, b) in enumerate(_mh_coeffs())
-    ]
-    sig = h.groupBy("doc_id").agg(*mins)
+def minhash_bands(df: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, *keep, b, k): one row per band, keyed by the band's two
+    minima as m_{2b}·P + m_{2b+1} (integer-exact, collision-free within
+    a band) — the Spark twin of the oracle's ``bands`` CTE."""
     keys = F.array(
         *[
             F.expr(f"m{2 * j} * CAST({MH_P} AS BIGINT) + m{2 * j + 1}")
             for j in range(MH_BANDS)
         ]
     )
-    bands = sig.select("doc_id", F.posexplode(keys).alias("b", "k"))
-    cnt = bands.groupBy("b", "k").agg(F.count(F.lit(1)).alias("c"))
-    return (
-        bands.join(cnt, ["b", "k"])
-        .filter(F.col("c") <= MAX_BAND_BUCKET)
-        .drop("c")
-        .persist()
+    return minhash_signatures(df, *keep).select(
+        "doc_id", *keep, F.posexplode(keys).alias("b", "k")
     )
 
 
+def _sized_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, b, k, c): the corpus band rows, each with its bucket's
+    doc count ``c``. The count is a window over (b, k), so a caller's
+    later grouping on (b, k) reuses its exchange, and a hot bucket is
+    counted (and can be dropped) without ever building its id list."""
+    bands = minhash_bands(shingled_documents(spark, sf_dir).select("doc_id", "sh"))
+    return bands.withColumn(
+        "c", F.count(F.lit(1)).over(Window.partitionBy("b", "k"))
+    )
+
+
+# The hot-bucket-capped (doc_id, band, key) index — the Spark twin of
+# _minhash_kept_cte()'s ``kept``, probed by q_dedup_minhash_incr and
+# q_stream_minhash_incr. Persisted + memoized: it is the "LSH index" a
+# production corpus keeps between ingests (8 narrow rows per document).
+# The candidate path does not read it: minhash_candidates pairs docs
+# inside each bucket straight from the windowed band rows.
+def kept_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return memo(
+        spark,
+        sf_dir,
+        "kept_bands",
+        lambda: _sized_bands(spark, sf_dir)
+        .filter(F.col("c") <= MAX_BAND_BUCKET)
+        .drop("c")
+        .persist(),
+    )
+
+
+# Every (doc_a < doc_b) pair of a bucket's sorted id array.
+_IN_BUCKET_PAIRS = (
+    "flatten(transform(sequence(1, size(ids) - 1), i ->"
+    " transform(slice(ids, i + 1, size(ids) - i), y ->"
+    " named_struct('doc_a', element_at(ids, i), 'doc_b', y))))"
+)
+
+
 def minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The undirected candidate PAIR SET from the banded self-join —
-    the Spark twin of ``_minhash_cand_cte()``'s ``cand``. Factored out
-    of q_dedup_minhash so q_lsh_recall (which only audits WHICH pairs
-    the bands surface) doesn't drag the exact-Jaccard verification
-    joins along: Catalyst can't prune an inner join, so consuming
-    q_dedup_minhash's full plan would re-run the two shingle-table
-    joins and per-pair array_intersect just to discard the column."""
-    kept = kept_bands(spark, sf_dir)
-    x, y = kept.alias("x"), kept.alias("y")
+    """The undirected candidate PAIR SET — the Spark twin of
+    ``_minhash_cand_cte()``'s ``cand``: every doc pair sharing a kept
+    (band, key) bucket. Buckets of 2..MAX_BAND_BUCKET docs collect their
+    sorted ids and emit their in-bucket pairs; a pair sharing several
+    bands is emitted once per band, hence the ``distinct``. The plan
+    has one exchange on (b, k), shared by the count window and the id
+    grouping, and one on the pair — no join on (b, k) and no persisted
+    frame. (A single groupBy computing count and id list together
+    would build a hot bucket's whole list before the cap drops it.)
+
+    Factored out of q_dedup_minhash so q_lsh_recall (which only audits
+    WHICH pairs the bands surface) doesn't drag the exact-Jaccard
+    verification joins along: Catalyst can't prune an inner join, so
+    consuming q_dedup_minhash's full plan would re-run the two
+    shingle-table joins and per-pair array_intersect just to discard
+    the column."""
     return (
-        x.join(
-            y,
-            (F.col("x.b") == F.col("y.b"))
-            & (F.col("x.k") == F.col("y.k"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
+        _sized_bands(spark, sf_dir)
+        .filter(F.col("c").between(2, MAX_BAND_BUCKET))
+        .groupBy("b", "k")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+        .select(F.inline(F.expr(_IN_BUCKET_PAIRS)))
         .distinct()
     )
 
@@ -193,8 +238,8 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Algorithm: per distinct word-3-gram shingle, base hash = first 32
     md5 bits mod P (P = 2^31-1); 16 universal hashes h_i = (a_i·h +
-    b_i) mod P; signature = per-doc min of each h_i (one hash
-    aggregate, map-side combinable); 8 bands of 2 rows, band key =
+    b_i) mod P; signature = per-doc min of each h_i (an array_min
+    over the doc's own shingle row); 8 bands of 2 rows, band key =
     m_even·P + m_odd (integer-exact, collision-free within a band);
     candidates share ≥1 band key; each candidate pair is verified with
     the exact Jaccard of the full shingle sets. The LSH s-curve
@@ -203,9 +248,10 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Hot-bucket control: band buckets holding more than MAX_BAND_BUCKET
     docs are dropped (a bucket that hot is a mass-duplicate family that
-    exact dedup upstream should have removed); the bucket-stats join
-    keys on (band, key) — the SAME key as the candidate self-join, so
-    the exchange is reused, and no corpus-sized table is broadcast."""
+    exact dedup upstream should have removed). The bucket count is a
+    window on (band, key) — the same exchange that groups each bucket's
+    ids for pairing — so the cap costs no extra shuffle and no join,
+    and a hot bucket's id list is never built."""
     cand = minhash_candidates(spark, sf_dir)
     base = shingled_documents(spark, sf_dir)
     sh = base.select("doc_id", "sh")
@@ -709,7 +755,7 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: truth is q_dedup_jaccard_prefix's plan reused verbatim (the
     prefix-filtered exact join, sub-quadratic, reading the memoized
     shingle caches); candidates come from minhash_candidates — the
-    banded self-join WITHOUT q_dedup_minhash's exact-Jaccard
+    in-bucket band pairs WITHOUT q_dedup_minhash's exact-Jaccard
     verification tail, which the audit would only discard (an inner
     join Catalyst can't prune away); the audit itself is one left join
     on the ordered pair key and a ≤6-row aggregate."""
@@ -851,19 +897,13 @@ def q_minhash_est_err(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared deterministic hash family (_mh_coeffs literals in both
     engines); no float exists in the plan.
 
-    Shape: reuses the persisted kept-bands index and the declared
-    candidate join (read-only — no certified plan changes); adds two
-    signature joins and two shingle joins, all doc-keyed, over the
-    candidate set the banding already bounded."""
+    Shape: reuses the declared candidate pairs and the per-row
+    signatures (minhash_signatures — no aggregate); adds two signature
+    joins and two shingle joins, all doc-keyed, over the candidate set
+    the banding already bounded."""
     cand = minhash_candidates(spark, sf_dir)
     base = shingled_documents(spark, sf_dir)
-    ex = base.select("doc_id", F.explode("sh").alias("s"))
-    h = ex.select("doc_id", F.expr(_SPARK_H).alias("hm"))
-    mins = [
-        F.min(F.expr(f"({a} * hm + {b}) % {MH_P}")).alias(f"m{i}")
-        for i, (a, b) in enumerate(_mh_coeffs())
-    ]
-    sig = h.groupBy("doc_id").agg(*mins)
+    sig = minhash_signatures(base.select("doc_id", "sh"))
     agree = " + ".join(
         f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END"
         for i in range(MH_NUM_HASHES)

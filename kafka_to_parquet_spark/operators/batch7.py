@@ -530,30 +530,20 @@ def q_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ×625 form exists precisely to avoid dividing a NEGATIVE estimate,
     where Spark's DIV (truncate) and DuckDB's // (floor) disagree.
 
-    Shape: reuses the persisted kept-bands index and the declared
-    candidate join READ-ONLY (no certified plan changes — the
-    q_minhash_est_err precedent); signature minima recompute in-plan
-    from the shingle cache; all joins are doc-keyed over the
-    banding-bounded candidate set."""
+    Shape: reuses the declared candidate pairs and the per-row
+    signatures (llm/minhash.minhash_signatures — the q_minhash_est_err
+    precedent), computed in-plan from the shingle cache; all joins are
+    doc-keyed over the banding-bounded candidate set."""
     from kafka_to_parquet_spark.llm.dedup import shingled_documents
     from kafka_to_parquet_spark.llm.minhash import (
         MH_NUM_HASHES,
-        MH_P,
-        _SPARK_H,
-        _mh_coeffs,
         minhash_candidates,
+        minhash_signatures,
     )
 
     cand = minhash_candidates(spark, sf_dir)
     base = shingled_documents(spark, sf_dir)
-    h = base.select("doc_id", F.explode("sh").alias("s")).select(
-        "doc_id", F.expr(_SPARK_H).alias("hm")
-    )
-    mins = [
-        F.min(F.expr(f"({a} * hm + {b}) % {MH_P}")).alias(f"m{i}")
-        for i, (a, b) in enumerate(_mh_coeffs())
-    ]
-    sig = h.groupBy("doc_id").agg(*mins)
+    sig = minhash_signatures(base.select("doc_id", "sh"))
     agree = " + ".join(
         f"CASE WHEN sa.m{i} % 2 = sb.m{i} % 2 THEN 1 ELSE 0 END"
         for i in range(MH_NUM_HASHES)

@@ -1689,12 +1689,13 @@ def q_stream_minhash_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING incremental near-dup detection — the readStream twin
     of q_dedup_minhash_incr: a new crawl delivery arrives as a file
     stream, each document's MinHash signature and band keys are
-    computed PER ROW inside the stream (array_min over the shingle
-    hashes — no stateful aggregate needed, unlike the batch path's
-    explode+groupBy, because a document's shingles never span rows),
-    candidates come from a STREAM-STATIC equi-join against the
-    persisted corpus band index (llm/minhash.kept_bands — the LSH
-    index a production corpus keeps between deliveries), pairs are
+    computed PER ROW inside the stream by the same
+    llm/minhash.minhash_bands the batch path uses (array_min over the
+    shingle hashes — no stateful aggregate needed, because a
+    document's shingles never span rows), candidates come from a
+    STREAM-STATIC equi-join against the persisted corpus band index
+    (llm/minhash.kept_bands — the LSH index a production corpus keeps
+    between deliveries), pairs are
     de-duplicated with streaming dropDuplicates, and each candidate is
     verified with exact shingle Jaccard against the static shingle
     table. availableNow trigger → memory sink (run_to_memory).
@@ -1712,15 +1713,9 @@ def q_stream_minhash_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     static side per micro-batch beyond the broadcast/probe Spark
     plans. State = one key per emitted pair (the dedup), bounded by
     the delivery's candidate count."""
-    from kafka_to_parquet_spark.functions.hashes import spark_h31
     from kafka_to_parquet_spark.functions.rounding import floor_round
     from kafka_to_parquet_spark.llm.dedup import INCR_MOD, INCR_REM, shingled_documents
-    from kafka_to_parquet_spark.llm.minhash import (
-        MH_BANDS,
-        MH_P,
-        _mh_coeffs,
-        kept_bands,
-    )
+    from kafka_to_parquet_spark.llm.minhash import kept_bands, minhash_bands
     from kafka_to_parquet_spark.streaming.stateful import run_to_memory
 
     sdf = (
@@ -1737,23 +1732,7 @@ def q_stream_minhash_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    h = spark_h31("s")
-    sig_cols = [
-        F.expr(
-            f"array_min(transform(sh, s -> ({a} * ({h}) + {b}) % {MH_P}))"
-        ).alias(f"m{i}")
-        for i, (a, b) in enumerate(_mh_coeffs())
-    ]
-    sig = sdf.select("doc_id", "sh", *sig_cols)
-    keys = F.array(
-        *[
-            F.expr(f"m{2 * j} * CAST({MH_P} AS BIGINT) + m{2 * j + 1}")
-            for j in range(MH_BANDS)
-        ]
-    )
-    xb = sig.select(
-        F.col("doc_id").alias("batch_doc"), "sh", F.posexplode(keys).alias("b", "k")
-    )
+    xb = minhash_bands(sdf, "sh").withColumnRenamed("doc_id", "batch_doc")
     corpus = (
         kept_bands(spark, sf_dir)
         .filter(F.col("doc_id") % INCR_MOD != INCR_REM)

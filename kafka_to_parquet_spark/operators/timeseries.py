@@ -17,14 +17,10 @@ arithmetic — the oracle can't diverge by a ulp.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import memo
+from kafka_to_parquet_spark.cache import TempDataset, memo, temp_dataset
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -397,9 +393,8 @@ def q_incr_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes to the new partitions before reading a row."""
     cutoff = F.lit(INCR_CUTOFF).cast("date")
 
-    def build() -> str:
-        digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        state_dir = os.path.join(tempfile.gettempdir(), f"ktps_aggstate_{digest}")
+    def build() -> TempDataset:
+        state_dir = temp_dataset(spark, sf_dir, "aggstate")
         (
             load(spark, sf_dir, "events")
             .filter(F.to_date("ts") < cutoff)

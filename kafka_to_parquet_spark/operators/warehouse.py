@@ -10,14 +10,12 @@ All three are pure DataFrame plans with exact DuckDB oracles.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import memo
+from kafka_to_parquet_spark.cache import TempDataset, memo, temp_dataset
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -467,17 +465,18 @@ N_BUCKETS = 16
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders and customer ONCE per (session, sf) as bucketed
     tables (bucketBy(N_BUCKETS, custkey), sorted within buckets) under
-    an explicit /tmp path, and return the two table names. Bucketing
-    is Spark's persisted pre-shuffle: both tables' files are already
-    hash-partitioned by the join key, so a key-equal join reads
-    bucket i of each side into the same task — no Exchange at query
-    time, amortized across every query that joins on that key."""
+    a cache-owned scratch directory (``clear_caches`` removes it), and
+    return the two table names. Bucketing is Spark's persisted
+    pre-shuffle: both tables' files are already hash-partitioned by
+    the join key, so a key-equal join reads bucket i of each side into
+    the same task — no Exchange at query time, amortized across every
+    query that joins on that key."""
 
-    def build() -> tuple[str, str]:
-        digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    def build() -> tuple[str, str, TempDataset]:
+        base = temp_dataset(spark, sf_dir, "bucketed")
+        digest = base.rsplit("_", 1)[1]
         t_ord = f"ktps_b_orders_{digest}"
         t_cus = f"ktps_b_customer_{digest}"
-        base = os.path.join(tempfile.gettempdir(), f"ktps_bucketed_{digest}")
         for tname, table, key_col, sort_col in (
             (t_ord, "orders", "o_custkey", "o_orderkey"),
             (t_cus, "customer", "c_custkey", "c_custkey"),
@@ -491,9 +490,9 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 .sortBy(sort_col)
                 .saveAsTable(tname)
             )
-        return t_ord, t_cus
+        return t_ord, t_cus, base
 
-    return memo(spark, sf_dir, "bucketed_tables", build)
+    return memo(spark, sf_dir, "bucketed_tables", build)[:2]
 
 
 @query(

@@ -18,14 +18,12 @@ counts actually shrinking.
 from __future__ import annotations
 
 import glob
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import memo
+from kafka_to_parquet_spark.cache import TempDataset, memo, temp_dataset
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -50,10 +48,9 @@ def compact_events(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build (once per session+sf) the fragmented layout and its
     compacted rewrite; returns (fragmented_dir, compacted_dir)."""
 
-    def build() -> tuple[str, str]:
-        digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        frag = os.path.join(tempfile.gettempdir(), f"ktps_frag_{digest}")
-        comp = os.path.join(tempfile.gettempdir(), f"ktps_compact_{digest}")
+    def build() -> tuple[TempDataset, TempDataset]:
+        frag = temp_dataset(spark, sf_dir, "frag")
+        comp = temp_dataset(spark, sf_dir, "compact")
         ev = load(spark, sf_dir, "events")
         # Fragmented layout: round-robin into many small files — the
         # shape a per-batch sink leaves behind.

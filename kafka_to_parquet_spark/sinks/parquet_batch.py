@@ -25,10 +25,8 @@ mode writes all rows including the final partial batch; streaming mode
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
-import tempfile
 
 import pandas as pd
 import pyarrow as pa
@@ -36,7 +34,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import TempDataset, memo
+from kafka_to_parquet_spark.cache import memo, temp_dataset
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.sources.kafka_analog import (
     BATCH_SIZE,
@@ -126,24 +124,17 @@ def q_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded input: equality proves the sink is lossless (row count and
     values), including ""-decoded null payloads and the final partial
     batch the reference would drop."""
-    # Stable per-(application, sf) directory: repeated calls in one
-    # session overwrite the same deterministically-named files instead
-    # of leaking one dataset copy per invocation, while CONCURRENT
-    # processes (bench alongside pytest) get disjoint directories —
-    # a shared sf-only path let one process read files mid-rewrite by
-    # the other, and stale higher-numbered batch files from a previous
-    # layout could survive into the read-back. The directory is a
-    # cache-owned TempDataset: the layout stays on disk for post-hoc
-    # inspection until clear_caches (or process exit) removes it.
-    def build() -> TempDataset:
-        digest = hashlib.md5(
-            f"{spark.sparkContext.applicationId}_{sf_dir}".encode()
-        ).hexdigest()[:8]
-        return TempDataset(
-            os.path.join(tempfile.gettempdir(), f"ktps_roundtrip_{digest}")
-        )
-
-    out_dir = memo(spark, sf_dir, "parquet_roundtrip_dir", build)
+    # Stable per-(application, sf) directory (see temp_dataset): stale
+    # higher-numbered batch files from a previous layout are removed
+    # before the write so they cannot survive into the read-back. The
+    # layout stays on disk for post-hoc inspection until clear_caches
+    # (or process exit) removes it.
+    out_dir = memo(
+        spark,
+        sf_dir,
+        "parquet_roundtrip_dir",
+        lambda: temp_dataset(spark, sf_dir, "roundtrip"),
+    )
     shutil.rmtree(out_dir, ignore_errors=True)  # drop any stale layout
     rec = kafka_records(spark, sf_dir)
     manifest = write_partition_batches(rec, out_dir, BATCH_SIZE)

@@ -16,19 +16,12 @@ Compression (gzip here) rides along to keep the path realistic.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import memo
+from kafka_to_parquet_spark.cache import TempDataset, memo, temp_dataset
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
-
-def _digest(sf_dir: str) -> str:
-    return hashlib.md5(sf_dir.encode()).hexdigest()[:8]
 
 
 @query(
@@ -44,8 +37,8 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-exact (text integrity via md5). JSON string escaping
     (newlines, quotes, unicode) is exercised by the full text body.
     One file tree per (session, sf); the read is the measured path."""
-    def build() -> str:
-        out = os.path.join(tempfile.gettempdir(), f"ktps_jsonl_{_digest(sf_dir)}")
+    def build() -> TempDataset:
+        out = temp_dataset(spark, sf_dir, "jsonl")
         load(spark, sf_dir, "documents").write.mode("overwrite").option(
             "compression", "gzip"
         ).json(out)
@@ -76,8 +69,8 @@ def q_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared); ``value`` is compared in integer cents — CSV serializes
     doubles as decimal strings, and exact-integer cents survive the
     round-trip while raw double formatting would not."""
-    def build() -> str:
-        out = os.path.join(tempfile.gettempdir(), f"ktps_csv_{_digest(sf_dir)}")
+    def build() -> TempDataset:
+        out = temp_dataset(spark, sf_dir, "csv")
         ev = load(spark, sf_dir, "events")
         # Serialize ts as epoch micros (exact integer) — CSV timestamp
         # formatting/parsing round-trips sub-second precision only
@@ -131,8 +124,8 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch between write and read would fail loudly rather than
     cancel out. One file tree per (session, sf); the read is the
     measured path."""
-    def build() -> str:
-        out = os.path.join(tempfile.gettempdir(), f"ktps_orc_{_digest(sf_dir)}")
+    def build() -> TempDataset:
+        out = temp_dataset(spark, sf_dir, "orc")
         load(spark, sf_dir, "orders").write.mode("overwrite").option(
             "compression", "zlib"
         ).orc(out)
@@ -163,10 +156,8 @@ def _evolved_layout(spark: SparkSession, sf_dir: str) -> str:
     column; batch 2 (event_id, user_id, event_type, value) adds it —
     the additive-column evolution every long-lived ingestion pipeline
     accumulates."""
-    def build() -> str:
-        out = os.path.join(
-            tempfile.gettempdir(), f"ktps_evolve_{_digest(sf_dir)}"
-        )
+    def build() -> TempDataset:
+        out = temp_dataset(spark, sf_dir, "evolve")
         ev = load(spark, sf_dir, "events")
         old = ev.filter(F.col("user_id") % EVOL_SPLIT_US != 0).select(
             "event_id", "user_id", "event_type"

@@ -15,29 +15,21 @@ and that the pruned scan reads only the matching directories.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import memo
+from kafka_to_parquet_spark.cache import TempDataset, memo, temp_dataset
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
-# Single-process assumption: concurrent processes sharing the same
-# /tmp layout dir would race overwrite-vs-read.
+
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
     """Write (once) and return the date-partitioned events layout:
-    ``.../event_date=YYYY-MM-DD/part-*.parquet``."""
+    ``.../event_date=YYYY-MM-DD/part-*.parquet`` — a cache-owned
+    scratch directory that ``clear_caches`` removes."""
 
-    def build() -> str:
-        # Stable digest (not Python's randomized str hash) so repeated
-        # processes reuse/overwrite ONE directory per sf instead of
-        # leaving a fresh full copy in /tmp per run.
-        digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        out = os.path.join(tempfile.gettempdir(), f"ktps_part_events_{digest}")
+    def build() -> TempDataset:
+        out = temp_dataset(spark, sf_dir, "part_events")
         ev = load(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
         ev.write.mode("overwrite").partitionBy("event_date").parquet(out)
         return out
@@ -69,10 +61,9 @@ def q_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rewritten layout back must equal it exactly, proving both the
     delete and the untouched-partition preservation."""
 
-    def build() -> str:
+    def build() -> TempDataset:
         src = partitioned_events_path(spark, sf_dir)
-        digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        dst = os.path.join(tempfile.gettempdir(), f"ktps_delete_{digest}")
+        dst = temp_dataset(spark, sf_dir, "delete")
         # working copy of the layout (stands in for the production table)
         spark.read.parquet(src).write.mode("overwrite").partitionBy("event_date").parquet(dst)
 
@@ -149,10 +140,9 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     update branch, the insert branch, and untouched-partition
     preservation at once."""
 
-    def build() -> str:
+    def build() -> TempDataset:
         src_layout = partitioned_events_path(spark, sf_dir)
-        digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        dst = os.path.join(tempfile.gettempdir(), f"ktps_merge_{digest}")
+        dst = temp_dataset(spark, sf_dir, "merge")
         spark.read.parquet(src_layout).write.mode("overwrite").partitionBy(
             "event_date"
         ).parquet(dst)

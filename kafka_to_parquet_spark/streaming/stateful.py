@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-from kafka_to_parquet_spark.cache import TempDataset, memo
+from kafka_to_parquet_spark.cache import TempDataset, memo, temp_dataset
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load, normalize_event_ts
 
@@ -363,7 +363,6 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     production form overwrites only touched partitions (the dynamic
     partition-overwrite discipline of sources/partitioned.py) or a
     Delta/Iceberg MERGE — the merge algebra is identical."""
-    import hashlib
     import shutil
 
     ev = _stream_events(spark, sf_dir).select(
@@ -380,17 +379,14 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fresh mkdtemp + full reprocess per call. Only a fresh key (or a
     # clear_caches eviction) rebuilds from scratch.
     def build() -> tuple[TempDataset, TempDataset]:
-        digest = hashlib.md5(
-            f"{spark.sparkContext.applicationId}_{sf_dir}".encode()
-        ).hexdigest()[:8]
-        store = os.path.join(tempfile.gettempdir(), f"ktps_upsert_{digest}")
+        store = temp_dataset(spark, sf_dir, "upsert")
         shutil.rmtree(store, ignore_errors=True)
         ckpt = tempfile.mkdtemp(prefix="ktps_upsert_ckpt_")
         # TempDataset: store + checkpoint are cache-owned scratch —
         # eviction frees the on-disk state with the entry (the next
         # call rebuilds from scratch, the documented fresh-key path)
         # instead of leaking both dirs.
-        return TempDataset(store), TempDataset(ckpt)
+        return store, TempDataset(ckpt)
 
     store, ckpt = memo(spark, sf_dir, "upsert_store", build)
 

@@ -3,11 +3,12 @@ scale factor (sf0.001, ~6k lineitem rows) for speed."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_to_parquet_spark import registry
 from kafka_to_parquet_spark.session import get_spark

@@ -152,3 +152,35 @@ def test_reclaim_is_a_package_util(spark):
     spark.range(1000).groupBy(F.col("id") % 7).count().collect()
     reclaim(spark)
     assert spark.range(3).count() == 3
+
+
+# Each query that writes a scratch dataset, with the temp_dataset
+# prefixes of the directories it owns.
+_SCRATCH_OWNERS = {
+    "q_partition_pruning": ("part_events",),
+    "q_delete_compact": ("part_events", "delete"),
+    "q_merge_upsert": ("part_events", "merge"),
+    "q_jsonl_roundtrip": ("jsonl",),
+    "q_csv_scan": ("csv",),
+    "q_orc_roundtrip": ("orc",),
+    "q_schema_evolution": ("evolve",),
+    "q_compact_files": ("frag", "compact"),
+    "q_join_bucketed": ("bucketed",),
+    "q_incr_agg": ("aggstate",),
+}
+
+
+def test_clear_caches_removes_scratch_datasets(spark, run, sf_dir):
+    """Every scratch dataset a query writes under the temp directory is
+    a cache-owned TempDataset: clear_caches removes it from disk."""
+    import os
+
+    from kafka_to_parquet_spark.cache import temp_dataset
+
+    dirs = set()
+    for name, prefixes in _SCRATCH_OWNERS.items():
+        run(name).count()
+        dirs |= {temp_dataset(spark, sf_dir, p) for p in prefixes}
+    assert all(os.path.isdir(d) for d in dirs), sorted(dirs)
+    clear_caches(spark, sf_dir)
+    assert not [d for d in dirs if os.path.exists(d)]

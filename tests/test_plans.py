@@ -248,15 +248,56 @@ def test_skew_salted_join_shuffles_on_key_and_salt(run):
 # ------------------------------------------------- round-3 late additions
 
 
-def test_minhash_band_join_is_hash_not_nested_loop(run):
-    """Candidate generation must be an equi join on (band, key) —
-    never a nested-loop pair scan. (At fixture scale the bucket-stats
-    side may auto-broadcast; at scale AQE shuffle-joins it — either is
-    an equi join.)"""
+def test_minhash_candidates_one_bucket_exchange(run, spark, sf_dir):
+    """Candidate generation is ONE exchange on (band, key), shared by
+    the bucket-count window and the id grouping, and no join on
+    (band, key): pairs come from inside each capped bucket, never from
+    a band self-join or a nested-loop pair scan."""
+    import re
+
+    from kafka_to_parquet_spark.llm.minhash import minhash_candidates
+
+    bk = r"hashpartitioning\(b#\d+, k#\d+L?, \d+\)"
+    join_on_b = r"(Left|Right) keys \[\d+\]: \[b#"
+    cand = plan_of(minhash_candidates(spark, sf_dir))
+    assert len(re.findall(bk, cand)) == 1
+    assert "Join" not in cand
     plan = plan_of(run("q_dedup_minhash"))
+    assert len(re.findall(bk, plan)) == 1
+    assert not re.search(join_on_b, plan)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    assert "HashJoin" in plan or "SortMergeJoin" in plan
+
+
+# Spark jobs a cold q_dedup_minhash submits, from the call that builds
+# the DataFrame through its write: 9 at sf0.001, sf0.01 and on the
+# perfbench tables, on one CPU or eight (the band self-join plan took
+# 14).
+MINHASH_COLD_JOBS = 9
+
+
+def test_minhash_cold_run_job_count(spark, sf_dir):
+    """Job-count guard: a cold q_dedup_minhash (after clear_caches)
+    stays within MINHASH_COLD_JOBS. Its cost on small inputs is the
+    number of jobs, not the data, so a plan change that adds a stage
+    job shows here first."""
+    from kafka_to_parquet_spark.cache import clear_caches
+
+    sc = spark.sparkContext
+    group = "test_minhash_cold_run_job_count"
+    clear_caches(spark, sf_dir)
+    sc.setJobGroup(group, "cold q_dedup_minhash")
+    try:
+        df = registry.QUERIES["q_dedup_minhash"](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the async
+    # listener bus; drain it before counting
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= MINHASH_COLD_JOBS, sorted(jobs)
 
 
 def test_semdedup_pairwise_is_grouped_pandas_prune(run):

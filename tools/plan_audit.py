@@ -15,9 +15,10 @@ artifact to the live registry so a new batch can't land unaudited.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_to_parquet_spark import registry  # noqa: E402
 from kafka_to_parquet_spark.plans import explain  # noqa: E402

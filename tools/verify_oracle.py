@@ -14,6 +14,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 import traceback
@@ -21,7 +22,7 @@ from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_to_parquet_spark import registry  # noqa: E402
 from kafka_to_parquet_spark.session import get_spark  # noqa: E402
