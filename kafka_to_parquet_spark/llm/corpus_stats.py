@@ -28,7 +28,13 @@ from kafka_to_parquet_spark.functions.hashes import (
     spark_h62,
 )
 from kafka_to_parquet_spark.functions.rounding import int_units
-from kafka_to_parquet_spark.functions.text import _STOP_SQL, _TOKENS_SQL, tokens_col
+from kafka_to_parquet_spark.functions.text import (
+    _STOP_SQL,
+    _TOKENS_SQL,
+    tokens_col,
+    word_ngrams,
+    word_ngrams_sql,
+)
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -94,24 +100,16 @@ def q_text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adjacent-token bigram counts, top {K} — the n-gram statistic
     behind boilerplate detection and collocation mining.
 
-    Shape: the bigram list is built INSIDE the row via zip_with over
-    two shifted slices of the token array (JVM higher-order functions,
-    no self-join, no positional shuffle), then explode → count. Output
+    Shape: the bigram list is built INSIDE the row by word_ngrams
+    over the token array (JVM higher-order functions, no self-join,
+    no positional shuffle), then explode → count. Output
     volume ≈ token count; the DuckDB oracle derives the same pairs via
     an ordinality self-join, which is its idiomatic equivalent. At
     100 TB this is the word-count topology again — explode and one
     keyed agg."""
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens_col(F.col("text")).alias("toks"))
-    bigrams = toks.select(
-        F.explode(
-            F.expr(
-                "zip_with(slice(toks, 1, greatest(size(toks) - 1, 0)),"
-                " slice(toks, 2, greatest(size(toks) - 1, 0)),"
-                " (a, b) -> concat(a, ' ', b))"
-            )
-        ).alias("bigram")
-    )
+    bigrams = toks.select(F.explode(F.expr(word_ngrams("toks", 2))).alias("bigram"))
     return (
         bigrams.groupBy("bigram")
         .agg(F.count("*").alias("n"))
@@ -462,7 +460,7 @@ def q_dsir_logratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Shared doc-bigram term-frequency stage (same discipline as _DW_CTE):
-# in-row zip_with on the Spark side, ordinality self-join in DuckDB.
+# in-row word_ngrams on the Spark side, ordinality self-join in DuckDB.
 _DWB_CTE = f"""w AS (
   SELECT doc_id, unnest(toks) AS word, generate_subscripts(toks, 1) AS i
   FROM (SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents)
@@ -476,22 +474,13 @@ dwb AS (
 
 
 def _doc_bigram_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark twin of _DWB_CTE: (doc_id, bigram, tf_doc) built from
-    zip_with over two shifted slices — no self-join, no positional
-    shuffle (the q_text_bigrams idiom, kept per-doc)."""
+    """Spark twin of _DWB_CTE: (doc_id, bigram, tf_doc) built in-row by
+    word_ngrams — no self-join, no positional shuffle (the
+    q_text_bigrams idiom, kept per-doc)."""
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens_col(F.col("text")).alias("toks"))
     return (
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "zip_with(slice(toks, 1, greatest(size(toks) - 1, 0)),"
-                    " slice(toks, 2, greatest(size(toks) - 1, 0)),"
-                    " (a, b) -> concat(a, ' ', b))"
-                )
-            ).alias("bigram"),
-        )
+        toks.select("doc_id", F.explode(F.expr(word_ngrams("toks", 2))).alias("bigram"))
         .groupBy("doc_id", "bigram")
         .agg(F.count("*").alias("tf_doc"))
     )
@@ -533,7 +522,7 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical ratio of exact integers, fenced to micro-nats; per-doc
     accumulation is exact integers + one shared final division.
 
-    Plan: in-row bigram construction (zip_with, no self-join) →
+    Plan: in-row bigram construction (word_ngrams, no self-join) →
     (doc, bigram, tf) partial-aggregated before its one exchange; the
     bigram and first-word count tables are vocabulary²-sized side
     inputs; the scoring join hash-partitions on bigram with both
@@ -1088,11 +1077,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     tri = toks.select(
         "doc_id",
         F.explode(
-            F.expr(
-                f"transform(sequence(1, size(toks) - {NOVELTY_N} + 1), i -> "
-                + spark_h62(f"concat_ws(' ', slice(toks, i, {NOVELTY_N}))")
-                + ")"
-            )
+            F.expr(f"transform({word_ngrams('toks', NOVELTY_N)}, g -> {spark_h62('g')})")
         ).alias("th"),
     )
     novel = (
@@ -1995,18 +1980,7 @@ BLOOM_SRC = "src1"  # the member set: this source's shingle vocabulary
 # fixture's unigram vocabulary is so small (~31 words) that every
 # source contains every word and the true-negative probe set would be
 # EMPTY; trigram shingles are also what a dedup pipeline actually asks
-# a Bloom filter about. Mirrored shingle expressions:
-_SHINGLE_DUCK = (
-    "CASE WHEN len(toks) >= 3 THEN list_transform("
-    "range(1, CAST(len(toks) AS INTEGER) - 1),"
-    " bl_i -> toks[bl_i] || ' ' || toks[bl_i+1] || ' ' || toks[bl_i+2])"
-    " ELSE [] END"
-)
-_SHINGLE_SPARK = (
-    "CASE WHEN size(toks) >= 3 THEN transform(sequence(1, size(toks) - 2),"
-    " i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1),"
-    " element_at(toks, i + 2))) ELSE array() END"
-)
+# a Bloom filter about.
 
 # Theoretical FPR of a Bloom filter with `bits` of `m` set, probed k
 # times: (bits/m)^k — ONE mirrored double expression micro-rounded.
@@ -2026,7 +2000,7 @@ def _bloom_pos(col: str, salt: int, duck: bool) -> str:
     "q_bloom_fpr_audit",
     oracle=f"""
 WITH sh AS (
-  SELECT source, unnest({_SHINGLE_DUCK}) AS word
+  SELECT source, unnest({word_ngrams_sql('toks', 3)}) AS word
   FROM (SELECT source, {_TOKENS_SQL} AS toks FROM documents)
 ),
 va AS (SELECT DISTINCT word FROM sh WHERE source = '{BLOOM_SRC}'),
@@ -2093,7 +2067,7 @@ def q_bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     words = d.select(
         "source", tokens_col(F.col("text")).alias("toks")
-    ).select("source", F.explode(F.expr(_SHINGLE_SPARK)).alias("word"))
+    ).select("source", F.explode(F.expr(word_ngrams("toks", 3))).alias("word"))
     va = words.filter(F.col("source") == BLOOM_SRC).select("word").distinct()
     vb = (
         words.filter(F.col("source") != BLOOM_SRC)
@@ -2145,7 +2119,7 @@ def q_bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH sh AS (
   SELECT DISTINCT source, word
   FROM (
-    SELECT source, unnest({_SHINGLE_DUCK}) AS word
+    SELECT source, unnest({word_ngrams_sql('toks', 3)}) AS word
     FROM (SELECT source, {_TOKENS_SQL} AS toks FROM documents)
   )
 ),
@@ -2181,7 +2155,7 @@ def q_unique_shingle_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     sh = (
         d.select("source", tokens_col(F.col("text")).alias("toks"))
-        .select("source", F.explode(F.expr(_SHINGLE_SPARK)).alias("word"))
+        .select("source", F.explode(F.expr(word_ngrams("toks", 3))).alias("word"))
         .distinct()
     )
     u = sh.groupBy("word").agg(F.count("*").cast("long").alias("n_src"))

@@ -25,14 +25,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.cache import memo
-from kafka_to_parquet_spark.functions.hashes import (
-    duck_h31,
-    duck_h62,
-    spark_h31,
-    spark_h62,
-)
+from kafka_to_parquet_spark.functions.hashes import duck_h62, spark_h62
 from kafka_to_parquet_spark.functions.rounding import floor_round, floor_round_sql
-from kafka_to_parquet_spark.functions.text import tokens_col, _TOKENS_SQL
+from kafka_to_parquet_spark.functions.text import (
+    _TOKENS_SQL,
+    tokens_col,
+    word_ngrams,
+    word_ngrams_sql,
+)
 from kafka_to_parquet_spark.functions.vectors import duck_cosine
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
@@ -78,14 +78,7 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.select("doc_id", "lang", "source", tokens_col(F.col("text")).alias("toks"))
         .filter(F.size("toks") >= 3)
-        .withColumn(
-            "sh",
-            F.expr(
-                "array_distinct(transform(sequence(1, size(toks) - 2),"
-                "  i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1), ' ',"
-                "              element_at(toks, i + 2))))"
-            ),
-        )
+        .withColumn("sh", F.expr(f"array_distinct({word_ngrams('toks', 3)})"))
         .drop("toks")
         .persist()
     )
@@ -116,10 +109,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SHINGLES_SQL = f"""
 SELECT doc_id, lang, source,
-       list_distinct(CASE WHEN len(toks) >= 3
-            THEN list_transform(range(1, CAST(len(toks) AS INTEGER) - 1),
-                                i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))
-            ELSE [] END) AS sh
+       list_distinct({word_ngrams_sql('toks', 3)}) AS sh
 FROM (SELECT doc_id, lang, source, {_TOKENS_SQL} AS toks FROM documents)
 """
 
@@ -838,7 +828,6 @@ def _window_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    window_text = f"concat_ws(' ', slice(toks, i, {SUBSTR_W}))"
     return (
         d.select("doc_id", tokens_col(F.col("text")).alias("toks"))
         .filter(F.size("toks") >= SUBSTR_W)
@@ -846,8 +835,8 @@ def _windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.posexplode(
                 F.expr(
-                    f"transform(sequence(1, size(toks) - {SUBSTR_W} + 1),"
-                    f" i -> {spark_h62(window_text)})"
+                    f"transform({word_ngrams('toks', SUBSTR_W)},"
+                    f" g -> {spark_h62('g')})"
                 )
             ).alias("pos0", "wh"),
         )

@@ -32,7 +32,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.functions.rounding import floor_round, floor_round_sql
-from kafka_to_parquet_spark.functions.text import tokens_col, _TOKENS_SQL
+from kafka_to_parquet_spark.functions.text import (
+    _TOKENS_SQL,
+    tokens_col,
+    word_ngrams,
+    word_ngrams_sql,
+)
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -52,28 +57,6 @@ DECON_N = 5
 BENCH_MOD = 23
 
 
-def _gram_expr(n: int) -> str:
-    """Spark SQL: distinct word n-grams of ``toks`` (empty if short)."""
-    parts = ", ".join(f"element_at(toks, i + {j})" for j in range(n))
-    return (
-        f"CASE WHEN size(toks) >= {n} THEN array_distinct(transform("
-        f"sequence(1, size(toks) - {n - 1}), i -> concat_ws(' ', {parts})))"
-        " ELSE array() END"
-    )
-
-
-def _gram_sql(n: int) -> str:
-    """DuckDB: same distinct word n-grams (1-based list indexing)."""
-    parts = " || ' ' || ".join(
-        "toks[i]" if j == 0 else f"toks[i+{j}]" for j in range(n)
-    )
-    return (
-        f"CASE WHEN len(toks) >= {n} THEN list_distinct(list_transform("
-        f"range(1, CAST(len(toks) AS INTEGER) - {n - 2}), i -> {parts}))"
-        " ELSE [] END"
-    )
-
-
 # Shared decontamination stage — ONE definition per engine of the
 # per-doc n-gram table and the benchmark n-gram set, used by both
 # q_decontaminate and q_pipeline_yield (same discipline as
@@ -82,7 +65,11 @@ def _gram_sql(n: int) -> str:
 _G_BENCH_CTES = f"""t AS (
   SELECT doc_id, lang, source, text, {_TOKENS_SQL} AS toks FROM documents
 ),
-g AS (SELECT doc_id, lang, source, unnest({_gram_sql(DECON_N)}) AS s FROM t),
+g AS (
+  SELECT doc_id, lang, source,
+         unnest(list_distinct({word_ngrams_sql('toks', DECON_N)})) AS s
+  FROM t
+),
 bench AS (SELECT DISTINCT s FROM g WHERE doc_id % {BENCH_MOD} = 0)"""
 
 
@@ -91,9 +78,8 @@ def _grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", tokens_col(F.col("text")).alias("toks")
     )
-    return t.select(
-        "doc_id", "lang", "source", F.explode(F.expr(_gram_expr(DECON_N))).alias("s")
-    )
+    grams = F.expr(f"array_distinct({word_ngrams('toks', DECON_N)})")
+    return t.select("doc_id", "lang", "source", F.explode(grams).alias("s"))
 
 
 def _bench_grams(grams: DataFrame) -> DataFrame:
@@ -144,12 +130,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_text_repetition",
     oracle=f"""
 WITH t AS (SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents),
-b AS (SELECT doc_id, toks,
-             CASE WHEN len(toks) >= 2
-                  THEN list_transform(range(1, CAST(len(toks) AS INTEGER)),
-                                      i -> toks[i] || ' ' || toks[i+1])
-                  ELSE [] END AS bg
-      FROM t)
+b AS (SELECT doc_id, toks, {word_ngrams_sql('toks', 2)} AS bg FROM t)
 SELECT doc_id,
        CAST(len(bg) AS INTEGER) AS n_bigrams,
        CASE WHEN len(toks) = 0 THEN 0.0 ELSE
@@ -173,11 +154,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = t.select(
         "doc_id",
         "toks",
-        F.expr(
-            "CASE WHEN size(toks) >= 2 THEN transform(sequence(1, size(toks) - 1),"
-            " i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1)))"
-            " ELSE array() END"
-        ).alias("bg"),
+        F.expr(word_ngrams("toks", 2)).alias("bg"),
     )
     n_tok = F.size("toks").cast("double")
     n_bg = F.size("bg").cast("double")

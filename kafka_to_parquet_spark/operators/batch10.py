@@ -24,7 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.functions.hashes import duck_h62, spark_h62
-from kafka_to_parquet_spark.functions.text import _TOKENS_SQL, tokens_col
+from kafka_to_parquet_spark.functions.text import (
+    _TOKENS_SQL,
+    tokens_col,
+    word_ngrams,
+    word_ngrams_sql,
+)
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -39,15 +44,11 @@ from kafka_to_parquet_spark.tables import load
 
 
 def _attrib_oracle() -> str:
-    from kafka_to_parquet_spark.llm.pipeline import (
-        BENCH_MOD,
-        DECON_N,
-        _gram_sql,
-    )
+    from kafka_to_parquet_spark.llm.pipeline import BENCH_MOD, DECON_N
 
     return f"""
 WITH t AS (SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents),
-g AS (SELECT doc_id, unnest({_gram_sql(DECON_N)}) AS s FROM t),
+g AS (SELECT doc_id, unnest(list_distinct({word_ngrams_sql('toks', DECON_N)})) AS s FROM t),
 bg AS (SELECT doc_id AS bench_doc, s FROM g WHERE doc_id % {BENCH_MOD} = 0),
 cg AS (SELECT doc_id, s FROM g WHERE doc_id % {BENCH_MOD} <> 0),
 tot AS (SELECT bench_doc, CAST(count(*) AS BIGINT) AS n_grams
@@ -137,12 +138,12 @@ LADDER_NS = [3, 4, 5, 7]
 
 
 def _ladder_oracle() -> str:
-    from kafka_to_parquet_spark.llm.pipeline import BENCH_MOD, _gram_sql
+    from kafka_to_parquet_spark.llm.pipeline import BENCH_MOD
 
     legs = []
     for n in LADDER_NS:
         legs.append(f"""
-g{n} AS (SELECT doc_id, unnest({_gram_sql(n)}) AS s FROM t),
+g{n} AS (SELECT doc_id, unnest(list_distinct({word_ngrams_sql('toks', n)})) AS s FROM t),
 b{n} AS (SELECT DISTINCT s FROM g{n} WHERE doc_id % {BENCH_MOD} = 0),
 h{n} AS (
   SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs_hit,
@@ -184,7 +185,7 @@ def q_contamination_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: extension tier; the n-sweep is the calibration table in
     Lee et al. 2022 §4 / Gao et al. (Pile) decontamination notes."""
-    from kafka_to_parquet_spark.llm.pipeline import BENCH_MOD, _gram_expr
+    from kafka_to_parquet_spark.llm.pipeline import BENCH_MOD
 
     t = load(spark, sf_dir, "documents").select(
         "doc_id", tokens_col(F.col("text")).alias("toks")
@@ -194,7 +195,10 @@ def q_contamination_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     legs = []
     for n in LADDER_NS:
-        g = t.select("doc_id", F.explode(F.expr(_gram_expr(n))).alias("s"))
+        g = t.select(
+            "doc_id",
+            F.explode(F.expr(f"array_distinct({word_ngrams('toks', n)})")).alias("s"),
+        )
         b = g.filter(F.col("doc_id") % BENCH_MOD == 0).select("s").distinct()
         h = (
             g.filter(F.col("doc_id") % BENCH_MOD != 0)
@@ -517,16 +521,12 @@ def q_dup_width_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     legs = []
     for w in DW_WIDTHS:
-        wh = spark_h62(f"concat_ws(' ', slice(toks, dw_i, {w}))")
         win = (
             t.filter(F.size("toks") >= w)
             .select(
                 "doc_id",
                 F.explode(
-                    F.expr(
-                        f"transform(sequence(1, size(toks) - {w} + 1),"
-                        f" dw_i -> {wh})"
-                    )
+                    F.expr(f"transform({word_ngrams('toks', w)}, g -> {spark_h62('g')})")
                 ).alias("wh"),
             )
         )
@@ -580,7 +580,7 @@ q_dup_width_curve.__doc__ = q_dup_width_curve.__doc__.replace(
 
 
 def _venn_oracle() -> str:
-    from kafka_to_parquet_spark.llm.pipeline import BENCH_MOD, DECON_N, _gram_sql
+    from kafka_to_parquet_spark.llm.pipeline import BENCH_MOD, DECON_N
     from kafka_to_parquet_spark.operators.batch9 import _qe_flags_sql
 
     return f"""
@@ -595,7 +595,7 @@ dd AS (SELECT fp.doc_id,
               CASE WHEN fp.doc_id <> k.keeper THEN 1 ELSE 0 END AS f_dedup
        FROM fp JOIN keep k USING (h)),
 t AS (SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents),
-g AS (SELECT doc_id, unnest({_gram_sql(DECON_N)}) AS s FROM t),
+g AS (SELECT doc_id, unnest(list_distinct({word_ngrams_sql('toks', DECON_N)})) AS s FROM t),
 bench AS (SELECT DISTINCT s FROM g WHERE doc_id % {BENCH_MOD} = 0),
 conta AS (SELECT DISTINCT g.doc_id FROM g JOIN bench USING (s)
           WHERE g.doc_id % {BENCH_MOD} <> 0),

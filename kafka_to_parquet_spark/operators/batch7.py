@@ -47,6 +47,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_to_parquet_spark.functions.text import (
+    _POSTINGS_SQL,
+    _TOKENS_SQL,
+    BPE_PATTERN,
+    token_postings,
+    tokens_col,
+)
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -193,20 +200,6 @@ q_graph_kcore.__doc__ = (
 
 PHRASE_TOP_DOCS = 25
 
-# Positional postings: (doc_id, pos, word), 1-based positions. The
-# DuckDB unnest/generate_subscripts pair zips in parallel (the
-# q_kmeans_step oracle precedent).
-_POSTINGS_SQL = """post AS (
-  SELECT doc_id,
-         CAST(generate_subscripts(toks, 1) AS BIGINT) AS pos,
-         unnest(toks) AS word
-  FROM (SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS toks
-        FROM documents)
-)"""
-
-
 @query(
     "q_search_phrase",
     oracle=f"""
@@ -249,12 +242,7 @@ def q_search_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     production index would PERSIST the postings table; here it is
     built in-plan so the query is self-contained."""
     docs = load(spark, sf_dir, "documents")
-    post = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("pos0", "word"),
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
+    post = token_postings(docs)
     p1, p2 = post.alias("p1"), post.alias("p2")
     bg = p1.join(
         p2,
@@ -379,17 +367,12 @@ q_multimodal_hashdup.__doc__ = q_multimodal_hashdup.__doc__.replace(
 
 KEYNESS_TOP = 5
 
-_SRC_TOKENS_SQL = (
-    "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
-)
-
-
 @query(
     "q_keyness",
     oracle=f"""
 WITH sw AS (
   SELECT source, word, CAST(count(*) AS BIGINT) AS a
-  FROM (SELECT source, unnest({_SRC_TOKENS_SQL}) AS word FROM documents)
+  FROM (SELECT source, unnest({_TOKENS_SQL}) AS word FROM documents)
   GROUP BY source, word
 ),
 stot AS (SELECT source, CAST(sum(a) AS BIGINT) AS at FROM sw GROUP BY source),
@@ -437,9 +420,7 @@ def q_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
     sw = (
         docs.select(
             "source",
-            F.explode(
-                F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-            ).alias("word"),
+            F.explode(tokens_col(F.col("text"))).alias("word"),
         )
         .groupBy("source", "word")
         .agg(F.count("*").alias("a"))
@@ -814,15 +795,10 @@ q_ts_sax_motif.__doc__ = (
 
 # Both counts derive from functions/text.py's canonical tokenizers —
 # interpolated, never re-typed, so the oracle can't drift from the
-# Spark plan's imported BPE_PATTERN / tokens_col (the q_text_bpe_tokens
+# Spark plan's BPE_PATTERN / tokens_col (the q_text_bpe_tokens
 # discipline).
-from kafka_to_parquet_spark.functions.text import (  # noqa: E402
-    _TOKENS_SQL as _FERT_TOK_SQL,
-)
-from kafka_to_parquet_spark.functions.text import BPE_PATTERN as _FERT_BPE_PAT  # noqa: E402
-
-_FERT_WORDS_SQL = f"len({_FERT_TOK_SQL})"
-_FERT_BPE_SQL = f"len(regexp_extract_all(lower(text), '{_FERT_BPE_PAT}'))"
+_FERT_WORDS_SQL = f"len({_TOKENS_SQL})"
+_FERT_BPE_SQL = f"len(regexp_extract_all(lower(text), '{BPE_PATTERN}'))"
 
 
 @query(
@@ -865,8 +841,6 @@ def q_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable groupBy on the low-cardinality (lang, source)
     key; the exchange carries |langs|·|sources| partial rows. One
     corpus pass, no token-instance shuffle, trivially AQE-coalesced."""
-    from kafka_to_parquet_spark.functions.text import BPE_PATTERN, tokens_col
-
     d = load(spark, sf_dir, "documents")
     per_doc = d.select(
         "lang",

@@ -104,7 +104,12 @@ from kafka_to_parquet_spark.functions.hashes import (
     spark_h31,
     spark_h62,
 )
-from kafka_to_parquet_spark.functions.text import _TOKENS_SQL, tokens_col
+from kafka_to_parquet_spark.functions.text import (
+    _POSTINGS_SQL,
+    _TOKENS_SQL,
+    token_postings,
+    tokens_col,
+)
 from kafka_to_parquet_spark.llm.corpus_stats import KMV_K as _KMV_K
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
@@ -244,21 +249,10 @@ PROX_TERMS = ("spark", "merge")  # query pair
 PROX_K = 5                       # max token distance
 PROX_TOP = 20
 
-_PROX_POSTINGS = """post AS (
-  SELECT doc_id,
-         CAST(generate_subscripts(toks, 1) AS BIGINT) AS pos,
-         unnest(toks) AS word
-  FROM (SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS toks
-        FROM documents)
-)"""
-
-
 @query(
     "q_search_proximity",
     oracle=f"""
-WITH {_PROX_POSTINGS},
+WITH {_POSTINGS_SQL},
 m AS (
   SELECT p1.doc_id,
          abs(p1.pos - p2.pos) AS dist
@@ -294,12 +288,7 @@ def q_search_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance predicate applies in the join. Final per-doc aggregate is
     map-side combinable; top-{N} is TakeOrderedAndProject."""
     docs = load(spark, sf_dir, "documents")
-    post = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("pos0", "word"),
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
+    post = token_postings(docs)
     p1 = post.filter(F.col("word") == PROX_TERMS[0]).select("doc_id", "pos")
     p2 = post.filter(F.col("word") == PROX_TERMS[1]).select(
         F.col("doc_id").alias("doc_id2"), F.col("pos").alias("pos2")
@@ -361,7 +350,7 @@ _LLR_MICRO = (
 @query(
     "q_collocation_llr",
     oracle=f"""
-WITH {_PROX_POSTINGS},
+WITH {_POSTINGS_SQL},
 bg AS (
   SELECT p1.word AS w1, p2.word AS w2, CAST(count(*) AS BIGINT) AS n11
   FROM post p1 JOIN post p2
@@ -405,12 +394,7 @@ def q_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast 1-row aggregate on the Spark side so no single-partition
     exchange appears in the plan."""
     docs = load(spark, sf_dir, "documents")
-    post = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("pos0", "word"),
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
+    post = token_postings(docs)
     p1, p2 = post.alias("p1"), post.alias("p2")
     bg = (
         p1.join(
@@ -471,7 +455,7 @@ WIN_MAX_DF = 32  # drop fingerprints shared by more than this many
 @query(
     "q_winnowing_fingerprint",
     oracle=f"""
-WITH {_PROX_POSTINGS},
+WITH {_POSTINGS_SQL},
 kg AS (
   SELECT p1.doc_id, p1.pos,
          {duck_h62("p1.word || ' ' || p2.word || ' ' || p3.word")} AS kh
@@ -533,12 +517,7 @@ def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape), never all-pairs. Sizes join is doc-keyed over the reduced
     fingerprint relation."""
     docs = load(spark, sf_dir, "documents")
-    post = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("pos0", "word"),
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
+    post = token_postings(docs)
     p1, p2, p3 = post.alias("p1"), post.alias("p2"), post.alias("p3")
     kg = (
         p1.join(
@@ -1749,7 +1728,7 @@ RAKE_TOP = 15
 @query(
     "q_text_rake",
     oracle=f"""
-WITH {_PROX_POSTINGS},
+WITH {_POSTINGS_SQL},
 df AS (
   SELECT word, CAST(count(DISTINCT doc_id) AS BIGINT) AS dfreq
   FROM post GROUP BY word
@@ -1828,12 +1807,7 @@ def q_text_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     words × the broadcast-able word-score table. Nothing is
     corpus-quadratic; the stoplist subquery is a {S}-row broadcast."""
     docs = load(spark, sf_dir, "documents")
-    post = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("pos0", "word"),
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
+    post = token_postings(docs)
     df = post.groupBy("word").agg(
         F.countDistinct("doc_id").cast("long").alias("dfreq")
     )
@@ -2394,7 +2368,7 @@ _TR_T = 1_000_000_000_000  # total rank mass in integer units
 
 def _textrank_oracle() -> str:
     ctes = [
-        _PROX_POSTINGS,
+        _POSTINGS_SQL,
         f"""tdf AS (
   SELECT word, CAST(count(DISTINCT doc_id) AS BIGINT) AS dfreq
   FROM post GROUP BY word
@@ -2479,12 +2453,7 @@ def q_text_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
-        post = docs.select(
-            "doc_id",
-            F.posexplode(
-                F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-            ).alias("pos0", "word"),
-        ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
+        post = token_postings(docs)
         tdf = post.groupBy("word").agg(
             F.countDistinct("doc_id").cast("long").alias("dfreq")
         )
@@ -2906,7 +2875,7 @@ KN_TOP = 20
 @query(
     "q_kn_continuation",
     oracle=f"""
-WITH {_PROX_POSTINGS},
+WITH {_POSTINGS_SQL},
 bg AS (
   SELECT DISTINCT p1.word AS w1, p2.word AS w2
   FROM post p1 JOIN post p2
@@ -2952,12 +2921,7 @@ def q_kn_continuation(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting; continuation counts are a vocabulary-sized aggregate;
     the scalar type-total broadcasts. Top-{N} is TakeOrdered."""
     docs = load(spark, sf_dir, "documents")
-    post = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("pos0", "word"),
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
+    post = token_postings(docs)
     p1, p2 = post.alias("p1"), post.alias("p2")
     bg = (
         p1.join(

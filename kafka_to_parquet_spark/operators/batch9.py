@@ -53,7 +53,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.cache import memo, park
-from kafka_to_parquet_spark.functions.text import _TOKENS_SQL, tokens_col
+from kafka_to_parquet_spark.functions.text import (
+    _STOP_SQL,
+    _TOKENS_SQL,
+    STOP_ARRAY_EXPR,
+    TOKENS_EXPR,
+    tokens_col,
+    word_ngrams,
+    word_ngrams_sql,
+)
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -795,8 +803,7 @@ WITH toks AS (
 ),
 bg AS (
   SELECT doc_id, source,
-         unnest(list_transform(range(1, CAST(len(t) AS INTEGER)),
-                i -> t[i] || ' ' || t[i + 1])) AS b
+         unnest({word_ngrams_sql('t', 2)}) AS b
   FROM toks
 ),
 dbg AS (
@@ -857,12 +864,7 @@ def q_lm_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     bg = toks.select(
         "doc_id",
         "source",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1),"
-                " i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"
-            )
-        ).alias("b"),
+        F.explode(F.expr(word_ngrams("t", 2))).alias("b"),
     )
     dbg = bg.groupBy("doc_id", "source", "b").agg(
         F.count("*").cast("long").alias("m")
@@ -1192,7 +1194,7 @@ def q_suffix_lrs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min(SFX_START, ⌊log2 maxlen⌋): the 2^k_start-gram equality
     # classes come straight off the token arrays (explode each doc's
     # grams, canonicalize by min-pack over the gram STRING — exact,
-    # concat_ws(' ') is injective on whitespace-free tokens), so
+    # space-joining is injective on whitespace-free tokens), so
     # levels 0..k_start-1 are never built. Cheaper at every scale:
     # one explode+agg+join-back shuffling ≤ 2^k_start·token bytes per
     # position replaces k_start doubling rounds of ~3 corpus-wide
@@ -1212,12 +1214,7 @@ def q_suffix_lrs(spark: SparkSession, sf_dir: str) -> DataFrame:
         glen = 1 << k_start
         grams = toks.filter(F.size("t") >= glen).select(
             "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(1, size(t) - {glen} + 1),"
-                    f" sfx_i -> concat_ws(' ', slice(t, sfx_i, {glen})))"
-                )
-            ).alias("p0", "g"),
+            F.posexplode(F.expr(word_ngrams("t", glen))).alias("p0", "g"),
         ).select("doc_id", (F.col("p0") + 1).alias("p"), "g")
         grp = grams.groupBy("g").agg(
             F.expr(f"min({pack})").alias("rep"),
@@ -1723,14 +1720,7 @@ def q_stream_minhash_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % INCR_MOD == INCR_REM)
         .select("doc_id", tokens_col(F.col("text")).alias("toks"))
         .filter(F.size("toks") >= 3)
-        .withColumn(
-            "sh",
-            F.expr(
-                "array_distinct(transform(sequence(1, size(toks) - 2),"
-                "  i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1), ' ',"
-                "              element_at(toks, i + 2))))"
-            ),
-        )
+        .withColumn("sh", F.expr(f"array_distinct({word_ngrams('toks', 3)})"))
     )
     xb = minhash_bands(sdf, "sh").withColumnRenamed("doc_id", "batch_doc")
     corpus = (
@@ -2045,8 +2035,7 @@ _PAD_LIN_DUCK = "((({n}) + 63) // 64) * 64"
 def _pad_waste_oracle() -> str:
     return f"""
 WITH t AS (
-  SELECT CAST(len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> ''))
-         AS BIGINT) AS n
+  SELECT CAST(len({_TOKENS_SQL}) AS BIGINT) AS n
   FROM documents
 ),
 nz AS (SELECT n FROM t WHERE n > 0),
@@ -2136,7 +2125,7 @@ def _ngram_leak_oracle() -> str:
     h = duck_h62(f"array_to_string(toks[ng_i:ng_i+{LEAK_W - 1}], ' ')")
     return f"""
 WITH t AS (
-  SELECT source, list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks
+  SELECT source, {_TOKENS_SQL} AS toks
   FROM documents
 ),
 g AS (
@@ -2178,16 +2167,13 @@ def q_source_ngram_leak(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     toks = tokens_col(F.col("text"))
-    h = spark_h62(f"concat_ws(' ', slice(toks, ng_i, {LEAK_W}))")
     g = (
         d.select("source", toks.alias("toks"))
         .filter(F.size("toks") >= LEAK_W)
         .select(
             "source",
             F.explode(
-                F.expr(
-                    f"transform(sequence(1, size(toks) - {LEAK_W - 1}), ng_i -> {h})"
-                )
+                F.expr(f"transform({word_ngrams('toks', LEAK_W)}, g -> {spark_h62('g')})")
             ).alias("fph"),
         )
         .distinct()
@@ -2379,8 +2365,6 @@ _QE_RULES = ["len", "ttr", "stop", "digit"]
 def _qe_flags_sql(duck: bool) -> str:
     """Per-doc rule booleans as INTEGER 0/1 columns, one shared recipe
     rendered per engine (only the list-function spellings differ)."""
-    from kafka_to_parquet_spark.functions.text import _STOP_SQL, _TOKENS_SQL
-
     if duck:
         toks = _TOKENS_SQL
         n = f"len({toks})"
@@ -2388,11 +2372,10 @@ def _qe_flags_sql(duck: bool) -> str:
         nstop = f"len(list_filter({toks}, qe_t -> qe_t IN {_STOP_SQL}))"
         ndigit = "length(regexp_replace(text, '[^0-9]', '', 'g'))"
     else:
-        toks = "filter(split(lower(text), '\\\\s+'), qe_x -> qe_x <> '')"
+        toks = TOKENS_EXPR
         n = f"size({toks})"
         nu = f"size(array_distinct({toks}))"
-        stop_arr = "array('the', 'a', 'of', 'and', 'to')"
-        nstop = f"size(filter({toks}, qe_t -> array_contains({stop_arr}, qe_t)))"
+        nstop = f"size(filter({toks}, qe_t -> array_contains({STOP_ARRAY_EXPR}, qe_t)))"
         ndigit = "length(regexp_replace(text, '[^0-9]', ''))"
     return (
         f"SELECT doc_id,"
@@ -2454,21 +2437,8 @@ def q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     = rules, not docs, after the aggregate); everything downstream is
     a ≤5-row table."""
     d = load(spark, sf_dir, "documents")
-    f = d.select("doc_id", "text")
-    # Same recipe as _qe_flags_sql's duck branch, in Spark spellings —
-    # inlined via selectExpr so no temp view is registered.
-    toks = "filter(split(lower(text), '\\\\s+'), qe_x -> qe_x <> '')"
-    n = f"size({toks})"
-    nu = f"size(array_distinct({toks}))"
-    stop_arr = "array('the', 'a', 'of', 'and', 'to')"
-    nstop = f"size(filter({toks}, qe_t -> array_contains({stop_arr}, qe_t)))"
-    ndigit = "length(regexp_replace(text, '[^0-9]', ''))"
-    f = f.selectExpr(
-        "doc_id",
-        f"CASE WHEN {n} < {QE_MIN_TOKENS} THEN 1 ELSE 0 END AS f_len",
-        f"CASE WHEN {nu} * 10000 < {n} * {QE_TTR_BP} THEN 1 ELSE 0 END AS f_ttr",
-        f"CASE WHEN {nstop} * 10000 < {n} * {QE_STOP_BP} THEN 1 ELSE 0 END AS f_stop",
-        f"CASE WHEN {ndigit} * 10000 > length(text) * {QE_DIGIT_BP} THEN 1 ELSE 0 END AS f_digit",
+    f = spark.sql(
+        _qe_flags_sql(duck=False).replace("FROM documents", "FROM {src}"), src=d
     ).withColumn("nf", F.expr("f_len + f_ttr + f_stop + f_digit"))
     per = None
     for r in _QE_RULES:

@@ -31,12 +31,6 @@ def node_count(df: DataFrame, operator: str) -> int:
     return len(re.findall(rf"^\(\d+\) {operator}", formatted_plan(df), re.M))
 
 
-def has_pushed_filters(df: DataFrame) -> bool:
-    """True if every parquet scan received at least one pushed filter."""
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", formatted_plan(df))
-    return bool(pushed) and all(p.strip() for p in pushed)
-
-
 def scan_read_schema(df: DataFrame) -> list[str]:
     """Column sets actually read from parquet (one entry per scan) —
     the column-pruning check."""
@@ -46,21 +40,6 @@ def scan_read_schema(df: DataFrame) -> list[str]:
         if line.startswith("ReadSchema:"):
             out.append(line.removeprefix("ReadSchema:").strip())
     return out
-
-
-def uses_broadcast_join(df: DataFrame) -> bool:
-    plan = formatted_plan(df)
-    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def has_wholestage_codegen(df: DataFrame) -> bool:
-    """Whether the executed plan ran with whole-stage codegen. Executes
-    the DataFrame via collect() (AQE's pre-execution plan hides codegen
-    stages); the ``*(n)`` markers of simple-mode explain are the
-    reliable signal. WARNING: collect() pulls the result to the driver
-    — only call this on small results (tests use 6-row aggregates)."""
-    df.collect()
-    return "*(" in explain_str(df, "simple")
 
 
 def shuffle_count(df: DataFrame) -> int:

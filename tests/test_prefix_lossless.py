@@ -167,23 +167,17 @@ def test_ppjoin_shards_selection_arithmetic(spark, adversarial_dir, monkeypatch)
     """ppjoin_shards survives as the posting-budget capacity measure
     q_shard_balance certifies (since round 14 no query executes a
     shard loop — the counting prefix filter removed it): the integer
-    selection rule and both env overrides must keep working."""
+    selection rule must keep working."""
     from kafka_to_parquet_spark.llm import minhash
 
     registry.load_all()
-    monkeypatch.delenv("KTPS_PPJOIN_SHARDS", raising=False)
-    monkeypatch.delenv("KTPS_PPJOIN_TARGET_POSTINGS", raising=False)
     n_post = minhash._posting_count(spark, adversarial_dir)
     assert n_post > 0
     # tiny corpus, default budget: one budget-sized pass
     assert minhash.ppjoin_shards(spark, adversarial_dir) == 1
-    # pinned env wins over auto-selection
-    monkeypatch.setenv("KTPS_PPJOIN_SHARDS", "5")
-    assert minhash.ppjoin_shards(spark, adversarial_dir) == 5
-    monkeypatch.delenv("KTPS_PPJOIN_SHARDS", raising=False)
     # shrink the per-pass budget so THIS corpus crosses it: exact ceil
     target = max(1, n_post // 3)
-    monkeypatch.setenv("KTPS_PPJOIN_TARGET_POSTINGS", str(target))
+    monkeypatch.setattr(minhash, "PPJOIN_TARGET_POSTINGS", target)
     want = min(64, -(-n_post // target))
     assert minhash.ppjoin_shards(spark, adversarial_dir) == want
     assert want > 1

@@ -306,8 +306,8 @@ def main() -> None:
     # (The r12/r13 pinned-S=1 'shard-control' cliff cell is gone with
     # the shard loop itself: since round 14 the counting prefix filter
     # makes PPJoin candidates answer-sized and both family queries run
-    # single-pass at every decade — KTPS_PPJOIN_SHARDS no longer
-    # changes any query's execution. The historical cliff figures
+    # single-pass at every decade, and the shard-count knob is gone
+    # too. The historical cliff figures
     # (S=1 392-416 s / ~65 GB vs S=4 212.5 s at sf≈100) stay on
     # record in SCALING.md.)
 
