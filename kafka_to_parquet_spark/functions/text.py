@@ -42,8 +42,9 @@ def tokens_col(text: Column) -> Column:
 # selectExpr recipes (the SQL literal unescapes ``\\s`` to ``\s``).
 TOKENS_EXPR = "filter(split(lower(text), '\\\\s+'), tok_x -> tok_x <> '')"
 
-# DuckDB mirror of tokens_col.
-_TOKENS_SQL = "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
+# DuckDB mirror of tokens_col. The class spells Java's \s: RE2's \s
+# leaves out the vertical tab (\x0B), which Spark splits on.
+_TOKENS_SQL = "list_filter(string_split_regex(lower(text), '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '')"
 
 
 def token_postings(docs: DataFrame) -> DataFrame:

@@ -38,10 +38,13 @@ FROM events
 
 
 def with_batch_id(df: DataFrame, batch_size: int = BATCH_SIZE) -> DataFrame:
-    """S4's batch-id assignment as a reusable op (single source of
-    truth — q_count_batcher and the parquet sink both use it):
+    """S4's batch-id assignment in its window form (q_count_batcher
+    and q_str_concat use it):
     batch_id = floor((row_number per partition by offset − 1) / N).
-    Requires ``partition`` and ``offset`` columns."""
+    Requires ``partition`` and ``offset`` columns. The parquet sink
+    does not run this window: it slices each partition's sorted run in
+    one Arrow pass (sinks/parquet_batch.py), and
+    tests/test_reference_parity.py holds its batch ids equal to these."""
     w = Window.partitionBy("partition").orderBy("offset")
     return df.withColumn(
         "batch_id",

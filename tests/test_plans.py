@@ -466,3 +466,37 @@ def test_coreset_kcenter_rounds_are_persisted(run):
         "the per-round persist likely regressed"
     )
     clear_result_caches(df.sparkSession)
+
+
+def test_sink_is_one_sorted_exchange_and_one_arrow_pass(spark, sf_dir, tmp_path):
+    """The parquet sink is one hash exchange on the Kafka partition, a
+    local sort and ONE map-in-Arrow pass that slices and writes the
+    files: no batch-id window and no grouped-pandas stage. The sink
+    module does not import pandas."""
+    import ast
+    import re
+
+    from kafka_to_parquet_spark.sinks import parquet_batch
+    from kafka_to_parquet_spark.sources.kafka_analog import kafka_records
+
+    plan = plan_of(
+        parquet_batch.write_partition_batches(kafka_records(spark, sf_dir), str(tmp_path))
+    )
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 1
+    assert len(re.findall(r"hashpartitioning\(partition#\d+, \d+\)", plan)) == 1
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "Window" not in plan
+
+    tree = ast.parse(open(parquet_batch.__file__).read())
+    imported = {
+        alias.name.split(".")[0]
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Import)
+        for alias in node.names
+    } | {
+        node.module.split(".")[0]
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom) and node.module
+    }
+    assert "pandas" not in imported

@@ -9,10 +9,16 @@ import glob
 import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.sinks.parquet_batch import write_partition_batches
-from kafka_to_parquet_spark.sources.kafka_analog import BATCH_SIZE, kafka_records
+from kafka_to_parquet_spark.sources.kafka_analog import (
+    BATCH_SIZE,
+    decode_payload,
+    kafka_records,
+    with_batch_id,
+)
 
 
 def test_decode_null_payload_becomes_empty_string(run):
@@ -89,6 +95,68 @@ def test_sink_batch_size_edges(spark, sf_dir, tmp_path):
     assert len(manifest) == n_parts
     assert sum(m["n_rows"] for m in manifest) == rec.count()
     assert all(m["batch_id"] == 0 for m in manifest)
+
+
+# One file spans several 7-row Arrow batches, and the single shuffle
+# partition puts every Kafka partition in one task. The session pins
+# AQE's initial partition count, which overrides
+# spark.sql.shuffle.partitions, so it is set to 1 as well.
+_SLICING_CONF = {
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
+    "spark.sql.shuffle.partitions": "1",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "1",
+}
+
+
+@pytest.mark.parametrize("batch_size", [1, BATCH_SIZE, 10**9])
+def test_sink_slices_like_with_batch_id(spark, sf_dir, tmp_path, batch_size):
+    """The sink's slice index is the batch id ``with_batch_id``'s window
+    assigns (the independent reference, q_count_batcher's rule): the
+    same (partition, batch) layout holding the same payloads in offset
+    order, when one file spans several Arrow batches and one task
+    holds several Kafka partitions."""
+    import pyarrow.parquet as pq
+
+    rec = kafka_records(spark, sf_dir)
+    saved = {k: spark.conf.get(k, None) for k in _SLICING_CONF}
+    try:
+        for k, v in _SLICING_CONF.items():
+            spark.conf.set(k, v)
+        manifest = write_partition_batches(rec, str(tmp_path), batch_size).collect()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    decoded = rec.select("partition", "offset", decode_payload(F.col("value")).alias("b"))
+    want: dict[tuple[int, int], list[str]] = {}
+    for r in with_batch_id(decoded, batch_size).orderBy("partition", "offset").collect():
+        want.setdefault((r["partition"], r["batch_id"]), []).append(r["b"])
+
+    got = {}
+    for f in glob.glob(os.path.join(tmp_path, "*")):
+        m = re.match(r"partition_(\d+)_batch_(\d+)\.parquet$", os.path.basename(f))
+        assert m, f"unexpected file {f}"
+        got[(int(m.group(1)), int(m.group(2)))] = pq.read_table(f).column("b").to_pylist()
+    assert got == want
+    assert {(m["partition"], m["batch_id"]): m["n_rows"] for m in manifest} == {
+        k: len(v) for k, v in want.items()
+    }
+    assert sorted(m["path"] for m in manifest) == sorted(
+        glob.glob(os.path.join(tmp_path, "*.parquet"))
+    )
+
+
+def test_sink_manifest_bytes_are_file_sizes(spark, sf_dir, tmp_path):
+    """The manifest's ``bytes`` column is each published file's size on
+    disk, so it sums to the directory's parquet bytes."""
+    manifest = write_partition_batches(kafka_records(spark, sf_dir), str(tmp_path)).collect()
+    assert all(m["bytes"] == os.path.getsize(m["path"]) for m in manifest)
+    assert sum(m["bytes"] for m in manifest) == sum(
+        os.path.getsize(f) for f in glob.glob(os.path.join(tmp_path, "*.parquet"))
+    )
 
 
 def test_sink_decodes_invalid_utf8_to_empty_string(spark, tmp_path):
