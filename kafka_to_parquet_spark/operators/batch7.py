@@ -47,12 +47,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_to_parquet_spark.cache import park
 from kafka_to_parquet_spark.functions.text import (
     _POSTINGS_SQL,
     _TOKENS_SQL,
     BPE_PATTERN,
     token_postings,
     tokens_col,
+)
+from kafka_to_parquet_spark.operators.graph import (
+    TRADE_EDGES_CTES,
+    label_propagation,
+    lpa_sql,
+    trade_edges,
 )
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
@@ -77,11 +84,7 @@ KCORE_ROUNDS = 3  # fixed rounds (full decomposition iterates to a
 
 def _kcore_oracle() -> str:
     ctes = [
-        """e0 AS (
-  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-)""",
-        "edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0)",
+        TRADE_EDGES_CTES,
         "r0 AS (SELECT DISTINCT src AS node FROM edges)",
         """d0 AS (
   SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
@@ -130,10 +133,10 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     an integer comparison. No floats.
 
     Scale shape (the q_bfs_levels / pagerank loop discipline): edges
-    build once (fact-join, distinct, symmetrized) and PERSIST
-    pre-hashed on src; each round is two node-sized semi joins against
-    the (shrinking) survivor relation plus one src-keyed count, and
-    each round's survivor set is lazily localCheckpoint-ed — the next
+    are graph.trade_edges (persisted once, pre-hashed on src); each
+    round is two node-sized semi joins against the (shrinking)
+    survivor relation plus one src-keyed count, and each round's
+    survivor set is lazily localCheckpoint-ed and parked — the next
     round references it on BOTH join sides and the final round nests
     three of them, so without lineage truncation the replay is
     ~2^rounds degree aggregations (measured 52 s at sf0.1; ~2 s with
@@ -141,19 +144,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derived edges; no driver-side rows. Full decomposition runs the
     same loop to a fixed point with a convergence count per round
     (llm/components.py's loud-non-convergence pattern)."""
-    orders = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    e0 = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = e0.union(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().persist()
+    edges = trade_edges(spark, sf_dir)
     alive = edges.select(F.col("src").alias("node")).distinct()
     d0 = edges.groupBy("src").agg(F.count("*").alias("deg"))
     kq = d0.selectExpr(
@@ -173,10 +164,12 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .crossJoin(F.broadcast(kq))
         )
         if rnd < KCORE_ROUNDS - 1:
-            alive = (
+            alive = park(
                 deg.filter(F.col("degree") >= F.col("kk"))
                 .select("node")
-                .localCheckpoint(eager=False)
+                .localCheckpoint(eager=False),
+                spark,
+                sf_dir,
             )
     # round-R survivors with their round-R degree — the filter IS the
     # survivor predicate, no join-back needed.
@@ -576,33 +569,11 @@ LPA_ROUNDS = 2  # bounded prefix of the fixed-point loop — the
 
 
 def _lpa_oracle() -> str:
-    ctes = [
-        """e0 AS (
-  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-)""",
-        "edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0)",
-        "l0 AS (SELECT DISTINCT src AS node, src AS lab FROM edges)",
-    ]
-    for k in range(1, LPA_ROUNDS + 1):
-        ctes.append(f"""c{k} AS (
-  SELECT e.dst AS node, l.lab AS lab, CAST(count(*) AS BIGINT) AS c
-  FROM edges e JOIN l{k - 1} l ON l.node = e.src
-  GROUP BY e.dst, l.lab
-)""")
-        ctes.append(f"""l{k} AS (
-  SELECT node, lab FROM (
-    SELECT node, lab,
-           row_number() OVER (PARTITION BY node ORDER BY c DESC, lab) AS rn
-    FROM c{k})
-  WHERE rn = 1
-)""")
-    return (
-        "WITH " + ",\n".join(ctes) + f"""
+    return f"""WITH {TRADE_EDGES_CTES},
+{lpa_sql(LPA_ROUNDS)}
 SELECT CAST(node AS BIGINT) AS node, CAST(lab AS BIGINT) AS community
 FROM l{LPA_ROUNDS}
 """
-    )
 
 
 @query("q_graph_label_prop", oracle=_lpa_oracle())
@@ -631,39 +602,7 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     thousands of degree-bounded partitions, never a global sort. The
     symmetric construction guarantees indegree ≥ 1, so every node
     re-labels every round and no left-join back is needed."""
-    orders = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    e0 = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = (
-        e0.union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .repartition(F.col("src"))
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("lab")
-    )
-    w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("lab").asc())
-    for _ in range(LPA_ROUNDS):
-        freq = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node2"), "lab")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .select(F.col("node2").alias("node"), "lab", "c")
-        )
-        labels = (
-            freq.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("node", "lab")
-        )
+    labels = label_propagation(trade_edges(spark, sf_dir), LPA_ROUNDS)
     return labels.select(
         F.col("node").cast("long").alias("node"),
         F.col("lab").cast("long").alias("community"),

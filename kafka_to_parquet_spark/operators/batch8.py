@@ -111,6 +111,20 @@ from kafka_to_parquet_spark.functions.text import (
     tokens_col,
 )
 from kafka_to_parquet_spark.llm.corpus_stats import KMV_K as _KMV_K
+from kafka_to_parquet_spark.operators.graph import (
+    _PAIRS_CTE,
+    MIN_SUP,
+    ORIENT_CTES,
+    TRADE_LINES_SQL,
+    _part_pairs,
+    gated_pairs,
+    gated_pairs_sql,
+    label_propagation,
+    lpa_sql,
+    orient,
+    symmetric,
+    trade_lines,
+)
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -561,11 +575,13 @@ def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lesson); the window's fp-keyed exchange is the same one the
     # pair self-join needs next. persist(): the capped relation is
     # consumed THREE times (sizes + both sides of the pair join).
-    fps = (
+    fps = park(
         fps0.withColumn("fdf", F.count("*").over(Window.partitionBy("fp")))
         .filter(F.col("fdf") <= WIN_MAX_DF)
         .select("doc_id", "fp")
-        .persist()
+        .persist(),
+        spark,
+        sf_dir,
     )
     sizes = fps.groupBy("doc_id").agg(F.count("*").cast("long").alias("n_fp"))
     a, b = fps.alias("a"), fps.alias("b")
@@ -779,11 +795,9 @@ _SSSP_W_SPARK = "1 + 9 DIV n_txn"
 
 def _sssp_oracle() -> str:
     ctes = [
-        """e0 AS (
-  SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst,
-         CAST(count(*) AS BIGINT) AS n_txn
-  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-  GROUP BY 1, 2
+        f"""e0 AS (
+  SELECT src, dst, CAST(count(*) AS BIGINT) AS n_txn
+  FROM ({TRADE_LINES_SQL}) GROUP BY src, dst
 )""",
         f"""edges AS (
   SELECT src, dst, CAST({_SSSP_W} AS BIGINT) AS w FROM e0
@@ -845,27 +859,15 @@ def q_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel); Dijkstra's priority queue does not distribute."""
 
     def _build() -> DataFrame:
-        o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
         e0 = (
-            o.join(li, o.o_orderkey == li.l_orderkey)
-            .groupBy(
-                (F.col("o_custkey") * 2).alias("src"),
-                (F.col("l_suppkey") * 2 + 1).alias("dst"),
-            )
+            trade_lines(spark, sf_dir)
+            .groupBy("src", "dst")
             .agg(F.count("*").cast("long").alias("n_txn"))
         )
-        with_w = e0.select(
-            "src", "dst", F.expr(f"CAST({_SSSP_W_SPARK} AS BIGINT)").alias("w")
-        )
-        return (
-            with_w.unionByName(
-                with_w.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-                )
+        return symmetric(
+            e0.select(
+                "src", "dst", F.expr(f"CAST({_SSSP_W_SPARK} AS BIGINT)").alias("w")
             )
-            .repartition(F.col("src"))
-            .sortWithinPartitions("src")
         )
 
     edges = memo(spark, sf_dir, "trade_sym_weighted", lambda: _build().persist())
@@ -936,30 +938,10 @@ _MOD_MICRO = (
 
 
 def _modularity_oracle() -> str:
-    from kafka_to_parquet_spark.operators.graph import MIN_SUP, _PAIRS_CTE
-
-    ctes = [
-        _PAIRS_CTE,
-        f"""ce AS (SELECT pa, pb FROM pairs WHERE support >= {MIN_SUP})""",
-        "edges AS (SELECT pa AS src, pb AS dst FROM ce"
-        " UNION ALL SELECT pb AS src, pa AS dst FROM ce)",
-        "l0 AS (SELECT DISTINCT src AS node, src AS lab FROM edges)",
-    ]
-    for k in range(1, MOD_LPA_ROUNDS + 1):
-        ctes.append(f"""c{k} AS (
-  SELECT e.dst AS node, l.lab AS lab, CAST(count(*) AS BIGINT) AS c
-  FROM edges e JOIN l{k - 1} l ON l.node = e.src
-  GROUP BY e.dst, l.lab
-)""")
-        ctes.append(f"""l{k} AS (
-  SELECT node, lab FROM (
-    SELECT node, lab,
-           row_number() OVER (PARTITION BY node ORDER BY c DESC, lab) AS rn
-    FROM c{k})
-  WHERE rn = 1
-)""")
-    return (
-        "WITH " + ",\n".join(ctes) + f""",
+    return f"""WITH {_PAIRS_CTE},
+ce AS (SELECT pa, pb FROM pairs WHERE support >= {MIN_SUP}),
+edges AS (SELECT pa AS src, pb AS dst FROM ce UNION ALL SELECT pb AS src, pa AS dst FROM ce),
+{lpa_sql(MOD_LPA_ROUNDS)},
 lab AS (SELECT node, lab FROM l{MOD_LPA_ROUNDS}),
 m AS (SELECT CAST(count(*) AS BIGINT) AS m_dir FROM edges),
 within AS (
@@ -985,7 +967,6 @@ CROSS JOIN m
 ORDER BY d.n_nodes DESC, d.community
 LIMIT {MOD_TOP}
 """
-    )
 
 
 @query("q_graph_modularity", oracle=_modularity_oracle())
@@ -1018,47 +999,18 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     label relation; the within-community count is two hash joins of
     edges against node-sized labels; degree mass is map-side
     combinable. Nothing is community-quadratic."""
-    from kafka_to_parquet_spark.operators.graph import MIN_SUP, _part_pairs
-
     def _build() -> DataFrame:
-        ce = (
-            _part_pairs(spark, sf_dir)
-            .filter(F.col("support") >= MIN_SUP)
-            .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        )
-        return (
-            ce.unionByName(
-                ce.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .repartition(F.col("src"))
-            .sortWithinPartitions("src")
-        )
+        ce = _part_pairs(spark, sf_dir).filter(F.col("support") >= MIN_SUP)
+        return symmetric(ce.select(F.col("pa").alias("src"), F.col("pb").alias("dst")))
 
     edges = memo(spark, sf_dir, "copurchase_sym", lambda: _build().persist())
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("lab")
+    # the final labels feed BOTH audit joins (within + degsum) and each
+    # round feeds the next — the per-round persist keeps the lineage
+    # linear (32 shuffles -> 23 in the round-8 plan audit); each round
+    # is parked for release at the next cache boundary.
+    labels = label_propagation(
+        edges, MOD_LPA_ROUNDS, lambda df: park(df.persist(), spark, sf_dir)
     )
-    w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("lab").asc())
-    for _ in range(MOD_LPA_ROUNDS):
-        freq = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node2"), "lab")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .select(F.col("node2").alias("node"), "lab", "c")
-        )
-        # the final labels feed BOTH audit joins (within + degsum)
-        # and each round feeds the next — the per-round persist keeps
-        # the lineage linear (32 shuffles -> 23 in the round-8 plan
-        # audit); each round is parked for release at the next cache
-        # boundary.
-        labels = park(
-            freq.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("node", "lab")
-            .persist(),
-            spark,
-            sf_dir,
-        )
     m = edges.agg(F.count("*").cast("long").alias("m_dir"))
     la = labels.select(F.col("node").alias("src"), F.col("lab").alias("community"))
     lb = labels.select(F.col("node").alias("dst"), F.col("lab").alias("lab_b"))
@@ -1844,7 +1796,7 @@ def q_text_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     # level — RAKE's freq/degree count every occurrence), the phrase
     # occurrence counts, AND the distinct phrase-type scoring — three
     # consumers of one segmentation pass (the winnowing lesson).
-    phr = phr.persist()
+    phr = park(phr.persist(), spark, sf_dir)
     pw = phr.select(
         "phrase", "plen", F.explode(F.split("phrase", " ")).alias("word")
     )
@@ -1946,7 +1898,7 @@ def q_ts_anomaly_stl(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types|·|days| calendar grid — two grouped exact medians with
     broadcast joins back plus a per-type rank window over calendar
     rows; the fact is touched once, by the shared daily collapse."""
-    d = _stl_decomposition(spark, sf_dir).persist()
+    d = park(_stl_decomposition(spark, sf_dir).persist(), spark, sf_dir)
     med = d.groupBy("event_type").agg(
         F.expr(
             "CAST(2 * percentile(resid_milli, 0.5) AS BIGINT)"
@@ -2074,35 +2026,15 @@ q_bpe_apply.__doc__ = q_bpe_apply.__doc__.replace("{K}", str(BPE_LEARN_K))
 CC_TOP = 20
 
 
-# Edge gate: support STRICTLY ABOVE the 0.99 disc-quantile of pair
-# supports — the q_graph_kcore data-derived-threshold discipline. A
-# fixed literal (operators/graph.py's MIN_SUP = 2) degenerates under
-# volume growth: 10x-replicating the fixture multiplies every pair's
-# support by 10, so "support >= 2" stops filtering entirely and the
-# graph densifies 340x (3,573 -> 1,196,000 edges, measured), blowing
-# the wedge join up 35x. The quantile form is scale-free: at sf0.1
-# p99 = 1 so "> p99" IS ">= 2" (identical results at every gate SF),
-# and on the 10x corpus p99 = 10 recovers exactly the pre-replication
-# edge set.
+# Edge gate: support strictly above this disc-quantile (graph.gated_pairs).
 CC_SUP_Q = 0.99
 
 
 def _clustering_oracle() -> str:
-    from kafka_to_parquet_spark.operators.graph import _PAIRS_CTE
-
     return f"""
 WITH {_PAIRS_CTE},
-kq AS (SELECT CAST(quantile_disc(support, {CC_SUP_Q}) AS BIGINT) AS ks FROM pairs),
-e AS (SELECT pa, pb FROM pairs CROSS JOIN kq WHERE support > ks),
-deg AS (
-  SELECT n, CAST(count(*) AS BIGINT) AS d
-  FROM (SELECT pa AS n FROM e UNION ALL SELECT pb FROM e) GROUP BY n
-),
-o AS (
-  SELECT CASE WHEN (da.d, pa) < (db.d, pb) THEN pa ELSE pb END AS u,
-         CASE WHEN (da.d, pa) < (db.d, pb) THEN pb ELSE pa END AS v
-  FROM e JOIN deg da ON da.n = pa JOIN deg db ON db.n = pb
-),
+{gated_pairs_sql(CC_SUP_Q)},
+{ORIENT_CTES},
 tri AS (
   SELECT e1.u AS a, e1.v AS b, e2.v AS c
   FROM o e1 JOIN o e2 ON e1.v = e2.u
@@ -2134,13 +2066,13 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     spam-hub / community-seed triage (a high-degree node with cc ≈ 0
     is a hub bridging unrelated baskets; cc ≈ 1 is a clique member).
     Top-{N} nodes by (cc, node) among degree ≥ 2. The edge gate is
-    the 0.99-disc-quantile rule (see CC_SUP_Q: a fixed min-support
-    literal densifies 340× under volume replication and blows the
-    wedge join up 35×, measured — the q_graph_kcore lesson).
+    the 0.99-disc-quantile rule (see graph.gated_pairs: a fixed
+    min-support literal densifies 340× under volume replication and
+    blows the wedge join up 35×, measured — the q_graph_kcore lesson).
 
     Triangle attribution: each triangle found ONCE by the
     degree-ordered oriented wedge join (q_graph_triangles' O(m^1.5)
-    plan, orientation built inline over the quantile-gated edges) is
+    plan, graph.orient over the quantile-gated edges) is
     credited to ALL THREE corners via a 3-way node explode — per-node
     counts need no second triangle enumeration.
 
@@ -2152,41 +2084,11 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode is 3 rows per triangle; degree and per-node counts are
     map-side-combinable node-sized aggregates; the final join is
     node-keyed. TakeOrdered bounds the report."""
-    from kafka_to_parquet_spark.operators.graph import _part_pairs
-
-    # already persisted by the part_pairs_support feature memo
-    pp = _part_pairs(spark, sf_dir)
-    kq = pp.selectExpr(
-        f"CAST(percentile_disc({CC_SUP_Q}) WITHIN GROUP (ORDER BY support)"
-        " AS BIGINT) AS ks"
-    )
-    e = (
-        pp.crossJoin(F.broadcast(kq))
-        .filter(F.col("support") > F.col("ks"))
-        .select("pa", "pb")
-        .persist()
-    )
-    deg = (
-        e.select(F.col("pa").alias("n"))
-        .union(e.select(F.col("pb").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").cast("long").alias("d"))
-    )
-    # degree-ordered orientation (q_graph_triangles' O(sqrt(m)) bound),
-    # built inline over the quantile-gated edge set — the shared
-    # _oriented_edges cache is keyed to the certified MIN_SUP gate.
-    da = deg.select(F.col("n").alias("pa"), F.col("d").alias("da"))
-    db = deg.select(F.col("n").alias("pb"), F.col("d").alias("db"))
-    lower = F.struct(F.col("da"), F.col("pa")) < F.struct(F.col("db"), F.col("pb"))
-    o = (
-        e.join(da, "pa")
-        .join(db, "pb")
-        .select(
-            F.when(lower, F.col("pa")).otherwise(F.col("pb")).alias("u"),
-            F.when(lower, F.col("pb")).otherwise(F.col("pa")).alias("v"),
-        )
-        .persist()
-    )
+    # degree-ordered orientation (q_graph_triangles' O(sqrt(m)) bound)
+    # over the quantile-gated edge set; the shared _oriented_edges
+    # entry is keyed to the MIN_SUP gate.
+    deg, o = orient(gated_pairs(spark, sf_dir, CC_SUP_Q))
+    o = park(o.persist(), spark, sf_dir)
     e1, e2, e3 = o.alias("e1"), o.alias("e2"), o.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.v") == F.col("e2.u"))
@@ -2654,19 +2556,23 @@ def q_kmv_union_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_to_parquet_spark.llm.corpus_stats import KMV_K
 
     d = load(spark, sf_dir, "documents")
-    dw = (
+    dw = park(
         d.select("source", F.explode(tokens_col(F.col("text"))).alias("word"))
         .distinct()
-        .persist()
+        .persist(),
+        spark,
+        sf_dir,
     )
     hv = dw.select("source", F.expr(spark_h31("word")).alias("hv")).distinct()
-    kept = (
+    kept = park(
         hv.withColumn(
             "rk", F.row_number().over(Window.partitionBy("source").orderBy("hv"))
         )
         .filter(F.col("rk") <= KMV_K)
         .select("source", "hv")
-        .persist()
+        .persist(),
+        spark,
+        sf_dir,
     )
     singles = kept.groupBy("source").agg(
         F.count("*").cast("long").alias("n_kept"),
@@ -2680,11 +2586,13 @@ def q_kmv_union_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("est"),
     )
     srcs = dw.select("source").distinct()
-    prs = (
+    prs = park(
         srcs.alias("a")
         .join(srcs.alias("b"), F.col("a.source") < F.col("b.source"))
         .select(F.col("a.source").alias("sa"), F.col("b.source").alias("sb"))
-        .persist()
+        .persist(),
+        spark,
+        sf_dir,
     )
     ka = prs.join(kept, prs.sa == kept.source).select("sa", "sb", "hv")
     kb = prs.join(kept, prs.sb == kept.source).select("sa", "sb", "hv")

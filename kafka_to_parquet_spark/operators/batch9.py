@@ -62,6 +62,11 @@ from kafka_to_parquet_spark.functions.text import (
     word_ngrams,
     word_ngrams_sql,
 )
+from kafka_to_parquet_spark.operators.graph import (
+    _PAIRS_CTE,
+    gated_pairs,
+    gated_pairs_sql,
+)
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -547,17 +552,8 @@ AA_TOP = 20
 _AA_W = "CAST(floor(1000000.0 / ln(CAST(d AS DOUBLE)) + 0.5) AS BIGINT)"
 
 _AA_ORACLE_CTES = f"""
-pl AS (
-  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-),
-pp AS (
-  SELECT a.p AS pa, b.p AS pb, CAST(count(*) AS BIGINT) AS support
-  FROM pl a JOIN pl b ON a.o = b.o AND a.p < b.p
-  GROUP BY a.p, b.p
-),
-kq AS (SELECT CAST(percentile_disc({AA_SUP_Q}) WITHIN GROUP (ORDER BY support)
-              AS BIGINT) AS ks FROM pp),
-e AS (SELECT pa, pb FROM pp CROSS JOIN kq WHERE support > ks),
+{_PAIRS_CTE},
+{gated_pairs_sql(AA_SUP_Q)},
 adj AS (SELECT pa AS u, pb AS v FROM e UNION ALL SELECT pb, pa FROM e),
 deg AS (SELECT u AS n, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY u),
 dq AS (SELECT CAST(percentile_disc({AA_DEG_Q}) WITHIN GROUP (ORDER BY d)
@@ -609,19 +605,7 @@ def q_link_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     combines map-side on (n1, n2); existing edges leave via one
     anti-join; the report is a TakeOrderedAndProject. The ln is
     micro-floored once per CENTER (node-sized), never per wedge."""
-    from kafka_to_parquet_spark.operators.graph import _part_pairs
-
-    pp = _part_pairs(spark, sf_dir)
-    kq = pp.selectExpr(
-        f"CAST(percentile_disc({AA_SUP_Q}) WITHIN GROUP (ORDER BY support)"
-        " AS BIGINT) AS ks"
-    )
-    e = (
-        pp.crossJoin(F.broadcast(kq))
-        .filter(F.col("support") > F.col("ks"))
-        .select("pa", "pb")
-        .persist()
-    )
+    e = gated_pairs(spark, sf_dir, AA_SUP_Q)
     adj = e.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionByName(
         e.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
     )

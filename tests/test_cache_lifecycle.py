@@ -4,6 +4,8 @@ second sf_dir's run doesn't leak the first's persisted intermediates."""
 
 from __future__ import annotations
 
+import pytest
+
 from kafka_to_parquet_spark.cache import (
     _PARKED,
     _STORE,
@@ -184,3 +186,28 @@ def test_clear_caches_removes_scratch_datasets(spark, run, sf_dir):
     assert all(os.path.isdir(d) for d in dirs), sorted(dirs)
     clear_caches(spark, sf_dir)
     assert not [d for d in dirs if os.path.exists(d)]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_bfs_levels",
+        "q_graph_kcore",
+        "q_graph_label_prop",
+        "q_winnowing_fingerprint",
+        "q_text_rake",
+        "q_ts_anomaly_stl",
+        "q_graph_clustering_coeff",
+        "q_kmv_union_audit",
+        "q_link_adamic_adar",
+    ],
+)
+def test_clear_caches_releases_every_persist(spark, run, sf_dir, name):
+    """Every frame a query persists is held by the memo store (memo or
+    park), so clear_caches leaves Spark's CacheManager empty: a bare
+    persist() would survive it and serve a later run from the cache."""
+    clear_caches()
+    spark.catalog.clearCache()
+    run(name).collect()
+    clear_caches(spark, sf_dir)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -233,3 +233,32 @@ def test_text_primitives_have_one_definition():
         if spelled.search(line)
     ]
     assert found == []
+
+
+def test_graph_substrate_has_one_definition():
+    """operators/graph.py is the only module that spells the shared
+    graph decisions: the trade-graph node ids, the label-propagation
+    tie-break, the (degree, id) edge orientation and the
+    support-quantile gate on co-purchase pairs. Every other graph query
+    imports trade_lines / trade_edges / TRADE_*_SQL, label_propagation /
+    lpa_sql, orient / ORIENT_CTES and gated_pairs / gated_pairs_sql."""
+    import pathlib
+    import re
+
+    import kafka_to_parquet_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    spelled = re.compile(
+        r'o_custkey"?\)? \* 2'
+        r'|c DESC, lab|F\.col\("c"\)\.desc\(\), F\.col\("lab"\)'
+        r'|\(da\.d, pa\) < \(db\.d, pb\)|F\.struct\(F\.col\("da"\), F\.col\("pa"\)\)'
+        r"|quantile_disc\(support\b|ORDER BY support\)"
+    )
+    found = [
+        f"{path.relative_to(root)}:{no}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "operators" / "graph.py"
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if spelled.search(line)
+    ]
+    assert found == []

@@ -500,3 +500,34 @@ def test_sink_is_one_sorted_exchange_and_one_arrow_pass(spark, sf_dir, tmp_path)
         if isinstance(node, ast.ImportFrom) and node.module
     }
     assert "pandas" not in imported
+
+
+def _ancestors(plan: str, node: str) -> list[str]:
+    """Tree lines above each ``node`` line of a formatted plan, walking
+    up through strictly shallower indentation (the node's ancestors)."""
+    import re
+
+    lines = plan.split("\n\n", 1)[0].splitlines()
+    depth = [re.search(r"[A-Za-z]", ln).start() for ln in lines]
+    found = []
+    for i, ln in enumerate(lines):
+        if re.search(rf"\b{node} \(\d+\)", ln):
+            d = depth[i]
+            for j in range(i - 1, -1, -1):
+                if depth[j] < d:
+                    found.append(lines[j].strip())
+                    d = depth[j]
+    return found
+
+
+def test_trade_edges_union_has_no_distinct_above(spark, sf_dir):
+    """The trade graph is bipartite (customers even ids, suppliers odd),
+    so a reversed edge never equals a forward one: trade_edges unions
+    the two directions without a distinct, and no aggregate sits above
+    its Union."""
+    from kafka_to_parquet_spark.operators.graph import trade_edges
+
+    plan = plan_of(trade_edges(spark, sf_dir))
+    above = _ancestors(plan, "Union")
+    assert above, f"no Union in the trade_edges plan:\n{plan}"
+    assert not [a for a in above if "Aggregate" in a], above
