@@ -33,8 +33,13 @@ from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.functions.vectors import (
     duck_cosine,
+    duck_int_sqdist,
+    duck_micro,
     duck_sqdist,
+    int_sqdist_expr,
+    micro_expr,
     sqdist_expr,
+    unit_mean,
 )
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
@@ -152,8 +157,7 @@ WITH {duck_ivf_assign_cte(KM_MOD, KM_K)},
 exploded AS (
   SELECT cent_id,
          CAST(generate_subscripts(embedding, 1) - 1 AS INTEGER) AS dim,
-         CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1000000 + 0.5) AS BIGINT)
-           AS u
+         unnest({duck_micro('embedding')}) AS u
   FROM assign
 ),
 dimstat AS (
@@ -162,8 +166,7 @@ dimstat AS (
   FROM exploded GROUP BY cent_id, dim
 ),
 dimmean AS (
-  SELECT cent_id, dim, n,
-         CAST(floor(su * 1.0 / n + 0.5) AS BIGINT) AS mu
+  SELECT cent_id, dim, n, {unit_mean('su', 'n')} AS mu
   FROM dimstat
 )
 SELECT cent_id, CAST(max(n) AS BIGINT) AS n_assigned,
@@ -198,14 +201,7 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle argument) with the fixed-k cap.
     assign = ivf_assign(e, KM_MOD, KM_K)
     exploded = assign.select(
-        "cent_id",
-        F.posexplode("embedding").alias("dim", "val"),
-    ).select(
-        "cent_id",
-        "dim",
-        F.expr("CAST(floor(CAST(val AS DOUBLE) * 1000000 + 0.5) AS BIGINT)").alias(
-            "u"
-        ),
+        "cent_id", F.posexplode(F.expr(micro_expr("embedding"))).alias("dim", "u")
     )
     dimstat = exploded.groupBy("cent_id", "dim").agg(
         F.sum("u").alias("su"), F.count("*").alias("n")
@@ -214,7 +210,7 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cent_id",
         "dim",
         "n",
-        F.expr("CAST(floor(su * 1.0 / n + 0.5) AS BIGINT)").alias("mu"),
+        F.expr(unit_mean("su", "n")).alias("mu"),
     )
     return dimmean.groupBy("cent_id").agg(
         F.max("n").alias("n_assigned"),
@@ -446,20 +442,13 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 KM3_ROUNDS = 3
 
-# Integer micro-unit conversion of a float coordinate. Once vectors
-# AND centroids are integer arrays, squared distances are exact 63-bit
-# integers (64 dims × (4e6)² ≈ 1e15 ≪ 2^63) — no rounding fence, no
-# float comparison anywhere in the iteration.
-UNIT_MICRO = "CAST(floor(CAST({x} AS DOUBLE) * 1000000 + 0.5) AS BIGINT)"
-
 
 def _km3_oracle() -> str:
     """Chained-CTE mirror of the Spark loop (same integer ops per
     round — the graph.q_graph_pagerank oracle discipline)."""
-    u = UNIT_MICRO.format(x="x")
     ctes = [
         f"""uv AS (
-  SELECT vec_id, list_transform(embedding, x -> {u}) AS uvec FROM embeddings
+  SELECT vec_id, {duck_micro('embedding')} AS uvec FROM embeddings
 )""",
         f"""c0 AS (
   SELECT vec_id AS cent_id, uvec AS carr
@@ -470,10 +459,7 @@ def _km3_oracle() -> str:
         ctes.append(
             f"""sc{k} AS (
   SELECT uv.vec_id, uv.uvec, c.cent_id,
-         list_reduce(list_prepend(CAST(0 AS BIGINT),
-           list_transform(range(1, CAST(len(uv.uvec) AS INTEGER) + 1),
-             i -> (uv.uvec[i] - c.carr[i]) * (uv.uvec[i] - c.carr[i]))),
-           (s, v) -> s + v) AS d2
+         {duck_int_sqdist('uv.uvec', 'c.carr')} AS d2
   FROM uv CROSS JOIN c{k - 1} c
 )"""
         )
@@ -493,8 +479,7 @@ def _km3_oracle() -> str:
         )
         ctes.append(
             f"""dm{k} AS (
-  SELECT cent_id, dim,
-         CAST(floor(sum(u) * 1.0 / count(*) + 0.5) AS BIGINT) AS mu,
+  SELECT cent_id, dim, {unit_mean('sum(u)', 'count(*)')} AS mu,
          CAST(count(*) AS BIGINT) AS n
   FROM ex{k} GROUP BY cent_id, dim
 )"""
@@ -538,17 +523,13 @@ def q_kmeans3(spark: SparkSession, sf_dir: str) -> DataFrame:
     DAG of those stages; at 100 TB each round is the same two
     exchanges PageRank pays per iteration, with the centroid side
     always broadcast-sized."""
-    u_vec = F.expr("transform(embedding, x -> " + UNIT_MICRO.format(x="x") + ")")
     e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", u_vec.alias("uvec")
+        "vec_id", F.expr(micro_expr("embedding")).alias("uvec")
     )
     cents = e.filter(
         (F.col("vec_id") % KM_MOD == 0) & (F.col("vec_id") < KM_MOD * KM_K)
     ).select(F.col("vec_id").alias("cent_id"), F.col("uvec").alias("carr"))
-    d2 = (
-        "aggregate(zip_with(uvec, carr, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS BIGINT), (s, v) -> s + v)"
-    )
+    d2 = int_sqdist_expr("uvec", "carr")
     for _ in range(KM3_ROUNDS):
         scored = e.crossJoin(F.broadcast(cents)).select(
             "vec_id", "uvec", "cent_id", F.expr(d2).alias("d2")
@@ -565,9 +546,7 @@ def q_kmeans3(spark: SparkSession, sf_dir: str) -> DataFrame:
             assign.select("cent_id", F.posexplode("uvec").alias("dim", "u"))
             .groupBy("cent_id", "dim")
             .agg(
-                F.expr("CAST(floor(sum(u) * 1.0 / count(*) + 0.5) AS BIGINT)").alias(
-                    "mu"
-                ),
+                F.expr(unit_mean("sum(u)", "count(*)")).alias("mu"),
                 F.count("*").alias("n"),
             )
         )

@@ -20,22 +20,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_to_parquet_spark.functions.vectors import duck_micro, micro_expr, unit_mean
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
-
-# Integer micro-unit fence — ONE definition shared with the k-means
-# family (llm/clustering.py), so a change to the rounding rule there
-# (e.g. the documented move to milli-units) cannot silently leave this
-# module's queries and oracles on a divergent fence.
-from kafka_to_parquet_spark.llm.clustering import UNIT_MICRO as _UNIT
 
 
 @query(
     "q_pca_power",
     oracle=f"""
 WITH uv AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> {_UNIT.format(x='x')}) AS u
+  SELECT vec_id, {duck_micro('embedding')} AS u
   FROM embeddings
 ),
 d AS (
@@ -75,7 +69,7 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     u = e.select(
         "vec_id",
-        F.expr("transform(embedding, x -> " + _UNIT.format(x="x") + ")").alias("u"),
+        F.expr(micro_expr("embedding")).alias("u"),
     )
     d = u.select(
         "u",
@@ -92,7 +86,7 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_embed_dimstats",
     oracle=f"""
 WITH uv AS (
-  SELECT list_transform(embedding, x -> {_UNIT.format(x='x')}) AS u
+  SELECT {duck_micro('embedding')} AS u
   FROM embeddings
 ),
 ex AS (
@@ -101,7 +95,7 @@ ex AS (
 )
 SELECT dim,
        CAST(count(*) AS BIGINT) AS n,
-       CAST(floor(sum(ui) * 1.0 / count(*) + 0.5) AS BIGINT) AS mean_mu,
+       {unit_mean('sum(ui)', 'count(*)')} AS mean_mu,
        CAST(round((CAST(sum(ui * ui) AS DOUBLE)
                    - CAST(sum(ui) AS DOUBLE) * sum(ui) / count(*))
                   / count(*)) AS BIGINT) AS var_mu2
@@ -119,7 +113,7 @@ def q_embed_dimstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer discipline: coordinates fence once to micro-units;
     Σu and Σu² are exact BIGINTs (u² ≤ 1.6e13 at |x| ≤ 4 — int64
     holds ~500k vectors per partial; DECIMAL(38,0) partials past
-    that); the mean reuses the kmeans floor(su/n + 0.5) expression and
+    that); the mean is the shared ``unit_mean`` floor(su/n + 0.5) and
     the variance is ONE all-double expression over exact integers
     (the chi2 pattern), so both engines round the same value.
 
@@ -128,16 +122,14 @@ def q_embed_dimstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_pca_power / q_kmeans_step update-stage topology."""
     e = load(spark, sf_dir, "embeddings")
     u = e.select(
-        F.expr("transform(embedding, x -> " + _UNIT.format(x="x") + ")").alias("u")
+        F.expr(micro_expr("embedding")).alias("u")
     )
     return (
         u.select(F.posexplode("u").alias("dim", "ui"))
         .groupBy("dim")
         .agg(
             F.count("*").cast("long").alias("n"),
-            F.expr("CAST(floor(sum(ui) * 1.0 / count(*) + 0.5) AS BIGINT)").alias(
-                "mean_mu"
-            ),
+            F.expr(unit_mean("sum(ui)", "count(*)")).alias("mean_mu"),
             F.expr(
                 "CAST(round((CAST(sum(ui * ui) AS DOUBLE)"
                 " - CAST(sum(ui) AS DOUBLE) * sum(ui) / count(*))"

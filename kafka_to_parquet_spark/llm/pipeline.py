@@ -38,6 +38,14 @@ from kafka_to_parquet_spark.functions.text import (
     word_ngrams,
     word_ngrams_sql,
 )
+from kafka_to_parquet_spark.functions.vectors import (
+    amax_expr,
+    duck_amax,
+    duck_int_dot,
+    duck_quantize,
+    int_dot_expr,
+    quantize_expr,
+)
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -314,18 +322,13 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_embed_quantize",
-    oracle="""
+    oracle=f"""
 WITH s AS (
-  SELECT vec_id, label, embedding,
-         CAST(list_max(list_transform(embedding, x -> abs(x))) AS DOUBLE) AS amax
+  SELECT vec_id, label, embedding, {duck_amax('embedding')} AS amax
   FROM embeddings
 ),
 q AS (
-  SELECT vec_id, label, amax,
-         CASE WHEN amax = 0 THEN list_transform(embedding, x -> CAST(0 AS BIGINT))
-              ELSE list_transform(embedding,
-                     x -> CAST(floor(CAST(x AS DOUBLE) / (amax / 127.0) + 0.5) AS BIGINT))
-         END AS qv
+  SELECT vec_id, label, amax, {duck_quantize('embedding', 'amax', 127)} AS qv
   FROM s
 )
 SELECT vec_id, label,
@@ -347,17 +350,10 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     division, and floor — bit-identical across engines. Per-row map,
     no shuffle."""
     e = load(spark, sf_dir, "embeddings")
-    amax = F.array_max(F.transform("embedding", lambda x: F.abs(x))).cast("double")
-    s = e.select("vec_id", "label", "embedding", amax.alias("amax"))
-    qv = F.when(
-        F.col("amax") == 0,
-        F.expr("transform(embedding, x -> CAST(0 AS BIGINT))"),
-    ).otherwise(
-        F.expr(
-            "transform(embedding,"
-            " x -> CAST(floor(CAST(x AS DOUBLE) / (amax / 127.0) + 0.5) AS BIGINT))"
-        )
+    s = e.select(
+        "vec_id", "label", "embedding", F.expr(amax_expr("embedding")).alias("amax")
     )
+    qv = F.expr(quantize_expr("embedding", "amax", 127))
     q = s.select("vec_id", "label", "amax", qv.alias("qv"))
     return q.select(
         "vec_id",
@@ -369,35 +365,17 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared int8-quantization fragments (Spark SQL and DuckDB dialects of
-# the same arithmetic — float→double widening is exact, one double
-# division, floor; both engines produce identical BIGINT elements).
-_QV_SPARK = (
-    "CASE WHEN amax = 0 THEN transform(embedding, x -> CAST(0 AS BIGINT))"
-    " ELSE transform(embedding,"
-    " x -> CAST(floor(CAST(x AS DOUBLE) / (amax / 127.0) + 0.5) AS BIGINT)) END"
-)
-_QV_DUCK = (
-    "CASE WHEN amax = 0 THEN list_transform(embedding, x -> CAST(0 AS BIGINT))"
-    " ELSE list_transform(embedding,"
-    " x -> CAST(floor(CAST(x AS DOUBLE) / (amax / 127.0) + 0.5) AS BIGINT)) END"
-)
-
-
 @query(
     "q_sim_topk_int8",
     oracle=f"""
 WITH a AS (
-  SELECT vec_id, embedding,
-         CAST(list_max(list_transform(embedding, x -> abs(x))) AS DOUBLE) AS amax
+  SELECT vec_id, embedding, {duck_amax('embedding')} AS amax
   FROM embeddings
 ),
-s AS (SELECT vec_id, {_QV_DUCK} AS qv FROM a),
+s AS (SELECT vec_id, {duck_quantize('embedding', 'amax', 127)} AS qv FROM a),
 q AS (SELECT vec_id AS q_id, qv AS qq FROM s WHERE vec_id < 10),
 pairs AS (
-  SELECT q.q_id, s.vec_id AS c_id,
-         CAST(list_sum(list_transform(range(1, len(s.qv) + 1),
-                                      i -> q.qq[i] * s.qv[i])) AS BIGINT) AS score_int
+  SELECT q.q_id, s.vec_id AS c_id, {duck_int_dot('q.qq', 's.qv')} AS score_int
   FROM q CROSS JOIN s WHERE s.vec_id <> q.q_id
 )
 SELECT q_id, c_id, score_int, CAST(rn AS INTEGER) AS rank
@@ -417,23 +395,21 @@ def q_sim_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the IVF cell join of q_sim_ivf composes on top unchanged at
     scale — quantization and partitioning are orthogonal)."""
     e = load(spark, sf_dir, "embeddings")
-    amax = F.array_max(F.transform("embedding", lambda x: F.abs(x))).cast("double")
-    s = e.select("vec_id", "embedding", amax.alias("amax")).select(
-        "vec_id", F.expr(_QV_SPARK).alias("qv")
-    )
+    s = e.select(
+        "vec_id", "embedding", F.expr(amax_expr("embedding")).alias("amax")
+    ).select("vec_id", F.expr(quantize_expr("embedding", "amax", 127)).alias("qv"))
     q = s.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), F.col("qv").alias("qq")
-    )
-    dot = F.aggregate(
-        F.zip_with("qq", "qv", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
     )
     pairs = (
         F.broadcast(q)
         .crossJoin(s)
         .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", F.col("vec_id").alias("c_id"), dot.alias("score_int"))
+        .select(
+            "q_id",
+            F.col("vec_id").alias("c_id"),
+            F.expr(int_dot_expr("qq", "qv")).alias("score_int"),
+        )
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("score_int"), F.asc("c_id"))
     return (

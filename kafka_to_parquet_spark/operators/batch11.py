@@ -27,6 +27,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.functions.hashes import duck_h62, spark_h62
+from kafka_to_parquet_spark.functions.vectors import (
+    amax_expr,
+    duck_amax,
+    duck_int_dot,
+    duck_micro,
+    duck_quantize,
+    int_dot_expr,
+    micro_expr,
+    quantize_expr,
+)
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -37,26 +47,6 @@ from kafka_to_parquet_spark.tables import load
 QC_BITS = (8, 4, 2)          # symmetric int-b quantization levels
 QC_QUERIES = 10              # rank-preservation probe set: vec_id < 10
 QC_TOPK = 5                  # neighbors per query in the overlap audit
-
-# Per-vector symmetric quantizer at level qm = 2^(b-1)-1 — the exact
-# q_embed_quantize arithmetic parameterized by qm (float→double
-# widening is exact, one double division, floor half-up: bit-identical
-# in both engines).
-def _qv_spark(qm: int) -> str:
-    return (
-        "CASE WHEN amax = 0 THEN transform(embedding, x -> CAST(0 AS BIGINT))"
-        " ELSE transform(embedding,"
-        f" x -> CAST(floor(CAST(x AS DOUBLE) / (amax / {qm}.0) + 0.5) AS BIGINT)) END"
-    )
-
-
-def _qv_duck(qm: int) -> str:
-    return (
-        "CASE WHEN amax = 0 THEN list_transform(embedding, x -> CAST(0 AS BIGINT))"
-        " ELSE list_transform(embedding,"
-        f" x -> CAST(floor(CAST(x AS DOUBLE) / (amax / {qm}.0) + 0.5) AS BIGINT)) END"
-    )
-
 
 # Per-element absolute reconstruction error in micro-units: the ONE
 # mirrored double expression (q * step is a BIGINT·DOUBLE product,
@@ -79,7 +69,8 @@ def _quant_oracle() -> str:
     for b in QC_BITS:
         qm = (1 << (b - 1)) - 1
         legs.append(f"""
-SELECT {b} AS bits, vec_id, embedding, amax, {_qv_duck(qm)} AS qv, {qm} AS qm
+SELECT {b} AS bits, vec_id, embedding, amax,
+       {duck_quantize('embedding', 'amax', qm)} AS qv, {qm} AS qm
 FROM a""")
     err_u = (
         "list_transform(range(1, len(embedding) + 1), i ->"
@@ -88,10 +79,8 @@ FROM a""")
     )
     return f"""
 WITH a AS (
-  SELECT vec_id, embedding,
-         CAST(list_max(list_transform(embedding, x -> abs(x))) AS DOUBLE) AS amax,
-         list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)) AS em
+  SELECT vec_id, embedding, {duck_amax('embedding')} AS amax,
+         {duck_micro('embedding')} AS em
   FROM embeddings
 ),
 legs AS ({" UNION ALL ".join(legs)}),
@@ -111,9 +100,7 @@ exact AS (
   SELECT q_id, c_id FROM (
     SELECT q.q_id, s.vec_id AS c_id,
            row_number() OVER (PARTITION BY q.q_id ORDER BY
-             CAST(list_sum(list_transform(range(1, len(s.em) + 1),
-                                          i -> q.qem[i] * s.em[i])) AS BIGINT) DESC,
-             s.vec_id) AS rn
+             {duck_int_dot('q.qem', 's.em')} DESC, s.vec_id) AS rn
     FROM qex q CROSS JOIN a s WHERE s.vec_id <> q.q_id)
   WHERE rn <= {QC_TOPK}
 ),
@@ -122,9 +109,7 @@ quant AS (
   SELECT bits, q_id, c_id FROM (
     SELECT q.bits, q.q_id, s.vec_id AS c_id,
            row_number() OVER (PARTITION BY q.bits, q.q_id ORDER BY
-             CAST(list_sum(list_transform(range(1, len(s.qv) + 1),
-                                          i -> q.qqv[i] * s.qv[i])) AS BIGINT) DESC,
-             s.vec_id) AS rn
+             {duck_int_dot('q.qqv', 's.qv')} DESC, s.vec_id) AS rn
     FROM qq q JOIN legs s ON s.bits = q.bits AND s.vec_id <> q.q_id)
   WHERE rn <= {QC_TOPK}
 ),
@@ -168,15 +153,11 @@ def q_quant_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     per leg, never pair-quadratic. At 100 TB the probe set stays
     driver-bounded and the curve costs |bits| corpus passes."""
     e = load(spark, sf_dir, "embeddings")
-    amax = F.array_max(F.transform("embedding", lambda x: F.abs(x))).cast(
-        "double"
-    )
-    em = F.expr(
-        "transform(embedding,"
-        " x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT))"
-    )
     base = e.select(
-        "vec_id", "embedding", amax.alias("amax"), em.alias("em")
+        "vec_id",
+        "embedding",
+        F.expr(amax_expr("embedding")).alias("amax"),
+        F.expr(micro_expr("embedding")).alias("em"),
     )
 
     legs = None
@@ -187,7 +168,7 @@ def q_quant_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "embedding",
             "amax",
-            F.expr(_qv_spark(qm)).alias("qv"),
+            F.expr(quantize_expr("embedding", "amax", qm)).alias("qv"),
             F.lit(qm).alias("qm"),
         )
         legs = leg if legs is None else legs.unionByName(leg)
@@ -218,13 +199,6 @@ def q_quant_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def _dot(qcol: str, scol: str):
-        return F.aggregate(
-            F.zip_with(qcol, scol, lambda a, x: a * x),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     qex = base.filter(F.col("vec_id") < QC_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("em").alias("qem")
     )
@@ -233,7 +207,7 @@ def q_quant_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(qex)
         .crossJoin(base.select(F.col("vec_id").alias("c_id"), "em"))
         .filter(F.col("c_id") != F.col("q_id"))
-        .select("q_id", "c_id", _dot("qem", "em").alias("score"))
+        .select("q_id", "c_id", F.expr(int_dot_expr("qem", "em")).alias("score"))
         .withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= QC_TOPK)
         .select("q_id", "c_id")
@@ -250,7 +224,9 @@ def q_quant_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             legs.select("bits", F.col("vec_id").alias("c_id"), "qv"), "bits"
         )
         .filter(F.col("c_id") != F.col("q_id"))
-        .select("bits", "q_id", "c_id", _dot("qqv", "qv").alias("score"))
+        .select(
+            "bits", "q_id", "c_id", F.expr(int_dot_expr("qqv", "qv")).alias("score")
+        )
         .withColumn("rn", F.row_number().over(wb))
         .filter(F.col("rn") <= QC_TOPK)
         .select("bits", "q_id", "c_id")

@@ -62,6 +62,12 @@ from kafka_to_parquet_spark.functions.text import (
     word_ngrams,
     word_ngrams_sql,
 )
+from kafka_to_parquet_spark.functions.vectors import (
+    duck_int_sqdist,
+    duck_micro,
+    int_sqdist_expr,
+    micro_expr,
+)
 from kafka_to_parquet_spark.operators.graph import (
     _PAIRS_CTE,
     gated_pairs,
@@ -652,25 +658,19 @@ q_link_adamic_adar.__doc__ = (
 KNN_K = 5
 KNN_SEED_MOD = 5  # vec_id % 5 == 0 → labeled seed (20% of the corpus)
 
-_KNN_UNIT = "CAST(floor(CAST({x} AS DOUBLE) * 1000000 + 0.5) AS BIGINT)"
-
 
 @query(
     "q_knn_classify",
     oracle=f"""
 WITH uv AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> {_KNN_UNIT.format(x="x")}) AS uvec
+  SELECT vec_id, label, {duck_micro('embedding')} AS uvec
   FROM embeddings
 ),
 seed AS (SELECT * FROM uv WHERE vec_id % {KNN_SEED_MOD} = 0),
 qry AS (SELECT * FROM uv WHERE vec_id % {KNN_SEED_MOD} <> 0),
 sc AS (
   SELECT q.vec_id, q.label AS true_label, s.label AS seed_label, s.vec_id AS sid,
-         list_reduce(list_prepend(CAST(0 AS BIGINT),
-           list_transform(range(1, CAST(len(q.uvec) AS INTEGER) + 1),
-             i -> (q.uvec[i] - s.uvec[i]) * (q.uvec[i] - s.uvec[i]))),
-           (s2, v) -> s2 + v) AS d2
+         {duck_int_sqdist('q.uvec', 's.uvec')} AS d2
   FROM qry q CROSS JOIN seed s
 ),
 nn AS (
@@ -700,8 +700,8 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagate to the corpus, filter on the prediction), evaluated
     against the held-back true labels as an exact confusion matrix.
 
-    Determinism: embeddings become integer micro-unit vectors (the
-    q_kmeans3 discipline) so squared distances are exact BIGINTs; ties
+    Determinism: embeddings become integer micro-unit vectors
+    (``micro_expr``) so squared distances are exact BIGINTs; ties
     break on (d2, seed vec_id) for neighbors and (votes DESC, label)
     for the argmax. No float ever crosses an exchange.
 
@@ -714,9 +714,7 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     uv = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
-        F.expr(
-            "transform(embedding, x -> " + _KNN_UNIT.format(x="x") + ")"
-        ).alias("uvec"),
+        F.expr(micro_expr("embedding")).alias("uvec"),
     )
     seed = uv.filter(F.col("vec_id") % KNN_SEED_MOD == 0).select(
         F.col("vec_id").alias("sid"),
@@ -724,16 +722,12 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("uvec").alias("svec"),
     )
     qry = uv.filter(F.col("vec_id") % KNN_SEED_MOD != 0)
-    d2 = (
-        "aggregate(zip_with(uvec, svec, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS BIGINT), (s2, v) -> s2 + v)"
-    )
     sc = qry.crossJoin(F.broadcast(seed)).select(
         "vec_id",
         F.col("label").alias("true_label"),
         "seed_label",
         "sid",
-        F.expr(d2).alias("d2"),
+        F.expr(int_sqdist_expr("uvec", "svec")).alias("d2"),
     )
     wk = Window.partitionBy("vec_id").orderBy("d2", "sid")
     nn = sc.withColumn("rn", F.row_number().over(wk)).filter(
@@ -1735,36 +1729,18 @@ def q_stream_minhash_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CORESET_K = 4
 
-# Exact integer squared distance between two micro-unit BIGINT vectors
-# — the q_kmeans3 idiom on both sides (64 dims × (2e6)² ≈ 2.6e14 ≪
-# 2^63, so the fold never leaves BIGINT).
-_D_SPARK = (
-    "aggregate(zip_with({a}, {b}, (za, zb) -> (za - zb) * (za - zb)),"
-    " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-)
-
-
-def _d_duck(a: str, b: str) -> str:
-    return (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT),"
-        f" list_transform(range(1, CAST(len({a}) AS INTEGER) + 1),"
-        f" d_i -> ({a}[d_i] - {b}[d_i]) * ({a}[d_i] - {b}[d_i]))),"
-        " (d_s, d_v) -> d_s + d_v)"
-    )
-
 
 def _coreset_oracle() -> str:
     """K unrolled Gonzalez rounds: seed = min vec_id; each next center
     is the min-vec_id among the points at maximal min-distance to the
     chosen set; radius_sq after each pick."""
-    uv = ("SELECT vec_id, list_transform(embedding,"
-          " x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)) AS uvec"
-          " FROM embeddings")
+    uv = f"SELECT vec_id, {duck_micro('embedding')} AS uvec FROM embeddings"
     parts = [f"WITH uv AS ({uv}),",
              "c1 AS (SELECT vec_id AS cid, uvec AS carr FROM uv"
              " WHERE vec_id = (SELECT min(vec_id) FROM uv)),",
              f"d1 AS (SELECT uv.vec_id, uv.uvec,"
-             f" {_d_duck('uv.uvec', 'c1.carr')} AS dmin FROM uv CROSS JOIN c1),"]
+             f" {duck_int_sqdist('uv.uvec', 'c1.carr')} AS dmin"
+             " FROM uv CROSS JOIN c1),"]
     for k in range(2, CORESET_K + 1):
         p, c = k - 1, k
         parts += [
@@ -1773,7 +1749,7 @@ def _coreset_oracle() -> str:
             f"cc{c} AS (SELECT c{c}.cid, uv.uvec AS carr FROM c{c}"
             f" JOIN uv ON uv.vec_id = c{c}.cid),",
             f"d{c} AS (SELECT d{p}.vec_id, d{p}.uvec,"
-            f" least(d{p}.dmin, {_d_duck(f'd{p}.uvec', f'cc{c}.carr')}) AS dmin"
+            f" least(d{p}.dmin, {duck_int_sqdist(f'd{p}.uvec', f'cc{c}.carr')}) AS dmin"
             f" FROM d{p} CROSS JOIN cc{c}),",
         ]
     steps = ["SELECT 1 AS step, (SELECT cid FROM c1) AS center_id,"
@@ -1817,9 +1793,7 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-efficient-training step of a curation pipeline."""
     uv = load(spark, sf_dir, "embeddings").select(
         "vec_id",
-        F.expr("transform(embedding, x -> " + _KNN_UNIT.format(x="x") + ")").alias(
-            "uvec"
-        ),
+        F.expr(micro_expr("embedding")).alias("uvec"),
     )
     seed = uv.agg(F.min("vec_id").alias("cid"))
     cent = uv.join(F.broadcast(seed), uv.vec_id == F.col("cid")).select(
@@ -1831,7 +1805,7 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "uvec",
             F.col("cid").alias("cur_cid"),
-            F.expr(_D_SPARK.format(a="uvec", b="carr")).alias("dmin"),
+            F.expr(int_sqdist_expr("uvec", "carr")).alias("dmin"),
         )
         .persist(),
         spark,
@@ -1860,7 +1834,7 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "uvec",
                 F.col("cid").alias("cur_cid"),
                 F.least(
-                    F.col("dmin"), F.expr(_D_SPARK.format(a="uvec", b="carr"))
+                    F.col("dmin"), F.expr(int_sqdist_expr("uvec", "carr"))
                 ).alias("dmin"),
             )
             .persist(),

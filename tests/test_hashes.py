@@ -1,7 +1,7 @@
 """Pin the cross-engine primitives: the h31/h62 hashes — especially the
 lambda-nesting class that produced round 4's only red driver row
-(q_dedup_substring) — and functions/text.py's tokenizer and word
-n-grams.
+(q_dedup_substring) — functions/text.py's tokenizer and word n-grams,
+and functions/vectors.py's integer vector primitives.
 
 duck_h31 is a SQL FRAGMENT spliced into oracle strings, and several
 oracles splice it inside an outer DuckDB lambda (the sliding-window
@@ -13,11 +13,25 @@ hashes garbage — these tests fail loudly instead.
 from __future__ import annotations
 
 import hashlib
+import math
 
 import duckdb
 import pytest
 
 from kafka_to_parquet_spark.functions.hashes import H31_P, duck_h31, spark_h31
+from kafka_to_parquet_spark.functions.vectors import (
+    amax_expr,
+    duck_amax,
+    duck_int_dot,
+    duck_int_sqdist,
+    duck_micro,
+    duck_quantize,
+    int_dot_expr,
+    int_sqdist_expr,
+    micro_expr,
+    quantize_expr,
+    unit_mean,
+)
 
 WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
 
@@ -76,13 +90,31 @@ def test_duck_h31_inside_outer_lambda_over_windows():
     assert list(got) == expected
 
 
-@pytest.mark.parametrize("bad", ["i", "a", "c", "s", "x", "j", "k", "n", "t"])
-def test_duck_h31_fragment_reserves_no_common_lambda_names(bad):
-    """Structural guard: the fragment must not introduce lambda
-    variables an oracle author would plausibly bind in an OUTER lambda.
-    (Checks the lambda-arrow bindings only — `i` etc. may appear inside
-    string literals like the nibble alphabet.)"""
-    frag = duck_h31("x")
+COMMON_NAMES = ["i", "a", "c", "s", "x", "j", "k", "n", "t"]
+DUCK_FRAGMENTS = {
+    "duck_h31": duck_h31("x"),
+    "duck_micro": duck_micro("x"),
+    "duck_int_sqdist": duck_int_sqdist("x", "y"),
+    "duck_int_dot": duck_int_dot("x", "y"),
+    "duck_amax": duck_amax("x"),
+    "duck_quantize": duck_quantize("x", "amax", 127),
+}
+
+
+@pytest.mark.parametrize(
+    "name, bad",
+    [
+        pytest.param(name, bad, id=bad if name == "duck_h31" else f"{name}-{bad}")
+        for name in DUCK_FRAGMENTS
+        for bad in COMMON_NAMES
+    ],
+)
+def test_duck_h31_fragment_reserves_no_common_lambda_names(name, bad):
+    """Structural guard: a DuckDB fragment spliced into oracles must not
+    introduce lambda variables an oracle author would plausibly bind in
+    an OUTER lambda. (Checks the lambda-arrow bindings only — `i` etc.
+    may appear inside string literals like the nibble alphabet.)"""
+    frag = DUCK_FRAGMENTS[name]
     import re
 
     bound = set()
@@ -90,7 +122,7 @@ def test_duck_h31_fragment_reserves_no_common_lambda_names(bad):
         bound.add(m.group(1))
     for m in re.finditer(r"\((\w+),\s*(\w+)\)\s*->", frag):
         bound.update(m.groups())
-    assert bad not in bound, f"duck_h31 binds common name {bad!r}: {sorted(bound)}"
+    assert bad not in bound, f"{name} binds common name {bad!r}: {sorted(bound)}"
 
 
 def py_h62(s: str) -> int:
@@ -262,3 +294,175 @@ def test_graph_substrate_has_one_definition():
         if spelled.search(line)
     ]
     assert found == []
+
+
+def test_vector_primitives_have_one_definition():
+    """functions/vectors.py is the only module that spells the integer
+    vector decisions (functions/rounding.py keeps the scalar
+    ``int_units`` the fence is built on): the micro-unit element fence,
+    the exact integer squared distance and dot product, the int-b
+    quantizer with its max|x| scale, and the integer unit mean. Scalar
+    forms such as ``(7 * o - n) * (7 * o - n)`` do not match."""
+    import pathlib
+    import re
+
+    import kafka_to_parquet_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    spelled = re.compile(
+        r"AS DOUBLE\) \* 1000000 \+ 0\.5"
+        r"|zip_with\(.*\((\w+) - (\w+)\) \* \(\1 - \2\)"
+        r"|\[(\w+)\] - [^()]*\[\3\]\) \* \("
+        r"|list_sum\(list_transform\(range\(1, len\(|F\.zip_with\("
+        r"|\) / \(amax / "
+        r"|list_transform\(embedding, x -> abs\(x\)\)"
+        r'|F\.transform\("embedding", lambda x: F\.abs\(x\)\)'
+        r"|\* 1\.0 / (?:n|count\(\*\)) \+ 0\.5\) AS BIGINT"
+    )
+    own = {root / "functions" / "vectors.py", root / "functions" / "rounding.py"}
+    found = [
+        f"{path.relative_to(root)}:{no}"
+        for path in sorted(root.rglob("*.py"))
+        if path not in own
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if spelled.search(line)
+    ]
+    assert found == []
+
+
+def _half_unit_floats() -> list[float]:
+    """float32 values at and one float32 step beside a half micro-unit
+    k + 0.5: m / 128 for odd m is exact in float32, and m / 128 * 1e6 =
+    7812.5 * m."""
+    import numpy as np
+
+    out = []
+    for m in (1, 3, 255, 511):
+        for x in (np.float32(m / 128), np.float32(-m / 128)):
+            out += [x, np.nextafter(x, np.float32(8)), np.nextafter(x, np.float32(-8))]
+    return [float(v) for v in out]
+
+
+def _vector_rows() -> list[tuple[int, list[float], list[float]]]:
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    wide = [rng.uniform(-4, 4, 64).astype(np.float32) for _ in range(2)]
+    wide[0][:2] = (4.0, -4.0)
+    wide[1][:2] = (-4.0, 4.0)
+    half = _half_unit_floats()
+    rows = [
+        ([], []),
+        ([-1.5, -0.25, 0.0, 2.0], [0.5, -3.0, -1e-6, 1.0]),
+        ([0.1, -0.1, 0.3], [0.7, 1e-7, -2.5]),
+        (half, half[::-1]),
+        ([float(v) for v in wide[0]], [float(v) for v in wide[1]]),
+        ([0.0] * 8, [0.0] * 8),
+    ]
+
+    def f32(xs):
+        return [float(np.float32(x)) for x in xs]
+
+    return [(i, f32(a), f32(b)) for i, (a, b) in enumerate(rows)]
+
+
+QMS = (127, 7, 1)
+
+
+def _py_micro(a: list[float]) -> list[int]:
+    return [math.floor(x * 1000000.0 + 0.5) for x in a]
+
+
+def _py_quantize(a: list[float], qm: int) -> list[int]:
+    if not a:
+        return []
+    amax = max(abs(x) for x in a)
+    if amax == 0:
+        return [0] * len(a)
+    return [math.floor(x / (amax / qm) + 0.5) for x in a]
+
+
+def test_integer_vector_primitives_agree_across_engines(spark):
+    """Each integer primitive's Spark form, DuckDB form and a Python
+    reference agree: on the empty array (the integer dot and squared
+    distance are 0 in both engines), negative elements, float32 elements
+    on and beside a half micro-unit (the fence's rounding boundary), 64
+    dimensions at |x| <= 4 (the BIGINT bound) and the quantizer at
+    qm = 127, 7 and 1 with an all-zero row; unit_mean agrees with the
+    exact rational rounding (2s + n) // 2n."""
+    import pyspark.sql.functions as F
+
+    rows = _vector_rows()
+    quant = [F.expr(quantize_expr("a", "amax", qm)).alias(f"q{qm}") for qm in QMS]
+    got_spark = [
+        tuple(r)
+        for r in spark.createDataFrame(rows, "id int, a array<float>, b array<float>")
+        .select(
+            "id",
+            "a",
+            F.expr(micro_expr("a")).alias("ua"),
+            F.expr(micro_expr("b")).alias("ub"),
+            F.expr(amax_expr("a")).alias("amax"),
+        )
+        .select(
+            "id",
+            "ua",
+            "ub",
+            F.expr(int_sqdist_expr("ua", "ub")).alias("d2"),
+            F.expr(int_dot_expr("ua", "ub")).alias("dot"),
+            "amax",
+            *quant,
+        )
+        .orderBy("id")
+        .collect()
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE v (id INTEGER, a FLOAT[], b FLOAT[])")
+    con.executemany("INSERT INTO v VALUES (?, ?, ?)", rows)
+    duck_quant = ", ".join(f"{duck_quantize('a', 'amax', qm)}" for qm in QMS)
+    got_duck = [
+        tuple(list(v) if isinstance(v, list) else v for v in r)
+        for r in con.sql(
+            f"SELECT id, ua, ub, {duck_int_sqdist('ua', 'ub')},"
+            f" {duck_int_dot('ua', 'ub')}, amax, {duck_quant}"
+            f" FROM (SELECT id, a, {duck_micro('a')} AS ua, {duck_micro('b')} AS ub,"
+            f" {duck_amax('a')} AS amax FROM v) ORDER BY id"
+        ).fetchall()
+    ]
+    want = []
+    for i, a, b in rows:
+        ua, ub = _py_micro(a), _py_micro(b)
+        want.append(
+            (
+                i,
+                ua,
+                ub,
+                sum((p - q) * (p - q) for p, q in zip(ua, ub)),
+                sum(p * q for p, q in zip(ua, ub)),
+                max((abs(x) for x in a), default=None),
+                *(_py_quantize(a, qm) for qm in QMS),
+            )
+        )
+    assert got_spark == want
+    assert got_duck == want
+    assert want[0][3:5] == (0, 0), "the empty array folds to 0"
+    assert want[3][1][:3] == [7813, 7813, 7812], "x * 1e6 = 7812.5 rounds half up"
+    assert want[3][1][3:6] == [-7812, -7812, -7813], "-7812.5 rounds half up"
+    assert want[-1][-3:] == ([0] * 8,) * 3, "amax = 0 quantizes to zeros"
+
+    # unit_mean: one text for both engines, half-units rounding up.
+    sn = [(7, 2), (-7, 2), (5, 10), (-5, 10), (1, 3), (-1, 3), (-2, 3), (0, 5),
+          (10**12 + 1, 2), (-(10**12) - 1, 2), (4_000_000 * 300 + 150, 300)]
+    want = sorted((s, n, (2 * s + n) // (2 * n)) for s, n in sn)
+    got_spark = (
+        spark.createDataFrame(sn, "s bigint, n bigint")
+        .select("s", "n", F.expr(unit_mean("s", "n")))
+        .orderBy("s", "n")
+        .collect()
+    )
+    assert [tuple(r) for r in got_spark] == want
+    con.execute("CREATE TABLE sn (s BIGINT, n BIGINT)")
+    con.executemany("INSERT INTO sn VALUES (?, ?)", sn)
+    mean = f"SELECT s, n, {unit_mean('s', 'n')} FROM sn ORDER BY s, n"
+    assert con.sql(mean).fetchall() == want
+

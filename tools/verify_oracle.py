@@ -8,12 +8,18 @@ passes, the driver's hash comparison should too.
 
 Usage:
     python tools/verify_oracle.py [--sf /root/testdata/sf0.01] \
-        [--queries q_a,q_b] [--rows-only-too]
+        [--queries q_a,q_b] [--rows-only-too] [--digest PATH]
+
+``--digest PATH`` writes one line per query: the md5 of the columns
+and sorted multiset rows of the Spark result and of the oracle result.
+Diffing the files written from two checkouts at the same scale factor
+checks that a refactor kept every answer.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import os
 import sys
 import time
@@ -59,6 +65,14 @@ def df_to_multiset(pdf) -> tuple[list[str], Counter]:
     return cols, rows
 
 
+def digest(cols: list[str], rows: Counter) -> str:
+    """md5 of the column names and the sorted rows of a multiset."""
+    h = hashlib.md5(repr(cols).encode())
+    for r in sorted(repr(r) for r in rows.elements()):
+        h.update(r.encode())
+    return h.hexdigest()
+
+
 def diff_preview(a: Counter, b: Counter, n: int = 3) -> str:
     only_a = list((a - b).items())[:n]
     only_b = list((b - a).items())[:n]
@@ -79,6 +93,8 @@ def main() -> int:
     ap.add_argument("--plain-session", action="store_true",
                     help="driver-fidelity mode: bare default SparkSession "
                          "(no UTC pin, no tuned confs) like the driver's own")
+    ap.add_argument("--digest", metavar="PATH",
+                    help="write per-query md5s of the Spark and oracle rows")
     args = ap.parse_args()
 
     registry.load_all()
@@ -97,15 +113,19 @@ def main() -> int:
     )
     n_pass = n_fail = n_rows_only = 0
     failures = []
+    digests = {}
     for name in names:
         fn = registry.QUERIES[name]
         oracle = registry.ORACLE_SQL.get(name)
         t0 = time.time()
         if oracle is None and not args.rows_only_too:
             continue
+        digests[name] = "ERROR"
         try:
             sdf = fn(spark, args.sf)
             spdf = sdf.toPandas()
+            scols, srows = df_to_multiset(spdf)
+            digests[name] = f"spark={digest(scols, srows)}"
             if oracle is None:
                 n_rows_only += 1
                 print(f"ROWS-ONLY {name}: {len(spdf)} rows  [{time.time()-t0:.1f}s]")
@@ -113,8 +133,8 @@ def main() -> int:
             # Arrow keeps date32 as dates (DuckDB's .df() widens them
             # to midnight datetimes, which would false-fail vs Spark).
             opdf = con.sql(oracle).arrow().to_pandas(date_as_object=True)
-            scols, srows = df_to_multiset(spdf)
             ocols, orows = df_to_multiset(opdf)
+            digests[name] += f" oracle={digest(ocols, orows)}"
             problems = []
             if len(spdf) != len(opdf):
                 problems.append(f"rowcount spark={len(spdf)} oracle={len(opdf)}")
@@ -139,6 +159,9 @@ def main() -> int:
             print(f"ERROR     {name}  [{time.time()-t0:.1f}s]")
             traceback.print_exc(limit=8)
 
+    if args.digest:
+        with open(args.digest, "w") as f:
+            f.writelines(f"{n} {d}\n" for n, d in digests.items())
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only, "
           f"{len(names)} total @ {args.sf}")
     if failures:
