@@ -15,6 +15,12 @@ a returned plan still reads goes through :func:`park`.
 and/or one sf_dir — unpersisting persisted frames and releasing
 localCheckpoint RDD blocks. ``bench.py`` calls it between scale
 factors and at teardown.
+
+The same store keeps metadata entries (:func:`metadata`): facts about
+one input file, such as a table's inferred schema, keyed by the file's
+path and identity. Like Spark catalog metadata they hold no executor
+storage and no disk, so no clear evicts them and
+:func:`registered_entry_count` does not count them.
 """
 
 from __future__ import annotations
@@ -28,22 +34,27 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# (SparkSession, sf_dir, name) -> (value, result_level). Keyed on the
+# (SparkSession, sf_dir, name) -> (value, level). Keyed on the
 # SparkSession object itself (not id(): CPython reuses ids after GC,
 # which could hand a new session a DataFrame bound to a stopped one);
 # the strong session ref is deliberate. Values are DataFrames
 # (storage-holding), plain scalars (memoized stats), :class:`TempDataset`
 # paths (owned on-disk datasets), or tuples of these.
 #
-# ``result_level`` marks a value that IS a query's answer (e.g.
-# converged component labels) rather than a shared input feature (e.g.
-# shingle sets). Timing tools must evict these between samples or they
-# measure a dict lookup; feature entries may legitimately stay warm
-# because a production pipeline would amortize them the same way.
-_STORE: dict[tuple[SparkSession, str, str], tuple[Any, bool]] = {}
+# ``level`` True marks a value that IS a query's answer (e.g.
+# converged component labels), False a shared input feature (e.g.
+# shingle sets). Timing tools must evict results between samples or
+# they measure a dict lookup; feature entries may legitimately stay
+# warm because a production pipeline would amortize them the same way.
+# :data:`_META` marks metadata, keyed ``(spark, file path, name)``: it
+# stays for the session's life, through every clear.
+_STORE: dict[tuple[SparkSession, str, str], tuple[Any, bool | str]] = {}
 
 # Store name under which :func:`park` collects frames; no memo uses it.
 _PARKED = "<parked>"
+
+# The level of a :func:`metadata` entry.
+_META = "meta"
 
 
 class TempDataset(str):
@@ -109,9 +120,24 @@ def memo(
     :func:`clear_result_caches` (used by bench/scaling/stress timers
     for measurement honesty) evicts only these and parked frames.
     """
-    key = (spark, sf_dir, name)
+    return _get((spark, sf_dir, name), build, result)
+
+
+def metadata(
+    spark: SparkSession, path: str, name: str, build: Callable[[], Any]
+) -> Any:
+    """Return the metadata entry ``name`` of the file at ``path``,
+    running ``build()`` once per session to make it. ``name`` carries
+    the file's identity (e.g. its mtime and size), so a file rewritten
+    in place gets a new entry rather than a stale one. No clear evicts
+    metadata: like a catalog's table metadata it holds no storage, and
+    a cold pass should not pay to learn it again."""
+    return _get((spark, path, name), build, _META)
+
+
+def _get(key: tuple, build: Callable[[], Any], level: bool | str) -> Any:
     if key not in _STORE:
-        _STORE[key] = (build(), result)
+        _STORE[key] = (build(), level)
     return _STORE[key][0]
 
 
@@ -134,13 +160,15 @@ def _evict(
     spark: SparkSession | None, sf_dir: str | None, results_only: bool
 ) -> int:
     n = 0
-    for key, (_, result) in list(_STORE.items()):
+    for key, (_, level) in list(_STORE.items()):
         k_spark, k_dir, _ = key
+        if level is _META:
+            continue
         if spark is not None and k_spark is not spark:
             continue
         if sf_dir is not None and k_dir != sf_dir:
             continue
-        if results_only and not result:
+        if results_only and level is not True:
             continue
         value, _ = _STORE.pop(key)
         for v in _parts(value):
@@ -184,9 +212,11 @@ def clear_caches(
     ``spark``/``sf_dir`` scope the eviction (None = match all), so a
     pipeline moving from one dataset to the next can free the first
     dataset's executor storage without disturbing the current one.
-    Returns the number of entries evicted. Safe to call repeatedly and
-    with a stopped session (unpersist failures are swallowed — the
-    storage dies with the session anyway).
+    Metadata entries (:func:`metadata`, e.g. table schemas) stay: they
+    hold no storage, and a cold pass after the clear reads them instead
+    of inferring them again. Returns the number of entries evicted.
+    Safe to call repeatedly and with a stopped session (unpersist
+    failures are swallowed — the storage dies with the session anyway).
     """
     return _evict(spark, sf_dir, results_only=False)
 
@@ -205,5 +235,5 @@ def clear_result_caches(
 
 def registered_entry_count() -> int:
     """Live entries: one per memo entry, plus one per (session, sf_dir)
-    that has parked frames (test hook)."""
-    return len(_STORE)
+    that has parked frames; metadata is not counted (test hook)."""
+    return sum(1 for _, level in _STORE.values() if level is not _META)

@@ -9,13 +9,21 @@ the DuckDB oracle can mirror them term-for-term. Floats are upcast to
 double *before* any arithmetic so both engines fold the identical
 double sequence (left-to-right) — bit-stable across engines.
 
+Every fold, double or BIGINT, is one rule (:func:`_fold` /
+:func:`_duck_fold`): a left fold from a typed zero, so an empty array
+folds to 0 in both engines. The DuckDB form mirrors Spark's NULLs too:
+a NULL array folds to NULL, and a pair fold over arrays of unequal
+length iterates the longer one, so the missing elements are NULL and
+so is the sum, as with ``zip_with``'s NULL padding. Lambdas are
+prefixed ``v_`` / ``u_`` / ``q_`` so they nest inside an oracle's own
+``x`` / ``i`` lambdas.
+
 Integer primitives, the one spelling of each exact integer decision
-(Spark SQL ``*_expr``, DuckDB ``duck_*``; DuckDB lambdas are prefixed
-so they nest inside an oracle's own ``x`` / ``i`` lambdas):
+(Spark SQL ``*_expr``, DuckDB ``duck_*``):
 ``micro_expr`` fences each element to micro-units
 (``rounding.int_units(x, 6)``); ``int_sqdist_expr`` and
-``int_dot_expr`` fold two BIGINT arrays from 0 (0 on empty arrays in
-both engines); ``amax_expr`` and ``quantize_expr`` are the symmetric
+``int_dot_expr`` fold two BIGINT arrays and ``int_sum_expr`` one;
+``amax_expr`` and ``quantize_expr`` are the symmetric
 int-b quantizer (scale max|x| / qm as one double divide, half-up
 elements, zeros when max|x| = 0); ``unit_mean`` is the half-up integer
 mean, one text for both engines. BIGINT bound: at 64 dims and |x| <= 4
@@ -33,13 +41,50 @@ from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
 
+_SQDIFF = "({x} - {y}) * ({x} - {y})"
+_PROD = "{x} * {y}"
+_DSQDIFF = _SQDIFF.format(x="CAST({x} AS DOUBLE)", y="CAST({y} AS DOUBLE)")
+_DPROD = _PROD.format(x="CAST({x} AS DOUBLE)", y="CAST({y} AS DOUBLE)")
+_ZERO = "CAST(0 AS BIGINT)"
+_DZERO = "CAST(0.0 AS DOUBLE)"
+
+
+def _fold(terms: str, zero: str) -> str:
+    """Spark SQL: the left fold from ``zero`` of the array ``terms``."""
+    return f"aggregate({terms}, {zero}, (v_s, v_t) -> v_s + v_t)"
+
+
+def _duck_fold(terms: str, zero: str, *arrays: str) -> str:
+    """DuckDB mirror of :func:`_fold`. The prepended zero makes an
+    empty array fold to 0 (``list_sum`` would give NULL); the guard
+    keeps a NULL input NULL, which ``list_prepend`` alone would turn
+    into ``[zero]``."""
+    null = " OR ".join(f"({x}) IS NULL" for x in arrays)
+    return (
+        f"CASE WHEN {null} THEN NULL ELSE list_reduce(list_prepend({zero},"
+        f" {terms}), (v_s, v_t) -> v_s + v_t) END"
+    )
+
+
+def _pair_fold(a: str, b: str, term: str, zero: str) -> str:
+    """Spark SQL: the fold of ``term`` over the element pairs of two
+    arrays; ``zip_with`` pads the shorter one with NULL."""
+    pair = term.format(x="v_a", y="v_b")
+    return _fold(f"zip_with({a}, {b}, (v_a, v_b) -> {pair})", zero)
+
+
+def _duck_pair_fold(a: str, b: str, term: str, zero: str) -> str:
+    """DuckDB mirror of :func:`_pair_fold`: indexing past the end of
+    the shorter list gives NULL, as ``zip_with``'s padding does."""
+    pair = term.format(x=f"({a})[v_i]", y=f"({b})[v_i]")
+    n = f"CAST(greatest(len({a}), len({b})) AS INTEGER)"
+    return _duck_fold(f"list_transform(range(1, {n} + 1), v_i -> {pair})", zero, a, b)
+
+
 def dot_expr(a: str, b: str) -> str:
     """Spark SQL expression: dot product of two float-array columns in
     double precision (sequential left fold — matches the oracle)."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        " CAST(0.0 AS DOUBLE), (s, v) -> s + v)"
-    )
+    return _pair_fold(a, b, _DPROD, _DZERO)
 
 
 def norm_expr(a: str) -> str:
@@ -66,12 +111,7 @@ def np_seq_dot(prods):
 
 def duck_dot(a: str, b: str) -> str:
     """DuckDB mirror of dot_expr — same fold order, same precision."""
-    return (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-        f" list_transform(range(1, CAST(len({a}) AS INTEGER) + 1),"
-        f" i -> CAST(({a})[i] AS DOUBLE) * CAST(({b})[i] AS DOUBLE))),"
-        " (s, v) -> s + v)"
-    )
+    return _duck_pair_fold(a, b, _DPROD, _DZERO)
 
 
 def duck_cosine(a: str, b: str) -> str:
@@ -87,7 +127,7 @@ def duck_dot_literal(a: str, values: list[float]) -> str:
     inside ``list_transform``: one 64-element literal-dot fold measured
     362 ms per 500 rows vs 19 ms unrolled (19×) — with 32 signature
     bits that inflated the angular-LSH oracle to 12 s at sf0.01."""
-    s = "CAST(0.0 AS DOUBLE)"
+    s = _DZERO
     for i, v in enumerate(values, 1):
         s = f"({s} + CAST(({a})[{i}] AS DOUBLE) * CAST({v!r} AS DOUBLE))"
     return s
@@ -97,22 +137,12 @@ def sqdist_expr(a: str, b: str) -> str:
     """Spark SQL expression: squared L2 distance of two float-array
     columns in double precision (sequential left fold — matches
     :func:`duck_sqdist` term-for-term)."""
-    d = "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> {d} * {d}),"
-        " CAST(0.0 AS DOUBLE), (s, v) -> s + v)"
-    )
+    return _pair_fold(a, b, _DSQDIFF, _DZERO)
 
 
 def duck_sqdist(a: str, b: str) -> str:
     """DuckDB mirror of sqdist_expr — same fold order, same precision."""
-    d = f"(CAST(({a})[i] AS DOUBLE) - CAST(({b})[i] AS DOUBLE))"
-    return (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-        f" list_transform(range(1, CAST(len({a}) AS INTEGER) + 1),"
-        f" i -> {d} * {d})),"
-        " (s, v) -> s + v)"
-    )
+    return _duck_pair_fold(a, b, _DSQDIFF, _DZERO)
 
 
 def micro_expr(a: str) -> str:
@@ -125,45 +155,29 @@ def duck_micro(a: str) -> str:
     return "list_" + micro_expr(a)
 
 
-_SQDIFF = "({x} - {y}) * ({x} - {y})"
-_PROD = "{x} * {y}"
-
-
-def _int_fold(a: str, b: str, term: str) -> str:
-    """Spark SQL: the BIGINT left fold from 0 of ``term`` over the
-    element pairs of two BIGINT arrays."""
-    pair = term.format(x="v_a", y="v_b")
-    return (
-        f"aggregate(zip_with({a}, {b}, (v_a, v_b) -> {pair}),"
-        " CAST(0 AS BIGINT), (v_s, v_t) -> v_s + v_t)"
-    )
-
-
-def _duck_int_fold(a: str, b: str, term: str) -> str:
-    """DuckDB mirror of :func:`_int_fold`; the prepended 0 makes an
-    empty array fold to 0 (``list_sum`` would give NULL)."""
-    pair = term.format(x=f"({a})[v_i]", y=f"({b})[v_i]")
-    return (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT),"
-        f" list_transform(range(1, CAST(len({a}) AS INTEGER) + 1), v_i -> {pair})),"
-        " (v_s, v_t) -> v_s + v_t)"
-    )
-
-
 def int_sqdist_expr(a: str, b: str) -> str:
-    return _int_fold(a, b, _SQDIFF)
+    return _pair_fold(a, b, _SQDIFF, _ZERO)
 
 
 def duck_int_sqdist(a: str, b: str) -> str:
-    return _duck_int_fold(a, b, _SQDIFF)
+    return _duck_pair_fold(a, b, _SQDIFF, _ZERO)
 
 
 def int_dot_expr(a: str, b: str) -> str:
-    return _int_fold(a, b, _PROD)
+    return _pair_fold(a, b, _PROD, _ZERO)
 
 
 def duck_int_dot(a: str, b: str) -> str:
-    return _duck_int_fold(a, b, _PROD)
+    return _duck_pair_fold(a, b, _PROD, _ZERO)
+
+
+def int_sum_expr(a: str) -> str:
+    """Spark SQL: the sum of the BIGINT array ``a``, 0 when empty."""
+    return _fold(a, _ZERO)
+
+
+def duck_int_sum(a: str) -> str:
+    return _duck_fold(a, _ZERO, a)
 
 
 def amax_expr(a: str) -> str:

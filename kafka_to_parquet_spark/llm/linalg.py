@@ -20,7 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.functions.vectors import duck_micro, micro_expr, unit_mean
+from kafka_to_parquet_spark.functions.vectors import (
+    duck_int_sum,
+    duck_micro,
+    int_sum_expr,
+    micro_expr,
+    unit_mean,
+)
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -34,7 +40,7 @@ WITH uv AS (
 ),
 d AS (
   SELECT vec_id, u,
-         list_reduce(list_prepend(CAST(0 AS BIGINT), u), (s, v) -> s + v) AS dot0
+         {duck_int_sum('u')} AS dot0
   FROM uv
 ),
 ex AS (
@@ -73,7 +79,7 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = u.select(
         "u",
-        F.expr("aggregate(u, CAST(0 AS BIGINT), (s, v) -> s + v)").alias("dot0"),
+        F.expr(int_sum_expr("u")).alias("dot0"),
     )
     return (
         d.select(F.posexplode("u").alias("dim", "ui"), "dot0")

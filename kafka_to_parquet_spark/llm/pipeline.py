@@ -42,8 +42,10 @@ from kafka_to_parquet_spark.functions.vectors import (
     amax_expr,
     duck_amax,
     duck_int_dot,
+    duck_int_sum,
     duck_quantize,
     int_dot_expr,
+    int_sum_expr,
     quantize_expr,
 )
 from kafka_to_parquet_spark.registry import query
@@ -333,7 +335,7 @@ q AS (
 )
 SELECT vec_id, label,
        CAST(floor(amax * 1000000.0 + 0.5) AS BIGINT) AS amax_u,
-       CAST(list_sum(qv) AS BIGINT) AS q_sum,
+       {duck_int_sum('qv')} AS q_sum,
        CAST(list_min(qv) AS BIGINT) AS q_min,
        CAST(list_max(qv) AS BIGINT) AS q_max
 FROM q
@@ -359,7 +361,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         F.floor(F.col("amax") * 1000000.0 + F.lit(0.5)).cast("long").alias("amax_u"),
-        F.aggregate("qv", F.lit(0).cast("long"), lambda a, x: a + x).alias("q_sum"),
+        F.expr(int_sum_expr("qv")).alias("q_sum"),
         F.array_min("qv").alias("q_min"),
         F.array_max("qv").alias("q_max"),
     )

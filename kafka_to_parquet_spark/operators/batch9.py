@@ -74,7 +74,7 @@ from kafka_to_parquet_spark.operators.graph import (
     gated_pairs_sql,
 )
 from kafka_to_parquet_spark.registry import query
-from kafka_to_parquet_spark.tables import load
+from kafka_to_parquet_spark.tables import load, schema
 
 # ---------------------------------------------------------------------------
 # Curriculum assembly: quality-phased source mix
@@ -1640,12 +1640,9 @@ q_cluster_dbscan_grid.__doc__ = (
 # ---------------------------------------------------------------------------
 
 def _stream_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from kafka_to_parquet_spark.streaming.stateful import stream_source_dir
 
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    return spark.readStream.schema(schema).parquet(
+    return spark.readStream.schema(schema(spark, sf_dir, "documents")).parquet(
         stream_source_dir(spark, sf_dir, "documents")
     )
 

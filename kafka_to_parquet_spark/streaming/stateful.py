@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.cache import TempDataset, memo, temp_dataset
 from kafka_to_parquet_spark.registry import query
-from kafka_to_parquet_spark.tables import load, normalize_event_ts
+from kafka_to_parquet_spark.tables import load, normalize_event_ts, schema
 
 WATERMARK = "10 minutes"
 
@@ -47,11 +47,7 @@ def stream_source_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events table (see :func:`stream_source_dir`)."""
-    ev_path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(ev_path).schema
-    sdf = spark.readStream.schema(schema).parquet(
+    sdf = spark.readStream.schema(schema(spark, sf_dir, "events")).parquet(
         stream_source_dir(spark, sf_dir, "events")
     )
     # Same per-generation ts normalization as the batch loader — ONE

@@ -13,6 +13,7 @@ from kafka_to_parquet_spark.cache import (
     registered_entry_count,
 )
 from kafka_to_parquet_spark.llm.minhash import _hashed_shingles
+from kafka_to_parquet_spark.tables import TABLE_NAMES, load
 
 SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"
@@ -211,3 +212,66 @@ def test_clear_caches_releases_every_persist(spark, run, sf_dir, name):
     run(name).collect()
     clear_caches(spark, sf_dir)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _jobs_in_group(spark, group: str, fn) -> list[int]:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the async
+    # listener bus; drain it before counting
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", TABLE_NAMES)
+def test_load_submits_no_job_once_schema_known(spark, sf_dir, name):
+    """A table's inferred schema is session metadata: once known, a
+    load submits no schema-inference job, and clear_caches keeps it,
+    so a cold pass after a clear does not infer it again either."""
+    load(spark, sf_dir, name)
+    again = _jobs_in_group(spark, f"load_again_{name}", lambda: load(spark, sf_dir, name))
+    assert again == []
+    clear_caches()
+    assert registered_entry_count() == 0  # metadata is not counted
+    cold = _jobs_in_group(spark, f"load_cold_{name}", lambda: load(spark, sf_dir, name))
+    assert cold == []
+
+
+def test_load_infers_again_after_table_rewritten(spark, tmp_path):
+    """The schema's key carries the file's mtime and size: a table
+    rewritten in place in the same session is inferred again, so the
+    load returns the new file's columns and rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "region.parquet"
+    d = str(tmp_path)
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([0, 1], pa.int32()), "r_name": ["A", "B"]}),
+        path,
+    )
+    first = load(spark, d, "region")
+    assert first.columns == ["r_regionkey", "r_name"]
+    assert sorted(tuple(r) for r in first.collect()) == [(0, "A"), (1, "B")]
+    pq.write_table(
+        pa.table(
+            {
+                "r_id": pa.array([7, 8, 9], pa.int64()),
+                "r_label": ["x", "y", "z"],
+                "r_weight": [0.5, 1.5, 2.5],
+            }
+        ),
+        path,
+    )
+    second = load(spark, d, "region")
+    assert second.columns == ["r_id", "r_label", "r_weight"]
+    assert sorted(tuple(r) for r in second.collect()) == [
+        (7, "x", 0.5),
+        (8, "y", 1.5),
+        (9, "z", 2.5),
+    ]

@@ -21,15 +21,21 @@ import pytest
 from kafka_to_parquet_spark.functions.hashes import H31_P, duck_h31, spark_h31
 from kafka_to_parquet_spark.functions.vectors import (
     amax_expr,
+    dot_expr,
     duck_amax,
+    duck_dot,
     duck_int_dot,
     duck_int_sqdist,
+    duck_int_sum,
     duck_micro,
     duck_quantize,
+    duck_sqdist,
     int_dot_expr,
     int_sqdist_expr,
+    int_sum_expr,
     micro_expr,
     quantize_expr,
+    sqdist_expr,
     unit_mean,
 )
 
@@ -343,7 +349,7 @@ def _half_unit_floats() -> list[float]:
     return [float(v) for v in out]
 
 
-def _vector_rows() -> list[tuple[int, list[float], list[float]]]:
+def _vector_rows() -> list[tuple[int, list[float] | None, list[float] | None]]:
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -357,11 +363,17 @@ def _vector_rows() -> list[tuple[int, list[float], list[float]]]:
         ([0.1, -0.1, 0.3], [0.7, 1e-7, -2.5]),
         (half, half[::-1]),
         ([float(v) for v in wide[0]], [float(v) for v in wide[1]]),
+        (None, [1.0, -2.0]),
+        ([0.5, -0.75], None),
+        (None, None),
+        (None, []),
+        ([1.5, -2.0, 0.25], [0.5]),
+        ([], [2.0]),
         ([0.0] * 8, [0.0] * 8),
     ]
 
     def f32(xs):
-        return [float(np.float32(x)) for x in xs]
+        return None if xs is None else [float(np.float32(x)) for x in xs]
 
     return [(i, f32(a), f32(b)) for i, (a, b) in enumerate(rows)]
 
@@ -369,13 +381,21 @@ def _vector_rows() -> list[tuple[int, list[float], list[float]]]:
 QMS = (127, 7, 1)
 
 
-def _py_micro(a: list[float]) -> list[int]:
-    return [math.floor(x * 1000000.0 + 0.5) for x in a]
+def _py_micro(a: list[float] | None) -> list[int] | None:
+    return None if a is None else [math.floor(x * 1000000.0 + 0.5) for x in a]
 
 
-def _py_quantize(a: list[float], qm: int) -> list[int]:
+def _py_pair_fold(a, b, term):
+    """Spark's ``aggregate(zip_with(a, b, term), 0, +)``: NULL on a NULL
+    array, and on unequal lengths (zip_with pads with NULL)."""
+    if a is None or b is None or len(a) != len(b):
+        return None
+    return sum(term(p, q) for p, q in zip(a, b))
+
+
+def _py_quantize(a: list[float] | None, qm: int) -> list[int] | None:
     if not a:
-        return []
+        return a
     amax = max(abs(x) for x in a)
     if amax == 0:
         return [0] * len(a)
@@ -384,12 +404,14 @@ def _py_quantize(a: list[float], qm: int) -> list[int]:
 
 def test_integer_vector_primitives_agree_across_engines(spark):
     """Each integer primitive's Spark form, DuckDB form and a Python
-    reference agree: on the empty array (the integer dot and squared
-    distance are 0 in both engines), negative elements, float32 elements
-    on and beside a half micro-unit (the fence's rounding boundary), 64
-    dimensions at |x| <= 4 (the BIGINT bound) and the quantizer at
-    qm = 127, 7 and 1 with an all-zero row; unit_mean agrees with the
-    exact rational rounding (2s + n) // 2n."""
+    reference agree: on the empty array (the integer dot, squared
+    distance and sum are 0 in both engines), a NULL array and arrays of
+    unequal length (every fold is NULL, as Spark's zip_with padding
+    gives; the double dot and squared distance too), negative elements,
+    float32 elements on and beside a half micro-unit (the fence's
+    rounding boundary), 64 dimensions at |x| <= 4 (the BIGINT bound)
+    and the quantizer at qm = 127, 7 and 1 with an all-zero row;
+    unit_mean agrees with the exact rational rounding (2s + n) // 2n."""
     import pyspark.sql.functions as F
 
     rows = _vector_rows()
@@ -400,6 +422,7 @@ def test_integer_vector_primitives_agree_across_engines(spark):
         .select(
             "id",
             "a",
+            "b",
             F.expr(micro_expr("a")).alias("ua"),
             F.expr(micro_expr("b")).alias("ub"),
             F.expr(amax_expr("a")).alias("amax"),
@@ -410,6 +433,9 @@ def test_integer_vector_primitives_agree_across_engines(spark):
             "ub",
             F.expr(int_sqdist_expr("ua", "ub")).alias("d2"),
             F.expr(int_dot_expr("ua", "ub")).alias("dot"),
+            F.expr(int_sum_expr("ua")).alias("sum"),
+            F.expr(sqdist_expr("a", "b")).alias("d2f"),
+            F.expr(dot_expr("a", "b")).alias("dotf"),
             "amax",
             *quant,
         )
@@ -424,8 +450,9 @@ def test_integer_vector_primitives_agree_across_engines(spark):
         tuple(list(v) if isinstance(v, list) else v for v in r)
         for r in con.sql(
             f"SELECT id, ua, ub, {duck_int_sqdist('ua', 'ub')},"
-            f" {duck_int_dot('ua', 'ub')}, amax, {duck_quant}"
-            f" FROM (SELECT id, a, {duck_micro('a')} AS ua, {duck_micro('b')} AS ub,"
+            f" {duck_int_dot('ua', 'ub')}, {duck_int_sum('ua')},"
+            f" {duck_sqdist('a', 'b')}, {duck_dot('a', 'b')}, amax, {duck_quant}"
+            f" FROM (SELECT id, a, b, {duck_micro('a')} AS ua, {duck_micro('b')} AS ub,"
             f" {duck_amax('a')} AS amax FROM v) ORDER BY id"
         ).fetchall()
     ]
@@ -437,15 +464,20 @@ def test_integer_vector_primitives_agree_across_engines(spark):
                 i,
                 ua,
                 ub,
-                sum((p - q) * (p - q) for p, q in zip(ua, ub)),
-                sum(p * q for p, q in zip(ua, ub)),
-                max((abs(x) for x in a), default=None),
+                _py_pair_fold(ua, ub, lambda p, q: (p - q) * (p - q)),
+                _py_pair_fold(ua, ub, lambda p, q: p * q),
+                None if ua is None else sum(ua),
+                _py_pair_fold(a, b, lambda p, q: (p - q) * (p - q)),
+                _py_pair_fold(a, b, lambda p, q: p * q),
+                None if a is None else max((abs(x) for x in a), default=None),
                 *(_py_quantize(a, qm) for qm in QMS),
             )
         )
     assert got_spark == want
     assert got_duck == want
-    assert want[0][3:5] == (0, 0), "the empty array folds to 0"
+    assert want[0][3:8] == (0, 0, 0, 0, 0), "the empty array folds to 0"
+    pair_folds = [(w[3], w[4], w[6], w[7]) for w in want[5:11]]
+    assert pair_folds == [(None,) * 4] * 6, "a NULL array or unequal lengths fold to NULL"
     assert want[3][1][:3] == [7813, 7813, 7812], "x * 1e6 = 7812.5 rounds half up"
     assert want[3][1][3:6] == [-7812, -7812, -7813], "-7812.5 rounds half up"
     assert want[-1][-3:] == ([0] * 8,) * 3, "amax = 0 quantizes to zeros"
@@ -466,3 +498,44 @@ def test_integer_vector_primitives_agree_across_engines(spark):
     mean = f"SELECT s, n, {unit_mean('s', 'n')} FROM sn ORDER BY s, n"
     assert con.sql(mean).fetchall() == want
 
+
+
+def test_embed_quantize_matches_oracle_on_edge_embeddings(spark, tmp_path):
+    """q_embed_quantize and its oracle agree on an empty embedding
+    (q_sum is the zero-seeded fold, 0 in both engines; list_sum would
+    give NULL), a NULL one and an all-zero one, beside an ordinary row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_to_parquet_spark import registry
+    from kafka_to_parquet_spark.cache import clear_caches
+
+    registry.load_all()
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([0, 1, 2, 3], pa.int64()),
+                "embedding": pa.array(
+                    [[0.5, -1.0, 0.25], [], None, [0.0, 0.0]], pa.list_(pa.float32())
+                ),
+                "label": pa.array([1, 2, 3, 4], pa.int32()),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    d = str(tmp_path)
+    try:
+        got = sorted(
+            tuple(r) for r in registry.QUERIES["q_embed_quantize"](spark, d).collect()
+        )
+    finally:
+        clear_caches(spark, d)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{d}/embeddings.parquet')")
+    cols = "vec_id, label, amax_u, q_sum, q_min, q_max"
+    oracle = registry.ORACLE_SQL["q_embed_quantize"]
+    want = sorted(con.sql(f"SELECT {cols} FROM ({oracle})").fetchall())
+    assert got == want
+    assert want[1] == (1, 2, None, 0, None, None), "an empty embedding sums to 0"
+    assert want[2] == (2, 3, None, None, None, None)
+    assert want[3] == (3, 4, 0, 0, 0, 0)
