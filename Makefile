@@ -1,6 +1,6 @@
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: test verify verify-plain bench plans smoke scaling stress kafka-smoke selftest
+.PHONY: test verify verify-plain digest-diff bench plans smoke scaling stress kafka-smoke selftest
 
 test:  # the tier-1 command (ROADMAP.md), listing the 15 slowest tests
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
@@ -15,6 +15,19 @@ verify:
 
 verify-plain:  # driver-fidelity: bare SparkSession like the driver's
 	python tools/verify_oracle.py --sf $(SF_DIR) --rows-only-too --plain-session
+
+BASE ?= HEAD
+
+digest-diff:  # same answers as BASE: per-query digests at sf0.001 and sf0.01 in a git archive of BASE and here, diffed
+	@tmp=$$(mktemp -d) && git archive $(BASE) | tar -x -C $$tmp && status=0 && \
+	for sf in sf0.001 sf0.01; do \
+		echo "== $$sf"; \
+		(cd $$tmp && python tools/verify_oracle.py --sf $(dir $(SF_DIR))$$sf --rows-only-too \
+			--digest $$tmp/base-$$sf.digest 2>&1 | tail -n 2); \
+		python tools/verify_oracle.py --sf $(dir $(SF_DIR))$$sf --rows-only-too \
+			--digest $$tmp/change-$$sf.digest 2>&1 | tail -n 2; \
+		diff $$tmp/base-$$sf.digest $$tmp/change-$$sf.digest || status=1; \
+	done; rm -rf $$tmp; exit $$status
 
 bench:
 	python bench.py

@@ -26,6 +26,7 @@ from kafka_to_parquet_spark.functions.hashes import (
     duck_h62,
     spark_h31,
     spark_h62,
+    universal_coeffs,
 )
 from kafka_to_parquet_spark.functions.rounding import int_units
 from kafka_to_parquet_spark.functions.text import (
@@ -560,25 +561,14 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 CMS_D = 4  # hash rows
 CMS_W = 1024  # cells per row
 CMS_TOPK = 20
-
-
-def _cms_coeffs() -> list[tuple[int, int]]:
-    """Deterministic universal-hash coefficients per sketch row —
-    the llm/minhash.py discipline (md5-derived, inlined as literals in
-    both engines' SQL)."""
-    import hashlib
-
-    out = []
-    for j in range(CMS_D):
-        a = int.from_bytes(hashlib.md5(f"cms_a_{j}".encode()).digest()[:8], "big")
-        b = int.from_bytes(hashlib.md5(f"cms_b_{j}".encode()).digest()[:8], "big")
-        out.append((a % (H31_P - 1) + 1, b % H31_P))
-    return out
+# Universal-hash coefficients per sketch row, inlined as literals in
+# both engines' SQL.
+CMS_COEFFS = universal_coeffs("cms", CMS_D)
 
 
 def _cms_cell_exprs() -> list[str]:
     """One cell expression per sketch row — valid in BOTH dialects."""
-    return [f"(({a} * hw + {b}) % {H31_P}) % {CMS_W}" for a, b in _cms_coeffs()]
+    return [f"(({a} * hw + {b}) % {H31_P}) % {CMS_W}" for a, b in CMS_COEFFS]
 
 
 def _cms_oracle() -> str:

@@ -19,13 +19,19 @@ so cost is Σ bucket² not N².
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.cache import memo
-from kafka_to_parquet_spark.functions.hashes import duck_h62, spark_h62
+from kafka_to_parquet_spark.functions.hashes import (
+    capped_band_cte,
+    capped_banded,
+    duck_h62,
+    duck_md5_int,
+    hyperplane_signs,
+    spark_h62,
+    spark_md5_int,
+)
 from kafka_to_parquet_spark.functions.rounding import floor_round, floor_round_sql
 from kafka_to_parquet_spark.functions.text import (
     _TOKENS_SQL,
@@ -46,11 +52,11 @@ MINHASH_DIST_TAU = 0.5  # approxSimilarityJoin keeps Jaccard distance < 0.5
 
 # Hot-bucket controls — the two knobs that keep every pairwise stage in
 # this module sub-quadratic on adversarial corpora (boilerplate headers,
-# license text, mass-duplicated docs). Both are mirrored term-for-term
+# license text, mass-duplicated docs): MAX_SHINGLE_DF and
+# functions/hashes.py's MAX_BAND_BUCKET. Both are mirrored term-for-term
 # in the DuckDB oracles, so capping is part of the declared semantics,
 # not a hidden approximation.
 MAX_SHINGLE_DF = 32  # shingles in more docs than this are boilerplate: drop their postings
-MAX_BAND_BUCKET = 256  # LSH band buckets above this sub-split by the next band, then drop
 
 
 def shingled_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -211,27 +217,33 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_dedup_simhash",
-    oracle=f"""
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct({_TOKENS_SQL})) AS token FROM documents
+# DuckDB SimHash fingerprints ``fp(doc_id, sig)``, the prefix of
+# SIMHASH_PAIRS_CTE: each distinct token is hashed once to its 8-nibble
+# md5 integer ``h``, and fingerprint bit k is the majority vote of
+# bit 4*(7-k//4)+k%4 of ``h`` over the document's tokens.
+SIMHASH_FP_CTE = f"""
+toks AS (
+  SELECT doc_id, {duck_md5_int("token", 8)} AS h
+  FROM (SELECT doc_id, unnest(list_distinct({_TOKENS_SQL})) AS token FROM documents)
 ),
 bits AS (
-  SELECT doc_id, k,
-         ((strpos('0123456789abcdef', substr(md5(token), CAST(k // 4 AS INTEGER) + 1, 1)) - 1)
-          >> CAST(k % 4 AS INTEGER)) & 1 AS bit
+  SELECT doc_id, k, (h >> CAST(4 * (7 - k // 4) + k % 4 AS INTEGER)) & 1 AS bit
   FROM toks CROSS JOIN range({SIMHASH_BITS}) r(k)
 ),
-sig AS (
+votes AS (
   SELECT doc_id, k, sum(2 * bit - 1) AS s FROM bits GROUP BY doc_id, k
-)
-SELECT doc_id,
-       CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << CAST(k AS INTEGER)) ELSE 0 END)
-            AS BIGINT) AS simhash
-FROM sig
-GROUP BY doc_id
-""",
+),
+fp AS (
+  SELECT doc_id,
+         CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << CAST(k AS INTEGER)) ELSE 0 END)
+              AS BIGINT) AS sig
+  FROM votes GROUP BY doc_id
+)"""
+
+
+@query(
+    "q_dedup_simhash",
+    oracle=f"WITH {SIMHASH_FP_CTE} SELECT doc_id, sig AS simhash FROM fp",
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3b: 32-bit SimHash — per distinct token take md5's first 8 hex
@@ -247,14 +259,13 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-bit-width), i.e. partial aggregation collapses each doc to
     one row map-side.
 
-    Bit numbering matches the oracle's nibble form: bit k is bit
-    (k % 4) of hex digit (k div 4), i.e. bit (4*(7 - k div 4) + k % 4)
-    of the integer value of the first 8 md5 hex chars.
+    Bit k is bit 4*(7-k//4)+k%4 of the 8-nibble md5 integer (bit k % 4
+    of hex digit k // 4), as in the oracle's SIMHASH_FP_CTE.
     """
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.explode(F.array_distinct(tokens_col(F.col("text")))).alias("token")
-    ).select("doc_id", F.expr("CAST(conv(substring(md5(token), 1, 8), 16, 10) AS BIGINT)").alias("h"))
+    ).select("doc_id", F.expr(spark_md5_int("token", 8)).alias("h"))
     bit_sums = [
         F.sum(F.expr(f"shiftright(h, {4 * (7 - k // 4) + k % 4}) & 1")).alias(f"s{k}")
         for k in range(SIMHASH_BITS)
@@ -269,97 +280,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SIMHASH_BANDS = 4  # 4 bands × 8 bits
 SIMHASH_HAMMING_TAU = 3
-
-
-# ---------------------------------------------------------------------------
-# Capped LSH band join — shared hot-bucket control for every
-# band-bucketed similarity join (SimHash pairs, angular embedding LSH).
-#
-# A near-duplicate-heavy corpus collapses many items into one
-# (band, band_val) bucket, and pair generation is quadratic in that
-# bucket. Control: buckets above MAX_BAND_BUCKET are SUB-SPLIT by the
-# *adjacent* band's value (pairs in a hot bucket must then agree on two
-# bands — a recall trade confined to hot buckets); sub-buckets still
-# above the cap (e.g. thousands of byte-identical docs, which exact
-# dedup should have removed upstream) are dropped entirely. Both steps
-# are deterministic functions of the signature multiset and are
-# mirrored in the oracle CTE, so the cap is declared semantics.
-#
-# Scale: bucket statistics are bounded by the SIGNATURE space, not the
-# corpus — s1 ≤ n_bands·2^band_bits rows (1 024 here), s2 ≤
-# n_bands·(2^band_bits + 2^(2·band_bits)) rows (~263 k) — so both
-# stats joins broadcast at any corpus size.
-
-
-def capped_banded(
-    banded: DataFrame,
-    cap: int = MAX_BAND_BUCKET,
-    band_bits: int = 8,
-    n_bands: int = 4,
-) -> DataFrame:
-    """Apply the hot-bucket control to a banded signature DataFrame.
-
-    ``banded`` needs columns ``sig`` (long), ``b`` (band index) and
-    ``band_val`` (this band's value); id columns pass through. Returns
-    the kept rows with join key ``k``: ``band_val`` for normal buckets,
-    ``2^(2·band_bits) + band_val·2^band_bits + next_band_val`` for
-    sub-split ones (disjoint ranges, so split and unsplit buckets can
-    never collide). Callers equi-join on (b, k)."""
-    mask = (1 << band_bits) - 1
-    nb = F.expr(
-        f"shiftright(sig, CAST({band_bits} * ((b + 1) % {n_bands}) AS INT)) & {mask}"
-    )
-    banded = banded.withColumn("_nb", nb)
-    s1 = banded.groupBy("b", "band_val").agg(F.count(F.lit(1)).alias("_c1"))
-    keyed = banded.join(F.broadcast(s1), ["b", "band_val"]).withColumn(
-        "k",
-        F.when(
-            F.col("_c1") > cap,
-            F.lit(1 << (2 * band_bits))
-            + F.col("band_val") * (1 << band_bits)
-            + F.col("_nb"),
-        )
-        .otherwise(F.col("band_val"))
-        .cast("long"),
-    )
-    s2 = keyed.groupBy("b", "k").agg(F.count(F.lit(1)).alias("_c2"))
-    return (
-        keyed.join(F.broadcast(s2), ["b", "k"])
-        .filter(F.col("_c2") <= cap)
-        .drop("_nb", "_c1", "_c2", "band_val")
-    )
-
-
-def capped_band_cte(
-    id_col: str,
-    cap: int = MAX_BAND_BUCKET,
-    band_bits: int = 8,
-    n_bands: int = 4,
-) -> str:
-    """DuckDB CTE chain ``banded → s1 → keyed → s2 → kept`` mirroring
-    ``capped_banded`` exactly. Expects a prior CTE ``fp({id_col}, sig)``.
-
-    ``banded``/``kept`` are MATERIALIZED: DuckDB otherwise inlines each
-    CTE reference, so the self-joined ``kept`` re-evaluates the whole
-    upstream chain (including ``fp``'s signature computation) once per
-    reference — measured 60 s → 12 s at sf0.01 for the angular oracle
-    whose ``fp`` holds 32 dot-product folds per vector."""
-    mask = (1 << band_bits) - 1
-    return f"""banded AS MATERIALIZED (
-  SELECT {id_col}, sig, b,
-         (sig >> CAST({band_bits} * b AS INTEGER)) & {mask} AS band_val,
-         (sig >> CAST({band_bits} * ((b + 1) % {n_bands}) AS INTEGER)) & {mask} AS nb_val
-  FROM fp CROSS JOIN range({n_bands}) r(b)
-),
-s1 AS (SELECT b, band_val, count(*) AS c1 FROM banded GROUP BY b, band_val),
-keyed AS (
-  SELECT banded.*, CASE WHEN c1 > {cap}
-         THEN {1 << (2 * band_bits)} + band_val * {1 << band_bits} + nb_val
-         ELSE band_val END AS k
-  FROM banded JOIN s1 USING (b, band_val)
-),
-s2 AS (SELECT b, k, count(*) AS c2 FROM keyed GROUP BY b, k),
-kept AS MATERIALIZED (SELECT keyed.* FROM keyed JOIN s2 USING (b, k) WHERE c2 <= {cap})"""
 
 
 # Memoized+persisted SimHash fingerprints: the banded-pair query reads
@@ -380,25 +300,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # truth for the banded-LSH oracle, reused by q_dedup_simhash_pairs and
 # llm/components.py's connected-components oracle so the thresholds
 # can never drift between them.
-SIMHASH_PAIRS_CTE = f"""
-toks AS (
-  SELECT doc_id, unnest(list_distinct({_TOKENS_SQL})) AS token FROM documents
-),
-bits AS (
-  SELECT doc_id, k,
-         ((strpos('0123456789abcdef', substr(md5(token), CAST(k // 4 AS INTEGER) + 1, 1)) - 1)
-          >> CAST(k % 4 AS INTEGER)) & 1 AS bit
-  FROM toks CROSS JOIN range({SIMHASH_BITS}) r(k)
-),
-votes AS (
-  SELECT doc_id, k, sum(2 * bit - 1) AS s FROM bits GROUP BY doc_id, k
-),
-fp AS (
-  SELECT doc_id,
-         CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << CAST(k AS INTEGER)) ELSE 0 END)
-              AS BIGINT) AS sig
-  FROM votes GROUP BY doc_id
-),
+SIMHASH_PAIRS_CTE = f"""{SIMHASH_FP_CTE},
 {capped_band_cte("doc_id", band_bits=SIMHASH_BITS // SIMHASH_BANDS, n_bands=SIMHASH_BANDS)},
 pairs AS (
   SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
@@ -427,13 +329,10 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-split/capped by ``capped_banded`` (mirrored in the oracle).
     Verification cost per candidate is one xor+popcount."""
     fp = simhash_fingerprints(spark, sf_dir)
-    banded = fp.select(
-        "doc_id",
-        F.col("simhash").alias("sig"),
-        F.explode(F.sequence(F.lit(0), F.lit(SIMHASH_BANDS - 1))).alias("b"),
-    ).withColumn("band_val", F.expr("shiftright(sig, CAST(8 * b AS INT)) & 255"))
     kept = capped_banded(
-        banded, band_bits=SIMHASH_BITS // SIMHASH_BANDS, n_bands=SIMHASH_BANDS
+        fp.select("doc_id", F.col("simhash").alias("sig")),
+        band_bits=SIMHASH_BITS // SIMHASH_BANDS,
+        n_bands=SIMHASH_BANDS,
     )
     x, y = kept.alias("x"), kept.alias("y")
     hamming = F.expr("bit_count(x.sig ^ y.sig)")
@@ -539,76 +438,48 @@ ANGULAR_BANDS = 4  # 4 bands × 8 bits, mirroring the SimHash banding
 EMBED_DIM = 64
 
 
-def _hyperplane_signs(k: int, dim: int = EMBED_DIM) -> list[float]:
-    """Deterministic ±1 hyperplane components: sign (k, j) is the low
-    bit of md5(f"{k}_{j}"). Generated once in Python and inlined as
-    array literals into BOTH the Spark expression and the DuckDB
-    oracle, so the two engines fold bit-identical doubles — no
-    cross-engine RNG to reconcile."""
-    return [
-        1.0 if hashlib.md5(f"{k}_{j}".encode()).digest()[0] & 1 else -1.0
-        for j in range(dim)
-    ]
-
-
 def _angular_sig_terms() -> list[str]:
     """Spark literal sign array per signature bit (the DuckDB twin is
-    built unrolled by ``duck_dot_literal`` in ``_angular_oracle``)."""
+    built unrolled by ``duck_dot_literal`` in ``angular_kept_cte``)."""
     out = []
     for k in range(ANGULAR_BITS):
-        signs = _hyperplane_signs(k)
-        body = ",".join("1.0" if s > 0 else "-1.0" for s in signs)
+        body = ",".join("1.0" if s > 0 else "-1.0" for s in hyperplane_signs(k, EMBED_DIM))
         out.append(f"array({body})")
     return out
 
 
-def angular_fp_bits_sql() -> str:
-    """The ``fp`` CTE's signature expression — the shared single source
-    for every angular-LSH oracle (q_dedup_embedding_lsh's inline twin
-    below is certified-frozen this round; tests/test_round7.py pins the
-    two byte-identical so they cannot drift apart silently)."""
+def angular_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hot-bucket-capped banded signature index (vec_id, sig, b, k) over
+    ``angular_signatures``: the Spark twin of ``angular_kept_cte``."""
+    return capped_banded(
+        angular_signatures(spark, sf_dir),
+        band_bits=ANGULAR_BITS // ANGULAR_BANDS,
+        n_bands=ANGULAR_BANDS,
+    )
+
+
+def angular_kept_cte() -> str:
+    """DuckDB CTE chain ``fp → … → kept``: the hot-bucket-capped
+    (vec_id, b, k) band index of the angular signatures, shared by every
+    angular-LSH oracle. duck_dot_literal unrolls the ±1-hyperplane dot
+    (bit-identical to the fold; 19× faster in DuckDB, which otherwise
+    re-builds the 64-element sign literal per lambda invocation)."""
     from kafka_to_parquet_spark.functions.vectors import duck_dot_literal
 
-    return " + ".join(
-        f"(CASE WHEN {duck_dot_literal('embedding', _hyperplane_signs(k))} > 0"
+    bit_terms = " + ".join(
+        f"(CASE WHEN {duck_dot_literal('embedding', hyperplane_signs(k, EMBED_DIM))} > 0"
         f" THEN CAST({1 << k} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
         for k in range(ANGULAR_BITS)
     )
-
-
-def angular_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hot-bucket-capped banded signature index (vec_id, b, k, sig):
-    the Spark twin of ``capped_band_cte`` over ``angular_signatures``.
-    New consumers (q_decontaminate_embed) build on this helper;
-    q_dedup_embedding_lsh keeps its byte-identical inline block until
-    the certification window allows consolidating it here
-    (tests/test_round7.py asserts the outputs match)."""
-    sig = angular_signatures(spark, sf_dir)
-    band_bits = ANGULAR_BITS // ANGULAR_BANDS
-    banded = sig.select(
-        "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(ANGULAR_BANDS - 1))).alias("b"),
-        F.col("sig"),
-    ).withColumn(
-        "band_val",
-        F.expr(
-            f"shiftright(sig, CAST({band_bits} * b AS INT)) & {(1 << band_bits) - 1}"
-        ),
-    )
-    return capped_banded(banded, band_bits=band_bits, n_bands=ANGULAR_BANDS)
+    return f"""fp AS MATERIALIZED (
+  SELECT vec_id, {bit_terms} AS sig FROM embeddings
+),
+{capped_band_cte("vec_id", band_bits=ANGULAR_BITS // ANGULAR_BANDS, n_bands=ANGULAR_BANDS)}"""
 
 
 def _angular_oracle() -> str:
-    from kafka_to_parquet_spark.functions.vectors import duck_dot, duck_dot_literal
+    from kafka_to_parquet_spark.functions.vectors import duck_dot
 
-    # duck_dot_literal unrolls the ±1-hyperplane dot (bit-identical to
-    # the fold; 19× faster in DuckDB, which otherwise re-builds the
-    # 64-element sign literal per lambda invocation).
-    bit_terms = " + ".join(
-        f"(CASE WHEN {duck_dot_literal('embedding', _hyperplane_signs(k))} > 0"
-        f" THEN CAST({1 << k} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for k in range(ANGULAR_BITS)
-    )
     # cos is assembled from per-vector hoisted norms (nv CTE) exactly as
     # duck_cosine would compute it pairwise — same fold, same
     # multiplication order (sqrt(da) * sqrt(db) then divide) — so the
@@ -616,10 +487,7 @@ def _angular_oracle() -> str:
     # instead of 6 (cosine evaluated in SELECT and WHERE, 3 folds each).
     cos = f"({duck_dot('ea.embedding', 'eb.embedding')} / (ea.nrm * eb.nrm))"
     return f"""
-WITH fp AS MATERIALIZED (
-  SELECT vec_id, {bit_terms} AS sig FROM embeddings
-),
-{capped_band_cte("vec_id", band_bits=ANGULAR_BITS // ANGULAR_BANDS, n_bands=ANGULAR_BANDS)},
+WITH {angular_kept_cte()},
 cand AS MATERIALIZED (
   SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
   FROM kept x JOIN kept y
@@ -706,17 +574,7 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_to_parquet_spark.functions.vectors import dot_expr, norm_expr
 
     e = load(spark, sf_dir, "embeddings")
-    sig = angular_signatures(spark, sf_dir)
-    band_bits = ANGULAR_BITS // ANGULAR_BANDS
-    banded = sig.select(
-        "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(ANGULAR_BANDS - 1))).alias("b"),
-        F.col("sig"),
-    ).withColumn(
-        "band_val",
-        F.expr(f"shiftright(sig, CAST({band_bits} * b AS INT)) & {(1 << band_bits) - 1}"),
-    )
-    kept = capped_banded(banded, band_bits=band_bits, n_bands=ANGULAR_BANDS)
+    kept = angular_banded(spark, sf_dir)
     x, y = kept.alias("x"), kept.alias("y")
     cand = (
         x.join(

@@ -30,19 +30,19 @@ surface; this is part of the mandated LLM-pipeline extension
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.cache import memo
-from kafka_to_parquet_spark.functions.hashes import H31_P, duck_h31, spark_h31
-from kafka_to_parquet_spark.functions.rounding import floor_round, floor_round_sql
-from kafka_to_parquet_spark.llm.dedup import (
-    _SHINGLES_SQL,
+from kafka_to_parquet_spark.functions.hashes import (
+    H31_P,
     MAX_BAND_BUCKET,
-    shingled_documents,
+    duck_h31,
+    spark_h31,
+    universal_coeffs,
 )
+from kafka_to_parquet_spark.functions.rounding import floor_round, floor_round_sql
+from kafka_to_parquet_spark.llm.dedup import _SHINGLES_SQL, shingled_documents
 from kafka_to_parquet_spark.registry import query
 
 # Mersenne prime 2^31 - 1 (see functions/hashes.py): hash values stay
@@ -55,24 +55,10 @@ MH_BANDS = 8  # 8 bands × 2 rows: P(candidate) = 1-(1-s^2)^8 — ~0.90 at s=0.5
 MH_ROWS = 2
 
 
-def _mh_coeffs() -> list[tuple[int, int]]:
-    """Deterministic (a, b) per hash function, 1 ≤ a < P, 0 ≤ b < P —
-    derived from md5 of the function index (the _hyperplane_signs
-    discipline: generated once in Python, inlined as literals into BOTH
-    engines' SQL, so there is no cross-engine RNG to reconcile)."""
-    out = []
-    for i in range(MH_NUM_HASHES):
-        a = int.from_bytes(hashlib.md5(f"mh_a_{i}".encode()).digest()[:8], "big")
-        b = int.from_bytes(hashlib.md5(f"mh_b_{i}".encode()).digest()[:8], "big")
-        out.append((a % (MH_P - 1) + 1, b % MH_P))
-    return out
-
-
-# The base hash every linear hash function is applied to is
-# spark_h31/duck_h31 from functions/hashes.py (hoisted there in round
-# 5 — it is shared with llm/dedup.py and llm/corpus_stats.py, and
-# importing it FROM here forced decoration-time lazy imports because
-# this module imports dedup at its top).
+# Deterministic (a, b) per hash function, inlined as literals into both
+# engines' SQL. The base hash each linear hash applies to is the h31 of
+# the shingle.
+MH_COEFFS = universal_coeffs("mh", MH_NUM_HASHES)
 
 _SPARK_H = spark_h31("s")
 _DUCK_H = duck_h31("s")
@@ -88,9 +74,8 @@ def _minhash_kept_cte() -> str:
     key) table every banded-LSH oracle joins on — plus the shingle
     table ``sh`` it is defined over. Single source of truth for the
     q_dedup_minhash / q_lsh_recall / q_dedup_minhash_incr oracles."""
-    coeffs = _mh_coeffs()
     mins = ",\n         ".join(
-        f"min(({a} * hm + {b}) % {MH_P}) AS m{i}" for i, (a, b) in enumerate(coeffs)
+        f"min(({a} * hm + {b}) % {MH_P}) AS m{i}" for i, (a, b) in enumerate(MH_COEFFS)
     )
     keys = ", ".join(
         f"m{2 * j} * CAST({MH_P} AS BIGINT) + m{2 * j + 1}" for j in range(MH_BANDS)
@@ -145,7 +130,7 @@ def minhash_signatures(df: DataFrame, *keep: str) -> DataFrame:
         *[
             F.expr(f"array_min(transform(hs, x -> ({a} * x + {b}) % {MH_P}))")
             .alias(f"m{i}")
-            for i, (a, b) in enumerate(_mh_coeffs())
+            for i, (a, b) in enumerate(MH_COEFFS)
         ],
     )
 
@@ -879,7 +864,7 @@ def q_minhash_est_err(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Engine stability: agreement counts, both basis-point ratios, the
     decile bucket, and the mean are pure BIGINT arithmetic over the
-    shared deterministic hash family (_mh_coeffs literals in both
+    shared deterministic hash family (MH_COEFFS literals in both
     engines); no float exists in the plan.
 
     Shape: reuses the declared candidate pairs and the per-row

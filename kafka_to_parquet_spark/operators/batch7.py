@@ -828,21 +828,11 @@ DECON_EVAL_MOD = 10  # eval holdout = vec_id % 10 == 0 (the fixture's
 
 def _decon_embed_oracle() -> str:
     from kafka_to_parquet_spark.functions.vectors import duck_dot
-    from kafka_to_parquet_spark.llm.dedup import (
-        ANGULAR_BITS,
-        ANGULAR_BANDS,
-        EMBED_NEAR_TAU,
-        angular_fp_bits_sql,
-        capped_band_cte,
-    )
+    from kafka_to_parquet_spark.llm.dedup import EMBED_NEAR_TAU, angular_kept_cte
 
-    bit_terms = angular_fp_bits_sql()
     cos = f"({duck_dot('ea.embedding', 'eb.embedding')} / (ea.nrm * eb.nrm))"
     return f"""
-WITH fp AS MATERIALIZED (
-  SELECT vec_id, {bit_terms} AS sig FROM embeddings
-),
-{capped_band_cte("vec_id", band_bits=ANGULAR_BITS // ANGULAR_BANDS, n_bands=ANGULAR_BANDS)},
+WITH {angular_kept_cte()},
 cand AS MATERIALIZED (
   SELECT DISTINCT x.vec_id AS eval_id, y.vec_id AS train_id
   FROM kept x JOIN kept y ON x.b = y.b AND x.k = y.k

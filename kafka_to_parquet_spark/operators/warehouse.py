@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.cache import TempDataset, memo, temp_dataset
+from kafka_to_parquet_spark.functions.hashes import H31_P, duck_md5_int, spark_md5_int
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -306,8 +307,6 @@ def q_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Order-insensitive table checksum (cross-replica verification)
 # ---------------------------------------------------------------------------
 
-CK_P = 2_147_483_647  # Mersenne prime — final reduction of the row-hash sum
-
 # Canonical row serialization: keys + flags as-is, money fenced to
 # integer cents, quantity to integer units — every piece renders
 # identically in both engines (no raw doubles in the string).
@@ -330,17 +329,12 @@ _CK_ROW_DUCK = (
     "q_table_checksum",
     oracle=f"""
 WITH h AS (
-  SELECT l_returnflag,
-         list_reduce(list_prepend(CAST(0 AS BIGINT),
-           list_transform(range(1, 16),
-             i -> CAST(strpos('0123456789abcdef',
-                              substr(md5({_CK_ROW_DUCK}), i, 1)) - 1 AS BIGINT))),
-           (a, c) -> a * 16 + c) AS rh
+  SELECT l_returnflag, {duck_md5_int(_CK_ROW_DUCK, 15)} AS rh
   FROM lineitem
 )
 SELECT l_returnflag,
        CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(rh) % {CK_P} AS BIGINT) AS checksum
+       CAST(sum(rh) % {H31_P} AS BIGINT) AS checksum
 FROM h GROUP BY l_returnflag
 """,
 )
@@ -363,15 +357,13 @@ def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-cardinality column yields per-group sub-checksums, so a
     mismatch localizes without a second pass."""
     li = load(spark, sf_dir, "lineitem")
-    rh = F.expr(
-        f"CAST(conv(substring(md5({_CK_ROW}), 1, 15), 16, 10) AS DECIMAL(38,0))"
-    )
+    rh = F.expr(spark_md5_int(_CK_ROW, 15)).cast("decimal(38,0)")
     return (
         li.select("l_returnflag", rh.alias("rh"))
         .groupBy("l_returnflag")
         .agg(
             F.count("*").alias("n_rows"),
-            (F.sum("rh") % CK_P).cast("long").alias("checksum"),
+            (F.sum("rh") % H31_P).cast("long").alias("checksum"),
         )
     )
 

@@ -1,13 +1,14 @@
-"""Pin the cross-engine primitives: the h31/h62 hashes — especially the
-lambda-nesting class that produced round 4's only red driver row
-(q_dedup_substring) — functions/text.py's tokenizer and word n-grams,
-and functions/vectors.py's integer vector primitives.
+"""Pin the cross-engine primitives: functions/hashes.py's md5-prefix
+integer, h31/h62 hashes and SimHash bits — especially the
+lambda-nesting class that once made q_dedup_substring's oracle hash
+chimera windows — functions/text.py's tokenizer and word n-grams, and
+functions/vectors.py's integer vector primitives.
 
-duck_h31 is a SQL FRAGMENT spliced into oracle strings, and several
+duck_md5_int is a SQL FRAGMENT spliced into oracle strings, and several
 oracles splice it inside an outer DuckDB lambda (the sliding-window
-oracle binds ``i``). If duck_h31's own lambda variables ever collide
-with an outer binding again, DuckDB silently shadows the outer one and
-hashes garbage — these tests fail loudly instead.
+oracle binds ``i``). If its own lambda variables ever collide with an
+outer binding, DuckDB silently shadows the outer one and hashes
+garbage — these tests fail loudly instead.
 """
 
 from __future__ import annotations
@@ -18,7 +19,13 @@ import math
 import duckdb
 import pytest
 
-from kafka_to_parquet_spark.functions.hashes import H31_P, duck_h31, spark_h31
+from kafka_to_parquet_spark.functions.hashes import (
+    H31_P,
+    duck_h31,
+    duck_md5_int,
+    spark_h31,
+    spark_md5_int,
+)
 from kafka_to_parquet_spark.functions.vectors import (
     amax_expr,
     dot_expr,
@@ -42,8 +49,15 @@ from kafka_to_parquet_spark.functions.vectors import (
 WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
 
 
+def py_md5_int(s: str, n: int) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:n], 16)
+
+
 def py_h31(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16) % H31_P
+    return py_md5_int(s, 8) % H31_P
+
+
+NIBBLES = (8, 15)
 
 
 def test_duck_h31_matches_python_reference():
@@ -51,15 +65,58 @@ def test_duck_h31_matches_python_reference():
     for w in WORDS:
         got = con.sql(f"SELECT {duck_h31(f'{w!r}')} AS h").fetchone()[0]
         assert got == py_h31(w), w
+        for n in NIBBLES:
+            got = con.sql(f"SELECT {duck_md5_int(f'{w!r}', n)} AS h").fetchone()[0]
+            assert got == py_md5_int(w, n), (w, n)
 
 
 def test_spark_h31_matches_python_reference(spark):
     df = spark.createDataFrame([(w,) for w in WORDS], ["s"])
     import pyspark.sql.functions as F
 
-    rows = df.select("s", F.expr(spark_h31("s")).alias("h")).collect()
+    ints = [F.expr(spark_md5_int("s", n)).alias(f"m{n}") for n in NIBBLES]
+    rows = df.select("s", F.expr(spark_h31("s")).alias("h"), *ints).collect()
     for r in rows:
         assert r.h == py_h31(r.s), r.s
+        for n in NIBBLES:
+            assert r[f"m{n}"] == py_md5_int(r.s, n), (r.s, n)
+
+
+def test_simhash_bits_agree_across_engines(spark, tmp_path):
+    """Spark's SimHash bit k (q_dedup_simhash) equals the DuckDB form's
+    bit k (SIMHASH_FP_CTE) and bit k % 4 of md5 hex digit k // 4, on
+    one-word documents, whose fingerprint is the word's own bits."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_to_parquet_spark.llm.dedup import (
+        SIMHASH_BITS,
+        SIMHASH_FP_CTE,
+        q_dedup_simhash,
+    )
+
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(len(WORDS)), pa.int64()), "text": WORDS}),
+        tmp_path / "documents.parquet",
+    )
+    got_spark = {
+        (r.doc_id, k): (r.simhash >> k) & 1
+        for r in q_dedup_simhash(spark, str(tmp_path)).collect()
+        for k in range(SIMHASH_BITS)
+    }
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    bits = con.sql(f"WITH {SIMHASH_FP_CTE} SELECT doc_id, k, bit FROM bits").fetchall()
+    got_duck = {(d, k): bit for d, k, bit in bits}
+    want = {
+        (d, k): (int(hashlib.md5(w.encode()).hexdigest()[k // 4], 16) >> (k % 4)) & 1
+        for d, w in enumerate(WORDS)
+        for k in range(SIMHASH_BITS)
+    }
+    assert got_spark == want
+    assert got_duck == want
 
 
 def test_duck_h31_inside_outer_i_lambda():
@@ -70,11 +127,15 @@ def test_duck_h31_inside_outer_i_lambda():
     per-element hash."""
     con = duckdb.connect()
     arr = ", ".join(f"'{w}'" for w in WORDS)
-    got = con.sql(
-        f"SELECT list_transform(range(1, {len(WORDS)} + 1),"
-        f" i -> {duck_h31(f'(([{arr}])[i])')}) AS hs"
-    ).fetchone()[0]
-    assert list(got) == [py_h31(w) for w in WORDS]
+    for frag, ref in [
+        (duck_h31, py_h31),
+        (lambda c: duck_md5_int(c, 15), lambda w: py_md5_int(w, 15)),
+    ]:
+        got = con.sql(
+            f"SELECT list_transform(range(1, {len(WORDS)} + 1),"
+            f" i -> {frag(f'(([{arr}])[i])')}) AS hs"
+        ).fetchone()[0]
+        assert list(got) == [ref(w) for w in WORDS]
 
 
 def test_duck_h31_inside_outer_lambda_over_windows():
@@ -99,6 +160,7 @@ def test_duck_h31_inside_outer_lambda_over_windows():
 COMMON_NAMES = ["i", "a", "c", "s", "x", "j", "k", "n", "t"]
 DUCK_FRAGMENTS = {
     "duck_h31": duck_h31("x"),
+    "duck_md5_int": duck_md5_int("x", 15),
     "duck_micro": duck_micro("x"),
     "duck_int_sqdist": duck_int_sqdist("x", "y"),
     "duck_int_dot": duck_int_dot("x", "y"),
@@ -296,6 +358,35 @@ def test_graph_substrate_has_one_definition():
         f"{path.relative_to(root)}:{no}"
         for path in sorted(root.rglob("*.py"))
         if path != root / "operators" / "graph.py"
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if spelled.search(line)
+    ]
+    assert found == []
+
+
+def test_hash_primitives_have_one_definition():
+    """functions/hashes.py is the only module that spells a hash or
+    sketch primitive: an md5 hex prefix read as an integer or folded
+    nibble by nibble, an md5-derived coefficient, or a signature band
+    extraction. Every other module imports spark_md5_int /
+    duck_md5_int, the h31/h62 hashes, universal_coeffs /
+    hyperplane_signs and capped_banded / capped_band_cte. cache.py's
+    path digest names a directory and is no hash primitive."""
+    import pathlib
+    import re
+
+    import kafka_to_parquet_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    spelled = re.compile(
+        r"conv\(substring\(md5\(|strpos\('0123456789abcdef'"
+        r"|\.digest\(\)\[|shiftright\(sig, CAST\("
+    )
+    own = {root / "functions" / "hashes.py", root / "cache.py"}
+    found = [
+        f"{path.relative_to(root)}:{no}"
+        for path in sorted(root.rglob("*.py"))
+        if path not in own
         for no, line in enumerate(path.read_text().splitlines(), 1)
         if spelled.search(line)
     ]

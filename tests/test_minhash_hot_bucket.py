@@ -21,7 +21,8 @@ import pyarrow.parquet as pq
 import pytest
 
 from kafka_to_parquet_spark import registry
-from kafka_to_parquet_spark.llm.dedup import INCR_MOD, INCR_REM, MAX_BAND_BUCKET
+from kafka_to_parquet_spark.functions.hashes import MAX_BAND_BUCKET
+from kafka_to_parquet_spark.llm.dedup import INCR_MOD, INCR_REM
 
 N_COPIES = 300
 WORDS = [f"w{i}" for i in range(200)]

@@ -159,6 +159,42 @@ def test_sink_manifest_bytes_are_file_sizes(spark, sf_dir, tmp_path):
     )
 
 
+# Payloads and the decoded ``b`` the reference gives them: Python's
+# strict ``bytes.decode("utf-8")``, the rule of Rust's str::from_utf8
+# (main.rs:240-247), with "" for a null or invalid payload. The first
+# four are the sink test's rows.
+PAYLOADS = [
+    b"ok 0",
+    b"\xff\xfe bad",
+    None,
+    b"ok 1",
+    b"\xed\xa0\x80",  # an encoded surrogate
+    b"\xc0\xaf",  # overlong forms
+    b"\xe0\x80\xaf",
+    b"\xf4\x90\x80\x80",  # above U+10FFFF
+    b"\xe2\x82",  # truncated
+    b"a\x00b",  # NUL
+    b"\xef\xbb\xbfx",  # BOM
+]
+
+
+def _strict_utf8(payload: bytes | None) -> str:
+    try:
+        return "" if payload is None else payload.decode("utf-8")
+    except UnicodeDecodeError:
+        return ""
+
+
+@pytest.mark.parametrize("payload", PAYLOADS, ids=repr)
+def test_decode_payload_is_strict_utf8(spark, payload):
+    """decode_payload keeps exactly the payloads a strict UTF-8 decoder
+    accepts (NUL and a BOM pass through unchanged) and gives "" for a
+    null one, encoded surrogates, overlong forms, code points above
+    U+10FFFF and truncated sequences."""
+    df = spark.createDataFrame([(payload,)], "value binary")
+    assert df.select(decode_payload(F.col("value"))).first()[0] == _strict_utf8(payload)
+
+
 def test_sink_decodes_invalid_utf8_to_empty_string(spark, tmp_path):
     """main.rs:240-247: an invalid UTF-8 payload decodes to "" like a
     null one — the sink writes it instead of aborting, and ``b`` stays
@@ -172,7 +208,7 @@ def test_sink_decodes_invalid_utf8_to_empty_string(spark, tmp_path):
         pa.table({
             "partition": pa.array([0, 0, 1, 1], pa.int32()),
             "offset": pa.array([0, 1, 0, 1], pa.int64()),
-            "value": pa.array([b"ok 0", b"\xff\xfe bad", None, b"ok 1"], pa.binary()),
+            "value": pa.array(PAYLOADS[:4], pa.binary()),
         }),
         os.path.join(src, "part-0.parquet"),
     )

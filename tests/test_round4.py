@@ -220,14 +220,15 @@ def test_duck_dot_literal_bit_equal():
     import duckdb
 
     from kafka_to_parquet_spark.functions.vectors import duck_dot, duck_dot_literal
-    from kafka_to_parquet_spark.llm.dedup import _hyperplane_signs
+    from kafka_to_parquet_spark.functions.hashes import hyperplane_signs
+    from kafka_to_parquet_spark.llm.dedup import EMBED_DIM
 
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW embeddings AS SELECT * FROM"
         " read_parquet('/root/testdata/sf0.001/embeddings.parquet')"
     )
-    signs = _hyperplane_signs(7)
+    signs = hyperplane_signs(7, EMBED_DIM)
     lit = "[" + ",".join("1.0" if s > 0 else "-1.0" for s in signs) + "]"
     fold = con.execute(
         f"SELECT vec_id, {duck_dot('embedding', lit)} AS d,"

@@ -44,7 +44,7 @@ def test_srm_check_matches_python(run, spark, sf_dir):
 
 def test_cms_error_bands_matches_python(run, spark, sf_dir):
     from kafka_to_parquet_spark.llm.corpus_stats import (
-        CMS_W, _cms_coeffs, H31_P,
+        CMS_COEFFS, CMS_W, H31_P,
     )
     import hashlib
 
@@ -60,7 +60,7 @@ def test_cms_error_bands_matches_python(run, spark, sf_dir):
     cells = {}
     for w, c in cnt.items():
         hw = h31(w)
-        cs = [((a * hw + b) % H31_P) % CMS_W for a, b in _cms_coeffs()]
+        cs = [((a * hw + b) % H31_P) % CMS_W for a, b in CMS_COEFFS]
         cells[w] = cs
         for j, cell in enumerate(cs):
             sketch[(j, cell)] += c

@@ -16,13 +16,13 @@ def h31(s: str) -> int:
 
 def test_minhash_est_err_matches_python(run, spark, sf_dir):
     from kafka_to_parquet_spark.llm.minhash import (
-        MAX_BAND_BUCKET, MH_BANDS, MH_NUM_HASHES, MH_P, _mh_coeffs,
+        MAX_BAND_BUCKET, MH_BANDS, MH_COEFFS, MH_NUM_HASHES, MH_P,
     )
 
     SHINGLE_N = 3  # word-3-gram shingles (llm/dedup.py shingled_documents)
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text").collect()
-    coeffs = _mh_coeffs()
+    coeffs = MH_COEFFS
     sh: dict = {}
     sig: dict = {}
     for r in docs:

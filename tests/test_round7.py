@@ -227,13 +227,13 @@ def test_minhash_bbit_matches_python(run, spark, sf_dir):
         MAX_BAND_BUCKET,
         MH_BANDS,
         MH_NUM_HASHES,
+        MH_COEFFS,
         MH_P,
-        _mh_coeffs,
     )
 
     SHINGLE_N = 3
     docs = load(spark, sf_dir, "documents").select("doc_id", "text").collect()
-    coeffs = _mh_coeffs()
+    coeffs = MH_COEFFS
     sh: dict = {}
     sig: dict = {}
     for r in docs:
@@ -382,13 +382,13 @@ def test_token_fertility_matches_python(run, spark, sf_dir):
 def test_decontaminate_embed_matches_python(run, spark, sf_dir):
     import numpy as np
 
+    from kafka_to_parquet_spark.functions.hashes import MAX_BAND_BUCKET, hyperplane_signs
     from kafka_to_parquet_spark.functions.vectors import np_seq_dot
     from kafka_to_parquet_spark.llm.dedup import (
         ANGULAR_BANDS,
         ANGULAR_BITS,
+        EMBED_DIM,
         EMBED_NEAR_TAU,
-        MAX_BAND_BUCKET,
-        _hyperplane_signs,
     )
     from kafka_to_parquet_spark.operators.batch7 import DECON_EVAL_MOD
 
@@ -398,7 +398,7 @@ def test_decontaminate_embed_matches_python(run, spark, sf_dir):
         for r in rows
     }
     planes = [
-        np.array(_hyperplane_signs(k), dtype=np.float64)
+        np.array(hyperplane_signs(k, EMBED_DIM), dtype=np.float64)
         for k in range(ANGULAR_BITS)
     ]
     sig = {
@@ -502,59 +502,6 @@ def test_stream_topk_matches_python(run, spark, sf_dir):
     for ws, rnks in per_win.items():
         assert sorted(rnks) == list(range(1, len(rnks) + 1))
         assert len(rnks) <= STREAM_TOPK_K
-
-
-def test_angular_oracle_fragments_pinned_identical():
-    """q_dedup_embedding_lsh's inline fp expression is certified-frozen
-    this round; q_decontaminate_embed builds its oracle from the shared
-    angular_fp_bits_sql(). This pin makes silent drift impossible: the
-    shared fragment must appear VERBATIM inside both oracles."""
-    from kafka_to_parquet_spark import registry
-    from kafka_to_parquet_spark.llm.dedup import angular_fp_bits_sql
-
-    registry.load_all()
-    frag = angular_fp_bits_sql()
-    assert frag in registry.ORACLE_SQL["q_dedup_embedding_lsh"]
-    assert frag in registry.ORACLE_SQL["q_decontaminate_embed"]
-
-
-def test_angular_banded_matches_inline_block(spark, sf_dir):
-    """angular_banded (the shared Spark helper q_decontaminate_embed
-    uses) must produce exactly the banded index q_dedup_embedding_lsh
-    builds inline — same (vec_id, b, k) rows."""
-    from pyspark.sql import functions as F
-
-    from kafka_to_parquet_spark.llm.dedup import (
-        ANGULAR_BANDS,
-        ANGULAR_BITS,
-        angular_banded,
-        angular_signatures,
-        capped_banded,
-    )
-
-    helper = {
-        (r.vec_id, r.b, r.k)
-        for r in angular_banded(spark, sf_dir).select("vec_id", "b", "k").collect()
-    }
-    sig = angular_signatures(spark, sf_dir)
-    band_bits = ANGULAR_BITS // ANGULAR_BANDS
-    banded = sig.select(
-        "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(ANGULAR_BANDS - 1))).alias("b"),
-        F.col("sig"),
-    ).withColumn(
-        "band_val",
-        F.expr(
-            f"shiftright(sig, CAST({band_bits} * b AS INT)) & {(1 << band_bits) - 1}"
-        ),
-    )
-    inline = {
-        (r.vec_id, r.b, r.k)
-        for r in capped_banded(banded, band_bits=band_bits, n_bands=ANGULAR_BANDS)
-        .select("vec_id", "b", "k")
-        .collect()
-    }
-    assert helper == inline and helper
 
 
 def test_ntile_semantics_match_duckdb_and_python():
@@ -921,8 +868,10 @@ def test_capped_banded_invariants(spark):
     (b, k) bucket holds <= cap rows — the bound that keeps LSH
     candidate generation signature-governed at any corpus size; (b)
     sub-split keys live in a disjoint range from unsplit band values,
-    so a split bucket can never alias an unsplit one."""
-    from kafka_to_parquet_spark.llm.dedup import capped_banded
+    so a split bucket can never alias an unsplit one. DuckDB's
+    capped_band_cte keeps the same (id, b, k) rows, sub-split path
+    included."""
+    from kafka_to_parquet_spark.functions.hashes import capped_band_cte, capped_banded
 
     CAP, BITS, BANDS = 4, 8, 4
     rows = []
@@ -933,15 +882,7 @@ def test_capped_banded_invariants(spark):
     for vid in range(40, 50):
         rows.append((vid, (vid * 2654435761) & 0x7FFFFFFF))
     sig = spark.createDataFrame(rows, "vec_id long, sig long")
-    banded = sig.select(
-        "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(BANDS - 1))).alias("b"),
-        "sig",
-    ).withColumn(
-        "band_val",
-        F.expr(f"shiftright(sig, CAST({BITS} * b AS INT)) & {(1 << BITS) - 1}"),
-    )
-    kept = capped_banded(banded, cap=CAP, band_bits=BITS, n_bands=BANDS).cache()
+    kept = capped_banded(sig, cap=CAP, band_bits=BITS, n_bands=BANDS).cache()
     sizes = kept.groupBy("b", "k").count().collect()
     assert sizes, "some buckets must survive"
     assert all(r["count"] <= CAP for r in sizes)
@@ -950,8 +891,16 @@ def test_capped_banded_invariants(spark):
     unsplit = [k for k in ks if k < split_threshold]
     split = [k for k in ks if k >= split_threshold]
     assert all(k <= (1 << BITS) - 1 for k in unsplit)
-    if split:
-        assert min(split) >= split_threshold
+    assert split and min(split) >= split_threshold, "the hot bucket must sub-split"
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE fp (vec_id BIGINT, sig BIGINT)")
+    con.executemany("INSERT INTO fp VALUES (?, ?)", rows)
+    cte = capped_band_cte("vec_id", cap=CAP, band_bits=BITS, n_bands=BANDS)
+    duck = set(con.sql(f"WITH {cte} SELECT vec_id, b, k FROM kept").fetchall())
+    got = {(r.vec_id, r.b, r.k) for r in kept.select("vec_id", "b", "k").collect()}
+    assert got == duck
+    kept.unpersist()
 
 
 def test_media_decoders_roundtrip_fuzz():

@@ -250,7 +250,7 @@ def test_checksum_is_order_insensitive_and_reproducible(run, spark, sf_dir):
     iteration order) must match the distributed aggregate."""
     import hashlib
 
-    from kafka_to_parquet_spark.operators.warehouse import CK_P
+    from kafka_to_parquet_spark.functions.hashes import H31_P
 
     got = {r.l_returnflag: (r.n_rows, r.checksum) for r in run("q_table_checksum").collect()}
     li = load(spark, sf_dir, "lineitem").collect()
@@ -271,13 +271,14 @@ def test_checksum_is_order_insensitive_and_reproducible(run, spark, sf_dir):
                 ]
             )
             total += int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-        assert got[flag] == (len(rows), total % CK_P), flag
+        assert got[flag] == (len(rows), total % H31_P), flag
 
 
 def test_checksum_detects_single_row_change(run, spark, sf_dir):
     """Flipping one row's quantity changes that group's checksum —
     the fingerprint is sensitive, not just order-insensitive."""
-    from kafka_to_parquet_spark.operators.warehouse import _CK_ROW, CK_P
+    from kafka_to_parquet_spark.functions.hashes import H31_P, spark_md5_int
+    from kafka_to_parquet_spark.operators.warehouse import _CK_ROW
 
     li = load(spark, sf_dir, "lineitem")
     base = run("q_table_checksum").collect()
@@ -298,11 +299,11 @@ def test_checksum_detects_single_row_change(run, spark, sf_dir):
             F.col("l_quantity") + 1,
         ).otherwise(F.col("l_quantity")),
     )
-    rh = F.expr(f"CAST(conv(substring(md5({_CK_ROW}), 1, 15), 16, 10) AS DECIMAL(38,0))")
+    rh = F.expr(spark_md5_int(_CK_ROW, 15)).cast("decimal(38,0)")
     mut = (
         mutated.select("l_returnflag", rh.alias("rh"))
         .groupBy("l_returnflag")
-        .agg(F.count("*").alias("n_rows"), (F.sum("rh") % CK_P).cast("long").alias("checksum"))
+        .agg(F.count("*").alias("n_rows"), (F.sum("rh") % H31_P).cast("long").alias("checksum"))
         .collect()
     )
     flag0 = uniq.flag
