@@ -15,10 +15,9 @@ import it at its top.
 Oracles splice the DuckDB fragments inside their own lambdas (a
 sliding-window ``list_transform(range(...), i -> ...)``), and DuckDB
 lets an inner lambda variable shadow an outer one of the same name. The
-fragments' lambda variables are therefore ``h31_``-prefixed, names no
-oracle binds; tests/test_hashes.py checks the nesting and the names.
-The Spark forms contain no lambda, so they compose inside any
-``transform(...)``.
+DuckDB forms here therefore bind no lambda variable; tests/test_hashes.py
+checks the nesting. The Spark forms contain no lambda either, so they
+compose inside any ``transform(...)``.
 """
 
 from __future__ import annotations
@@ -44,14 +43,9 @@ def spark_md5_int(col: str, nibbles: int) -> str:
 
 
 def duck_md5_int(col: str, nibbles: int) -> str:
-    """The same BIGINT in DuckDB SQL: a ``list_reduce`` fold of the
-    nibbles, with ``h31_``-prefixed lambda variables."""
-    return (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT),"
-        f" list_transform(range(1, {nibbles + 1}),"
-        f" h31_nib -> CAST(strpos('0123456789abcdef', substr(md5({col}), h31_nib, 1)) - 1 AS BIGINT))),"
-        " (h31_acc, h31_c) -> h31_acc * 16 + h31_c)"
-    )
+    """The same BIGINT in DuckDB SQL: one md5 per row, its hex prefix
+    read by a ``0x`` cast. It binds no lambda variable."""
+    return f"CAST('0x' || substr(md5({col}), 1, {nibbles}) AS BIGINT)"
 
 
 def spark_h31(col: str) -> str:
@@ -88,10 +82,9 @@ def spark_h62(col: str) -> str:
 
 
 def duck_h62(col: str) -> str:
-    """Same value in DuckDB SQL. The two embedded duck_h31 folds are
-    SIBLING expressions (never nested inside each other), so their
-    shared h31_-prefixed lambda names cannot shadow each other — and
-    remain safe inside an outer query lambda per the h31 rule."""
+    """Same value in DuckDB SQL. The two embedded duck_h31 casts bind
+    no lambda variable, so the fragment is safe inside an outer query
+    lambda."""
     salted = duck_h31(f"'h62:' || ({col})")
     return f"(({duck_h31(col)}) * CAST({H31_P} AS BIGINT) + ({salted}))"
 

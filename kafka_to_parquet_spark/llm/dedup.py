@@ -720,9 +720,9 @@ def _substring_oracle() -> str:
     # lambda ALSO named ``i`` — DuckDB's inner binding shadowed the
     # window index, so nibble position i hashed the window starting at
     # position i (a chimera of 8 windows) and the oracle under-counted
-    # 45 vs Spark's correct 47. duck_h31 now uses h31_-prefixed lambda
-    # variables (functions/hashes.py) and tests/test_hashes.py pins
-    # exactly this nesting; renaming alone flips the oracle to 47.
+    # 45 vs Spark's correct 47. duck_h31 now binds no lambda variable
+    # (functions/hashes.py) and tests/test_hashes.py pins exactly this
+    # nesting.
     wh = duck_h62(f"array_to_string(t[i:i+{SUBSTR_W - 1}], ' ')")
     return f"""
 WITH toks AS (SELECT doc_id, {_TOKENS_SQL} AS t FROM documents),

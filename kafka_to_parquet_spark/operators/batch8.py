@@ -115,7 +115,7 @@ from kafka_to_parquet_spark.operators.graph import (
     _PAIRS_CTE,
     MIN_SUP,
     ORIENT_CTES,
-    TRADE_LINES_SQL,
+    TRADE_EDGES_CTES,
     _part_pairs,
     gated_pairs,
     gated_pairs_sql,
@@ -123,7 +123,7 @@ from kafka_to_parquet_spark.operators.graph import (
     lpa_sql,
     orient,
     symmetric,
-    trade_lines,
+    trade_edges,
 )
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
@@ -795,16 +795,13 @@ _SSSP_W_SPARK = "1 + 9 DIV n_txn"
 
 def _sssp_oracle() -> str:
     ctes = [
-        f"""e0 AS (
-  SELECT src, dst, CAST(count(*) AS BIGINT) AS n_txn
-  FROM ({TRADE_LINES_SQL}) GROUP BY src, dst
-)""",
-        f"""edges AS (
+        TRADE_EDGES_CTES,
+        f"""we AS (
   SELECT src, dst, CAST({_SSSP_W} AS BIGINT) AS w FROM e0
   UNION ALL
   SELECT dst, src, CAST({_SSSP_W} AS BIGINT) AS w FROM e0
 )""",
-        "nodes AS (SELECT DISTINCT src AS node FROM edges)",
+        "nodes AS (SELECT DISTINCT src AS node FROM we)",
         "r0 AS (SELECT min(node) AS node, CAST(0 AS BIGINT) AS dist FROM nodes)",
     ]
     for k in range(1, SSSP_ROUNDS + 1):
@@ -814,7 +811,7 @@ def _sssp_oracle() -> str:
     SELECT node, dist FROM r{k - 1}
     UNION ALL
     SELECT e.dst AS node, r.dist + e.w AS dist
-    FROM edges e JOIN r{k - 1} r ON e.src = r.node
+    FROM we e JOIN r{k - 1} r ON e.src = r.node
   ) GROUP BY node
 )"""
         )
@@ -851,26 +848,16 @@ def q_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: weights are integer (1 + 9 // n_txn from exact
     counts); distances are exact integer sums; histograms are counts.
 
-    Scale shape per round: one edges⋈dists hash join (edge relation
-    persisted pre-hashed+pre-sorted on src, the q_graph_pagerank
-    trick) + a map-side-combinable min — only the NODE-sized distance
+    Scale shape per round: one edges⋈dists hash join + a map-side-
+    combinable min. The weight is a projection over graph.trade_edges
+    (persisted pre-hashed+pre-sorted on src with each pair's n_txn),
+    so the edges keep that layout and only the NODE-sized distance
     relation exchanges per round; weighted edges stream through. At
     100 TB this is textbook distributed Bellman-Ford (the Pregel SSSP
     kernel); Dijkstra's priority queue does not distribute."""
-
-    def _build() -> DataFrame:
-        e0 = (
-            trade_lines(spark, sf_dir)
-            .groupBy("src", "dst")
-            .agg(F.count("*").cast("long").alias("n_txn"))
-        )
-        return symmetric(
-            e0.select(
-                "src", "dst", F.expr(f"CAST({_SSSP_W_SPARK} AS BIGINT)").alias("w")
-            )
-        )
-
-    edges = memo(spark, sf_dir, "trade_sym_weighted", lambda: _build().persist())
+    edges = trade_edges(spark, sf_dir).select(
+        "src", "dst", F.expr(f"CAST({_SSSP_W_SPARK} AS BIGINT)").alias("w")
+    )
     nodes = edges.select(F.col("src").alias("node")).distinct()
     # Seed = min node id. min(src) over the RAW symmetric edge relation
     # equals min over distinct nodes (every node appears as a src), so

@@ -214,6 +214,18 @@ def test_clear_caches_releases_every_persist(spark, run, sf_dir, name):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_trade_graph_is_one_entry(spark, run, sf_dir):
+    """PageRank, SSSP and BFS share one persisted trade graph: each
+    derives its decoration (outdeg, weight) from graph.trade_edges
+    instead of persisting a decorated copy."""
+    clear_caches()
+    for name in ("q_graph_pagerank", "q_sssp_weighted", "q_bfs_levels"):
+        run(name).collect()
+    trade = [n for (_, _, n) in _STORE if str(n).startswith("trade")]
+    assert trade == ["trade_edges"]
+    clear_caches(spark, sf_dir)
+
+
 def _jobs_in_group(spark, group: str, fn) -> list[int]:
     sc = spark.sparkContext
     sc.setJobGroup(group, group)

@@ -337,11 +337,12 @@ def test_text_primitives_have_one_definition():
 
 def test_graph_substrate_has_one_definition():
     """operators/graph.py is the only module that spells the shared
-    graph decisions: the trade-graph node ids, the label-propagation
-    tie-break, the (degree, id) edge orientation and the
-    support-quantile gate on co-purchase pairs. Every other graph query
-    imports trade_lines / trade_edges / TRADE_*_SQL, label_propagation /
-    lpa_sql, orient / ORIENT_CTES and gated_pairs / gated_pairs_sql."""
+    graph decisions: the trade-graph node ids and its per-lineitem
+    rows, the label-propagation tie-break, the (degree, id) edge
+    orientation and the support-quantile gate on co-purchase pairs.
+    Every other graph query imports trade_edges / TRADE_EDGES_CTES,
+    label_propagation / lpa_sql, orient / ORIENT_CTES and gated_pairs /
+    gated_pairs_sql."""
     import pathlib
     import re
 
@@ -349,7 +350,7 @@ def test_graph_substrate_has_one_definition():
 
     root = pathlib.Path(pkg.__file__).parent
     spelled = re.compile(
-        r'o_custkey"?\)? \* 2'
+        r'o_custkey"?\)? \* 2|trade_lines\(|TRADE_LINES_SQL'
         r'|c DESC, lab|F\.col\("c"\)\.desc\(\), F\.col\("lab"\)'
         r'|\(da\.d, pa\) < \(db\.d, pb\)|F\.struct\(F\.col\("da"\), F\.col\("pa"\)\)'
         r"|quantile_disc\(support\b|ORDER BY support\)"
@@ -366,9 +367,9 @@ def test_graph_substrate_has_one_definition():
 
 def test_hash_primitives_have_one_definition():
     """functions/hashes.py is the only module that spells a hash or
-    sketch primitive: an md5 hex prefix read as an integer or folded
-    nibble by nibble, an md5-derived coefficient, or a signature band
-    extraction. Every other module imports spark_md5_int /
+    sketch primitive: an md5 hex prefix read as an integer (by conv,
+    a 0x cast or a nibble fold), an md5-derived coefficient, or a
+    signature band extraction. Every other module imports spark_md5_int /
     duck_md5_int, the h31/h62 hashes, universal_coeffs /
     hyperplane_signs and capped_banded / capped_band_cte. cache.py's
     path digest names a directory and is no hash primitive."""
@@ -380,7 +381,7 @@ def test_hash_primitives_have_one_definition():
     root = pathlib.Path(pkg.__file__).parent
     spelled = re.compile(
         r"conv\(substring\(md5\(|strpos\('0123456789abcdef'"
-        r"|\.digest\(\)\[|shiftright\(sig, CAST\("
+        r"|'0x' \|\| substr\(md5\(|\.digest\(\)\[|shiftright\(sig, CAST\("
     )
     own = {root / "functions" / "hashes.py", root / "cache.py"}
     found = [

@@ -536,3 +536,50 @@ def test_trade_edges_union_has_no_distinct_above(spark, sf_dir):
     above = _ancestors(plan, "Union")
     assert above, f"no Union in the trade_edges plan:\n{plan}"
     assert not [a for a in above if "Aggregate" in a], above
+
+
+def test_trade_graph_is_never_reshuffled(spark, run):
+    """PageRank's outdeg window and SSSP's weight projection run over
+    graph.trade_edges, persisted hashed and sorted on src, so no
+    Exchange sits directly above a trade-graph InMemoryTableScan (only
+    the node-sized rank and distance relations exchange per round).
+    Broadcast joins are off here: at test scale they would hide the
+    edges' layout behind a broadcast of the whole graph."""
+    import re
+
+    from kafka_to_parquet_spark.cache import clear_result_caches
+
+    narrow = re.compile(r"(TableCacheQueryStage|Filter|Project|ColumnarToRow) \(")
+    confs = ("spark.sql.autoBroadcastJoinThreshold",
+             "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    clear_result_caches(spark)
+    for c in confs:
+        spark.conf.set(c, "-1")
+    try:
+        for name in ("q_graph_pagerank", "q_sssp_weighted"):
+            df = run(name)
+            df.collect()
+            tree, detail = plan_of(df).split("\n\n", 1)
+            trade = set(re.findall(
+                r"^\((\d+)\) InMemoryRelation\nArguments: \[[^\]]*\bn_txn#", detail, re.M
+            ))
+            lines = tree.splitlines()
+            depth = [re.search(r"[A-Za-z]", ln).start() for ln in lines]
+            above = []
+            for i, ln in enumerate(lines):
+                rel = re.search(r"InMemoryRelation \((\d+)\)", ln)
+                if not rel or rel.group(1) not in trade:
+                    continue
+                d = depth[i - 1]  # the InMemoryTableScan line
+                for j in range(i - 2, -1, -1):
+                    if depth[j] < d:
+                        d = depth[j]
+                        if not narrow.search(lines[j]):
+                            above.append(lines[j].strip())
+                            break
+            assert above, f"{name}: no trade-graph scan in the plan"
+            assert not [a for a in above if re.search(r"\bExchange \(", a)], (name, above)
+    finally:
+        for c in confs:
+            spark.conf.unset(c)
+        clear_result_caches(spark)
