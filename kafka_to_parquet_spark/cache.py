@@ -1,4 +1,5 @@
-"""One session-scoped store for the package's memoized intermediates.
+"""One session-scoped store for the package's memoized intermediates,
+and the package's one materialization boundary.
 
 Several operator families memoize an expensive intermediate per
 (SparkSession, sf_dir) — hashed shingle sets, near-dup edge lists,
@@ -9,12 +10,14 @@ re-imports fresh each round), but a long-lived session would otherwise
 accumulate executor storage forever.
 
 Every such intermediate goes through :func:`memo`, which keys it by
-``(spark, sf_dir, name)`` in one store, and every persisted frame that
-a returned plan still reads goes through :func:`park`.
-:func:`clear_caches` evicts entries — optionally scoped to one session
-and/or one sf_dir — unpersisting persisted frames and releasing
-localCheckpoint RDD blocks. ``bench.py`` calls it between scale
-factors and at teardown.
+``(spark, sf_dir, name)`` in one store. Every query-local intermediate
+that later plans read again (a loop round, a relation read on both
+sides of a join) goes through :func:`park`, the one place that decides
+how it is materialized — a lazy local checkpoint — and when it is
+freed. :func:`release` frees one frame now; :func:`clear_caches`
+evicts entries — optionally scoped to one session and/or one sf_dir —
+unpersisting persisted frames and releasing checkpoint RDD blocks.
+``bench.py`` calls it between scale factors and at teardown.
 
 The same store keeps metadata entries (:func:`metadata`): facts about
 one input file, such as a table's inferred schema, keyed by the file's
@@ -114,7 +117,10 @@ def memo(
     """Return the value stored under ``(spark, sf_dir, name)``, running
     ``build()`` once to make it. ``build`` returns the value to keep —
     a persisted or checkpointed DataFrame, a :class:`TempDataset`, a
-    scalar, or a tuple of these; ``memo`` persists nothing itself.
+    scalar, or a tuple of these; ``memo`` persists nothing itself. A
+    feature entry persists rather than checkpoints when its readers
+    rely on the cached plan's partitioning and ordering, which an
+    ``InMemoryTableScan`` advertises and a checkpoint scan does not.
 
     ``result=True`` marks a finished query answer:
     :func:`clear_result_caches` (used by bench/scaling/stress timers
@@ -142,18 +148,57 @@ def _get(key: tuple, build: Callable[[], Any], level: bool | str) -> Any:
 
 
 def park(df: DataFrame, spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Register a persisted/checkpointed frame that a RETURNED plan
-    still reads (a superseded or final loop round, a scratch relation),
-    for eviction at the next cache boundary: :func:`clear_result_caches`
-    between timed samples, or :func:`clear_caches` at teardown. Nothing
-    is unpersisted now — the caller's action happens after the operator
-    returns. Without parking, a final round is registered nowhere and
-    Spark's CacheManager would serve its blocks to the identical plan
-    rebuilt on the next timed sample. Returns ``df``."""
+    """Materialize a query-local intermediate that later plans read
+    again (a loop round, a relation read twice) and register it for
+    release at the next cache boundary: :func:`clear_result_caches`
+    between timed samples, or :func:`clear_caches` at teardown.
+    Returns the frame to read instead of ``df``.
+
+    The boundary is ``df.localCheckpoint(eager=False)``: the returned
+    frame's plan is a leaf, so a loop whose round reads the previous
+    round twice plans in constant size instead of doubling per round.
+    Parking runs ``df``'s shuffle stages (adaptive execution plans
+    them at once); the first action that reads the frame runs the
+    last stage and stores its blocks. The blocks live on the
+    executors only: after a release, or the loss of an executor, a
+    plan reading the frame fails instead of recomputing it. Switching
+    this call to ``checkpoint()`` (a reliable checkpoint directory)
+    would survive executor loss at the cost of a write per frame."""
+    frame = df.localCheckpoint(eager=False)
     key = (spark, sf_dir, _PARKED)
     frames, _ = _STORE.get(key, ((), True))
-    _STORE[key] = (frames + (df,), True)
-    return df
+    _STORE[key] = (frames + (frame,), True)
+    return frame
+
+
+def release(df: DataFrame) -> None:
+    """Free ``df``'s executor storage now and drop it from the parked
+    frames. No later plan may read ``df``."""
+    for key, (value, level) in list(_STORE.items()):
+        if key[2] == _PARKED and any(v is df for v in value):
+            rest = tuple(v for v in value if v is not df)
+            if rest:
+                _STORE[key] = (rest, level)
+            else:
+                del _STORE[key]
+    _free(df)
+
+
+def _free(df: DataFrame) -> None:
+    """Unpersist a persisted frame; drop a checkpointed frame's RDD
+    blocks."""
+    try:
+        # blocking: the timing tools clear between samples precisely
+        # so the NEXT sample doesn't run against lingering storage.
+        df.unpersist(blocking=True)
+        # A checkpointed frame never registers with the CacheManager,
+        # so unpersist() is a no-op for it: release its RDD's blocks
+        # instead of waiting for JVM GC and the ContextCleaner.
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(True)
+    except Exception:
+        pass  # a stopped session: the storage died with it
 
 
 def _evict(
@@ -173,29 +218,7 @@ def _evict(
         value, _ = _STORE.pop(key)
         for v in _parts(value):
             if isinstance(v, DataFrame):
-                try:
-                    # blocking: the timing tools call this between
-                    # samples precisely so the NEXT sample doesn't
-                    # run against lingering storage — an async
-                    # unpersist would leave the blocks dropping
-                    # during the sample it was meant to protect.
-                    v.unpersist(blocking=True)
-                except Exception:
-                    pass
-                try:
-                    # localCheckpoint frames: unpersist() above is
-                    # a no-op for them (their blocks belong to the
-                    # checkpointed RDD, which never registers with
-                    # the CacheManager), so superseded round frames
-                    # used to wait for JVM GC + ContextCleaner —
-                    # the round-14 q_cluster_dbscan_grid session
-                    # drift (2.8-5.6 s on unchanged code). Release
-                    # the RDD blocks deterministically instead.
-                    plan = v._jdf.queryExecution().analyzed()
-                    if plan.getClass().getSimpleName() == "LogicalRDD":
-                        plan.rdd().unpersist(True)
-                except Exception:
-                    pass
+                _free(v)
             elif isinstance(v, TempDataset):
                 # Owned temp-dataset path: free the on-disk parquet
                 # with the cache entry (see TempDataset docstring).

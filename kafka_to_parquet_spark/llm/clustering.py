@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_to_parquet_spark.cache import park
 from kafka_to_parquet_spark.functions.vectors import (
     duck_cosine,
     duck_int_sqdist,
@@ -307,7 +308,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan (restructured per round-6 verdict item 7): both argmins are
     map-side-combinable min(struct) aggregates over broadcast sets
     (shuffle carries N pre-reduced rows, never N·√k). The coarse
-    argmin runs ONCE over the whole corpus and is localCheckpoint-ed:
+    argmin runs ONCE over the whole corpus and is parked (cache.park):
     the fine centroids are corpus vectors scored by the identical
     expression and tiebreak, so their coarse homing (fhome, k rows,
     broadcast) is that table FILTERED — round 6 ran a separate k·√k
@@ -342,7 +343,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and tiebreak, so their coarse homing is this table FILTERED, not
     # a second crossJoin (round-6 verdict item 7: the separate k·√k
     # fhome stage and its jobs are gone).
-    vcoarse = (
+    vcoarse = park(
         e.crossJoin(F.broadcast(coarse))
         .select(
             "vec_id",
@@ -355,10 +356,11 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.struct("d2", "ccell")).alias("m"),
             F.first("embedding").alias("embedding"),
         )
-        .select("vec_id", "embedding", F.col("m.ccell").alias("ccell"))
+        .select("vec_id", "embedding", F.col("m.ccell").alias("ccell")),
         # one materialization feeding both the broadcast fhome side and
         # the streamed probe side
-        .localCheckpoint(eager=False)
+        spark,
+        sf_dir,
     )
     fhome = vcoarse.filter(F.col("vec_id") % KM_MOD == 0).select(
         F.col("vec_id").alias("cent_id"),

@@ -12,7 +12,7 @@ edges, chains of length ~8); the contraction step doubles the
 propagation distance per round, giving O(log d) rounds (4 on the same
 graph) for one extra small self-join each. Everything is fully
 distributed (the driver only checks a scalar convergence sum) and
-lineage is truncated per round with localCheckpoint so plans don't
+lineage is truncated per round by cache.park so plans don't
 grow with iterations — the same shape GraphX/GraphFrames use, built
 from plain DataFrame ops.
 
@@ -115,11 +115,12 @@ def _labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id")
     # edges is undirected (both orientations present), so doc_a alone
     # covers every incident node.
-    labels = (
+    labels = park(
         edges.select(F.col("doc_a").alias("doc_id"))
         .distinct()
-        .withColumn("component", F.col("doc_id"))
-        .localCheckpoint()
+        .withColumn("component", F.col("doc_id")),
+        spark,
+        sf_dir,
     )
     # Shrinking frontier (round 15, guide §2.4 — the r14 verdict's
     # q_dedup_components item): only nodes whose label CHANGED last
@@ -162,28 +163,22 @@ def _labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         jump = labels.select(
             F.col("doc_id").alias("mid"), F.col("component").alias("_c2")
         )
-        # Lazy checkpoint: the frontier count right below is the
+        # Parked round: the frontier count right below is the
         # materializing action, so each round schedules ONE Spark job.
         # The chg flag marks this round's frontier; its count doubles
         # as the convergence test (0 changes == the old unchanged-sum
         # criterion — labels are monotone).
-        new_labels = (
-            stepped.join(jump, "mid", "left")
-            .select(
+        labels = park(
+            stepped.join(jump, "mid", "left").select(
                 "doc_id",
                 F.coalesce("_c2", "mid").alias("component"),
                 (F.coalesce("_c2", "mid") != F.col("prev")).alias("chg"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            spark,
+            sf_dir,
         )
-        n_changed = new_labels.filter("chg").count()
-        # Superseded round: parked for deterministic release at the
-        # next cache boundary (cache.py LogicalRDD unpersist) instead
-        # of waiting on JVM GC + ContextCleaner.
-        park(labels, spark, sf_dir)
-        labels = new_labels
         frontier = labels.filter("chg")
-        if n_changed == 0:
+        if frontier.count() == 0:
             converged = True
             break
     if not converged:
@@ -201,15 +196,9 @@ def _labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     singletons = docs.join(labels.select("doc_id"), "doc_id", "left_anti").select(
         "doc_id", F.col("doc_id").alias("component")
     )
-    result = (
-        labels.select("doc_id", "component")
-        .unionByName(singletons)
-        .localCheckpoint()
+    return (
+        labels.select("doc_id", "component").unionByName(singletons).localCheckpoint()
     )
-    # The eager checkpoint no longer reads the converged round: park
-    # it with the superseded ones.
-    park(labels, spark, sf_dir)
-    return result
 
 
 @query(

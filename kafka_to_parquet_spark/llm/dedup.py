@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import memo
+from kafka_to_parquet_spark.cache import memo, park
 from kafka_to_parquet_spark.functions.hashes import (
     capped_band_cte,
     capped_banded,
@@ -998,20 +998,24 @@ def q_dedup_typo(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = (
         d.select(F.explode(tokens_col(F.col("text"))).alias("word")).distinct()
     )
-    keys = vocab.select(
-        "word",
-        F.explode(
-            F.expr(
-                "array_distinct(concat(array(word),"
-                " transform(sequence(1, length(word)),"
-                " i -> concat(substring(word, 1, i - 1),"
-                " substring(word, i + 1, length(word))))))"
-            )
-        ).alias("k"),
-        # both self-join sides consume this subtree and Catalyst has no
-        # cross-subtree CSE — checkpoint so the corpus scan + distinct
-        # + deletion explode run once (vocabulary-sized, cheap to hold)
-    ).localCheckpoint()
+    # both self-join sides consume this subtree and Catalyst has no
+    # cross-subtree CSE — park it so the corpus scan + distinct +
+    # deletion explode run once (vocabulary-sized, cheap to hold)
+    keys = park(
+        vocab.select(
+            "word",
+            F.explode(
+                F.expr(
+                    "array_distinct(concat(array(word),"
+                    " transform(sequence(1, length(word)),"
+                    " i -> concat(substring(word, 1, i - 1),"
+                    " substring(word, i + 1, length(word))))))"
+                )
+            ).alias("k"),
+        ),
+        spark,
+        sf_dir,
+    )
     a = keys.alias("a")
     b = keys.alias("b")
     cand = (

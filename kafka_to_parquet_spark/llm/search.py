@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_to_parquet_spark.cache import park
 from kafka_to_parquet_spark.functions.rounding import int_units
 from kafka_to_parquet_spark.functions.text import _TOKENS_SQL, tokens_col
 from kafka_to_parquet_spark.registry import query
@@ -336,16 +337,21 @@ def q_rerank_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qv))
         .select("vec_id", cqu.alias("cqu"))
     )
-    pool = cs.orderBy(F.desc("cqu"), F.asc("vec_id")).limit(MMR_POOL).localCheckpoint()
-    pe = pool.join(e, "vec_id").select("vec_id", "cqu", "embedding").localCheckpoint()
+    pool = park(
+        cs.orderBy(F.desc("cqu"), F.asc("vec_id")).limit(MMR_POOL), spark, sf_dir
+    )
+    pe = park(
+        pool.join(e, "vec_id").select("vec_id", "cqu", "embedding"), spark, sf_dir
+    )
     cu = F.expr(int_units(cosine_expr("x.embedding", "y.embedding")))
-    pair = (
+    pair = park(
         pe.alias("x")
         .join(pe.alias("y"), F.col("x.vec_id") != F.col("y.vec_id"))
         .select(
             F.col("x.vec_id").alias("a"), F.col("y.vec_id").alias("b"), cu.alias("cu")
-        )
-        .localCheckpoint()
+        ),
+        spark,
+        sf_dir,
     )
     first = (
         pool.orderBy(F.desc("cqu"), F.asc("vec_id"))
@@ -380,7 +386,7 @@ def q_rerank_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (-F.col("m.neg")).cast("long").alias("score_u"),
             )
         )
-        sel = sel.unionByName(pick).localCheckpoint()
+        sel = park(sel.unionByName(pick), spark, sf_dir)
     return sel
 
 

@@ -136,7 +136,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     are graph.trade_edges (persisted once, pre-hashed on src); each
     round is two node-sized semi joins against the (shrinking)
     survivor relation plus one src-keyed count, and each round's
-    survivor set is lazily localCheckpoint-ed and parked — the next
+    survivor set is parked (cache.park) — the next
     round references it on BOTH join sides and the final round nests
     three of them, so without lineage truncation the replay is
     ~2^rounds degree aggregations (measured 52 s at sf0.1; ~2 s with
@@ -165,9 +165,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if rnd < KCORE_ROUNDS - 1:
             alive = park(
-                deg.filter(F.col("degree") >= F.col("kk"))
-                .select("node")
-                .localCheckpoint(eager=False),
+                deg.filter(F.col("degree") >= F.col("kk")).select("node"),
                 spark,
                 sf_dir,
             )

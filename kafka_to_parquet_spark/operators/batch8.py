@@ -571,15 +571,14 @@ def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # df cap as ONE count-window over fp partitions (thousands of
     # small buckets) — no groupBy+join-back, which would reference
-    # fps0 twice and double the winnow lineage (the SSSP persist
+    # fps0 twice and double the winnow lineage (the SSSP
     # lesson); the window's fp-keyed exchange is the same one the
-    # pair self-join needs next. persist(): the capped relation is
+    # pair self-join needs next. Parked: the capped relation is
     # consumed THREE times (sizes + both sides of the pair join).
     fps = park(
         fps0.withColumn("fdf", F.count("*").over(Window.partitionBy("fp")))
         .filter(F.col("fdf") <= WIN_MAX_DF)
-        .select("doc_id", "fp")
-        .persist(),
+        .select("doc_id", "fp"),
         spark,
         sf_dir,
     )
@@ -874,13 +873,11 @@ def q_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         # each round's distances feed BOTH the next relaxation join
         # and the next union — without the materialization boundary
         # the lineage doubles per round (2^k subtrees, 83 shuffles
-        # in the round-8 plan audit; 20 with it). Each round is
-        # parked for release at the next cache boundary.
+        # in the round-8 plan audit).
         r = park(
             r.unionByName(relaxed)
             .groupBy("node")
-            .agg(F.min("dist").cast("long").alias("dist"))
-            .persist(),
+            .agg(F.min("dist").cast("long").alias("dist")),
             spark,
             sf_dir,
         )
@@ -991,13 +988,8 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         return symmetric(ce.select(F.col("pa").alias("src"), F.col("pb").alias("dst")))
 
     edges = memo(spark, sf_dir, "copurchase_sym", lambda: _build().persist())
-    # the final labels feed BOTH audit joins (within + degsum) and each
-    # round feeds the next — the per-round persist keeps the lineage
-    # linear (32 shuffles -> 23 in the round-8 plan audit); each round
-    # is parked for release at the next cache boundary.
-    labels = label_propagation(
-        edges, MOD_LPA_ROUNDS, lambda df: park(df.persist(), spark, sf_dir)
-    )
+    # the final labels feed BOTH audit joins (within + degsum)
+    labels = park(label_propagation(edges, MOD_LPA_ROUNDS), spark, sf_dir)
     m = edges.agg(F.count("*").cast("long").alias("m_dir"))
     la = labels.select(F.col("node").alias("src"), F.col("lab").alias("community"))
     lb = labels.select(F.col("node").alias("dst"), F.col("lab").alias("lab_b"))
@@ -1570,9 +1562,9 @@ def q_bpe_learn_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     round: split+explode over vocab rows (map-side, ≈ Σ|word| pair
     rows), one map-side-combinable (a, b) aggregate, a 1-row
     TakeOrdered argmax broadcast back into a vocab-sized map. Rounds
-    persist their vocab (each is referenced by BOTH the next round's
-    statistics and its re-segmentation — without the cache the lineage
-    re-derives the corpus collapse 2^{K} times)."""
+    park their vocab (each is referenced by BOTH the next round's
+    statistics and its re-segmentation — without the boundary the
+    lineage re-derives the corpus collapse 2^{K} times)."""
     v, merges = _bpe_chain(spark, sf_dir)
     out = None
     for r, m in enumerate(merges, start=1):
@@ -1593,14 +1585,12 @@ def _bpe_chain(spark: SparkSession, sf_dir: str):
         .agg(F.count("*").cast("long").alias("wf"))
     )
     # The per-round segmentation is vocabulary-sized; every round is
-    # parked for release at the next clear_result_caches. The 1-row
-    # `best` frames below are parked too (all K are consumed by the
-    # final merge table, which the caller's action materializes before
-    # any boundary eviction).
+    # parked. The 1-row `best` frames below are parked too: each feeds
+    # its round's rewrite and the final merge table.
     v = park(
         tf.select(
             "word", F.regexp_replace("word", "(.)", "\x1f$1\x1f").alias("s"), "wf"
-        ).persist(),
+        ),
         spark,
         sf_dir,
     )
@@ -1617,14 +1607,15 @@ def _bpe_chain(spark: SparkSession, sf_dir: str):
         pairs = syms.select("wf", F.explode(F.expr(pair_expr)).alias("p")).select(
             F.col("p.a").alias("a"), F.col("p.b").alias("b"), "wf"
         )
-        best = (
+        best = park(
             pairs.groupBy("a", "b")
             .agg(F.sum("wf").cast("long").alias("cnt"))
             .orderBy(F.desc("cnt"), "a", "b")
-            .limit(1)
-            .persist()
+            .limit(1),
+            spark,
+            sf_dir,
         )
-        merges.append(park(best, spark, sf_dir))
+        merges.append(best)
         v = park(
             v.crossJoin(F.broadcast(best))
             .select(
@@ -1634,8 +1625,7 @@ def _bpe_chain(spark: SparkSession, sf_dir: str):
                     " concat('\x1f', a, b, '\x1f'))"
                 ).alias("s"),
                 "wf",
-            )
-            .persist(),
+            ),
             spark,
             sf_dir,
         )
@@ -1779,11 +1769,11 @@ def q_text_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("plen") <= RAKE_MAX_LEN)
     )
-    # phr is persisted: it feeds the word-score aggregate (instance
+    # phr is parked: it feeds the word-score aggregate (instance
     # level — RAKE's freq/degree count every occurrence), the phrase
     # occurrence counts, AND the distinct phrase-type scoring — three
     # consumers of one segmentation pass (the winnowing lesson).
-    phr = park(phr.persist(), spark, sf_dir)
+    phr = park(phr, spark, sf_dir)
     pw = phr.select(
         "phrase", "plen", F.explode(F.split("phrase", " ")).alias("word")
     )
@@ -1885,7 +1875,7 @@ def q_ts_anomaly_stl(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types|·|days| calendar grid — two grouped exact medians with
     broadcast joins back plus a per-type rank window over calendar
     rows; the fact is touched once, by the shared daily collapse."""
-    d = park(_stl_decomposition(spark, sf_dir).persist(), spark, sf_dir)
+    d = park(_stl_decomposition(spark, sf_dir), spark, sf_dir)
     med = d.groupBy("event_type").agg(
         F.expr(
             "CAST(2 * percentile(resid_milli, 0.5) AS BIGINT)"
@@ -2075,7 +2065,7 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the quantile-gated edge set; the shared _oriented_edges
     # entry is keyed to the MIN_SUP gate.
     deg, o = orient(gated_pairs(spark, sf_dir, CC_SUP_Q))
-    o = park(o.persist(), spark, sf_dir)
+    o = park(o, spark, sf_dir)
     e1, e2, e3 = o.alias("e1"), o.alias("e2"), o.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.v") == F.col("e2.u"))
@@ -2400,17 +2390,15 @@ def q_text_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("node2"))
             .agg(F.sum("c").alias("c"))
         )
-        # vocabulary-sized rank relation, persisted per round so the
-        # chain of join+agg rounds stays linear; each round is parked
-        # for release at the next cache boundary.
+        # vocabulary-sized rank relation, parked per round so the
+        # chain of join+agg rounds stays linear
         r = park(
             tnodes.join(contrib, tnodes.node == contrib.node2, "left")
             .crossJoin(F.broadcast(tpar))
             .select(
                 "node",
                 F.expr("base + (85 * COALESCE(c, 0)) DIV 100").alias("r"),
-            )
-            .persist(),
+            ),
             spark,
             sf_dir,
         )
@@ -2545,8 +2533,7 @@ def q_kmv_union_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     dw = park(
         d.select("source", F.explode(tokens_col(F.col("text"))).alias("word"))
-        .distinct()
-        .persist(),
+        .distinct(),
         spark,
         sf_dir,
     )
@@ -2556,8 +2543,7 @@ def q_kmv_union_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rk", F.row_number().over(Window.partitionBy("source").orderBy("hv"))
         )
         .filter(F.col("rk") <= KMV_K)
-        .select("source", "hv")
-        .persist(),
+        .select("source", "hv"),
         spark,
         sf_dir,
     )
@@ -2576,8 +2562,7 @@ def q_kmv_union_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     prs = park(
         srcs.alias("a")
         .join(srcs.alias("b"), F.col("a.source") < F.col("b.source"))
-        .select(F.col("a.source").alias("sa"), F.col("b.source").alias("sb"))
-        .persist(),
+        .select(F.col("a.source").alias("sa"), F.col("b.source").alias("sb")),
         spark,
         sf_dir,
     )

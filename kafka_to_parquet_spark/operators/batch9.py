@@ -47,12 +47,10 @@ q_keyness / q_collocation_llr fencing), never accumulated as floats.
 
 from __future__ import annotations
 
-import gc
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_to_parquet_spark.cache import memo, park
+from kafka_to_parquet_spark.cache import memo, park, release
 from kafka_to_parquet_spark.functions.text import (
     _STOP_SQL,
     _TOKENS_SQL,
@@ -1123,15 +1121,13 @@ def q_suffix_lrs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle scale, and the point: the Spark plan is the one that
     survives 100×."""
     d = load(spark, sf_dir, "documents")
-    # Parked (not just persisted): every return path's plan reads toks
-    # (the extraction join slices phrases from it), so it cannot be
-    # unpersisted here — the boundary eviction in cache.py releases it
-    # between timed samples / at teardown instead of leaking a
+    # Parked: every return path's plan reads toks (the extraction join
+    # slices phrases from it), so it cannot be released here — the
+    # next cache boundary releases it instead of leaking a
     # corpus-sized relation per invocation in a long-lived session.
     toks = park(
         d.select("doc_id", tokens_col(F.col("text")).alias("t"))
-        .filter(F.size("t") > 0)
-        .persist(),
+        .filter(F.size("t") > 0),
         spark,
         sf_dir,
     )
@@ -1141,10 +1137,10 @@ def q_suffix_lrs(spark: SparkSession, sf_dir: str) -> DataFrame:
         [], "lrs_len long, phrase string, n_occ long"
     )
     if maxlen == 0:
-        toks.unpersist()
+        release(toks)
         return empty
     if maxlen >= SFX_PACK:
-        toks.unpersist()
+        release(toks)
         raise ValueError(
             f"q_suffix_lrs: document holds {maxlen} tokens >= SFX_PACK="
             f"{SFX_PACK}; raise the packing stride"
@@ -1153,14 +1149,13 @@ def q_suffix_lrs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.posexplode("t").alias("p0", "tok")
     ).select("doc_id", (F.col("p0") + 1).alias("p"), "tok")
     pack = f"doc_id * {SFX_PACK} + p"
-    # Levels are localCheckpoint-ed, NOT persisted: each level's
-    # logical plan references the previous level ~4× (pair join + the
-    # class aggregate + join-back), and persist() only caches
-    # EXECUTION — the analyzed tree still grows 4^k nodes and Catalyst
-    # optimization time explodes (measured: level 5 took 100 s of pure
-    # planner time at sf0.001). The eager checkpoint makes each level
-    # a leaf, so every level plans in O(1). (llm/components.py's
-    # pointer-jumping made the same call for the same reason.)
+    # Levels are parked: each level's logical plan references the
+    # previous level ~4× (pair join + the class aggregate + join-back),
+    # and a chained plan grows 4^k nodes until Catalyst optimization
+    # time explodes (measured with persist(), which only caches
+    # execution: level 5 took 100 s of pure planner time at sf0.001).
+    # The checkpoint makes each level a leaf, so every level plans in
+    # O(1); the count right after it stores the level's blocks.
     # Every level is stored FILTERED to its duplicated-class positions
     # (cnt >= 2): every consumer — the next doubling round, the length
     # probes, the extraction — provably only reads dup positions (see
@@ -1198,10 +1193,12 @@ def q_suffix_lrs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"min({pack})").alias("rep"),
             F.count("*").alias("cnt"),
         )
-        seed = (
-            grams.join(grp.filter(F.col("cnt") >= 2), "g")
-            .select("doc_id", "p", F.col("rep").alias("rk"), "cnt")
-            .localCheckpoint(eager=True)
+        seed = park(
+            grams.join(grp.filter(F.col("cnt") >= 2), "g").select(
+                "doc_id", "p", F.col("rep").alias("rk"), "cnt"
+            ),
+            spark,
+            sf_dir,
         )
         n = seed.count()
         if n > 0:
@@ -1245,10 +1242,12 @@ def q_suffix_lrs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"min({pack})").alias("rep"),
             F.count("*").alias("cnt"),
         )
-        lev = (
-            pairs.join(grp.filter(F.col("cnt") >= 2), ["rk", "rk2"])
-            .select("doc_id", "p", F.col("rep").alias("rk"), "cnt")
-            .localCheckpoint(eager=True)
+        lev = park(
+            pairs.join(grp.filter(F.col("cnt") >= 2), ["rk", "rk2"]).select(
+                "doc_id", "p", F.col("rep").alias("rk"), "cnt"
+            ),
+            spark,
+            sf_dir,
         )
         n = lev.count()
         if n == 0:
@@ -1257,15 +1256,13 @@ def q_suffix_lrs(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_dup[k] = n
         # Only the LATEST level is ever read again (the next doubling
         # round, every bracket probe, and the extraction all use
-        # k_dup = max(levels)) — drop the predecessor's reference so
-        # the ContextCleaner reclaims its checkpoint blocks and the
-        # loop holds TWO levels of storage, not ⌈log2 LRS⌉. Found at
-        # the sf≈100 stress: a fully-duplicated corpus keeps every
+        # k_dup = max(levels)) — release the predecessor's blocks so
+        # the loop holds TWO levels of storage, not ⌈log2 LRS⌉. Found
+        # at the sf≈100 stress: a fully-duplicated corpus keeps every
         # level corpus-sized, and retaining all of them held ~90 GB
         # of checkpoints at 460M positions (round-11 SCALING note).
         if k - 1 in levels:
-            del levels[k - 1]
-            gc.collect()  # py4j refs drop -> JVM ContextCleaner runs
+            release(levels.pop(k - 1))
     k_dup = max(levels)
 
     def fingerprints(length: int) -> DataFrame:
@@ -1530,23 +1527,17 @@ def q_cluster_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         return cell_b, core_b, adj_b
 
     cell, core, adj = memo(spark, sf_dir, "dbscan_grid", build)
-    # localCheckpoint, not persist, as the round boundary: each round
-    # references `labels` TWICE (hop join + pointer jump), so a
-    # persisted-but-still-chained logical plan doubles per round and
-    # Catalyst planning time explodes (measured: round 4 took 7.6 s of
-    # planner time on a 49-row relation). The checkpoint makes each
-    # round a leaf; the convergence collect right below is the
-    # materializing action, so each round schedules ONE job — the
-    # llm/components.py pointer-jumping pattern exactly. Superseded
-    # rounds PARK in the cache store (round 15, per the r14
-    # verdict): before, their checkpoint blocks waited for JVM GC +
-    # ContextCleaner, which in a storage-busy session let rounds
-    # linger and samples drift 2.8-5.6 s on unchanged code; parked
-    # frames are now released deterministically by the next cache
-    # boundary (cache.py's LogicalRDD unpersist).
-    labels = (
-        core.select(F.col("id").alias("node"), F.col("id").alias("lab"))
-        .localCheckpoint()
+    # Every round is parked: each round references `labels` TWICE
+    # (hop join + pointer jump), so a chained logical plan doubles per
+    # round and Catalyst planning time explodes (measured: round 4
+    # took 7.6 s of planner time on a 49-row relation). The checkpoint
+    # makes each round a leaf; the convergence collect right below is
+    # the materializing action, so each round schedules ONE job — the
+    # llm/components.py pointer-jumping pattern exactly.
+    labels = park(
+        core.select(F.col("id").alias("node"), F.col("id").alias("lab")),
+        spark,
+        sf_dir,
     )
     prev_sum = None
     converged = False
@@ -1560,23 +1551,20 @@ def q_cluster_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         jump = labels.select(
             F.col("node").alias("lab"), F.col("lab").alias("lab2")
         )
-        new_labels = (
-            hop.join(jump, "lab", "left")
-            .select("node", F.coalesce("lab2", "lab").alias("lab"))
-            .localCheckpoint(eager=False)
+        labels = park(
+            hop.join(jump, "lab", "left").select(
+                "node", F.coalesce("lab2", "lab").alias("lab")
+            ),
+            spark,
+            sf_dir,
         )
-        cur = new_labels.agg(F.sum("lab")).collect()[0][0]
-        park(labels, spark, sf_dir)  # superseded round
-        labels = new_labels
+        cur = labels.agg(F.sum("lab")).collect()[0][0]
         if cur == prev_sum:
             converged = True
             break
         prev_sum = cur
     if not converged:
         raise RuntimeError("q_cluster_dbscan_grid: CC did not converge")
-    # The returned plan reads the final round — park it for the next
-    # cache boundary.
-    park(labels, spark, sf_dir)
     lab = labels.select(F.col("node").alias("id"), F.col("lab").alias("cluster"))
     ccore = (
         core.join(lab, "id")
@@ -1776,9 +1764,9 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of ONE center row + a map-side distance update; the
     argmax is a pair of 1-row global reduces (max, then min vec_id at
     that max), never a sort. The per-round ``dmin`` relation is
-    persisted and parked each round — round r's blocks serve
+    parked each round — round r's blocks serve
     round r's scalar reduces AND round r+1's update, so each round
-    scans the vectors once (without the persist the chained lineage
+    scans the vectors once (without the boundary the chained lineage
     re-executed every prior round per reduce: ~K²/2 corpus passes, 80
     exchanges in the round-10 plan audit; the SSSP 808d751 pattern).
     At 100 TB: same plan with K·2 scalar reduces; sub-sample or
@@ -1803,8 +1791,7 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "uvec",
             F.col("cid").alias("cur_cid"),
             F.expr(int_sqdist_expr("uvec", "carr")).alias("dmin"),
-        )
-        .persist(),
+        ),
         spark,
         sf_dir,
     )
@@ -1833,8 +1820,7 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.least(
                     F.col("dmin"), F.expr(int_sqdist_expr("uvec", "carr"))
                 ).alias("dmin"),
-            )
-            .persist(),
+            ),
             spark,
             sf_dir,
         )

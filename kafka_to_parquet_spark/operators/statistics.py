@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_to_parquet_spark.cache import park
 from kafka_to_parquet_spark.registry import query
 from kafka_to_parquet_spark.tables import load
 
@@ -415,14 +416,14 @@ def _value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts. Quantizing to integer cents bounds the histogram by the
     value RANGE (here ≤ ~49k cent levels), not by N — the binned-ECDF
     form production drift monitors run, and exactly lossless when the
-    data are 2-dp to begin with (this fixture's are). Checkpointed:
-    the cumulative window and the totals are two consumers and
+    data are 2-dp to begin with (this fixture's are). Parked: the
+    cumulative window and the totals are two consumers and
     Catalyst has no cross-subtree CSE — without the boundary the fact
     scan runs twice."""
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin(KS_TYPE_A, KS_TYPE_B)
     )
-    return (
+    return park(
         ev.select(
             F.expr("CAST(round(value * 100) AS BIGINT)").alias("vc"),
             "event_type",
@@ -435,8 +436,9 @@ def _value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("event_type") == KS_TYPE_B, 1).otherwise(0))
             .cast("long")
             .alias("nb"),
-        )
-        .localCheckpoint()
+        ),
+        spark,
+        sf_dir,
     )
 
 

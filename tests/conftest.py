@@ -36,3 +36,15 @@ def run(spark, sf_dir):
         return registry.QUERIES[name](spark, sf_dir)
 
     return _run
+
+
+@pytest.fixture(scope="session")
+def held_rdds(spark):
+    """held_rdds() -> ids of the RDDs holding cached or checkpointed
+    blocks (Spark's storage info)."""
+
+    def _held() -> set[int]:
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return {infos[i].id() for i in range(len(infos))}
+
+    return _held

@@ -128,19 +128,33 @@ def test_result_level_clear_targets_only_result_caches(spark, sf_dir):
     assert persisted_rdd_ids() - before == set()
 
 
-def test_park_keys_by_sf_dir(spark):
-    from kafka_to_parquet_spark.cache import park
+def test_park_keys_by_sf_dir(spark, held_rdds):
+    """Parked frames are one entry per (session, sf_dir); each holds its
+    blocks while live, a scoped clear releases only its own sf_dir's,
+    and release() frees one frame now."""
+    from kafka_to_parquet_spark.cache import park, release
 
     clear_caches(spark)
-    df = spark.range(5).persist()
-    assert park(df, spark, SF_A) is df
+    before = held_rdds()
+    a = park(spark.range(5), spark, SF_A)
     assert (spark, SF_A, _PARKED) in _STORE
     assert registered_entry_count() == 1  # one per (session, sf_dir)
-    park(spark.range(3).persist(), spark, SF_A)
-    assert registered_entry_count() == 1
+    a2 = park(spark.range(3), spark, SF_A)
+    b = park(spark.range(4), spark, SF_B)
+    assert registered_entry_count() == 2
+    assert (a.count(), a2.count(), b.count()) == (5, 3, 4)
+    held = held_rdds() - before
+    assert len(held) == 3  # every live parked frame holds its blocks
+    release(a2)
+    assert len(_STORE[(spark, SF_A, _PARKED)][0]) == 1
+    assert len(held_rdds() & held) == 2
     clear_caches(spark, SF_A)
     assert (spark, SF_A, _PARKED) not in _STORE
-    assert df.storageLevel.useMemory is False
+    assert (spark, SF_B, _PARKED) in _STORE
+    assert len(held_rdds() & held) == 1  # only B's frame
+    clear_caches(spark, SF_B)
+    assert registered_entry_count() == 0
+    assert not held_rdds() & held
 
 
 def test_reclaim_is_a_package_util(spark):
@@ -201,17 +215,27 @@ def test_clear_caches_removes_scratch_datasets(spark, run, sf_dir):
         "q_graph_clustering_coeff",
         "q_kmv_union_audit",
         "q_link_adamic_adar",
+        "q_rerank_mmr",
+        "q_dedup_typo",
+        "q_semdedup",
+        "q_suffix_lrs",
+        "q_ks_test",
+        "q_mann_whitney",
     ],
 )
-def test_clear_caches_releases_every_persist(spark, run, sf_dir, name):
-    """Every frame a query persists is held by the memo store (memo or
-    park), so clear_caches leaves Spark's CacheManager empty: a bare
-    persist() would survive it and serve a later run from the cache."""
+def test_clear_caches_releases_every_persist(spark, run, sf_dir, name, held_rdds):
+    """Every frame a query persists or checkpoints is held by the memo
+    store (memo or park), so clear_caches leaves Spark's CacheManager
+    empty and no RDD of the run holding blocks: a bare persist() would
+    survive it and serve a later run from the cache, and a bare
+    localCheckpoint() would keep its blocks until JVM GC."""
     clear_caches()
     spark.catalog.clearCache()
+    before = held_rdds()
     run(name).collect()
     clear_caches(spark, sf_dir)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert held_rdds() - before == set()
 
 
 def test_trade_graph_is_one_entry(spark, run, sf_dir):

@@ -428,6 +428,68 @@ def test_vector_primitives_have_one_definition():
     assert found == []
 
 
+def test_materialization_boundary_has_one_definition():
+    """cache.park is the only place that materializes a query-local
+    intermediate: no other module calls ``.persist()``,
+    ``.localCheckpoint()``, ``.checkpoint()`` or ``.cache()`` except in
+    a memo build (inside a ``memo(...)`` call, or in a function a
+    ``memo(...)`` call names), which keeps a feature or result entry,
+    and in the four snapshot read-backs, which must be materialized
+    before their directory is rewritten."""
+    import ast
+    import pathlib
+
+    import kafka_to_parquet_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    readbacks = {
+        ("sinks/parquet_batch.py", "q_parquet_roundtrip"),
+        ("streaming/stateful.py", "run_to_memory"),
+        ("streaming/stateful.py", "merge"),
+        ("streaming/stateful.py", "q_stream_upsert"),
+    }
+    boundary = {"persist", "localCheckpoint", "checkpoint", "cache"}
+
+    def is_memo(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", getattr(node.func, "attr", None)) == "memo"
+        )
+
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = str(path.relative_to(root))
+        if rel == "cache.py":
+            continue
+        tree = ast.parse(path.read_text())
+        builds = {
+            n.id
+            for call in ast.walk(tree)
+            if is_memo(call)
+            for n in ast.walk(call)
+            if isinstance(n, ast.Name)
+        }
+
+        def visit(node, scope, in_memo):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                scope = scope + (node.name,)
+            in_memo = in_memo or is_memo(node)
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in boundary
+                and not in_memo
+                and not builds.intersection(scope)
+                and (rel, scope[-1] if scope else "") not in readbacks
+            ):
+                found.append(f"{rel}:{node.lineno}")
+            for child in ast.iter_child_nodes(node):
+                visit(child, scope, in_memo)
+
+        visit(tree, (), False)
+    assert found == []
+
+
 def _half_unit_floats() -> list[float]:
     """float32 values at and one float32 step beside a half micro-unit
     k + 0.5: m / 128 for odd m is exact in float32, and m / 128 * 1e6 =

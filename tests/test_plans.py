@@ -437,40 +437,64 @@ def test_graph_jaccard_broadcasts_degrees_and_takes_ordered(run):
     assert "BroadcastHashJoin" in plan
 
 
-def test_coreset_kcenter_rounds_are_persisted(run):
+def test_coreset_kcenter_rounds_are_persisted(spark, run, held_rdds):
     """round-11 verdict item 2: q_coreset_kcenter's per-round dmin
-    relation must be persisted (and parked) every round. Without the
-    persist each of the K rounds' 2-3 scalar reduces re-executes every
+    relation must be materialized (parked) every round. Without the
+    boundary each of the K rounds' 2-3 scalar reduces re-executes every
     prior round's crossJoin chain (~K²/2 corpus passes — 80 exchanges
-    in the round-10 full-plan audit; 11 with it). Pin both properties
-    so a regression reintroducing the chained lineage fails here, the
-    same way SSSP's shape is pinned by its bounded-storage test."""
+    in the round-10 full-plan audit; 11 with it). Pin it by behaviour:
+    every round holds its blocks while the answer is live, the next
+    cache boundary releases them, and the plan keeps the per-round
+    exchange bound."""
     import re
 
     from kafka_to_parquet_spark.cache import clear_result_caches
     from kafka_to_parquet_spark.operators.batch9 import CORESET_K
 
-    # Evict rounds parked by any EARLIER test's invocation first: the
-    # CacheManager would plan-match them into this build, and the
-    # formatted explain of an InMemoryRelation also prints its cached
-    # child's exchanges, inflating the count.
     clear_result_caches()
+    before = held_rdds()
     df = run("q_coreset_kcenter")
     plan = plan_of(df)
-    # The persisted rounds surface as in-memory scans in the plan.
-    assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan, (
-        "per-round dmin relation is not persisted — the K² lineage "
-        "recompute is back"
-    )
     # Each Gonzalez round contributes a bounded number of scalar
     # reduces (max dmin, argmin vec_id, step row); the K² chained shape
     # blew past 3 exchanges per round (80 total at K=4).
     n_ex = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
     assert n_ex <= 3 * CORESET_K + 2, (
         f"{n_ex} exchanges for K={CORESET_K} — expected <= {3 * CORESET_K + 2}; "
-        "the per-round persist likely regressed"
+        "the per-round boundary likely regressed"
     )
+    assert len(df.collect()) == CORESET_K
+    held = held_rdds() - before
+    assert len(held) >= CORESET_K, (
+        "per-round dmin relation holds no blocks — the K² lineage "
+        "recompute is back"
+    )
+    clear_result_caches(spark)
+    assert not held_rdds() & held
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_sssp_weighted",
+        "q_bfs_levels",
+        "q_text_textrank",
+        "q_graph_clustering_coeff",
+        "q_coreset_kcenter",
+    ],
+)
+def test_iterative_plans_do_not_grow_with_rounds(run, name):
+    """A relation that later rounds read again is a parked checkpoint,
+    a leaf of the analyzed plan, so the plan stays a few KB however
+    many rounds run. Persisted rounds kept every round's whole tree in
+    the plan (100-380 KB here; q_sssp_weighted's formatted plan was
+    8.1 MB at sf0.01), and every explain and plan audit paid for it."""
+    from kafka_to_parquet_spark.cache import clear_result_caches
+
+    df = run(name)
+    n = len(df._jdf.queryExecution().analyzed().toString())
     clear_result_caches(df.sparkSession)
+    assert n <= 16_000, f"{name}: analyzed plan is {n} chars"
 
 
 def test_sink_is_one_sorted_exchange_and_one_arrow_pass(spark, sf_dir, tmp_path):

@@ -1,7 +1,7 @@
 """Round-10 tests: per-round cache release for iterative kernels
 (verdict item 5 — iterative kernels previously leaked O(rounds)
-persisted node relations). Each round is persisted and parked with
-cache.park, and the next cache boundary releases it.
+persisted node relations). Each round is parked with cache.park, and
+the next cache boundary releases it.
 """
 
 from __future__ import annotations
@@ -11,14 +11,8 @@ from pyspark.sql import functions as F
 from kafka_to_parquet_spark.cache import _PARKED, _STORE, clear_result_caches, park
 
 
-def _cached_rdd_ids(spark) -> set[int]:
-    """Ids of RDDs currently holding cached blocks (storage info)."""
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    return {infos[i].id() for i in range(len(infos)) if infos[i].isCached()}
-
-
-def test_iterative_kernels_hold_bounded_storage(run, spark, sf_dir):
-    """q_sssp_weighted's loop (rounds persist lazily and park since the
+def test_iterative_kernels_hold_bounded_storage(run, spark, sf_dir, held_rdds):
+    """q_sssp_weighted's loop (rounds are parked lazily since the
     round-10 bench guard flagged per-round materialization jobs): while
     the answer is live the cached rounds are bounded by the CONSTANT
     round count, and clear_result_caches releases every superseded
@@ -27,16 +21,16 @@ def test_iterative_kernels_hold_bounded_storage(run, spark, sf_dir):
 
     assert SSSP_ROUNDS >= 4  # the test is vacuous for tiny round counts
     clear_result_caches(spark)
-    before = _cached_rdd_ids(spark)
+    before = held_rdds()
     run("q_sssp_weighted").collect()
-    new = _cached_rdd_ids(spark) - before
+    new = held_rdds() - before
     # edges + per-round distances, all bounded by the fixed constant.
     assert len(new) <= SSSP_ROUNDS + 2, (
         f"q_sssp_weighted holds {len(new)} cached relations; expected "
         f"<= SSSP_ROUNDS+2 — an unbounded accumulation crept in"
     )
     clear_result_caches(spark)
-    after = _cached_rdd_ids(spark) & new
+    after = held_rdds() & new
     # The rounds are parked as result-level entries, so the
     # sweep-boundary eviction releases them. (The edge relation is a
     # FEATURE entry and may legitimately stay warm.)
@@ -46,58 +40,65 @@ def test_iterative_kernels_hold_bounded_storage(run, spark, sf_dir):
     )
 
 
-def test_roundloop_deferred_parks_rounds_for_sweep_release(spark):
-    """Superseded rounds stay cached (one-job execution, in-job block
-    reuse) but are parked in the cache store and released by
-    clear_result_caches."""
+def test_roundloop_deferred_parks_rounds_for_sweep_release(spark, held_rdds):
+    """Every round is parked in the cache store: the rounds hold their
+    blocks while the chain is live, and clear_result_caches releases
+    them all."""
     sf_dir = "/tmp/_roundloop_test"
     key = (spark, sf_dir, _PARKED)
+    before = held_rdds()
     df = spark.range(100).select(F.col("id"), F.lit(0).alias("v"))
-    steps = []
     for i in range(4):
         df = park(
-            df.groupBy((F.col("id") % 10).alias("id"))
-            .agg((F.sum("v") + F.lit(i)).alias("v"))
-            .persist(),
+            df.groupBy((F.col("id") % 10).alias("id")).agg(
+                (F.sum("v") + F.lit(i)).alias("v")
+            ),
             spark,
             sf_dir,
         )
-        steps.append(df)
-    # single final action — the whole chain runs as one job
-    assert steps[-1].count() == 10
+    assert df.count() == 10
     assert len(_STORE[key][0]) == 4  # every round, the final one too
+    held = held_rdds() - before
+    assert len(held) == 4, "a round holds no blocks"
     cleared = clear_result_caches(spark, sf_dir)
     assert cleared >= 1 and key not in _STORE
-    for s in steps:
-        assert not s.storageLevel.useMemory, "parked round still persisted"
+    assert not held_rdds() & held, "a parked round survived eviction"
 
 
-def test_roundloop_finish_parks_final_round(spark):
-    """round-11 advisor fix: a FINAL round left persisted and
-    registered nowhere let Spark's CacheManager match the identical
-    rebuilt plan on the next timed sample and serve the memoized
-    answer. park() puts the final round (and auxiliary frames) in the
-    store as result-level, so the sweep-boundary eviction forces real
-    recomputation."""
+def test_roundloop_finish_parks_final_round(spark, held_rdds):
+    """round-11 advisor fix: a FINAL round registered nowhere survived
+    every clear (as a persist it also let Spark's CacheManager serve
+    the identical rebuilt plan on the next timed sample). park() puts
+    the final round (and auxiliary frames) in the store as
+    result-level: their blocks are held while the caller reads them
+    and released by the sweep-boundary eviction, and a rebuilt chain
+    computes the same answer again."""
     sf_dir = "/tmp/_roundloop_finish_test"
     key = (spark, sf_dir, _PARKED)
-    final = spark.range(64).select(F.col("id"), F.lit(0).alias("v"))
-    for i in range(3):
-        final = park(
-            final.groupBy((F.col("id") % 8).alias("id"))
-            .agg((F.sum("v") + F.lit(i)).alias("v"))
-            .persist(),
-            spark,
-            sf_dir,
-        )
-    aux = park(spark.range(4).persist(), spark, sf_dir)
+
+    def chain():
+        final = spark.range(64).select(F.col("id"), F.lit(0).alias("v"))
+        for i in range(3):
+            final = park(
+                final.groupBy((F.col("id") % 8).alias("id")).agg(
+                    (F.sum("v") + F.lit(i)).alias("v")
+                ),
+                spark,
+                sf_dir,
+            )
+        return final
+
+    before = held_rdds()
+    final = chain()
+    aux = park(spark.range(4), spark, sf_dir)
     assert len(_STORE[key][0]) == 4  # 2 superseded + final + aux
     assert _STORE[key][1] is True  # parked frames are result-level
-    assert final.count() == 8
-    assert final.storageLevel.useMemory  # still live for the caller's action
+    assert sorted(tuple(r) for r in final.collect()) == [(k, 3) for k in range(8)]
+    assert aux.count() == 4
+    held = held_rdds() - before
+    assert len(held) == 4  # still live for the caller's action
     clear_result_caches(spark, sf_dir)
     assert key not in _STORE
-    assert not final.storageLevel.useMemory, "final round survived eviction"
-    assert not aux.storageLevel.useMemory, "parked aux frame survived eviction"
-    # and the answer recomputes correctly without the cache
-    assert final.count() == 8
+    assert not held_rdds() & held, "a parked frame survived eviction"
+    assert sorted(tuple(r) for r in chain().collect()) == [(k, 3) for k in range(8)]
+    clear_result_caches(spark, sf_dir)
