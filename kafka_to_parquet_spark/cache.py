@@ -149,20 +149,20 @@ def _get(key: tuple, build: Callable[[], Any], level: bool | str) -> Any:
 
 def park(df: DataFrame, spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize a query-local intermediate that later plans read
-    again (a loop round, a relation read twice) and register it for
-    release at the next cache boundary: :func:`clear_result_caches`
-    between timed samples, or :func:`clear_caches` at teardown.
-    Returns the frame to read instead of ``df``.
+    again (a loop round, a relation read twice), register it for
+    release at the next cache boundary (:func:`clear_result_caches`
+    between timed samples, :func:`clear_caches` at teardown) and
+    return the frame to read instead of ``df``.
 
     The boundary is ``df.localCheckpoint(eager=False)``: the returned
     frame's plan is a leaf, so a loop whose round reads the previous
-    round twice plans in constant size instead of doubling per round.
-    Parking runs ``df``'s shuffle stages (adaptive execution plans
-    them at once); the first action that reads the frame runs the
-    last stage and stores its blocks. The blocks live on the
-    executors only: after a release, or the loss of an executor, a
-    plan reading the frame fails instead of recomputing it. Switching
-    this call to ``checkpoint()`` (a reliable checkpoint directory)
+    round twice plans in constant size. Parking runs ``df``'s shuffle
+    stages at once, in the checkpoint's own execution (not the
+    reading query's plan; ``tools/plan_audit.py`` reads it back); the
+    first action that reads the frame runs the last stage and stores
+    its blocks, on the executors only. After a release, or the loss
+    of an executor, a plan reading the frame fails instead of
+    recomputing it; ``checkpoint()`` (a reliable checkpoint directory)
     would survive executor loss at the cost of a write per frame."""
     frame = df.localCheckpoint(eager=False)
     key = (spark, sf_dir, _PARKED)
@@ -176,17 +176,14 @@ def release(df: DataFrame) -> None:
     frames. No later plan may read ``df``."""
     for key, (value, level) in list(_STORE.items()):
         if key[2] == _PARKED and any(v is df for v in value):
-            rest = tuple(v for v in value if v is not df)
-            if rest:
-                _STORE[key] = (rest, level)
-            else:
+            _STORE[key] = (tuple(v for v in value if v is not df), level)
+            if not _STORE[key][0]:
                 del _STORE[key]
     _free(df)
 
 
 def _free(df: DataFrame) -> None:
-    """Unpersist a persisted frame; drop a checkpointed frame's RDD
-    blocks."""
+    """Unpersist a persisted frame; drop a checkpointed frame's blocks."""
     try:
         # blocking: the timing tools clear between samples precisely
         # so the NEXT sample doesn't run against lingering storage.

@@ -30,12 +30,11 @@ is an integer number of 1e-12 "rank units" and each round is
 and DuckDB produce bit-equal ranks at any scale. (The truncation per
 round loses < outdeg units per node — irrelevant at T = 1e12.)
 
-Per-round exchanges: the kernels below say "each round exchanges only
-the node-sized relation". That holds once the edge relation outgrows
-``spark.sql.autoBroadcastJoinThreshold``. Below it, AQE broadcasts the
-whole edge relation in every round instead (at sf0.01 each PageRank
-round is a BroadcastHashJoin over a 4 MiB broadcast of the 97,000
-trade edges), and the edges' pre-hashed layout goes unused.
+"Each round exchanges only the node-sized relation" (said of the
+kernels below) holds once the edges outgrow
+``spark.sql.autoBroadcastJoinThreshold``. Under it, AQE broadcasts the
+whole edge relation every round (4 MiB, the 97,000 trade edges, per
+PageRank round at sf0.01), and the edges' layout goes unused.
 """
 
 from __future__ import annotations

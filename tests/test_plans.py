@@ -8,9 +8,16 @@ and nothing materializes on the driver.
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 
 from kafka_to_parquet_spark import registry
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(_REPO, "tools"))
+from plan_audit import executed_exchanges, execution_mark, parked_plans  # noqa: E402
 
 
 def plan_of(df) -> str:
@@ -444,8 +451,8 @@ def test_coreset_kcenter_rounds_are_persisted(spark, run, held_rdds):
     prior round's crossJoin chain (~K²/2 corpus passes — 80 exchanges
     in the round-10 full-plan audit; 11 with it). Pin it by behaviour:
     every round holds its blocks while the answer is live, the next
-    cache boundary releases them, and the plan keeps the per-round
-    exchange bound."""
+    cache boundary releases them, and the exchanges of the final plan
+    plus those each parked round ran keep the per-round bound."""
     import re
 
     from kafka_to_parquet_spark.cache import clear_result_caches
@@ -453,15 +460,17 @@ def test_coreset_kcenter_rounds_are_persisted(spark, run, held_rdds):
 
     clear_result_caches()
     before = held_rdds()
+    mark = execution_mark(spark)
     df = run("q_coreset_kcenter")
-    plan = plan_of(df)
+    rounds = [len(executed_exchanges(p)) for p in parked_plans(spark, mark)]
+    assert len(rounds) == CORESET_K, rounds
     # Each Gonzalez round contributes a bounded number of scalar
     # reduces (max dmin, argmin vec_id, step row); the K² chained shape
     # blew past 3 exchanges per round (80 total at K=4).
-    n_ex = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
+    n_ex = len(re.findall(r"^\(\d+\) Exchange", plan_of(df), re.M)) + sum(rounds)
     assert n_ex <= 3 * CORESET_K + 2, (
-        f"{n_ex} exchanges for K={CORESET_K} — expected <= {3 * CORESET_K + 2}; "
-        "the per-round boundary likely regressed"
+        f"{n_ex} exchanges for K={CORESET_K} (rounds {rounds}) — expected "
+        f"<= {3 * CORESET_K + 2}; the per-round boundary likely regressed"
     )
     assert len(df.collect()) == CORESET_K
     held = held_rdds() - before
@@ -483,18 +492,26 @@ def test_coreset_kcenter_rounds_are_persisted(spark, run, held_rdds):
         "q_coreset_kcenter",
     ],
 )
-def test_iterative_plans_do_not_grow_with_rounds(run, name):
+def test_iterative_plans_do_not_grow_with_rounds(spark, run, name):
     """A relation that later rounds read again is a parked checkpoint,
     a leaf of the analyzed plan, so the plan stays a few KB however
     many rounds run. Persisted rounds kept every round's whole tree in
     the plan (100-380 KB here; q_sssp_weighted's formatted plan was
-    8.1 MB at sf0.01), and every explain and plan audit paid for it."""
+    8.1 MB at sf0.01), and every explain and plan audit paid for it.
+
+    The rounds' own work runs in their checkpoints' executions, outside
+    the final plan; read there, the last round runs no more exchanges
+    than the first two, so no round re-runs the rounds before it."""
     from kafka_to_parquet_spark.cache import clear_result_caches
 
+    mark = execution_mark(spark)
     df = run(name)
     n = len(df._jdf.queryExecution().analyzed().toString())
-    clear_result_caches(df.sparkSession)
+    rounds = [len(executed_exchanges(p)) for p in parked_plans(spark, mark)]
+    clear_result_caches(spark)
     assert n <= 16_000, f"{name}: analyzed plan is {n} chars"
+    assert rounds, f"{name}: no parked round"
+    assert rounds[-1] <= max(rounds[:2]), f"{name}: exchanges per round {rounds}"
 
 
 def test_sink_is_one_sorted_exchange_and_one_arrow_pass(spark, sf_dir, tmp_path):
@@ -562,18 +579,47 @@ def test_trade_edges_union_has_no_distinct_above(spark, sf_dir):
     assert not [a for a in above if "Aggregate" in a], above
 
 
+def _above_trade_scans(plan: str) -> list[str]:
+    """For each trade-graph InMemoryTableScan of a formatted plan, the
+    first ancestor that is not a narrow pass-through (a filter, a
+    projection, a cache stage)."""
+    import re
+
+    narrow = re.compile(r"(TableCacheQueryStage|Filter|Project|ColumnarToRow) \(")
+    tree, detail = plan.split("\n\n", 1)
+    trade = set(re.findall(
+        r"^\((\d+)\) InMemoryRelation\nArguments: \[[^\]]*\bn_txn#", detail, re.M
+    ))
+    lines = tree.splitlines()
+    depth = [re.search(r"[A-Za-z=]", ln).start() for ln in lines]
+    above = []
+    for i, ln in enumerate(lines):
+        rel = re.search(r"InMemoryRelation \((\d+)\)", ln)
+        if not rel or rel.group(1) not in trade:
+            continue
+        d = depth[i - 1]  # the InMemoryTableScan line
+        for j in range(i - 2, -1, -1):
+            if depth[j] < d:
+                d = depth[j]
+                if not narrow.search(lines[j]):
+                    above.append(lines[j].strip())
+                    break
+    return above
+
+
 def test_trade_graph_is_never_reshuffled(spark, run):
     """PageRank's outdeg window and SSSP's weight projection run over
     graph.trade_edges, persisted hashed and sorted on src, so no
     Exchange sits directly above a trade-graph InMemoryTableScan (only
     the node-sized rank and distance relations exchange per round).
+    SSSP's relaxation joins run in its parked rounds' executions, so
+    their plans are checked too, and must read the trade graph.
     Broadcast joins are off here: at test scale they would hide the
     edges' layout behind a broadcast of the whole graph."""
     import re
 
     from kafka_to_parquet_spark.cache import clear_result_caches
 
-    narrow = re.compile(r"(TableCacheQueryStage|Filter|Project|ColumnarToRow) \(")
     confs = ("spark.sql.autoBroadcastJoinThreshold",
              "spark.sql.adaptive.autoBroadcastJoinThreshold")
     clear_result_caches(spark)
@@ -581,28 +627,25 @@ def test_trade_graph_is_never_reshuffled(spark, run):
         spark.conf.set(c, "-1")
     try:
         for name in ("q_graph_pagerank", "q_sssp_weighted"):
+            mark = execution_mark(spark)
             df = run(name)
             df.collect()
-            tree, detail = plan_of(df).split("\n\n", 1)
-            trade = set(re.findall(
-                r"^\((\d+)\) InMemoryRelation\nArguments: \[[^\]]*\bn_txn#", detail, re.M
-            ))
-            lines = tree.splitlines()
-            depth = [re.search(r"[A-Za-z]", ln).start() for ln in lines]
-            above = []
-            for i, ln in enumerate(lines):
-                rel = re.search(r"InMemoryRelation \((\d+)\)", ln)
-                if not rel or rel.group(1) not in trade:
-                    continue
-                d = depth[i - 1]  # the InMemoryTableScan line
-                for j in range(i - 2, -1, -1):
-                    if depth[j] < d:
-                        d = depth[j]
-                        if not narrow.search(lines[j]):
-                            above.append(lines[j].strip())
-                            break
-            assert above, f"{name}: no trade-graph scan in the plan"
-            assert not [a for a in above if re.search(r"\bExchange \(", a)], (name, above)
+            plans = {"final": plan_of(df)}
+            plans.update((f"round {i}", p)
+                         for i, p in enumerate(parked_plans(spark, mark), 1))
+            above = {k: _above_trade_scans(p) for k, p in plans.items()}
+            assert above["final"] or name == "q_sssp_weighted", (
+                f"{name}: no trade-graph scan in the final plan")
+            if name == "q_sssp_weighted":
+                from kafka_to_parquet_spark.operators.batch8 import SSSP_ROUNDS
+
+                rounds = [k for k in above if k != "final"]
+                assert len(rounds) == SSSP_ROUNDS, sorted(above)
+                assert all(above[k] for k in rounds), (
+                    f"{name}: a round reads no trade-graph scan", above)
+            bad = {k: [a for a in v if re.search(r"\bExchange \(", a)]
+                   for k, v in above.items()}
+            assert not any(bad.values()), (name, bad)
     finally:
         for c in confs:
             spark.conf.unset(c)

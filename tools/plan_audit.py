@@ -6,7 +6,8 @@ Usage: python tools/plan_audit.py [--sf /root/testdata/sf0.1]
        python tools/plan_audit.py --full   # all registered queries -> PLANS_FULL.md
 
 --full: PLANS.md covers only the headline set. The full sweep audits
-EVERY registered query's plan properties and records any Exchange
+EVERY registered query's plan properties, with the exchanges its
+parked frames ran while it was built, and records any Exchange
 SinglePartition outside the documented allowlist below;
 tests/test_registry.py::test_plans_full_artifact_current pins the
 artifact to the live registry so a new batch can't land unaudited.
@@ -16,11 +17,13 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_to_parquet_spark import registry  # noqa: E402
+from kafka_to_parquet_spark.cache import clear_result_caches  # noqa: E402
 from kafka_to_parquet_spark.plans import explain  # noqa: E402
 from kafka_to_parquet_spark.session import get_spark  # noqa: E402
 
@@ -36,10 +39,66 @@ def count_single_partition(plan: str) -> int:
     0, where only node-detail ``Arguments:`` lines live) plus the
     simple-mode token for any caller that feeds a simple-mode string.
     """
-    import re
-
     return (len(re.findall(r"^Arguments: SinglePartition", plan, re.M))
             + plan.count("Exchange SinglePartition"))
+
+
+def _executions(spark) -> list:
+    """Spark's record of every SQL execution of the session (its SQL
+    status store), once the listener bus has delivered them all."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [execs.apply(i) for i in range(execs.size())]
+
+
+def execution_mark(spark) -> int:
+    """Id of the session's latest SQL execution (-1 before the first):
+    pass it to :func:`parked_plans` to see what runs after it."""
+    return max((e.executionId() for e in _executions(spark)), default=-1)
+
+
+def executed_exchanges(plan: str) -> list[str]:
+    """Partitioning arguments of the shuffle exchanges an executed
+    formatted plan ran itself, one per exchange.
+
+    Skipped: an adaptive plan's ``Initial Plan`` (the final plan is
+    what ran) and the build plan of every ``InMemoryRelation`` (a
+    cached relation is built once, by whichever plan reads it
+    first)."""
+    tree, _, detail = plan.partition("\n\n")
+    ids, skip = [], None
+    for line in tree.splitlines():
+        at = re.search(r"[A-Za-z=]", line)
+        if at is None or (skip is not None and at.start() > skip):
+            continue
+        skip = None
+        if "== Initial Plan ==" in line:
+            skip = at.start() - 1  # its operators align with the marker
+            continue
+        if re.search(r"\bInMemoryRelation \(", line):
+            skip = at.start()
+            continue
+        node = re.search(r"\bExchange \((\d+)\)", line)
+        if node and node.group(1) not in ids:
+            ids.append(node.group(1))
+    args = dict(re.findall(r"^\((\d+)\) Exchange\n(?:.*\n)*?Arguments: (.*)$", detail, re.M))
+    return [args.get(i, "") for i in ids]
+
+
+def parked_plans(spark, since: int) -> list[str]:
+    """Formatted final plans of the local checkpoints executed after
+    execution ``since``, oldest first.
+
+    A parked frame (``cache.park``) is a leaf of every plan that reads
+    it, so a loop round's joins and exchanges run in the checkpoint's
+    own execution and never appear in the query's final plan. Audits
+    of per-round work read them here, with
+    :func:`executed_exchanges`."""
+    return [
+        e.physicalPlanDescription()
+        for e in _executions(spark)
+        if e.executionId() > since and e.description().startswith("localCheckpoint")
+    ]
 
 
 # Queries where an Exchange SinglePartition is the documented
@@ -113,6 +172,8 @@ SINGLE_PART_OK: dict[str, str] = {
     "q_graph_clustering_coeff": _SP_SCALAR,
     "q_graph_kcore": _SP_SCALAR,
     "q_graph_modularity": _SP_SCALAR,
+    # parked 1-row parameter reduce (node count)
+    "q_graph_pagerank": _SP_SCALAR,
     "q_graph_triangles": _SP_SCALAR,
     "q_growth_accounting": _sp_bounded("week-grid rollup (calendar-bounded)"),
     "q_hash_uniformity": _sp_bounded("<=1000 bucket counts"),
@@ -137,6 +198,8 @@ SINGLE_PART_OK: dict[str, str] = {
     "q_rate_spike": _sp_bounded("(type, hour) grid"),
     "q_repetition_windows": _SP_SCALAR,
     "q_repurchase_gaps": _sp_bounded("calendar-bounded gap histogram"),
+    # each parked round's argmax: min(struct) over the <=MMR_POOL-row pool
+    "q_rerank_mmr": _SP_SCALAR,
     "q_rfm_segments": _SP_SCALAR,
     "q_rocchio_expand": _SP_SCALAR,
     "q_sample_hash_stratified": _sp_bounded(
@@ -183,28 +246,34 @@ def full_sweep(spark, registry, sf: str, out_path: str) -> int:
     """Audit every registered query's physical plan; write the
     artifact and return the number of UNDOCUMENTED single-partition
     plans (nonzero = regression)."""
-    import re
-
     names = sorted(registry.QUERIES)
     rows = []
     undocumented = []
     for name in names:
         try:
+            mark = execution_mark(spark)
             df = registry.QUERIES[name](spark, sf)
             plan = explain.formatted_plan(df)
+            parked = [executed_exchanges(p)
+                      for p in parked_plans(spark, mark)]
         except Exception as exc:  # noqa: BLE001 — audit the rest
             msg = str(exc)[:60].replace("|", "/").replace("\n", " ")
-            rows.append((name, f"plan failed: {msg}", "", "", ""))
+            rows.append((name, f"plan failed: {msg}", "", "", "", ""))
             undocumented.append(name)
             continue
+        finally:
+            clear_result_caches(spark)
         n_shuffles = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
-        n_single = count_single_partition(plan)
+        n_single = count_single_partition(plan) + sum(
+            a.startswith("SinglePartition") for ex in parked for a in ex
+        )
         pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
         has_pushed = bool(pushed) and all(p.strip() for p in pushed)
         has_bcast = "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
         rows.append((name, str(n_shuffles), str(n_single),
                      "yes" if has_pushed else "no",
-                     "yes" if has_bcast else "no"))
+                     "yes" if has_bcast else "no",
+                     f"{sum(map(len, parked))} in {len(parked)}" if parked else ""))
         if n_single > 0 and name not in SINGLE_PART_OK:
             undocumented.append(name)
 
@@ -230,10 +299,18 @@ def full_sweep(spark, registry, sf: str, out_path: str) -> int:
         "returns (the materialized availableNow result); their live",
         "stream plans are pinned in tests/test_streaming_*.py.",
         "",
-        "| query | shuffles | 1-part exch | pushed filters | bcast join |",
-        "|---|---|---|---|---|",
+        "A local checkpoint (every frame parked by `cache.park`, and the",
+        "snapshot read-backs) is a leaf of the final plan: its exchanges",
+        "run once, in the checkpoint's own execution, while the query is",
+        "built. `shuffles` counts the final plan; `parked shuffles` counts",
+        "what the checkpoints ran (`n in k`: n exchanges in k checkpoints,",
+        "read from Spark's record of the executions). `1-part exch` counts",
+        "both.",
+        "",
+        "| query | shuffles | 1-part exch | pushed filters | bcast join | parked shuffles |",
+        "|---|---|---|---|---|---|",
     ]
-    lines += [f"| {n} | {a} | {b} | {c} | {d} |" for n, a, b, c, d in rows]
+    lines += [f"| {n} | {a} | {b} | {c} | {d} | {e} |" for n, a, b, c, d, e in rows]
     with open(out_path, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out_path}: {len(names)} queries, "
@@ -274,8 +351,6 @@ def main() -> None:
         "broadcast vs shuffled joins, number of exchanges (shuffles).",
         "",
     ]
-    import re
-
     for name in HEADLINE:
         df = registry.QUERIES[name](spark, args.sf)
         # One explainString round-trip per query; derive all properties
